@@ -13,9 +13,12 @@ Design decisions for 100 TB scale (why this differs from a literal port):
 - **One Hive partition per mip, NOT per chunk.**  Partitioning by
   (cx,cy,cz) would create millions of tiny directories at 100 TB /
   64³-voxel chunks — an object-store listing disaster.  Instead chunk ids
-  are plain int columns; files are written sorted by (cz,cy,cx) so
-  Parquet row-group min/max statistics prune cutout filters almost as
-  tightly as directory partitioning, with O(files) not O(chunks) listing.
+  are plain int columns and every chunk is its own Parquet row group
+  (files sorted by (cz,cy,cx)), so row-group min/max statistics prune a
+  cutout filter to exactly its chunks, with O(files) not O(chunks)
+  listing.  The driver-local cutout skips the statistics altogether: a
+  per-handle chunk index (chunk_index.py) maps chunk ids to row groups
+  and reads exactly the k payloads a cutout needs.
 - **Latest-epoch-wins (LSM-style) overwrite.**  Parquet is immutable, so
   an overwrite of a region appends rows with a higher ``epoch``; reads
   keep ``max_by(payload, epoch)`` per key after partition pruning (the
@@ -46,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigarrays_jl_spark import indexes as ix
+from bigarrays_jl_spark.chunk_index import ChunkIndex
 from bigarrays_jl_spark.infos import Info, InfoScale
 
 # Executor pandas-UDF closures re-import this package on python workers;
@@ -104,6 +108,11 @@ def decode_chunk_payload(enc: str, payload, shape, nc: int, dtype):
 
 
 CHUNK_SCHEMA = "cx int, cy int, cz int, key string, enc string, epoch bigint, payload binary"
+
+
+class ChunkDecodeError(ValueError):
+    """A stored chunk failed to decode or reshape on the driver-local
+    cutout path; the message names the chunk key and its part file."""
 
 
 class MissingChunkError(KeyError):
@@ -278,13 +287,19 @@ class Volume:
         # thread pool (zlib/zstd release the GIL) and reads/writes the
         # SAME chunk-table parquet via pyarrow — format-identical, so
         # local and Spark writers interoperate file-for-file
-        # (pytest-pinned both directions).  This mirrors the
-        # reference's local BinDict backend doing direct file IO
+        # (pytest-pinned both directions).  Cutouts look their chunks
+        # up in a chunk index cached on this handle (chunk_index.py:
+        # ids only, ~60 B per stored chunk, no payloads; kept current
+        # by one directory listing per cutout) and read exactly those
+        # chunks' row groups.  This mirrors the reference's local
+        # BinDict backend reading one object per chunk
         # (ref src/backends/BinDicts.jl:24-48) while every distributed
         # op (ingest_chunks, voxels, map_blocks, compact, …) and every
         # non-local scheme stays on the Spark path.  Set False to force
         # the Spark path on local datasets.
         self.local_io: bool = True
+        # mip dir -> ChunkIndex of the driver-local cutout path
+        self._chunk_indexes: dict[str, ChunkIndex] = {}
 
     # -- constructors (src/type.jl:28-99) -----------------------------------
 
@@ -420,9 +435,9 @@ class Volume:
         """Driver-local twin of ``_write_chunks`` for driver-resident
         arrays: thread-pooled F-order copy + codec encode (numpy copies
         and zlib/zstd release the GIL) + one pyarrow parquet part file,
-        rows sorted by (cz,cy,cx) and row-grouped so the min/max stats
-        prune exactly like the Spark-written files beside it.  Row
-        payloads may be ndarray views (``write``) or ready bytes."""
+        rows sorted by (cz,cy,cx), one chunk per row group like the
+        Spark-written files beside it.  Row payloads may be ndarray
+        views (``write``) or ready bytes."""
         import uuid
         from concurrent.futures import ThreadPoolExecutor
 
@@ -445,10 +460,15 @@ class Volume:
                 return x
             return np.asfortranarray(x).tobytes(order="F")
 
-        with ThreadPoolExecutor(
-                max_workers=min(32, os.cpu_count() or 8)) as ex:
-            futs = [ex.submit(codec.encode, _f_bytes(r[4])) for r in rows]
-            payloads = [f.result() for f in futs]
+        if enc == "raw":
+            # identity encode: a pool would only add thread overhead
+            payloads = [_f_bytes(r[4]) for r in rows]
+        else:
+            with ThreadPoolExecutor(
+                    max_workers=min(32, os.cpu_count() or 8)) as ex:
+                futs = [ex.submit(codec.encode, _f_bytes(r[4]))
+                        for r in rows]
+                payloads = [f.result() for f in futs]
         # binary column built zero-copy-ish from one concatenation +
         # a cumulative-offsets array (guide §4.2's offsets-over-one-
         # buffer idiom) — ~2.4× the element-wise pa.array build; the
@@ -478,13 +498,11 @@ class Volume:
         })
         d = self._local_chunks_dir(mip)
         os.makedirs(d, exist_ok=True)
-        # ~32 MB row groups: stats granularity for cutout pruning
-        # without parquet-footer bloat
-        avg = max(1, sum(len(p) for p in payloads) // max(1, len(rows)))
-        rg = max(1, (32 << 20) // avg)
-        # no dictionary encoding (hashing 100s of MB of unique chunk
-        # payloads cost 5× the raw write) and stats only on the id
-        # columns the cutout filter prunes with
+        # one chunk per row group: a cutout reads exactly its chunks'
+        # payloads (see chunk_index.py).  No dictionary encoding
+        # (hashing 100s of MB of unique chunk payloads cost 5× the raw
+        # write) and stats only on the id columns the cutout filter
+        # prunes with
         # 8 MB data pages (default 1 MB): fewer page headers/flushes on
         # the fat binary column — measured 494 → 604 MB/s on the
         # write_table call alone (r18); readers are unaffected (pages
@@ -492,59 +510,38 @@ class Volume:
         pq.write_table(
             tbl, os.path.join(d, f"part-local-{uuid.uuid4().hex}.parquet"),
             compression="zstd" if enc == "raw" else "none",
-            row_group_size=rg, use_dictionary=False,
+            row_group_size=1, use_dictionary=False,
             data_page_size=8 << 20,
             write_statistics=["cx", "cy", "cz", "epoch"])
 
     def _read_latest_local(self, request: ix.Box,
                            mip: int | None = None) -> list | None:
-        """Driver-local twin of ``_latest(_pruned(request))``: pyarrow
-        dataset scan with the chunk-id box filter (row-group stats
-        prune), then max-epoch-per-key dedupe in a dict (the pruned set
-        is cutout-budget-sized by construction).  Returns
-        ``[(key, enc, payload_buffer), ...]`` or None when the fast
-        path does not apply."""
+        """Driver-local twin of ``_latest(_pruned(request))``: the
+        handle's cached chunk index selects the rows in the chunk-id
+        box, keeps the max epoch per key and reads only those rows'
+        payloads.  Returns ``[(key, enc, payload, part_file), ...]`` or
+        None when the fast path does not apply."""
         d = self._local_chunks_dir(mip)
         if d is None:
             return None
-        if not os.path.isdir(d):
-            return []
-        import pyarrow as pa
-        import pyarrow.dataset as pds
         sc = self.info.scale(self.mip if mip is None else mip)
         anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
         clamped = ix.intersect_box(
             request, ix.volume_box(sc.voxel_offset, sc.volume_size))
         if ix.box_is_empty(clamped):
             return []
-        (cx0, cx1), (cy0, cy1), (cz0, cz1) = ix.chunk_id_ranges(
-            clamped, anchor, sc.chunk_size)
-        schema = pa.schema([("cx", pa.int32()), ("cy", pa.int32()),
-                            ("cz", pa.int32()), ("key", pa.string()),
-                            ("enc", pa.string()), ("epoch", pa.int64()),
-                            ("payload", pa.binary())])
-        flt = ((pds.field("cx") >= cx0) & (pds.field("cx") < cx1)
-               & (pds.field("cy") >= cy0) & (pds.field("cy") < cy1)
-               & (pds.field("cz") >= cz0) & (pds.field("cz") < cz1))
-        tbl = (pds.dataset(d, format="parquet", schema=schema)
-               .to_table(filter=flt, columns=["key", "enc", "epoch",
-                                              "payload"]))
-        keys = tbl.column("key").to_pylist()
-        encs = tbl.column("enc").to_pylist()
-        pays = tbl.column("payload")
-        if self._current_epoch() <= 0:
-            return list(zip(keys, encs, pays))
-        epochs = tbl.column("epoch").to_pylist()
-        best: dict = {}
-        for i, (k, e) in enumerate(zip(keys, epochs)):
-            if k not in best or e > best[k][0]:
-                best[k] = (e, i)
-        return [(keys[i], encs[i], pays[i]) for _, i in best.values()]
+        index = self._chunk_indexes.get(d)
+        if index is None:
+            index = self._chunk_indexes[d] = ChunkIndex(d)
+        return index.latest(ix.chunk_id_ranges(clamped, anchor,
+                                               sc.chunk_size))
 
     def _write_chunks(self, df: DataFrame, mip: int | None = None,
                       mode: str = "append", path: str | None = None) -> None:
-        """Append/overwrite chunk rows, sorted by (cz,cy,cx) so Parquet
-        row-group stats prune tightly.
+        """Append/overwrite chunk rows, sorted by (cz,cy,cx), one chunk
+        per row group so row-group stats prune to exactly the chunks a
+        filter selects.  The row-count limit is what forces that:
+        parquet-mr checks ``parquet.block.size`` only every 100 rows.
 
         Parquet page compression is OFF for codec-compressed encodings:
         the payload bytes are already gzip/zstd and page-level zstd
@@ -556,6 +553,7 @@ class Volume:
         (df.sortWithinPartitions("cz", "cy", "cx")
            .write.mode(mode)
            .option("compression", "zstd" if enc == "raw" else "uncompressed")
+           .option("parquet.block.row.count.limit", "1")
            .parquet(path or self._mip_dir(mip)))
 
     # -- chunk DataFrame ------------------------------------------------------
@@ -1023,7 +1021,7 @@ class Volume:
 
             from bigarrays_jl_spark import codecs as _codecs
             placed = 0
-            for key, enc, payload in local_rows:
+            for key, *_ in local_rows:
                 cbox = ix.parse_chunk_key(key)
                 if ix.box_is_empty(ix.intersect_box(cbox, request)):
                     continue
@@ -1034,24 +1032,23 @@ class Volume:
                     "chunks missing and fill_missing=False")
 
             def _place(row) -> None:
-                key, enc, payload = row
+                key, enc, payload, part_file = row
                 cbox = ix.parse_chunk_key(key)
                 cut = ix.intersect_box(cbox, request)
                 if ix.box_is_empty(cut):
                     return
                 shape = ix.box_shape(cbox)
-                if nc > 1:
-                    shape = (*shape, nc)
-                codec = _codecs.get_codec(enc)
-                # pa.BinaryScalar → bytes: one copy of the COMPRESSED
-                # payload, needed because the codecs' magic sniff
-                # compares leading bytes (memoryview formats from
-                # arrow buffers don't content-compare against bytes)
-                data = (payload.as_py() if hasattr(payload, "as_py")
-                        else bytes(payload))
-                chunk = np.frombuffer(
-                    codec.decode(data),
-                    dtype=info.dtype).reshape(shape, order="F")
+                try:
+                    # decode_payload applies the jpeg aspect guard
+                    chunk = np.frombuffer(
+                        _codecs.decode_payload(enc, payload,
+                                               expected_width=shape[0]),
+                        dtype=info.dtype).reshape(
+                            shape if nc == 1 else (*shape, nc), order="F")
+                except Exception as e:
+                    raise ChunkDecodeError(
+                        f"chunk {key} ({enc}) in part file {part_file}: "
+                        f"{e}") from e
                 sl = tuple(slice(lo - clo, hi - clo)
                            for (lo, hi), (clo, _) in zip(cut, cbox))
                 dst = tuple(slice(lo - rlo, hi - rlo)
@@ -1087,11 +1084,12 @@ class Volume:
                     if _ix.box_is_empty(cut):
                         continue
                     shape = _ix.box_shape(cbox)
-                    if nc > 1:
-                        shape = (*shape, nc)
-                    codec = _codecs.get_codec(enc)
-                    chunk = _np.frombuffer(codec.decode(bytes(payload)), dtype=dt)
-                    chunk = chunk.reshape(shape, order="F")
+                    chunk = _np.frombuffer(
+                        _codecs.decode_payload(enc, bytes(payload),
+                                               expected_width=shape[0]),
+                        dtype=dt)
+                    chunk = chunk.reshape(
+                        shape if nc == 1 else (*shape, nc), order="F")
                     sl = tuple(slice(lo - clo, hi - clo)
                                for (lo, hi), (clo, _) in zip(cut, cbox))
                     block = chunk[sl] if nc == 1 else chunk[(*sl, slice(None))]
