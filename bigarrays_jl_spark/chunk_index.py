@@ -19,7 +19,14 @@ from other handles and processes.  Discovery follows
 ``pyarrow.dataset``'s rules: recurse into subdirectories and skip names
 starting with ``.`` or ``_`` (Spark's ``_SUCCESS`` and ``.crc`` files).
 
-Memory: the ids cost about 60 B per chunk of the files present (57 B
+Compaction: ``fold`` streams the latest-epoch winner of every key,
+payloads still encoded, in (cz, cy, cx) order and in batches of at
+most ``FOLD_BATCH_BYTES`` of payload, so the driver-local compaction
+is a byte copy whose memory is bounded by that constant, not by the
+mip.  ``has_duplicates`` is the auto-compaction probe: it answers from
+the cached keys without reading any payload.
+
+Memory: the ids cost about 70 B per chunk of the files present (65 B
 with 25-character keys), no payloads.  A parsed Parquet footer costs
 ~5 KB per row group in memory, so footers live in an LRU bounded at
 ``FOOTER_CACHE_ROW_GROUPS`` row groups in total; a file whose footer
@@ -34,6 +41,7 @@ import threading
 from collections import OrderedDict
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
@@ -41,6 +49,9 @@ ID_COLUMNS = ["cx", "cy", "cz", "key", "enc", "epoch"]
 
 # ~40 MB of parsed footers at ~5 KB per row group
 FOOTER_CACHE_ROW_GROUPS = 8192
+
+# payload bytes per batch of a fold; the copy holds a few times this
+FOLD_BATCH_BYTES = 64 << 20
 
 
 def list_part_files(directory: str) -> dict[str, tuple[int, int]]:
@@ -65,10 +76,11 @@ def list_part_files(directory: str) -> dict[str, tuple[int, int]]:
 
 class _PartFile:
     """The id columns of one part file.  ``enc`` holds codes into
-    ``enc_names``; ``rg_start`` holds each row group's first row."""
+    ``enc_names``; ``rg_start`` holds each row group's first row and
+    ``rg_bytes`` the size of its ``payload`` column chunk."""
 
     __slots__ = ("sig", "cid", "lo", "hi", "epoch", "key", "enc",
-                 "enc_names", "rg_start")
+                 "enc_names", "rg_start", "rg_bytes")
 
     def __init__(self, sig: tuple[int, int], pf: pq.ParquetFile) -> None:
         ids = pf.read(columns=ID_COLUMNS)
@@ -85,9 +97,13 @@ class _PartFile:
         enc = pc.dictionary_encode(ids.column("enc").combine_chunks())
         self.enc = enc.indices.to_numpy()
         self.enc_names = enc.dictionary.to_pylist()
-        sizes = np.array([md.row_group(i).num_rows
-                          for i in range(md.num_row_groups)], dtype=np.int32)
+        rgs = [md.row_group(i) for i in range(md.num_row_groups)]
+        payload = md.schema.names.index("payload")
+        sizes = np.array([g.num_rows for g in rgs], dtype=np.int32)
         self.rg_start = np.cumsum(sizes, dtype=np.int32) - sizes
+        self.rg_bytes = np.array(
+            [g.column(payload).total_uncompressed_size for g in rgs],
+            dtype=np.int64)
 
     def rows_in(self, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
         """Indices of the rows whose chunk id lies in ``[lo, hi)``."""
@@ -95,6 +111,12 @@ class _PartFile:
             return np.empty(0, dtype=np.int64)
         inside = ((self.cid >= lo[:, None]) & (self.cid < hi[:, None]))
         return np.flatnonzero(inside.all(axis=0))
+
+    def row_bytes(self) -> np.ndarray:
+        """Each row's share of its row group's payload bytes (its own
+        payload size when the file has one chunk per row group)."""
+        rows = np.diff(np.append(self.rg_start, len(self.epoch)))
+        return np.repeat(self.rg_bytes // np.maximum(rows, 1), rows)
 
 
 class ChunkIndex:
@@ -128,19 +150,73 @@ class ChunkIndex:
             wanted: dict[str, list[tuple[int, str]]] = {}
             for k, (_, path, r) in best.items():
                 wanted.setdefault(path, []).append((r, k))
-            reads = [(path, self._files[path], self._footer(path),
-                      sorted(hits)) for path, hits in wanted.items()]
+            reads = [(path, self._files[path], sorted(hits))
+                     for path, hits in wanted.items()]
         out = []
-        for path, f, footer, hits in reads:
-            if footer is None:
-                footer = pq.read_metadata(path)
-                with self._lock:
-                    if self._files.get(path) is f:
-                        self._keep_footer(path, footer)
+        for path, f, hits in reads:
             rows = np.array([r for r, _ in hits], dtype=np.int64)
-            payloads = _read_payloads(path, f, footer, rows)
+            payloads = _read_payloads(path, f, self._footer_for(path, f),
+                                      rows)
             out += ((k, f.enc_names[c], p, path) for (_, k), c, p
                     in zip(hits, f.enc[rows].tolist(), payloads))
+        return out
+
+    def has_duplicates(self) -> bool:
+        """Whether any key is stored more than once, i.e. whether there
+        is overwrite history to fold.  Reads no payloads."""
+        with self._lock:
+            self._refresh()
+            keys = [f.key for f in self._files.values()]
+        n = sum(len(k) for k in keys)
+        return n > 0 and len(pc.unique(pa.chunked_array(keys))) < n
+
+    def fold(self):
+        """Yield the latest-epoch winner of every stored key as lists of
+        ``(cx, cy, cz, key, enc, payload)``, payloads still encoded,
+        sorted by (cz, cy, cx) within and across lists.  A list carries
+        at most ``FOLD_BATCH_BYTES`` of payload (a larger chunk comes
+        alone), read when the list is due."""
+        with self._lock:
+            self._refresh()
+            files = list(self._files.items())
+        parts = [f for _, f in files]
+        n = [len(f.epoch) for f in parts]
+        if not sum(n):
+            return
+        fid = np.repeat(np.arange(len(parts)), n)
+        row = np.concatenate([np.arange(k) for k in n])
+        code = pc.dictionary_encode(
+            pa.concat_arrays([f.key for f in parts])).indices.to_numpy()
+        order = np.lexsort((-np.concatenate([f.epoch for f in parts]), code))
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = code[order[1:]] != code[order[:-1]]
+        win = order[first]
+        win = win[np.lexsort(np.concatenate([f.cid for f in parts],
+                                            axis=1)[:, win])]
+        nbytes = np.concatenate([f.row_bytes() for f in parts])[win]
+        start = size = 0
+        for j, b in enumerate(nbytes.tolist()):
+            if size and size + b > FOLD_BATCH_BYTES:
+                yield self._read_rows(files, fid, row, win[start:j])
+                start, size = j, 0
+            size += b
+        yield self._read_rows(files, fid, row, win[start:])
+
+    def _read_rows(self, files, fid, row, sel) -> list[tuple]:
+        """``(cx, cy, cz, key, enc, payload)`` of the global rows ``sel``
+        (``files[fid[i]]``, row ``row[i]``), in the order of ``sel``."""
+        out = [None] * len(sel)
+        for k in np.unique(fid[sel]).tolist():
+            path, f = files[k]
+            at = np.flatnonzero(fid[sel] == k)
+            at = at[np.argsort(row[sel[at]], kind="stable")]
+            rows = row[sel[at]]
+            ids = zip(*f.cid[:, rows].tolist(),
+                      f.key.take(rows).to_pylist(), f.enc[rows].tolist(),
+                      _read_payloads(path, f, self._footer_for(path, f),
+                                     rows))
+            for a, (cx, cy, cz, key, c, p) in zip(at.tolist(), ids):
+                out[a] = (cx, cy, cz, key, f.enc_names[c], p)
         return out
 
     def _refresh(self) -> None:
@@ -158,13 +234,21 @@ class ChunkIndex:
             self._drop_footer(path)
         self._files = files
 
-    def _footer(self, path: str):
-        """The cached footer of ``path``, or None when it must be read.
-        Cached footers always belong to the indexed version of a file:
-        ``_refresh`` drops them with the file."""
-        footer = self._footers.get(path)
-        if footer is not None:
-            self._footers.move_to_end(path)
+    def _footer_for(self, path: str, f: _PartFile):
+        """The parsed footer of ``path`` as indexed in ``f``: from the
+        LRU, else read and kept while ``f`` is still the indexed version
+        of the file.  Cached footers always belong to the indexed
+        version of a file: ``_refresh`` drops them with the file."""
+        with self._lock:
+            footer = (self._footers.get(path)
+                      if self._files.get(path) is f else None)
+            if footer is not None:
+                self._footers.move_to_end(path)
+        if footer is None:
+            footer = pq.read_metadata(path)
+            with self._lock:
+                if self._files.get(path) is f:
+                    self._keep_footer(path, footer)
         return footer
 
     def _keep_footer(self, path: str, footer) -> None:

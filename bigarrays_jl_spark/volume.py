@@ -24,7 +24,9 @@ Design decisions for 100 TB scale (why this differs from a literal port):
   keep ``max_by(payload, epoch)`` per key after partition pruning (the
   dedupe shuffles only the *pruned* chunk set, not the table).
   ``compact()`` folds history down, like the reference's KV delete+put
-  (src/backends/S3Dicts.jl:55-77) but append-only and cloud-atomic.
+  (src/backends/S3Dicts.jl:55-77) but append-only and cloud-atomic: a
+  Spark ``max_by`` rewrite in general, a driver-side byte copy of each
+  key's latest payload through the chunk index on local datasets.
 - **Codec work runs in executors** (Arrow-batched pandas path), exactly
   where the reference pays decode cost in its worker tasks
   (src/modes/multithreads.jl:107-119); Spark's task scheduler replaces
@@ -40,8 +42,10 @@ import contextlib
 import functools
 import json
 import os
+import shutil
 import socket
 import time
+import uuid
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -144,10 +148,20 @@ def _strip_file_scheme(path: str) -> str:
 
 def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     if _is_local(path):
-        p = _strip_file_scheme(path)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "wb") as f:
-            f.write(data)
+        # write a hidden sibling, then rename it over ``path``: a crash
+        # mid-write leaves the previous file whole (a torn ``_epoch``
+        # would make every later read and write fail)
+        d, name = os.path.split(_strip_file_scheme(path))
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.replace(tmp, os.path.join(d, name))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
         return
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
@@ -230,6 +244,64 @@ def _fs_create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
         raise
     return True
 
+def _write_part_local(directory: str, rows: list, epoch: int,
+                      raw: bool) -> None:
+    """Write ``rows``, ``(cx, cy, cz, key, enc, payload)`` with encoded
+    payloads sorted by (cz,cy,cx), as one pyarrow part file in
+    ``directory`` at ``epoch``, one chunk per row group like the
+    Spark-written files beside it.  ``raw`` (the mip's encoding is
+    ``raw``) turns on page compression, the only compression layer of
+    raw payloads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    payloads = [r[5] for r in rows]
+    # binary column built zero-copy-ish from one concatenation +
+    # a cumulative-offsets array (guide §4.2's offsets-over-one-
+    # buffer idiom) — ~2.4× the element-wise pa.array build; the
+    # int64/large_binary branch keeps >2 GiB driver writes valid
+    total = sum(len(p) for p in payloads)
+    lens = np.fromiter((len(p) for p in payloads), dtype=np.int64,
+                       count=len(payloads))
+    if total < (1 << 31):
+        offs = np.zeros(len(payloads) + 1, dtype=np.int32)
+        pa_type = pa.binary()
+    else:  # pragma: no cover - needs a >2 GiB driver array
+        offs = np.zeros(len(payloads) + 1, dtype=np.int64)
+        pa_type = pa.large_binary()
+    np.cumsum(lens, out=offs[1:])
+    payload_arr = pa.Array.from_buffers(
+        pa_type, len(payloads),
+        [None, pa.py_buffer(offs.tobytes()),
+         pa.py_buffer(b"".join(payloads))])
+    tbl = pa.table({
+        "cx": pa.array([r[0] for r in rows], pa.int32()),
+        "cy": pa.array([r[1] for r in rows], pa.int32()),
+        "cz": pa.array([r[2] for r in rows], pa.int32()),
+        "key": pa.array([r[3] for r in rows], pa.string()),
+        "enc": pa.array([r[4] for r in rows], pa.string()),
+        "epoch": pa.array([epoch] * len(rows), pa.int64()),
+        "payload": payload_arr,
+    })
+    os.makedirs(directory, exist_ok=True)
+    # one chunk per row group: a cutout reads exactly its chunks'
+    # payloads (see chunk_index.py).  No dictionary encoding
+    # (hashing 100s of MB of unique chunk payloads cost 5× the raw
+    # write) and stats only on the id columns the cutout filter
+    # prunes with
+    # 8 MB data pages (default 1 MB): fewer page headers/flushes on
+    # the fat binary column — measured 494 → 604 MB/s on the
+    # write_table call alone (r18); readers are unaffected (pages
+    # are a writer-side granularity)
+    pq.write_table(
+        tbl, os.path.join(directory,
+                          f"part-local-{uuid.uuid4().hex}.parquet"),
+        compression="zstd" if raw else "none",
+        row_group_size=1, use_dictionary=False,
+        data_page_size=8 << 20,
+        write_statistics=["cx", "cy", "cz", "epoch"])
+
+
 def _locked_writer(get_lock_target=None):
     """Method decorator: hold the dataset write-intent lock for the whole
     epoch-allocate → chunk-write window.  ``get_lock_target`` picks which
@@ -274,9 +346,10 @@ class Volume:
         self.cutout_voxel_budget = 2 ** 31
         # auto-compaction policy: when a write leaves this many epochs of
         # overwrite history, fold it down so reads keep the no-shuffle
-        # `_latest` fast path.  Each compaction rewrites the mip, so the
-        # threshold amortizes that cost over N appends; None disables
-        # (manual compact() only).
+        # `_latest` fast path.  Each compaction rewrites the mip (a
+        # driver-local byte copy under `local_io`, a Spark shuffle
+        # otherwise), so the threshold amortizes that cost over N
+        # appends; None disables (manual compact() only).
         self.auto_compact_epochs: int | None = 16
         # Driver-local IO fast path for the DRIVER-ARRAY API (write /
         # cutout) on local-FS datasets: the array is driver-resident on
@@ -294,9 +367,13 @@ class Volume:
         # chunks' row groups.  This mirrors the reference's local
         # BinDict backend reading one object per chunk
         # (ref src/backends/BinDicts.jl:24-48) while every distributed
-        # op (ingest_chunks, voxels, map_blocks, compact, …) and every
-        # non-local scheme stays on the Spark path.  Set False to force
-        # the Spark path on local datasets.
+        # op (ingest_chunks, voxels, map_blocks, delete, …) and every
+        # non-local scheme stays on the Spark path.  ``compact`` and the
+        # auto-compaction duplicate probe run here too: the chunk index
+        # already knows every key, epoch and row group, so the fold is a
+        # byte copy on the driver (memory bounded by
+        # chunk_index.FOLD_BATCH_BYTES) instead of a shuffle of every
+        # payload.  Set False to force the Spark path on local datasets.
         self.local_io: bool = True
         # mip dir -> ChunkIndex of the driver-local cutout path
         self._chunk_indexes: dict[str, ChunkIndex] = {}
@@ -434,15 +511,10 @@ class Volume:
                             mip: int | None = None) -> None:
         """Driver-local twin of ``_write_chunks`` for driver-resident
         arrays: thread-pooled F-order copy + codec encode (numpy copies
-        and zlib/zstd release the GIL) + one pyarrow parquet part file,
-        rows sorted by (cz,cy,cx), one chunk per row group like the
-        Spark-written files beside it.  Row payloads may be ndarray
-        views (``write``) or ready bytes."""
-        import uuid
+        and zlib/zstd release the GIL) + one part file through
+        ``_write_part_local``.  Row payloads may be ndarray views
+        (``write``) or ready bytes."""
         from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from bigarrays_jl_spark import codecs as _codecs
         codec = _codecs.get_codec(enc)
@@ -469,50 +541,10 @@ class Volume:
                 futs = [ex.submit(codec.encode, _f_bytes(r[4]))
                         for r in rows]
                 payloads = [f.result() for f in futs]
-        # binary column built zero-copy-ish from one concatenation +
-        # a cumulative-offsets array (guide §4.2's offsets-over-one-
-        # buffer idiom) — ~2.4× the element-wise pa.array build; the
-        # int64/large_binary branch keeps >2 GiB driver writes valid
-        total = sum(len(p) for p in payloads)
-        lens = np.fromiter((len(p) for p in payloads), dtype=np.int64,
-                           count=len(payloads))
-        if total < (1 << 31):
-            offs = np.zeros(len(payloads) + 1, dtype=np.int32)
-            pa_type = pa.binary()
-        else:  # pragma: no cover - needs a >2 GiB driver array
-            offs = np.zeros(len(payloads) + 1, dtype=np.int64)
-            pa_type = pa.large_binary()
-        np.cumsum(lens, out=offs[1:])
-        payload_arr = pa.Array.from_buffers(
-            pa_type, len(payloads),
-            [None, pa.py_buffer(offs.tobytes()),
-             pa.py_buffer(b"".join(payloads))])
-        tbl = pa.table({
-            "cx": pa.array([r[0] for r in rows], pa.int32()),
-            "cy": pa.array([r[1] for r in rows], pa.int32()),
-            "cz": pa.array([r[2] for r in rows], pa.int32()),
-            "key": pa.array([r[3] for r in rows], pa.string()),
-            "enc": pa.array([enc] * len(rows), pa.string()),
-            "epoch": pa.array([epoch] * len(rows), pa.int64()),
-            "payload": payload_arr,
-        })
-        d = self._local_chunks_dir(mip)
-        os.makedirs(d, exist_ok=True)
-        # one chunk per row group: a cutout reads exactly its chunks'
-        # payloads (see chunk_index.py).  No dictionary encoding
-        # (hashing 100s of MB of unique chunk payloads cost 5× the raw
-        # write) and stats only on the id columns the cutout filter
-        # prunes with
-        # 8 MB data pages (default 1 MB): fewer page headers/flushes on
-        # the fat binary column — measured 494 → 604 MB/s on the
-        # write_table call alone (r18); readers are unaffected (pages
-        # are a writer-side granularity)
-        pq.write_table(
-            tbl, os.path.join(d, f"part-local-{uuid.uuid4().hex}.parquet"),
-            compression="zstd" if enc == "raw" else "none",
-            row_group_size=1, use_dictionary=False,
-            data_page_size=8 << 20,
-            write_statistics=["cx", "cy", "cz", "epoch"])
+        _write_part_local(
+            self._local_chunks_dir(mip),
+            [(*r[:4], enc, p) for r, p in zip(rows, payloads)], epoch,
+            raw=enc == "raw")
 
     def _read_latest_local(self, request: ix.Box,
                            mip: int | None = None) -> list | None:
@@ -530,11 +562,15 @@ class Volume:
             request, ix.volume_box(sc.voxel_offset, sc.volume_size))
         if ix.box_is_empty(clamped):
             return []
+        return self._chunk_index(d).latest(
+            ix.chunk_id_ranges(clamped, anchor, sc.chunk_size))
+
+    def _chunk_index(self, d: str) -> ChunkIndex:
+        """The handle's cached chunk index of local mip dir ``d``."""
         index = self._chunk_indexes.get(d)
         if index is None:
             index = self._chunk_indexes[d] = ChunkIndex(d)
-        return index.latest(ix.chunk_id_ranges(clamped, anchor,
-                                               sc.chunk_size))
+        return index
 
     def _write_chunks(self, df: DataFrame, mip: int | None = None,
                       mode: str = "append", path: str | None = None) -> None:
@@ -1703,7 +1739,9 @@ class Volume:
         ingest batches, no key written twice) would otherwise trigger a
         full multi-mip rewrite every ``t`` batches — quadratic total IO
         at volume scale for zero benefit.  At the threshold a key-only
-        duplicate probe (column-pruned scan, no payload bytes) decides:
+        duplicate probe decides (no payload bytes: on the driver-local
+        path the handle's chunk index answers from its cached keys with
+        no Spark job, else a column-pruned Spark scan):
         duplicates → compact; none → remember the checked depth and
         re-probe ``t`` epochs later.  The checked depth persists beside
         the epoch counter (``_dup_checked``): pipelines that open a
@@ -1732,9 +1770,13 @@ class Volume:
         for m in range(len(self.info.scales)):
             if not _fs_exists(self.spark, self._mip_dir(m)):
                 continue
-            has_dup = (self.chunks_df(m).groupBy("key")
-                       .count().filter(F.col("count") > 1)
-                       .limit(1).count() > 0)
+            d = self._local_chunks_dir(m)
+            if d is not None:
+                has_dup = self._chunk_index(d).has_duplicates()
+            else:
+                has_dup = (self.chunks_df(m).groupBy("key")
+                           .count().filter(F.col("count") > 1)
+                           .limit(1).count() > 0)
             if has_dup:
                 self.compact()
                 self._dup_checked_epoch = None
@@ -1754,11 +1796,18 @@ class Volume:
         epoch counter is dataset-global (``downsample`` appends epochs
         to mip+1 too), so resetting it is only sound once no mip retains
         multi-epoch history.
+
+        Where the driver-local path applies (see ``local_io``) each mip
+        is folded on the driver with no Spark job (``_fold_mip_local``);
+        every other dataset folds through a Spark ``max_by`` shuffle.
         """
         if self._current_epoch() <= 0:
             return  # already single-epoch everywhere
         for m in range(len(self.info.scales)):
             if not _fs_exists(self.spark, self._mip_dir(m)):
+                continue
+            if self._local_chunks_dir(m) is not None:
+                self._fold_mip_local(m)
                 continue
             self._rewrite_mip(
                 self._latest(self.chunks_df(m))
@@ -1767,21 +1816,44 @@ class Volume:
                 mip=m)
         _fs_write_bytes(self.spark, self.root + "/_epoch", b"0")
 
+    def _fold_mip_local(self, mip: int) -> None:
+        """Driver-local compaction of one mip, the reference's per-object
+        overwrite (src/backends/BinDicts.jl:24-48) applied to a whole
+        mip: the chunk index streams each key's latest payload, still
+        encoded (each row keeps its own ``enc``), into ``<mip>.tmp`` at
+        epoch 0 in batches of at most ``chunk_index.FOLD_BATCH_BYTES``
+        (one part file per batch), then the rename-swap puts it live.
+        A byte copy: no decode, no re-encode, no Spark job."""
+        self._recover_mip(mip)  # roll back any earlier crashed swap first
+        d = self._local_chunks_dir(mip)
+        tmp = d + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)   # a crashed fold's leftover
+        os.makedirs(tmp)
+        raw = self.info.scale(mip).encoding == "raw"
+        for batch in self._chunk_index(d).fold():
+            _write_part_local(tmp, batch, 0, raw)
+        self._swap_mip_dir(mip)
+
     def _rewrite_mip(self, df: DataFrame, mip: int | None = None) -> None:
-        """Replace a mip directory via rename-swap, never delete-then-
+        """Replace a mip directory with the rows of ``df``, written by
+        Spark into ``<mip>.tmp`` and swapped in by ``_swap_mip_dir``."""
+        self._recover_mip(mip)  # roll back any earlier crashed swap first
+        self._write_chunks(df, mip=mip, mode="overwrite",
+                           path=self._mip_dir(mip) + ".tmp")
+        self._swap_mip_dir(mip)
+
+    def _swap_mip_dir(self, mip: int | None = None) -> None:
+        """Put ``<mip>.tmp`` live via rename-swap, never delete-then-
         rename: the live data is moved aside to ``.old`` (one atomic
         rename), the rewrite renamed into place (second rename), THEN
         the old generation deleted — a crash between the renames leaves
         a complete ``.old`` that :meth:`_recover_mip` (run at open and
         before every rewrite) rolls back, instead of a window where the
         dataset's only copy lives in a ``.tmp`` no reader looks at."""
-        self._recover_mip(mip)  # roll back any earlier crashed swap first
-        tmp = self._mip_dir(mip) + ".tmp"
-        self._write_chunks(df, mip=mip, mode="overwrite", path=tmp)
         final = self._mip_dir(mip)
         old = final + ".old"
+        tmp = final + ".tmp"
         if _is_local(final):
-            import shutil
             fp, op, tp = (_strip_file_scheme(p) for p in (final, old, tmp))
             shutil.rmtree(op, ignore_errors=True)
             if os.path.exists(fp):

@@ -276,7 +276,7 @@ def test_writers_put_one_chunk_per_row_group(spark, tmp_path, local):
     assert sum(n for _, n in counts) == 64
     assert all(g == n for g, n in counts), counts
     vol.write(mirror[:32, :32, :32], (0, 0, 0))
-    vol.compact()                           # the Spark rewrite
+    vol.compact()                           # Spark or driver-local fold
     assert all(g == n for g, n in _row_groups_per_row(d))
     vol.local_io = True
     _check(vol, mirror)

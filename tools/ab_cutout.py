@@ -1,4 +1,4 @@
-"""Same-window A/B of the driver-local cutout for two source trees.
+"""Same-window A/B of the driver-local cutout and write for two source trees.
 
 Each run is a fresh child process that imports the engine from one
 tree and replays the ``array_rw`` benchmark plan for a seed
@@ -16,10 +16,17 @@ numpy mirror.  For each pair it reports the mean driver CPU per cutout
 - place:  the rest (key parsing, reshape, copies into the output,
           thread-pool overhead).
 
+It also reports the mean process-tree CPU (``perfbench/common.TreeCPU``:
+the driver, the Spark JVM and its Python workers) per plain write and
+per compacting write, the write that reaches the auto-compaction
+threshold and runs ``Volume.compact``.
+
 The parent alternates the two trees, rotating which goes first on each
 repetition, keeps each tree's cheapest pair over all its runs
 (best-of-N over whole pairs, the least disturbed by other guests on a
-shared host) and prints it with the B/A ratio.
+shared host) and prints it with the B/A ratio: the cutout split comes
+from the pair with the cheapest cutouts, each write figure is its own
+minimum over pairs.
 
 Usage::
 
@@ -46,6 +53,7 @@ import types
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPLIT = ("cutout_ms", "scan_ms", "decode_ms", "place_ms")
+WRITES = ("write_ms", "compact_write_ms")
 
 
 def child(tree: str, seed: int, pairs: int, work: str) -> dict:
@@ -55,6 +63,8 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
     import numpy as np
 
     import array_rw as aw
+    from common import TreeCPU
+
     from bigarrays_jl_spark import codecs
     from bigarrays_jl_spark.session import get_spark
     from bigarrays_jl_spark.volume import Volume
@@ -88,6 +98,15 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
         return out
 
     Volume._read_latest_local = timed_read
+    compact = Volume.compact
+    compactions = [0]
+
+    def counted_compact(self, *a, **kw):
+        compactions[0] += 1
+        return compact(self, *a, **kw)
+
+    Volume.compact = counted_compact
+    tree = TreeCPU()
 
     spark = get_spark("ab_cutout")
     try:
@@ -109,10 +128,17 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
         mirror, out, failed = original.copy(), [], 0
         for _ in range(pairs):
             tot = scan = dec = 0.0
+            writes = {"write_ms": [], "compact_write_ms": []}
             for op in pair:
                 if op[0] == "write":
                     _, off, arr = op
+                    n0 = compactions[0]
+                    c0 = tree.now(opening=True)
                     vol.write(arr, off)
+                    dc = tree.now(opening=False) - c0
+                    kind = ("compact_write_ms" if compactions[0] > n0
+                            else "write_ms")
+                    writes[kind].append(dc * 1e3)
                     mirror[tuple(slice(o, o + s)
                                  for o, s in zip(off, arr.shape))] = arr
                     continue
@@ -127,7 +153,8 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
             n = len(cutouts)
             out.append({"cutout_ms": tot / n * 1e3, "scan_ms": scan / n * 1e3,
                         "decode_ms": dec / n * 1e3,
-                        "place_ms": (tot - scan - dec) / n * 1e3})
+                        "place_ms": (tot - scan - dec) / n * 1e3,
+                        **{k: sum(v) / len(v) for k, v in writes.items()}})
         return {"pairs": out, "failed_cutouts": failed}
     finally:
         spark.stop()
@@ -179,6 +206,7 @@ def main(argv=None) -> int:
         ap.error("give two source trees")
     names = {"A": args.trees[0], "B": args.trees[1]}
     best: dict[str, dict] = {}
+    wbest: dict[str, dict] = {"A": {}, "B": {}}
     for rep in range(args.reps):
         for name in ("AB" if rep % 2 == 0 else "BA"):
             res = run_child(names[name], args)
@@ -188,9 +216,13 @@ def main(argv=None) -> int:
             for p in res["pairs"]:
                 if name not in best or p["cutout_ms"] < best[name]["cutout_ms"]:
                     best[name] = p
+                for k in WRITES:
+                    wbest[name][k] = min(wbest[name].get(k, p[k]), p[k])
             print(f"rep {rep} {name}: " + " ".join(
-                f"{p['cutout_ms']:.2f}" for p in res["pairs"])
-                + " ms/cutout per pair", file=sys.stderr, flush=True)
+                f"{p['cutout_ms']:.2f}/{p['write_ms']:.1f}/"
+                f"{p['compact_write_ms']:.1f}" for p in res["pairs"])
+                + " ms per cutout/write/compacting write, per pair",
+                file=sys.stderr, flush=True)
 
     print(f"driver CPU per cutout, best pair of {args.reps} runs x "
           f"{args.pairs} pairs, seed {args.seed}, local[{args.cores}]")
@@ -199,6 +231,13 @@ def main(argv=None) -> int:
         print(f"{name}     {fmt(best[name])}   {names[name]}")
     ratio = best["B"]["cutout_ms"] / best["A"]["cutout_ms"]
     print(f"B/A cutout CPU: {ratio:.3f}")
+    print("process-tree CPU per write (ms), best pair")
+    print("tree  " + "  ".join(f"{k:>16}" for k in WRITES))
+    for name in "AB":
+        print(f"{name}     " + "  ".join(f"{wbest[name][k]:16.1f}"
+                                        for k in WRITES))
+    print("B/A  " + "  ".join(
+        f"{wbest['B'][k] / wbest['A'][k]:17.3f}" for k in WRITES))
     return 0
 
 
