@@ -373,7 +373,7 @@ def demo_volume(spark: SparkSession):
 
 def volume_cutout_sum(spark: SparkSession, sf: str) -> DataFrame:
     vol = demo_volume(spark)
-    vox = vol.voxels(((8, 40), (16, 48), (0, 32)), columns=("z", "value"))
+    vox = vol.voxels(((8, 40), (16, 48), (0, 32)))
     return (vox.groupBy("z")
                .agg(F.sum("value").cast("bigint").alias("sum_v"),
                     F.count("*").alias("n_voxels")))

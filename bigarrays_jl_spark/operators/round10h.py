@@ -264,7 +264,7 @@ FROM m GROUP BY i
 
 def volume_label_moments(spark: SparkSession, sf: str) -> DataFrame:
     vol = demo_seg_volume(spark)
-    vox = vol.voxels(MOM_BOX, columns=("x", "y", "z", "value"))
+    vox = vol.voxels(MOM_BOX)
     m = (vox.groupBy(F.col("value").alias("label"))
          .agg(F.count("*").alias("n"),
               F.sum("x").alias("sx"), F.sum("y").alias("sy"),

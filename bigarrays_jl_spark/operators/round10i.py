@@ -55,7 +55,7 @@ from bigarrays_jl_spark.operators.graph_lsh import (_LSH_EDGES_CTE,
 from bigarrays_jl_spark.operators.volume_seg import (SEG_BLOCK,
                                                      demo_seg_volume)
 from bigarrays_jl_spark.sources.tables import load
-from bigarrays_jl_spark.volume import _REPO_ROOT
+from bigarrays_jl_spark.volume import _on_workers
 
 VQ = 1_000_000
 LPA_ROUNDS = 3
@@ -294,7 +294,6 @@ def roi_stats(seg, img, request: ix.Box) -> DataFrame:
         raise ValueError("roi_stats requires volumes on one chunk lattice")
     req = tuple((int(lo), int(hi)) for lo, hi in request)
     s_dt, i_dt = seg.info.data_type, img.info.data_type
-    _root = _REPO_ROOT
 
     sc = (seg._latest(seg._pruned(req))
           .select("key", F.col("enc").alias("enc_s"),
@@ -305,32 +304,19 @@ def roi_stats(seg, img, request: ix.Box) -> DataFrame:
     both = sc.join(icg, "key")
 
     def zip_pass(it: Iterator) -> Iterator:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark import codecs as _codecs
-        from bigarrays_jl_spark import indexes as _ix
+        from bigarrays_jl_spark.volume import decode_chunk
         for batch in it:
             for key, es, ps, ei, pi in zip(batch["key"], batch["enc_s"],
                                            batch["pay_s"], batch["enc_i"],
                                            batch["pay_i"]):
-                cbox = _ix.parse_chunk_key(key)
-                cut = _ix.intersect_box(cbox, req)
-                if _ix.box_is_empty(cut):
+                hit = decode_chunk(key, es, ps, 1, s_dt, req)
+                if hit is None:
                     continue
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                shape = _ix.box_shape(cbox)
-                lab = _np.frombuffer(
-                    _codecs.get_codec(es).decode(bytes(ps)),
-                    dtype=_np.dtype(s_dt)).reshape(shape, order="F")[sl]
-                inten = _np.frombuffer(
-                    _codecs.get_codec(ei).decode(bytes(pi)),
-                    dtype=_np.dtype(i_dt)).reshape(shape, order="F")[sl]
-                lab = lab.ravel().astype(_np.int64)
-                inten = inten.ravel().astype(_np.int64)
+                lab = hit[2].ravel().astype(_np.int64)
+                inten = (decode_chunk(key, ei, pi, 1, i_dt, req)[2]
+                         .ravel().astype(_np.int64))
                 uniq, inv = _np.unique(lab, return_inverse=True)
                 n = _np.bincount(inv)
                 s = _np.bincount(inv, weights=inten).astype(_np.int64)
@@ -341,7 +327,7 @@ def roi_stats(seg, img, request: ix.Box) -> DataFrame:
                 yield _pd.DataFrame({"label": uniq, "n": n, "s": s,
                                      "mn": mn, "mx": mx})
 
-    parts = both.mapInPandas(zip_pass, schema=_ROI_SCHEMA)
+    parts = both.mapInPandas(_on_workers(zip_pass), schema=_ROI_SCHEMA)
     return (parts.groupBy("label")
             .agg(F.sum("n").alias("n_voxels"),
                  F.sum("s").alias("sum_i"),

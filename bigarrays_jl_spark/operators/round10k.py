@@ -70,7 +70,7 @@ def equalize_volume(spark: SparkSession):
     shutil.rmtree(root, ignore_errors=True)
     dest = Volume.create(spark, root, Info.from_dict(src.info.to_dict()))
 
-    hist = (src.voxels(src.vol_box, columns=("value",))
+    hist = (src.voxels(src.vol_box)
             .groupBy("value").agg(F.count("*").alias("w"))
             .collect())                      # ≤ 256 rows: dtype-bounded
     counts = np.zeros(256, dtype=np.int64)
@@ -93,7 +93,7 @@ def equalize_volume(spark: SparkSession):
 
 def volume_equalized_histogram(spark: SparkSession, sf: str) -> DataFrame:
     vol = equalize_volume(spark)
-    vox = vol.voxels(vol.vol_box, columns=("value",))
+    vox = vol.voxels(vol.vol_box)
     return (vox.groupBy(F.col("value").cast("bigint").alias("eq_value"))
             .agg(F.count("*").alias("n_voxels")))
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from bigarrays_jl_spark.operators.volume_seg import (SEG_BLOCK, SEG_SIDE,
                                                      demo_seg_volume)
 from bigarrays_jl_spark.sources.tables import load
+from bigarrays_jl_spark.volume import _on_workers
 
 ERASE_MOD = 97
 
@@ -48,24 +49,16 @@ def volume_label_surface(spark: SparkSession, sf: str) -> DataFrame:
     vol = demo_seg_volume(spark)
     latest = vol._latest(vol._pruned(vol.vol_box))
     side = SEG_SIDE
-    _root = __import__(
-        "bigarrays_jl_spark.volume", fromlist=["_REPO_ROOT"])._REPO_ROOT
+    dtype_str = vol.info.data_type
 
     def stream(it):
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as np
-        from bigarrays_jl_spark import codecs as _codecs
-        from bigarrays_jl_spark import indexes as _ix
+        from bigarrays_jl_spark.volume import decode_chunk
         for b in it:
             for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                cbox = _ix.parse_chunk_key(key)
-                shape = _ix.box_shape(cbox)
-                codec = _codecs.get_codec(enc)
-                arr = np.frombuffer(codec.decode(bytes(payload)),
-                                    dtype=np.uint32).reshape(shape,
-                                                             order="F")
+                cbox, _, arr = decode_chunk(key, enc, payload, 1, dtype_str)
+                arr = arr[..., 0]
+                shape = arr.shape
                 counts: dict[tuple[int, int], list[int]] = {}
 
                 def bump(label, which, n=1):
@@ -123,9 +116,9 @@ def volume_label_surface(spark: SparkSession, sf: str) -> DataFrame:
                 yield pd.concat([local, *faces], ignore_index=True)
 
     rows = latest.mapInPandas(
-        stream, schema="kind int, axis int, plane long, u long, v long, "
-                       "hi_side int, label long, n_label long, "
-                       "n_volume long")
+        _on_workers(stream),
+        schema="kind int, axis int, plane long, u long, v long, "
+               "hi_side int, label long, n_label long, n_volume long")
     local = (rows.filter(F.col("kind") == 0)
              .groupBy("label")
              .agg(F.sum("n_label").alias("nl"),

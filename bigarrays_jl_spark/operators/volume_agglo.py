@@ -161,7 +161,7 @@ def agglomerate_census(vol: Volume,
     tools/scale_proof.py's volume leg)."""
     rag = region_adjacency(vol)
     merge = agglomerate_map(rag, min_contact)
-    sizes = (vol.voxels(columns=("value",))
+    sizes = (vol.voxels()
              .filter(F.col("value") != 0)
              .groupBy(F.col("value").alias("label"))
              .agg(F.count("*").alias("n_voxels")))

@@ -33,7 +33,7 @@ def volume_histogram(spark: SparkSession, sf: str) -> DataFrame:
     (dtype utilization, label density) run before choosing a codec or a
     downsample factor."""
     vol = demo_volume(spark)
-    vox = vol.voxels(((0, 64), (0, 64), (0, 64)), columns=("value",))
+    vox = vol.voxels(((0, 64), (0, 64), (0, 64)))
     bucket = F.floor(F.col("value") / HIST_BUCKET).cast("int")
     return (vox.groupBy(bucket.alias("bucket"))
                .agg(F.count("*").alias("n_voxels"),
@@ -58,8 +58,7 @@ def volume_mip_projection(spark: SparkSession, sf: str) -> DataFrame:
     rendering reduction — plus the mean, per (x, y) column of a cutout
     box.  Mean uses an exact integer sum (uint8 voxels) divided once."""
     vol = demo_volume(spark)
-    vox = vol.voxels(((0, 64), (0, 64), (16, 48)),
-                     columns=("x", "y", "value"))
+    vox = vol.voxels(((0, 64), (0, 64), (16, 48)))
     return (vox.groupBy("x", "y")
                .agg(F.max("value").cast("bigint").alias("max_v"),
                     (F.sum("value").cast("double") / F.count("*"))

@@ -70,8 +70,7 @@ def volume_channel_histogram(spark: SparkSession, sf: str) -> DataFrame:
     affinity-map profiling pass (per-channel dynamic range / label
     density) a segmentation pipeline runs before thresholding."""
     vol = demo_volume4d(spark)
-    vox = vol.voxels(((0, SIDE), (0, SIDE), (8, 24)),
-                     columns=("c", "value"))
+    vox = vol.voxels(((0, SIDE), (0, SIDE), (8, 24)))
     bucket = F.floor(F.col("value") / CH_HIST_BUCKET).cast("int")
     return (vox.groupBy(F.col("c").alias("channel"),
                         bucket.alias("bucket"))

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
-from bigarrays_jl_spark.volume import _REPO_ROOT, Volume
+from bigarrays_jl_spark.volume import Volume, _on_workers
 
 CC_MAX_ROUNDS = 20
 
@@ -84,30 +84,18 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
         raise ValueError("connected_components requires a single-channel "
                          "segmentation volume")
     chunks = vol._latest(vol._pruned(req))
-    _root = _REPO_ROOT
 
     def local_pass(it: Iterator) -> Iterator:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark import codecs as _codecs
-        from bigarrays_jl_spark import indexes as _ix
-        dt = _np.dtype(dtype_str)
+        from bigarrays_jl_spark.volume import decode_chunk
         for b in it:
             for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                cbox = _ix.parse_chunk_key(key)
-                cut = _ix.intersect_box(cbox, req)
-                if _ix.box_is_empty(cut):
+                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
+                if hit is None:
                     continue
-                codec = _codecs.get_codec(enc)
-                chunk = _np.frombuffer(codec.decode(bytes(payload)),
-                                       dtype=dt)
-                chunk = chunk.reshape(_ix.box_shape(cbox), order="F")
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                block = _np.ascontiguousarray(chunk[sl]).astype(_np.int64)
+                _, cut, block = hit
+                block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
                 sh = block.shape
                 n = block.size
                 flat = block.reshape(-1)
@@ -198,7 +186,7 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
                                    "axis", "fb", "fu", "fv"])
 
     stream = chunks.mapInPandas(
-        local_pass,
+        _on_workers(local_pass),
         schema=("kind int, comp bigint, label bigint, size bigint, "
                 "axis int, fb long, fu long, fv long")).localCheckpoint(
         eager=False)    # consumed by comps + faces: decode once

@@ -71,7 +71,7 @@ def demo_pyramid_volume(spark: SparkSession):
 
 def volume_mip1_histogram(spark: SparkSession, sf: str) -> DataFrame:
     vol = demo_pyramid_volume(spark)
-    vox = vol.mip_volume(1).voxels(columns=("value",))
+    vox = vol.mip_volume(1).voxels()
     bucket = F.floor(F.col("value") / MIP_BUCKET).cast("int")
     return (vox.groupBy(bucket.alias("bucket"))
                .agg(F.count("*").alias("n_voxels"),

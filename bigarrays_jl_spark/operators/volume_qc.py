@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.operators.advanced import demo_volume
-from bigarrays_jl_spark.volume import _REPO_ROOT
+from bigarrays_jl_spark.volume import _on_workers
 
 QC_BOX = ((0, 64), (0, 64), (0, 64))
 
@@ -49,7 +49,7 @@ QC_BOX = ((0, 64), (0, 64), (0, 64))
 
 def volume_slice_qc(spark: SparkSession, sf: str) -> DataFrame:
     vol = demo_volume(spark)
-    vox = vol.voxels(QC_BOX, columns=("z", "value"))
+    vox = vol.voxels(QC_BOX)
     hist = (vox.groupBy("z", F.col("value").cast("bigint").alias("v"))
             .agg(F.count("*").alias("w")))
     w_cum = (Window.partitionBy("z").orderBy("v")
@@ -123,31 +123,20 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
     boundary pairs ship face planes keyed by (boundary z, x, y)."""
     req = tuple((int(lo), int(hi)) for lo, hi in request)
     dtype_str = vol.info.data_type
-    _root = _REPO_ROOT
     chunks = vol._latest(vol._pruned(req))
 
     def local(it: Iterator) -> Iterator:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark import codecs as _codecs
-        from bigarrays_jl_spark import indexes as _ix
-        dt = _np.dtype(dtype_str)
+        from bigarrays_jl_spark.volume import decode_chunk
         for batch in it:
             for key, enc, payload in zip(batch["key"], batch["enc"],
                                          batch["payload"]):
-                cbox = _ix.parse_chunk_key(key)
-                cut = _ix.intersect_box(cbox, req)
-                if _ix.box_is_empty(cut):
+                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
+                if hit is None:
                     continue
-                chunk = _np.frombuffer(
-                    _codecs.get_codec(enc).decode(bytes(payload)),
-                    dtype=dt).reshape(_ix.box_shape(cbox), order="F")
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                blk = chunk[sl].astype(_np.int64)
+                _, cut, blk = hit
+                blk = blk[..., 0].astype(_np.int64)
                 z0 = cut[2][0]
                 rows = []
                 # in-chunk adjacent pairs: vectorized along z
@@ -192,7 +181,7 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
                                        "sab", "saa", "sbb", "fz", "fu",
                                        "fv", "side", "val"])
 
-    stream = chunks.mapInPandas(local, schema=_NCC_SCHEMA) \
+    stream = chunks.mapInPandas(_on_workers(local), schema=_NCC_SCHEMA) \
         .localCheckpoint(eager=False)
     inner = (stream.filter(F.col("kind") == 0)
              .select("z", "n", "sa", "sb", "sab", "saa", "sbb"))

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.operators.volume_components import (
     CC_BG_BLOCK, CC_BLOCK, demo_cc_volume)
-from bigarrays_jl_spark.volume import _REPO_ROOT, Volume
+from bigarrays_jl_spark.volume import Volume, _on_workers
 
 RAG_STREAM_SCHEMA = ("kind int, a bigint, b bigint, n bigint, "
                      "axis int, fb long, fu long, fv long, "
@@ -70,33 +70,22 @@ def rag_stream(vol: Volume, chunks: DataFrame,
     sc = vol.scale
     anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
     chunk_size = tuple(sc.chunk_size)
-    _root = _REPO_ROOT
 
     def local_pass(it: Iterator) -> Iterator:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark import codecs as _codecs
         from bigarrays_jl_spark import indexes as _ix
-        dt = _np.dtype(dtype_str)
+        from bigarrays_jl_spark.volume import decode_chunk
         for batch in it:
             for key, enc, payload in zip(batch["key"], batch["enc"],
                                          batch["payload"]):
-                cbox = _ix.parse_chunk_key(key)
-                cut = _ix.intersect_box(cbox, req)
-                if _ix.box_is_empty(cut):
+                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
+                if hit is None:
                     continue
+                cbox, cut, block = hit
                 cid = tuple(_ix.chunk_id(cbox[d][0], anchor[d],
                                          chunk_size[d]) for d in range(3))
-                codec = _codecs.get_codec(enc)
-                chunk = _np.frombuffer(codec.decode(bytes(payload)),
-                                       dtype=dt)
-                chunk = chunk.reshape(_ix.box_shape(cbox), order="F")
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                block = _np.ascontiguousarray(chunk[sl]).astype(_np.int64)
+                block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
                 sh = block.shape
                 rows = []
                 # in-chunk contacts: three axis shifts, pre-aggregated
@@ -158,7 +147,7 @@ def rag_stream(vol: Volume, chunks: DataFrame,
                                    "pcx", "pcy", "pcz"])
 
     return chunks.mapInPandas(
-        local_pass, schema=RAG_STREAM_SCHEMA).localCheckpoint(eager=False)
+        _on_workers(local_pass), schema=RAG_STREAM_SCHEMA).localCheckpoint(eager=False)
 
 
 def rag_edges(stream: DataFrame, keep_parts: bool = False) -> DataFrame:

@@ -74,8 +74,7 @@ def volume_label_sizes(spark: SparkSession, sf: str) -> DataFrame:
     """Per-label voxel count + axis-aligned bounding box over a cutout
     of the segmentation volume."""
     vol = demo_seg_volume(spark)
-    vox = vol.voxels(((0, SEG_SIDE), (0, SEG_SIDE), (8, 56)),
-                     columns=("x", "y", "z", "value"))
+    vox = vol.voxels(((0, SEG_SIDE), (0, SEG_SIDE), (8, 56)))
     return (vox.groupBy(F.col("value").alias("label"))
                .agg(F.count("*").alias("n_voxels"),
                     F.min("x").alias("x0"), F.max("x").alias("x1"),

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.operators.advanced import demo_volume
-from bigarrays_jl_spark.volume import _REPO_ROOT
+from bigarrays_jl_spark.volume import _on_workers
 
 BOX = ((0, 64), (0, 64), (0, 64))
 SCALE_LCM = 420                      # lcm(4,5,6,7): exact integer scaling
@@ -52,32 +52,21 @@ _STENCIL_SCHEMA = ("kind int, z bigint, ssum long, nvox long, "
 def _stencil_stream(vol, request) -> DataFrame:
     req = tuple((int(lo), int(hi)) for lo, hi in request)
     dtype_str = vol.info.data_type
-    _root = _REPO_ROOT
     chunks = vol._latest(vol._pruned(req))
 
     def local(it: Iterator) -> Iterator:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark import codecs as _codecs
-        from bigarrays_jl_spark import indexes as _ix
-        dt = _np.dtype(dtype_str)
+        from bigarrays_jl_spark.volume import decode_chunk
         cols = ["kind", "z", "ssum", "nvox", "x", "y", "vz", "term"]
         for batch in it:
             for key, enc, payload in zip(batch["key"], batch["enc"],
                                          batch["payload"]):
-                cbox = _ix.parse_chunk_key(key)
-                cut = _ix.intersect_box(cbox, req)
-                if _ix.box_is_empty(cut):
+                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
+                if hit is None:
                     continue
-                chunk = _np.frombuffer(
-                    _codecs.get_codec(enc).decode(bytes(payload)),
-                    dtype=dt).reshape(_ix.box_shape(cbox), order="F")
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                blk = chunk[sl].astype(_np.int64)
+                _, cut, blk = hit
+                blk = blk[..., 0].astype(_np.int64)
                 (x0, _), (y0, _), (z0, _) = cut
                 # in-chunk partial stencil sum via zero-padded shifts
                 pad = _np.pad(blk, 1)
@@ -149,7 +138,7 @@ def _stencil_stream(vol, request) -> DataFrame:
                 if faces:
                     yield _pd.concat(faces, ignore_index=True)
 
-    return chunks.mapInPandas(local, schema=_STENCIL_SCHEMA)
+    return chunks.mapInPandas(_on_workers(local), schema=_STENCIL_SCHEMA)
 
 
 def volume_stencil_smooth(spark: SparkSession, sf: str) -> DataFrame:

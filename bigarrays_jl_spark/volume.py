@@ -30,7 +30,14 @@ Design decisions for 100 TB scale (why this differs from a literal port):
 - **Codec work runs in executors** (Arrow-batched pandas path), exactly
   where the reference pays decode cost in its worker tasks
   (src/modes/multithreads.jl:107-119); Spark's task scheduler replaces
-  the hand-rolled channel + 8-coroutine pool.
+  the hand-rolled channel + 8-coroutine pool.  Every read path decodes
+  through one function, ``decode_chunk`` (the reference decodes in one
+  place too, src/modes/sequential.jl:23-65), and every executor closure
+  bootstraps through one wrapper, ``_on_workers``.
+- **The voxel view is arrays plus Catalyst arithmetic.**  ``voxels()``
+  ships one Arrow row per chunk cut holding its values in F order;
+  ``posexplode`` and integer expressions derive x, y, z and c in the
+  JVM, where Catalyst drops whichever a query does not use.
 
 Coordinate convention: 0-based, half-open global boxes (see indexes.py —
 byte-identical on-disk keys to the reference / neuroglancer precomputed).
@@ -56,67 +63,108 @@ from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.chunk_index import ChunkIndex
 from bigarrays_jl_spark.infos import Info, InfoScale
 
-# Executor pandas-UDF closures re-import this package on python workers;
-# a harness that builds its own SparkSession may not have put the repo
-# on the workers' PYTHONPATH, so every closure prepends this (pickled
-# by value) before importing.  On a cluster, --py-files replaces it.
+# Executor closures re-import this package on python workers; a harness
+# that builds its own SparkSession may not have put the repo on the
+# workers' PYTHONPATH, so ``_on_workers`` prepends it before the wrapped
+# function runs.  On a cluster, --py-files replaces it.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _on_workers(fn):
+    """Wrap an executor-side function (the iterator function of a
+    ``mapInPandas``/``mapInArrow`` or the group function of an
+    ``applyInPandas``) so that it first puts the repo on the worker's
+    ``sys.path``.  The wrapper is a nested closure, so cloudpickle
+    ships it by value together with the root path, and it takes one
+    positional argument because ``applyInPandas`` picks its calling
+    convention from the arity.  ``fn`` imports package modules inside
+    its body: unpickling runs before the bootstrap."""
+    root = _REPO_ROOT
+
+    def run(arg):
+        import sys
+        if root not in sys.path:
+            sys.path.insert(0, root)
+        return fn(arg)
+
+    run.__name__ = fn.__name__       # the name Spark plans show
+    return run
 
 
 def _encode_batches_fn(enc: str):
     """Executor-side codec encode over chunk batches — the one shared
     implementation behind ``write()`` and ``ingest_chunks`` (a fix to
-    the encode path must not need applying twice).  Returns a closure
-    (cloudpickle ships it by value, with the sys.path bootstrap for
-    workers that lack the repo on PYTHONPATH).
+    the encode path must not need applying twice).
 
     Measured (r17, interleaved A/B at 537 MB): a mapInArrow variant of
     this stage lands within run-to-run noise (282-353 pandas vs
     335-338 arrow MB/s) — the stage is codec-CPU-bound, so the pandas
-    object-Series transit is NOT the bottleneck here (unlike the
-    numeric voxel explode, where arrow won 45%).  Kept on pandas."""
-    _root = _REPO_ROOT
-
+    object-Series transit is NOT the bottleneck here."""
     def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-        if _root not in sys.path:
-            sys.path.insert(0, _root)
         from bigarrays_jl_spark import codecs as _codecs
         codec = _codecs.get_codec(enc)
         for b in it:
             b["payload"] = b["payload"].map(codec.encode)
             yield b
 
-    return encode_batches
+    return _on_workers(encode_batches)
 
-def decode_chunk_payload(enc: str, payload, shape, nc: int, dtype):
-    """Chunk payload bytes → ``(x, y, z, c)`` F-order ndarray with the
-    channel axis ALWAYS present — the payload-decode canon shared by
-    ``map_blocks`` and ``rechunk`` (a change to the payload layout must
-    not need applying in multiple hand-rolled copies; the cutout
-    assembly path keeps its own fused decode+slice for the hot read).
-    Safe to call from executor closures (imports locally)."""
+
+def decode_chunk(key: str, enc: str, payload, nc: int, dtype,
+                 request: ix.Box | None = None,
+                 part_file: str | None = None):
+    """The one chunk decode of every read path (the reference's
+    src/modes/sequential.jl:23-65): a stored chunk's key and encoded
+    payload → ``(cbox, cut, block)``, or None when the chunk misses
+    ``request``.  ``cbox`` is the chunk's global box, ``cut`` its
+    intersection with ``request`` (the whole chunk when None) and
+    ``block`` the read-only ``(x, y, z, c)`` F-order view of the
+    decoded voxels in ``cut``, channel axis always present.
+
+    The jpeg aspect guard always applies (the image width must be the
+    chunk's sx) and the decoded byte count must match the key's box ×
+    channels × dtype before anything is reshaped, so a corrupt or
+    unexpected payload never turns into wrong voxels: every failure
+    raises :class:`ChunkDecodeError` naming the chunk key, and
+    ``part_file`` when the caller knows it.  Safe to call from executor
+    closures (imports locally)."""
     import numpy as _np
 
     from bigarrays_jl_spark import codecs as _codecs
-    # decode_payload applies the jpeg aspect guard (width must be this
-    # chunk's sx); the reshape below still validates the byte COUNT for
-    # every codec
-    arr = _np.frombuffer(
-        _codecs.decode_payload(enc, bytes(payload),
-                               expected_width=int(shape[0])),
-        dtype=_np.dtype(dtype))
-    if nc > 1:
-        return arr.reshape((*shape, nc), order="F")
-    return arr.reshape(tuple(shape), order="F")[..., _np.newaxis]
+    from bigarrays_jl_spark import indexes as _ix
+    try:
+        cbox = _ix.parse_chunk_key(key)
+        cut = cbox if request is None else _ix.intersect_box(cbox, request)
+        if _ix.box_is_empty(cut):
+            return None
+        shape = _ix.box_shape(cbox)
+        dt = _np.dtype(dtype)
+        data = _codecs.decode_payload(enc, bytes(payload),
+                                      expected_width=shape[0])
+        want = shape[0] * shape[1] * shape[2] * nc * dt.itemsize
+        if len(data) != want:
+            raise ValueError(f"payload {len(data)} B != expected {want} B")
+        chunk = _np.frombuffer(data, dtype=dt).reshape((*shape, nc),
+                                                        order="F")
+    except Exception as e:
+        where = f" in part file {part_file}" if part_file else ""
+        raise ChunkDecodeError(f"chunk {key} ({enc}){where}: {e}") from e
+    sl = tuple(slice(lo - clo, hi - clo)
+               for (lo, hi), (clo, _) in zip(cut, cbox))
+    return cbox, cut, chunk[sl]
 
 
 CHUNK_SCHEMA = "cx int, cy int, cz int, key string, enc string, epoch bigint, payload binary"
 
 
 class ChunkDecodeError(ValueError):
-    """A stored chunk failed to decode or reshape on the driver-local
-    cutout path; the message names the chunk key and its part file."""
+    """A stored chunk failed to decode: its payload is corrupt, decodes
+    to the wrong byte count, or is a jpeg of the wrong aspect.  Raised
+    by :func:`decode_chunk` on every read path (driver-local and Spark
+    cutout, ``voxels``, ``map_blocks``, ``rechunk``, ``downsample``, the
+    volume operators); ``fsck`` reports it in its ``error`` column.
+    The message names the chunk key, and the part file on the
+    driver-local cutout path."""
 
 
 class MissingChunkError(KeyError):
@@ -146,22 +194,29 @@ def _is_local(path: str) -> bool:
 def _strip_file_scheme(path: str) -> str:
     return path[len("file://"):] if path.startswith("file://") else path
 
+@contextlib.contextmanager
+def _replacing(path: str):
+    """Yield a hidden (``.``-prefixed) sibling of local ``path`` to
+    write, then rename it over ``path``.  A crash mid-write leaves the
+    previous file whole and no torn file under a visible name: Spark,
+    pyarrow and chunk-index discovery all skip ``.`` names."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        yield tmp
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
 def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     if _is_local(path):
-        # write a hidden sibling, then rename it over ``path``: a crash
-        # mid-write leaves the previous file whole (a torn ``_epoch``
-        # would make every later read and write fail)
-        d, name = os.path.split(_strip_file_scheme(path))
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
-        try:
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, os.path.join(d, name))
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(tmp)
-            raise
+        # a torn ``_epoch`` would make every later read and write fail
+        with _replacing(_strip_file_scheme(path)) as tmp, \
+                open(tmp, "wb") as f:
+            f.write(data)
         return
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
@@ -283,7 +338,6 @@ def _write_part_local(directory: str, rows: list, epoch: int,
         "epoch": pa.array([epoch] * len(rows), pa.int64()),
         "payload": payload_arr,
     })
-    os.makedirs(directory, exist_ok=True)
     # one chunk per row group: a cutout reads exactly its chunks'
     # payloads (see chunk_index.py).  No dictionary encoding
     # (hashing 100s of MB of unique chunk payloads cost 5× the raw
@@ -292,14 +346,16 @@ def _write_part_local(directory: str, rows: list, epoch: int,
     # 8 MB data pages (default 1 MB): fewer page headers/flushes on
     # the fat binary column — measured 494 → 604 MB/s on the
     # write_table call alone (r18); readers are unaffected (pages
-    # are a writer-side granularity)
-    pq.write_table(
-        tbl, os.path.join(directory,
-                          f"part-local-{uuid.uuid4().hex}.parquet"),
-        compression="zstd" if raw else "none",
-        row_group_size=1, use_dictionary=False,
-        data_page_size=8 << 20,
-        write_statistics=["cx", "cy", "cz", "epoch"])
+    # are a writer-side granularity).  Written under a hidden name and
+    # renamed into place: a torn part file would break every later scan
+    # of the mip, ``fsck()`` included
+    with _replacing(os.path.join(
+            directory, f"part-local-{uuid.uuid4().hex}.parquet")) as tmp:
+        pq.write_table(
+            tbl, tmp, compression="zstd" if raw else "none",
+            row_group_size=1, use_dictionary=False,
+            data_page_size=8 << 20,
+            write_statistics=["cx", "cy", "cz", "epoch"])
 
 
 def _locked_writer(get_lock_target=None):
@@ -831,15 +887,11 @@ class Volume:
         anchor = ix.lattice_anchor(sc_.voxel_offset, sc_.chunk_size)
         declared = sc_.encoding
         epoch = self._next_epoch()
-        _root = _REPO_ROOT
 
         files = (self.spark.read.format("binaryFile").load(src_dir)
                  .select("path", "content"))
 
         def to_rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
             from bigarrays_jl_spark import codecs as _codecs
             from bigarrays_jl_spark import indexes as _ix
             for b in it:
@@ -870,8 +922,9 @@ class Volume:
                     rows["payload"].append(data)
                 yield pd.DataFrame(rows)
 
-        self._write_chunks(files.mapInPandas(to_rows, schema=CHUNK_SCHEMA),
-                           mip=mip)
+        self._write_chunks(
+            files.mapInPandas(_on_workers(to_rows), schema=CHUNK_SCHEMA),
+            mip=mip)
 
     def export_precomputed(self, dest_root: str,
                            gz_suffix: bool = False) -> int:
@@ -953,12 +1006,8 @@ class Volume:
         enc = sc.encoding
         dtype_str = info.data_type
         chunk_size = sc.chunk_size
-        _root = _REPO_ROOT
 
         def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
             import numpy as _np
             from bigarrays_jl_spark import codecs as _codecs
             from bigarrays_jl_spark import indexes as _ix
@@ -981,7 +1030,7 @@ class Volume:
                 "payload": [codec.encode(_np.asfortranarray(out).tobytes(order="F"))]})
 
         result = keyed.groupBy("cx", "cy", "cz").applyInPandas(
-            assemble, schema=CHUNK_SCHEMA)
+            _on_workers(assemble), schema=CHUNK_SCHEMA)
         self._write_chunks(result)
         self._maybe_auto_compact()
 
@@ -1037,14 +1086,22 @@ class Volume:
                 "box on the driver.  Use voxels() or map_blocks() for "
                 "distributed reads, or raise vol.cutout_voxel_budget "
                 "explicitly on a driver with enough memory")
-        out_shape = ix.box_shape(request) if nc == 1 else (*ix.box_shape(request), nc)
-        buf = np.zeros(out_shape, dtype=info.dtype, order="F")
+        # (x, y, z, c) throughout; the channel axis drops on return
+        buf = np.zeros((*ix.box_shape(request), nc), dtype=info.dtype,
+                       order="F")
         origin = tuple(lo for lo, _ in request)
+
+        def _out():
+            return (buf[..., 0] if nc == 1 else buf), origin
 
         expected = sum(1 for _ in ix.iter_chunk_slices(
             request, sc.voxel_offset, sc.volume_size, sc.chunk_size))
         if expected == 0:
-            return buf, origin
+            return _out()
+
+        def _place(cut, block) -> None:
+            buf[tuple(slice(lo - rlo, hi - rlo)
+                      for (lo, hi), (rlo, _) in zip(cut, request))] = block
 
         local_rows = self._read_latest_local(request)
         if local_rows is not None:
@@ -1054,8 +1111,6 @@ class Volume:
             # each chunk's cut straight into the output buffer — no
             # Python-worker round trip, no intermediate block copies
             from concurrent.futures import ThreadPoolExecutor
-
-            from bigarrays_jl_spark import codecs as _codecs
             placed = 0
             for key, *_ in local_rows:
                 cbox = ix.parse_chunk_key(key)
@@ -1067,216 +1122,120 @@ class Volume:
                     f"cutout {request}: {expected - placed} of {expected} "
                     "chunks missing and fill_missing=False")
 
-            def _place(row) -> None:
+            def _decode_place(row) -> None:
                 key, enc, payload, part_file = row
-                cbox = ix.parse_chunk_key(key)
-                cut = ix.intersect_box(cbox, request)
-                if ix.box_is_empty(cut):
-                    return
-                shape = ix.box_shape(cbox)
-                try:
-                    # decode_payload applies the jpeg aspect guard
-                    chunk = np.frombuffer(
-                        _codecs.decode_payload(enc, payload,
-                                               expected_width=shape[0]),
-                        dtype=info.dtype).reshape(
-                            shape if nc == 1 else (*shape, nc), order="F")
-                except Exception as e:
-                    raise ChunkDecodeError(
-                        f"chunk {key} ({enc}) in part file {part_file}: "
-                        f"{e}") from e
-                sl = tuple(slice(lo - clo, hi - clo)
-                           for (lo, hi), (clo, _) in zip(cut, cbox))
-                dst = tuple(slice(lo - rlo, hi - rlo)
-                            for (lo, hi), (rlo, _) in zip(cut, request))
-                if nc == 1:
-                    buf[dst] = chunk[sl]
-                else:
-                    buf[(*dst, slice(None))] = chunk[(*sl, slice(None))]
+                hit = decode_chunk(key, enc, payload, nc, info.dtype,
+                                   request, part_file)
+                if hit is not None:
+                    _place(*hit[1:])
 
             # disjoint destination regions per chunk → thread-safe
             with ThreadPoolExecutor(
                     max_workers=min(32, os.cpu_count() or 8)) as ex:
-                list(ex.map(_place, local_rows))
-            return buf, origin
+                list(ex.map(_decode_place, local_rows))
+            return _out()
 
         latest = self._latest(self._pruned(request))
         dtype_str, req = info.data_type, request
-        _root = _REPO_ROOT
 
         def decode_slice(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
-            import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark import indexes as _ix
-            dt = _np.dtype(dtype_str)
+            from bigarrays_jl_spark.volume import decode_chunk
             for b in it:
-                out = {"key": [], "bx0": [], "by0": [], "bz0": [], "data": []}
+                out = {"x0": [], "y0": [], "z0": [], "sx": [], "sy": [],
+                       "sz": [], "data": []}
                 for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    cbox = _ix.parse_chunk_key(key)
-                    cut = _ix.intersect_box(cbox, req)
-                    if _ix.box_is_empty(cut):
+                    hit = decode_chunk(key, enc, payload, nc, dtype_str, req)
+                    if hit is None:
                         continue
-                    shape = _ix.box_shape(cbox)
-                    chunk = _np.frombuffer(
-                        _codecs.decode_payload(enc, bytes(payload),
-                                               expected_width=shape[0]),
-                        dtype=dt)
-                    chunk = chunk.reshape(
-                        shape if nc == 1 else (*shape, nc), order="F")
-                    sl = tuple(slice(lo - clo, hi - clo)
-                               for (lo, hi), (clo, _) in zip(cut, cbox))
-                    block = chunk[sl] if nc == 1 else chunk[(*sl, slice(None))]
-                    out["key"].append(key)
-                    out["bx0"].append(cut[0][0] - req[0][0])
-                    out["by0"].append(cut[1][0] - req[1][0])
-                    out["bz0"].append(cut[2][0] - req[2][0])
-                    out["data"].append(_np.asfortranarray(block).tobytes(order="F"))
+                    _, cut, block = hit
+                    for name, (lo, hi) in zip(("x", "y", "z"), cut):
+                        out[name + "0"].append(lo)
+                        out["s" + name].append(hi - lo)
+                    out["data"].append(block.tobytes(order="F"))
                 yield pd.DataFrame(out)
 
-        parts_pdf = latest.mapInPandas(
-            decode_slice, schema="key string, bx0 int, by0 int, bz0 int, data binary"
+        parts = latest.mapInPandas(
+            _on_workers(decode_slice),
+            schema="x0 int, y0 int, z0 int, sx int, sy int, sz int, "
+                   "data binary",
         ).toPandas()  # Arrow transfer — binary columns skip py4j row serde
-        parts = list(parts_pdf.itertuples(index=False))
 
         if not self.fill_missing and len(parts) < expected:
             raise MissingChunkError(
                 f"cutout {request}: {expected - len(parts)} of {expected} chunks missing "
                 "and fill_missing=False")
 
-        for row in parts:
-            cbox = ix.intersect_box(ix.parse_chunk_key(row.key), request)
-            shp = ix.box_shape(cbox)
-            if nc > 1:
-                shp = (*shp, nc)
-            block = np.frombuffer(row.data, dtype=info.dtype).reshape(shp, order="F")
-            sl = tuple(slice(o, o + s) for o, s in zip(
-                (row.bx0, row.by0, row.bz0), shp[:3]))
-            if nc == 1:
-                buf[sl] = block
-            else:
-                buf[(*sl, slice(None))] = block
-        return buf, origin
+        for r in parts.itertuples(index=False):
+            shp = (r.sx, r.sy, r.sz)
+            _place(tuple((o, o + s) for o, s in zip((r.x0, r.y0, r.z0), shp)),
+                   np.frombuffer(r.data, dtype=info.dtype).reshape(
+                       (*shp, nc), order="F"))
+        return _out()
 
     # -- voxel view (the relational bridge, SURVEY §1.6) ----------------------
 
-    def voxels(self, request: ix.Box | None = None,
-               columns: Sequence[str] = ("x", "y", "z", "c", "value"),
-               ) -> DataFrame:
+    def voxels(self, request: ix.Box | None = None) -> DataFrame:
         """Distributed voxel DataFrame ``(x,y,z,c,value)`` with *global*
         coordinates — the exploded relational view of the chunk table.
         Stays fully distributed (no collect); value column type per
         VOXEL_SQL_TYPE (unsigned-widening, uint64→decimal(20,0)).
 
-        ``columns`` prunes the emitted schema MAP-SIDE — the voxel
-        source's equivalent of parquet column pruning, which Catalyst
-        cannot push through a Python batch function on its own.
-        Coordinates cost ~4 B/voxel/column across the Arrow boundary,
-        so an aggregation that only touches ``value`` (the histogram
-        shape) ships a quarter of the default row; order is normalized
-        to the canonical (x, y, z, c, value)."""
+        Each chunk's cut crosses Arrow once, as one row
+        ``(x0, y0, z0, sx, sy, sz, v)`` whose array ``v`` holds its
+        values in F order.  ``posexplode`` then yields each value with
+        its index, and ``x``, ``y``, ``z`` and ``c`` are integer
+        arithmetic on that index — Catalyst expressions, so a query
+        that does not use a coordinate never computes it (select the
+        columns you need)."""
         info = self.info
-        req = request or self.vol_box
-        req = tuple((int(lo), int(hi)) for lo, hi in req)
-        canon = ("x", "y", "z", "c", "value")
-        bad = [c for c in columns if c not in canon]
-        if bad or not columns:
-            raise ValueError(f"voxels columns must be a non-empty subset "
-                             f"of {canon}; got {tuple(columns)}")
-        cols = tuple(c for c in canon if c in columns)
+        req = tuple((int(lo), int(hi)) for lo, hi in
+                    (request or self.vol_box))
         nc = info.num_channels
         dtype_str = info.data_type
-        vtype = info.voxel_sql_type
         latest = self._latest(self._pruned(req))
-        _root = _REPO_ROOT
 
-        def explode(it):
-            # Arrow bridge (mapInArrow, not mapInPandas): the exploded
-            # voxel frame is pure fixed-width numerics, and building the
-            # RecordBatch straight from the numpy arrays is zero-copy —
-            # the pandas detour (block consolidation + to-Arrow convert)
-            # cost ~45% of the read path's wall clock (r12: 56 → 80+
-            # MB/s on the dist_read bench at identical output).
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
+        def cuts(it):
             import numpy as _np
             import pyarrow as _pa
-            from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark import indexes as _ix
-            dt = _np.dtype(dtype_str)
+            from bigarrays_jl_spark.volume import decode_chunk
+            # the numpy side of VOXEL_SQL_TYPE's unsigned widening;
+            # uint64 goes to decimal(20,0) through an Arrow cast
+            wide = _np.dtype({"uint8": "int16", "uint16": "int32",
+                              "uint32": "int64"}.get(dtype_str, dtype_str))
             for b in it:
-                keys = b.column(b.schema.get_field_index("key")).to_pylist()
-                encs = b.column(b.schema.get_field_index("enc")).to_pylist()
-                pays = b.column(b.schema.get_field_index("payload"))
-                for key, enc, payload in zip(keys, encs, pays):
-                    cbox = _ix.parse_chunk_key(key)
-                    cut = _ix.intersect_box(cbox, req)
-                    if _ix.box_is_empty(cut):
+                for key, enc, payload in zip(
+                        b.column("key").to_pylist(),
+                        b.column("enc").to_pylist(),
+                        b.column("payload").to_pylist()):
+                    hit = decode_chunk(key, enc, payload, nc, dtype_str, req)
+                    if hit is None:
                         continue
-                    shape = _ix.box_shape(cbox)
-                    full = (*shape, nc) if nc > 1 else shape
-                    codec = _codecs.get_codec(enc)
-                    chunk = _np.frombuffer(
-                        codec.decode(payload.as_py()), dtype=dt)
-                    chunk = chunk.reshape(full, order="F")
-                    sl = tuple(slice(lo - clo, hi - clo)
-                               for (lo, hi), (clo, _) in zip(cut, cbox))
-                    block = chunk[sl] if nc == 1 else chunk[(*sl, slice(None))]
-                    if nc == 1:
-                        block = block[..., _np.newaxis]
-                    shp = block.shape
-                    arrays, names = [], []
-                    # int32 coordinate arrays via broadcast (no full
-                    # meshgrid): the schema columns are 32-bit, and
-                    # shipping int64 through Arrow doubles the dominant
-                    # transfer cost; unrequested columns are never
-                    # materialized at all (map-side pruning)
-                    axes = {
-                        "x": (_np.arange(cut[0][0], cut[0][1],
-                                         dtype=_np.int32), 0),
-                        "y": (_np.arange(cut[1][0], cut[1][1],
-                                         dtype=_np.int32), 1),
-                        "z": (_np.arange(cut[2][0], cut[2][1],
-                                         dtype=_np.int32), 2),
-                        "c": (_np.arange(shp[3], dtype=_np.int32), 3),
-                    }
-                    for col in cols:
-                        if col == "value":
-                            vals = block.reshape(-1, order="C")
-                            if dtype_str == "uint64":
-                                # decimal(20,0): Arrow casts uint64
-                                # losslessly (no object-dtype detour)
-                                va = _pa.array(vals).cast(
-                                    _pa.decimal128(20, 0))
-                            elif dtype_str == "uint8":
-                                va = _pa.array(
-                                    vals.astype(_np.int16))   # smallint
-                            elif dtype_str == "uint16":
-                                va = _pa.array(
-                                    vals.astype(_np.int32))   # int
-                            elif dtype_str == "uint32":
-                                va = _pa.array(
-                                    vals.astype(_np.int64))   # bigint
-                            else:
-                                va = _pa.array(vals)
-                            arrays.append(va)
-                        else:
-                            arr, ax = axes[col]
-                            view = [1, 1, 1, 1]
-                            view[ax] = len(arr)
-                            arrays.append(_pa.array(_np.broadcast_to(
-                                arr.reshape(view), shp)
-                                .reshape(-1, order="C")))
-                        names.append(col)
-                    yield _pa.RecordBatch.from_arrays(arrays, names=names)
+                    _, cut, block = hit
+                    vals = _pa.array(_np.asarray(block, dtype=wide, order="F")
+                                     .ravel(order="F"))
+                    if dtype_str == "uint64":
+                        vals = vals.cast(_pa.decimal128(20, 0))
+                    yield _pa.RecordBatch.from_arrays(
+                        [_pa.array([v], _pa.int32()) for v in
+                         (*(lo for lo, _ in cut), *block.shape[:3])]
+                        + [_pa.ListArray.from_arrays(
+                            _pa.array([0, len(vals)], _pa.int32()), vals)],
+                        names=["x0", "y0", "z0", "sx", "sy", "sz", "v"])
 
-        fields = {"x": "x int", "y": "y int", "z": "z int", "c": "c int",
-                  "value": f"value {vtype}"}
-        return latest.mapInArrow(
-            explode, schema=", ".join(fields[c] for c in cols))
+        rows = latest.mapInArrow(
+            _on_workers(cuts),
+            schema="x0 int, y0 int, z0 int, sx int, sy int, sz int, "
+                   f"v array<{info.voxel_sql_type}>")
+        # v is (sx, sy, sz, c) in F order: i = x + sx*(y + sy*(z + sz*c))
+        return rows.select(
+            "x0", "y0", "z0", "sx", "sy", "sz",
+            F.posexplode("v").alias("i", "value"),
+        ).select(
+            F.expr("x0 + i % sx").alias("x"),
+            F.expr("y0 + CAST(i div sx AS INT) % sy").alias("y"),
+            F.expr("z0 + CAST(i div (sx * sy) AS INT) % sz").alias("z"),
+            F.expr("CAST(i div (sx * sy * sz) AS INT)").alias("c"),
+            "value")
 
     # -- maintenance (src/type.jl:285-339) ------------------------------------
 
@@ -1415,25 +1374,17 @@ class Volume:
         dst_dtype = dest.info.data_type
         dst_enc = dst_sc.encoding
         epoch = dest._next_epoch()
-        _root = _REPO_ROOT
 
         def xform(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
             import numpy as _np
             from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark import indexes as _ix
-            from bigarrays_jl_spark.volume import decode_chunk_payload
+            from bigarrays_jl_spark.volume import decode_chunk
             ddt = _np.dtype(dst_dtype)
             out_codec = _codecs.get_codec(dst_enc)
             for b in it:
                 payloads = []
                 for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    cbox = _ix.parse_chunk_key(key)
-                    shape = _ix.box_shape(cbox)
-                    arr = decode_chunk_payload(enc, payload, shape, nc,
-                                               src_dtype)
+                    _, _, arr = decode_chunk(key, enc, payload, nc, src_dtype)
                     out = _np.asarray(fn(arr))
                     if out.shape != arr.shape:
                         raise ValueError(
@@ -1450,7 +1401,8 @@ class Volume:
                     "epoch": _np.int64(epoch), "payload": payloads})
 
         dest._write_chunks(
-            self._latest(self.chunks_df()).mapInPandas(xform, CHUNK_SCHEMA))
+            self._latest(self.chunks_df()).mapInPandas(
+                _on_workers(xform), CHUNK_SCHEMA))
 
     def stats(self, mip: int | None = None) -> dict:
         """Operational summary of one mip's chunk store — the numbers a
@@ -1511,9 +1463,12 @@ class Volume:
           this mip's lattice (catches foreign/misplaced keys);
         - the chunk-id columns agree with the key (catches index/key
           drift that would break pruning);
-        - the payload decodes and its byte length matches the key's
-          box shape × dtype × channels (catches truncation, codec
-          corruption, wrong-dtype writes).
+        - the payload decodes through ``decode_chunk`` like every read
+          path: its byte length matches the key's box shape × dtype ×
+          channels and a jpeg has the chunk's width (catches
+          truncation, codec corruption, wrong-dtype writes,
+          wrong-aspect images); ``error`` holds the
+          ``ChunkDecodeError`` message.
 
         Scale shape: inherits the scan's partitioning, no shuffle
         beyond `_latest`'s (skipped entirely for uncompacted
@@ -1527,49 +1482,39 @@ class Volume:
         anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
         chunk_size = tuple(sc.chunk_size)
         vol = ix.volume_box(sc.voxel_offset, sc.volume_size)
-        _root = _REPO_ROOT
 
         def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
-            import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
             from bigarrays_jl_spark import indexes as _ix
-            itemsize = _np.dtype(dtype_str).itemsize
+            from bigarrays_jl_spark.volume import (ChunkDecodeError,
+                                                   decode_chunk)
             for b in it:
-                oks, errs = [], []
+                errs = []
                 for cx, cy, cz, key, enc, payload in zip(
                         b["cx"], b["cy"], b["cz"], b["key"], b["enc"],
                         b["payload"]):
                     err = None
                     try:
-                        box = _ix.parse_chunk_key(key)
+                        box, _, _ = decode_chunk(key, enc, payload, nc,
+                                                 dtype_str)
+                    except ChunkDecodeError as e:
+                        err = str(e)
+                    else:
                         cid = (int(cx), int(cy), int(cz))
-                        raw = tuple(_ix.chunk_global_range(c, a, s)
-                                    for c, a, s in
-                                    zip(cid, anchor, chunk_size))
-                        want_box = _ix.intersect_box(raw, vol)
+                        want_box = _ix.intersect_box(tuple(
+                            _ix.chunk_global_range(c, a, s)
+                            for c, a, s in zip(cid, anchor, chunk_size)),
+                            vol)
                         if box != want_box:
                             err = (f"key {key} != lattice box "
                                    f"{want_box} for cid {cid}")
-                        else:
-                            data = _codecs.get_codec(enc).decode(
-                                bytes(payload))
-                            want = (_np.prod(_ix.box_shape(box))
-                                    * nc * itemsize)
-                            if len(data) != want:
-                                err = (f"payload {len(data)} B != "
-                                       f"expected {int(want)} B")
-                    except Exception as e:  # noqa: BLE001
-                        err = f"{type(e).__name__}: {e}"
-                    oks.append(err is None)
                     errs.append(err)
                 yield pd.DataFrame({"key": b["key"], "enc": b["enc"],
-                                    "ok": oks, "error": errs})
+                                    "ok": [e is None for e in errs],
+                                    "error": errs})
 
         return self._latest(self.chunks_df(m)).mapInPandas(
-            audit, "key string, enc string, ok boolean, error string")
+            _on_workers(audit),
+            "key string, enc string, ok boolean, error string")
 
     @_locked_writer(lambda self, dest: dest)
     def rechunk(self, dest: "Volume") -> None:
@@ -1630,12 +1575,7 @@ class Volume:
         dst_enc = dst_sc.encoding
         vol = self.vol_box
         epoch = dest._next_epoch()
-        _root = _REPO_ROOT
         dst_off, dst_size = dst_sc.voxel_offset, dst_sc.volume_size
-
-        def _decode(enc, payload, shape, _np, _codecs):
-            from bigarrays_jl_spark.volume import decode_chunk_payload
-            return decode_chunk_payload(enc, payload, shape, nc, dtype_str)
 
         def _encode(out, _np, _codecs):
             o = out[..., 0] if nc == 1 else out
@@ -1644,21 +1584,18 @@ class Volume:
 
         if splits and scs != dcs:
             def split_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import sys
-                if _root not in sys.path:
-                    sys.path.insert(0, _root)
                 import numpy as _np
                 from bigarrays_jl_spark import codecs as _codecs
                 from bigarrays_jl_spark import indexes as _ix
+                from bigarrays_jl_spark.volume import decode_chunk
                 for b in it:
                     rows = {k: [] for k in
                             ("cx", "cy", "cz", "key", "enc", "epoch",
                              "payload")}
                     for key, enc, payload in zip(b["key"], b["enc"],
                                                  b["payload"]):
-                        sbox = _ix.parse_chunk_key(key)
-                        arr = _decode(enc, payload, _ix.box_shape(sbox),
-                                      _np, _codecs)
+                        sbox, _, arr = decode_chunk(key, enc, payload, nc,
+                                                    dtype_str)
                         # every dst chunk ∩ volume nests inside this src
                         # chunk (dividing sizes + shared voxel_offset —
                         # see the nesting proof at the validation above)
@@ -1681,7 +1618,7 @@ class Volume:
                     yield pd.DataFrame(rows)
 
             out = self._latest(self.chunks_df()).mapInPandas(
-                split_fn, CHUNK_SCHEMA)
+                _on_workers(split_fn), CHUNK_SCHEMA)
         else:
             # dst id from src id through BOTH anchors (they differ when
             # voxel_offset is not chunk-aligned):
@@ -1698,12 +1635,10 @@ class Volume:
                 "key", "enc", "payload")
 
             def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                import sys
-                if _root not in sys.path:
-                    sys.path.insert(0, _root)
                 import numpy as _np
                 from bigarrays_jl_spark import codecs as _codecs
                 from bigarrays_jl_spark import indexes as _ix
+                from bigarrays_jl_spark.volume import decode_chunk
                 cid = (int(pdf.dcx.iloc[0]), int(pdf.dcy.iloc[0]),
                        int(pdf.dcz.iloc[0]))
                 raw = tuple(_ix.chunk_global_range(c, a, s)
@@ -1712,9 +1647,8 @@ class Volume:
                 buf = _np.zeros((*_ix.box_shape(dbox), nc),
                                 dtype=_np.dtype(dtype_str), order="F")
                 for key, enc, payload in zip(pdf.key, pdf.enc, pdf.payload):
-                    sbox = _ix.parse_chunk_key(key)
-                    arr = _decode(enc, payload, _ix.box_shape(sbox),
-                                  _np, _codecs)
+                    sbox, _, arr = decode_chunk(key, enc, payload, nc,
+                                                dtype_str)
                     sl = tuple(slice(lo - d0, hi - d0)
                                for (lo, hi), (d0, _) in zip(sbox, dbox))
                     buf[sl] = arr
@@ -1725,7 +1659,7 @@ class Volume:
                                                           _codecs)]})
 
             out = keyed.groupBy("dcx", "dcy", "dcz").applyInPandas(
-                merge_fn, CHUNK_SCHEMA)
+                _on_workers(merge_fn), CHUNK_SCHEMA)
         dest._write_chunks(out)
 
     def _maybe_auto_compact(self) -> None:
@@ -1974,28 +1908,18 @@ class Volume:
         dst_chunk = dst_sc.chunk_size
         src_off = src_sc.voxel_offset
         dst_off = dst_sc.voxel_offset
-        _root = _REPO_ROOT
 
         def to_target(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
             import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
             from bigarrays_jl_spark import indexes as _ix
+            from bigarrays_jl_spark.volume import decode_chunk
             dt = _np.dtype(dtype_str)
             for b in it:
                 rows = {"tcx": [], "tcy": [], "tcz": [], "x0": [], "y0": [], "z0": [],
                         "sx": [], "sy": [], "sz": [], "data": []}
                 for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    cbox = _ix.parse_chunk_key(key)
-                    shape = _ix.box_shape(cbox)
-                    full = (*shape, nc) if nc > 1 else shape
-                    codec = _codecs.get_codec(enc)
-                    arr = _np.frombuffer(codec.decode(bytes(payload)), dtype=dt)
-                    arr = arr.reshape(full, order="F")
-                    if nc == 1:
-                        arr = arr[..., _np.newaxis]
+                    cbox, _, arr = decode_chunk(key, enc, payload, nc, dt)
+                    shape = arr.shape
                     # 2x2x1 reduce; odd edges truncated to even first
                     ex = shape[0] - shape[0] % 2 or shape[0]
                     ey = shape[1] - shape[1] % 2 or shape[1]
@@ -2028,7 +1952,7 @@ class Volume:
         src = (self.chunks_df(m) if only_sources is None
                else self._sources_subset(m, only_sources))
         blocks = self._latest(src).mapInPandas(
-            to_target,
+            _on_workers(to_target),
             schema="tcx int, tcy int, tcz int, x0 int, y0 int, z0 int, "
                    "sx int, sy int, sz int, data binary")
 
@@ -2036,9 +1960,6 @@ class Volume:
         epoch = self._next_epoch()
 
         def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            import sys
-            if _root not in sys.path:
-                sys.path.insert(0, _root)
             import numpy as _np
             from bigarrays_jl_spark import codecs as _codecs
             from bigarrays_jl_spark import indexes as _ix
@@ -2083,7 +2004,7 @@ class Volume:
                 "payload": [codec.encode(_np.asfortranarray(out).tobytes(order="F"))]})
 
         result = blocks.groupBy("tcx", "tcy", "tcz").applyInPandas(
-            assemble, schema=CHUNK_SCHEMA)
+            _on_workers(assemble), schema=CHUNK_SCHEMA)
         self._write_chunks(result, mip=m + 1)
 
     def build_pyramid(self, num_mip: int | None = None, *,

@@ -299,6 +299,20 @@ def test_corrupt_payload_error_names_chunk_and_file(spark, tmp_path):
     assert key in str(ei.value) and bad in str(ei.value)
 
 
+def test_corrupt_payload_fails_voxels_naming_chunk(spark, tmp_path):
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    vol.write(_arr((128, 128, 128), 9), (0, 0, 0))
+    key = "32-64_0-32_0-32"
+    _write_rows(os.path.join(vol._mip_dir(), "part-bad.parquet"),
+                [(1, 0, 0, key, "gzip", 5,
+                  gzip.compress(b"\x00" * 100)[:-4])])
+    vol._next_epoch()                  # the corrupt row is the latest
+    assert vol.voxels(((0, 32), (0, 32), (0, 32))).count() == 32 ** 3
+    with pytest.raises(Exception, match="ChunkDecodeError") as ei:
+        vol.voxels(((0, 64), (0, 32), (0, 32))).count()
+    assert key in str(ei.value)
+
+
 # -- jpeg aspect guard on both cutout paths ----------------------------------
 #
 # Pillow is optional, so a fake PIL stands in for it.  Its "jpeg" is an
@@ -392,11 +406,25 @@ def __getattr__(name):
     good = _jpeg_volume(spark, tmp_path / "good", _fake_jpeg(stacked))
     bad = _jpeg_volume(spark, tmp_path / "bad", _fake_jpeg(wrong))
     good.local_io = bad.local_io = False
+    dest = Volume.create(spark, str(tmp_path / "dest"),
+                         _info(size=(SX, SY, SZ), chunk=(SX, SY, SZ)))
     marker.write_text("")
     try:
         spark.sparkContext.addPyFile(str(shim))
         assert np.array_equal(good.cutout(box)[0], chunk)
-        with pytest.raises(Exception, match="width"):
-            bad.cutout(box)
+        assert {(r.x, r.y, r.z): r.value for r in good.voxels().collect()} \
+            == {i: int(v) for i, v in np.ndenumerate(chunk)}
+        assert good.fsck().filter("NOT ok").count() == 0
+        # every read path refuses the wrong-aspect chunk by name
+        for op in (lambda: bad.cutout(box),
+                   lambda: bad.voxels().collect(),
+                   lambda: bad.map_blocks(lambda a: a, dest),
+                   lambda: bad.downsample()):
+            with pytest.raises(Exception, match="width") as ei:
+                op()
+            assert JPEG_KEY in str(ei.value)
+        (row,) = bad.fsck().collect()
+        assert row.key == JPEG_KEY and row.ok is False
+        assert "width" in row.error and JPEG_KEY in row.error
     finally:
         marker.unlink()

@@ -308,3 +308,44 @@ def test_metadata_writes_are_atomic(spark, tmp_path, monkeypatch):
     mirror[96:, 96:, 96:] = block
     assert reopened._current_epoch() == 13
     _check(reopened, mirror)
+
+
+def test_part_file_writes_are_atomic(spark, tmp_path, monkeypatch):
+    """A part file whose write fails midway leaves no file under a
+    visible name, so both readers and ``fsck()`` still see the
+    pre-write state; the hidden leftover of a harder crash (no clean-up
+    at all) is skipped by every reader."""
+    import pyarrow as pa
+    root = str(tmp_path / "v")
+    vol = Volume.create(spark, root, _info())
+    mirror = _arr((128, 128, 128), 70)
+    vol.write(mirror, (0, 0, 0))
+    d = vol._mip_dir()
+    listing, files = sorted(os.listdir(d)), list_part_files(d)
+    audit = sorted(vol.fsck().collect())
+    real = pq.write_table
+
+    def torn(tbl, where, **kw):
+        buf = pa.BufferOutputStream()
+        real(tbl, buf, **kw)
+        data = buf.getvalue().to_pybytes()
+        with open(where, "wb") as f:
+            f.write(data[:len(data) // 2])
+        raise OSError(errno.EIO, "injected: torn part file")
+
+    for no_cleanup in (False, True):
+        with monkeypatch.context() as mp:
+            mp.setattr(pq, "write_table", torn)
+            if no_cleanup:
+                mp.setattr(os, "remove", lambda path: None)
+            with pytest.raises(OSError, match="injected"):
+                vol.write(_arr((64, 64, 64), 71), (0, 0, 0))
+        assert list_part_files(d) == files
+        left = sorted(set(os.listdir(d)) - set(listing))
+        assert len(left) == no_cleanup and all(n.startswith(".")
+                                               for n in left)
+        reopened = Volume.open(spark, root)
+        for local in (True, False):
+            reopened.local_io = local
+            _check(reopened, mirror)
+        assert sorted(reopened.fsck().collect()) == audit

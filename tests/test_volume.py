@@ -821,26 +821,39 @@ def test_export_precomputed_gz_suffix(spark, tmp_path):
         ["0-32_0-32_0-32.gz"]
 
 
-def test_voxels_column_pruning(spark, vol):
+def test_voxels_column_pruning(spark, vol, tmp_path):
+    """voxels() derives x, y, z and c as Catalyst expressions, so a
+    select prunes the unused ones out of the plan."""
+    from pyspark.sql import functions as SF
     a = rand_u8((100, 100, 5))
     vol[0:100, 0:100, 0:5] = a
     box = ((0, 100), (0, 100), (0, 5))
-    pruned = vol.voxels(box, columns=("value",))
-    assert pruned.columns == ["value"]
     full = vol.voxels(box)
     assert full.columns == ["x", "y", "z", "c", "value"]
-    # pruned values match the full view's value column exactly
-    from pyspark.sql import functions as SF
+    pruned = full.select("value")
     s1 = pruned.agg(SF.sum("value"), SF.count("*")).collect()[0]
     s2 = full.agg(SF.sum("value"), SF.count("*")).collect()[0]
     assert tuple(s1) == tuple(s2) == (int(a.sum()), a.size)
-    # order normalization + validation
-    zx = vol.voxels(box, columns=("value", "x"))
-    assert zx.columns == ["x", "value"]
-    with pytest.raises(ValueError):
-        vol.voxels(box, columns=("nope",))
-    with pytest.raises(ValueError):
-        vol.voxels(box, columns=())
+    plan = pruned._jdf.queryExecution().optimizedPlan().toString()
+    assert "posexplode" in plan
+    assert " % " not in plan and " div " not in plan, plan
+
+    # coordinates and channel exact on a multi-channel volume with a
+    # negative offset, for a box cutting through chunks and the edge
+    info = Info.from_dict({
+        "num_channels": 3, "type": "image", "data_type": "uint16",
+        "scales": [{"encoding": "gzip", "chunk_sizes": [[4, 3, 2]],
+                    "key": "1_1_1", "resolution": [1, 1, 1],
+                    "voxel_offset": [-5, -4, -3], "size": [9, 7, 5]}]})
+    mc = Volume.create(spark, str(tmp_path / "mc"), info)
+    b = RNG.integers(0, 65536, size=(9, 7, 5, 3), dtype=np.uint16)
+    mc.write(b, (-5, -4, -3))
+    req = ((-4, 6), (-6, 2), (-2, 1))
+    got = {(r.x, r.y, r.z, r.c): r.value for r in mc.voxels(req).collect()}
+    want = {(x, y, z, c): int(b[x + 5, y + 4, z + 3, c])
+            for x in range(-4, 4) for y in range(-4, 2)
+            for z in range(-2, 1) for c in range(3)}
+    assert got == want
 
 
 def test_import_precomputed_negative_offset_multichannel(spark, tmp_path):

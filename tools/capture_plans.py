@@ -17,6 +17,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE  # noqa: E402  (the one frozen copy)
+
 # the queries this round's optimization work touches or inspects
 PLAN_SET = [
     "events_hdr_quantiles", "events_hdr_merge", "leadtime_quantiles",
@@ -25,14 +27,6 @@ PLAN_SET = [
     "graph_pagerank_lsh", "bloom_decontaminate", "pipeline_e2e_curate",
     "set_sim_join", "ann_recall_audit", "ann_pq_recall_knee",
     "dedup_span_excise", "pipeline_temperature_mix",
-]
-
-HEADLINE = [
-    "q01_pricing_summary", "q03_join_revenue", "q07_window_rank",
-    "q09_rollup", "q13_distinct_agg", "q22_range_join",
-    "dedup_exact", "dedup_minhash_pairs", "dedup_embedding_cosine",
-    "text_quality", "ann_cosine_topk", "ann_ivf_topk", "sim_lsh_pairs",
-    "events_sessionize", "mm_byte_features", "mm_frame_sample",
 ]
 
 
