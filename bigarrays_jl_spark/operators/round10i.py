@@ -295,10 +295,10 @@ def roi_stats(seg, img, request: ix.Box) -> DataFrame:
     req = tuple((int(lo), int(hi)) for lo, hi in request)
     s_dt, i_dt = seg.info.data_type, img.info.data_type
 
-    sc = (seg._latest(seg._pruned(req))
+    sc = (seg.live_chunks(req)
           .select("key", F.col("enc").alias("enc_s"),
                   F.col("payload").alias("pay_s")))
-    icg = (img._latest(img._pruned(req))
+    icg = (img.live_chunks(req)
            .select("key", F.col("enc").alias("enc_i"),
                    F.col("payload").alias("pay_i")))
     both = sc.join(icg, "key")

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from bigarrays_jl_spark.operators.volume_seg import (SEG_BLOCK, SEG_SIDE,
                                                      demo_seg_volume)
 from bigarrays_jl_spark.sources.tables import load
-from bigarrays_jl_spark.volume import _on_workers
 
 ERASE_MOD = 97
 
@@ -47,78 +46,71 @@ def volume_label_surface(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     vol = demo_seg_volume(spark)
-    latest = vol._latest(vol._pruned(vol.vol_box))
     side = SEG_SIDE
-    dtype_str = vol.info.data_type
 
-    def stream(it):
+    def stream(key, cbox, cut, arr):
         import numpy as np
-        from bigarrays_jl_spark.volume import decode_chunk
-        for b in it:
-            for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                cbox, _, arr = decode_chunk(key, enc, payload, 1, dtype_str)
-                arr = arr[..., 0]
-                shape = arr.shape
-                counts: dict[tuple[int, int], list[int]] = {}
+        arr = arr[..., 0]
+        shape = arr.shape
+        counts: dict[tuple[int, int], list[int]] = {}
 
-                def bump(label, which, n=1):
-                    c = counts.setdefault(int(label), [0, 0])
-                    c[which] += n
+        def bump(label, which, n=1):
+            c = counts.setdefault(int(label), [0, 0])
+            c[which] += n
 
-                # interior differing faces: both sides gain one face
-                for ax in range(3):
-                    lo = arr.take(range(shape[ax] - 1), axis=ax)
-                    hi = arr.take(range(1, shape[ax]), axis=ax)
-                    m = lo != hi
-                    if m.any():
-                        for lbl, n in zip(*np.unique(lo[m],
-                                                     return_counts=True)):
-                            bump(lbl, 0, int(n))
-                        for lbl, n in zip(*np.unique(hi[m],
-                                                     return_counts=True)):
-                            bump(lbl, 0, int(n))
-                # chunk faces: volume boundary vs shared chunk boundary
-                faces = []
-                for ax in range(3):
-                    for side_hi in (0, 1):
-                        gpos = cbox[ax][1] - 1 if side_hi else cbox[ax][0]
-                        sl = [slice(None)] * 3
-                        sl[ax] = -1 if side_hi else 0
-                        sheet = arr[tuple(sl)]
-                        at_vol_edge = (gpos == side - 1 if side_hi
-                                       else gpos == 0)
-                        if at_vol_edge:
-                            for lbl, n in zip(*np.unique(
-                                    sheet, return_counts=True)):
-                                bump(lbl, 1, int(n))
-                            continue
-                        # face cell shared with the neighbor chunk:
-                        # plane = boundary between gpos and gpos±1
-                        plane = gpos if side_hi else gpos - 1
-                        other = [d for d in range(3) if d != ax]
-                        ub = np.arange(cbox[other[0]][0],
-                                       cbox[other[0]][1])
-                        vb = np.arange(cbox[other[1]][0],
-                                       cbox[other[1]][1])
-                        uu, vv = np.meshgrid(ub, vb, indexing="ij")
-                        faces.append(pd.DataFrame({
-                            "kind": 1, "axis": ax, "plane": plane,
-                            "u": uu.reshape(-1), "v": vv.reshape(-1),
-                            "hi_side": side_hi,
-                            "label": sheet.reshape(-1).astype("int64"),
-                            "n_label": 0, "n_volume": 0}))
-                local = pd.DataFrame({
-                    "kind": 0, "axis": 0, "plane": 0, "u": 0, "v": 0,
-                    "hi_side": 0,
-                    "label": [lbl for lbl in counts],
-                    "n_label": [c[0] for c in counts.values()],
-                    "n_volume": [c[1] for c in counts.values()]})
-                yield pd.concat([local, *faces], ignore_index=True)
+        # interior differing faces: both sides gain one face
+        for ax in range(3):
+            lo = arr.take(range(shape[ax] - 1), axis=ax)
+            hi = arr.take(range(1, shape[ax]), axis=ax)
+            m = lo != hi
+            if m.any():
+                for lbl, n in zip(*np.unique(lo[m],
+                                             return_counts=True)):
+                    bump(lbl, 0, int(n))
+                for lbl, n in zip(*np.unique(hi[m],
+                                             return_counts=True)):
+                    bump(lbl, 0, int(n))
+        # chunk faces: volume boundary vs shared chunk boundary
+        faces = []
+        for ax in range(3):
+            for side_hi in (0, 1):
+                gpos = cbox[ax][1] - 1 if side_hi else cbox[ax][0]
+                sl = [slice(None)] * 3
+                sl[ax] = -1 if side_hi else 0
+                sheet = arr[tuple(sl)]
+                at_vol_edge = (gpos == side - 1 if side_hi
+                               else gpos == 0)
+                if at_vol_edge:
+                    for lbl, n in zip(*np.unique(
+                            sheet, return_counts=True)):
+                        bump(lbl, 1, int(n))
+                    continue
+                # face cell shared with the neighbor chunk:
+                # plane = boundary between gpos and gpos±1
+                plane = gpos if side_hi else gpos - 1
+                other = [d for d in range(3) if d != ax]
+                ub = np.arange(cbox[other[0]][0],
+                               cbox[other[0]][1])
+                vb = np.arange(cbox[other[1]][0],
+                               cbox[other[1]][1])
+                uu, vv = np.meshgrid(ub, vb, indexing="ij")
+                faces.append(pd.DataFrame({
+                    "kind": 1, "axis": ax, "plane": plane,
+                    "u": uu.reshape(-1), "v": vv.reshape(-1),
+                    "hi_side": side_hi,
+                    "label": sheet.reshape(-1).astype("int64"),
+                    "n_label": 0, "n_volume": 0}))
+        local = pd.DataFrame({
+            "kind": 0, "axis": 0, "plane": 0, "u": 0, "v": 0,
+            "hi_side": 0,
+            "label": [lbl for lbl in counts],
+            "n_label": [c[0] for c in counts.values()],
+            "n_volume": [c[1] for c in counts.values()]})
+        yield pd.concat([local, *faces], ignore_index=True)
 
-    rows = latest.mapInPandas(
-        _on_workers(stream),
-        schema="kind int, axis int, plane long, u long, v long, "
-               "hi_side int, label long, n_label long, n_volume long")
+    rows = vol.map_cuts(
+        stream, "kind int, axis int, plane long, u long, v long, "
+                "hi_side int, label long, n_label long, n_volume long")
     local = (rows.filter(F.col("kind") == 0)
              .groupBy("label")
              .agg(F.sum("n_label").alias("nl"),

@@ -52,13 +52,11 @@ from __future__ import annotations
 
 import os
 import tempfile
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
-from bigarrays_jl_spark.volume import Volume, _on_workers
+from bigarrays_jl_spark.volume import Volume
 
 CC_MAX_ROUNDS = 20
 
@@ -79,117 +77,107 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
     req = tuple((int(lo), int(hi)) for lo, hi in req)
     (rx0, rx1), (ry0, ry1), (rz0, rz1) = req
     sy, sz = ry1 - ry0, rz1 - rz0
-    dtype_str = info.data_type
     if info.num_channels != 1:
         raise ValueError("connected_components requires a single-channel "
                          "segmentation volume")
-    chunks = vol._latest(vol._pruned(req))
 
-    def local_pass(it: Iterator) -> Iterator:
+    def local_pass(key, cbox, cut, block):
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark.volume import decode_chunk
-        for b in it:
-            for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
-                if hit is None:
+        block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
+        sh = block.shape
+        n = block.size
+        flat = block.reshape(-1)
+        # local adjacency pairs per axis (same nonzero label)
+        idx = _np.arange(n).reshape(sh)
+        parent = list(range(n))
+
+        def find(a):
+            r = a
+            while parent[r] != r:
+                r = parent[r]
+            while parent[a] != r:
+                parent[a], a = r, parent[a]
+            return r
+
+        for ax in range(3):
+            if sh[ax] < 2:
+                continue
+            lo_sl = [slice(None)] * 3
+            hi_sl = [slice(None)] * 3
+            lo_sl[ax] = slice(0, sh[ax] - 1)
+            hi_sl[ax] = slice(1, sh[ax])
+            a_lab = block[tuple(lo_sl)]
+            b_lab = block[tuple(hi_sl)]
+            m = (a_lab == b_lab) & (a_lab != 0)
+            ia = idx[tuple(lo_sl)][m].tolist()
+            ib = idx[tuple(hi_sl)][m].tolist()
+            for u, v in zip(ia, ib):
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    parent[max(ru, rv)] = min(ru, rv)
+        # request-relative global linear index of every voxel
+        gx = _np.arange(cut[0][0] - rx0, cut[0][1] - rx0,
+                        dtype=_np.int64)
+        gy = _np.arange(cut[1][0] - ry0, cut[1][1] - ry0,
+                        dtype=_np.int64)
+        gz = _np.arange(cut[2][0] - rz0, cut[2][1] - rz0,
+                        dtype=_np.int64)
+        glin = (gx[:, None, None] * (sy * sz)
+                + gy[None, :, None] * sz
+                + gz[None, None, :]).reshape(-1)
+        # per-root: min global id + size (background skipped)
+        comp_of, size_of, lab_of = {}, {}, {}
+        nz = _np.flatnonzero(flat).tolist()
+        for i in nz:
+            r = find(i)
+            g = int(glin[i])
+            if r in comp_of:
+                size_of[r] += 1
+                if g < comp_of[r]:
+                    comp_of[r] = g
+            else:
+                comp_of[r] = g
+                size_of[r] = 1
+                lab_of[r] = int(flat[r])
+        rows = [(0, comp_of[r], lab_of[r], size_of[r],
+                 None, None, None, None)
+                for r in comp_of]
+        # face rows keyed by the shared boundary cell; the key
+        # plane is the HIGHER voxel's coordinate, so the low
+        # face uses its own coord and the high face uses
+        # coord + 1 — both sides of a boundary land on one key
+        for ax in range(3):
+            axes = [0, 1, 2]
+            axes.remove(ax)
+            off = (rx0, ry0, rz0)
+            for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
+                fsl = [slice(None)] * 3
+                fsl[ax] = plane_rel
+                face = block[tuple(fsl)]
+                fidx = idx[tuple(fsl)]
+                m = face != 0
+                if not m.any():
                     continue
-                _, cut, block = hit
-                block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
-                sh = block.shape
-                n = block.size
-                flat = block.reshape(-1)
-                # local adjacency pairs per axis (same nonzero label)
-                idx = _np.arange(n).reshape(sh)
-                parent = list(range(n))
+                gplane = cut[ax][0] - off[ax] + plane_rel \
+                    + (1 if side else 0)
+                u0 = cut[axes[0]][0] - off[axes[0]]
+                v0 = cut[axes[1]][0] - off[axes[1]]
+                uu, vv = _np.nonzero(m)
+                for u, v, li in zip((uu + u0).tolist(),
+                                    (vv + v0).tolist(),
+                                    fidx[m].tolist()):
+                    r = find(li)
+                    rows.append((1, comp_of[r], int(flat[li]),
+                                 0, ax, gplane, u, v))
+        yield _pd.DataFrame(
+            rows, columns=["kind", "comp", "label", "size",
+                           "axis", "fb", "fu", "fv"])
 
-                def find(a):
-                    r = a
-                    while parent[r] != r:
-                        r = parent[r]
-                    while parent[a] != r:
-                        parent[a], a = r, parent[a]
-                    return r
-
-                for ax in range(3):
-                    if sh[ax] < 2:
-                        continue
-                    lo_sl = [slice(None)] * 3
-                    hi_sl = [slice(None)] * 3
-                    lo_sl[ax] = slice(0, sh[ax] - 1)
-                    hi_sl[ax] = slice(1, sh[ax])
-                    a_lab = block[tuple(lo_sl)]
-                    b_lab = block[tuple(hi_sl)]
-                    m = (a_lab == b_lab) & (a_lab != 0)
-                    ia = idx[tuple(lo_sl)][m].tolist()
-                    ib = idx[tuple(hi_sl)][m].tolist()
-                    for u, v in zip(ia, ib):
-                        ru, rv = find(u), find(v)
-                        if ru != rv:
-                            parent[max(ru, rv)] = min(ru, rv)
-                # request-relative global linear index of every voxel
-                gx = _np.arange(cut[0][0] - rx0, cut[0][1] - rx0,
-                                dtype=_np.int64)
-                gy = _np.arange(cut[1][0] - ry0, cut[1][1] - ry0,
-                                dtype=_np.int64)
-                gz = _np.arange(cut[2][0] - rz0, cut[2][1] - rz0,
-                                dtype=_np.int64)
-                glin = (gx[:, None, None] * (sy * sz)
-                        + gy[None, :, None] * sz
-                        + gz[None, None, :]).reshape(-1)
-                # per-root: min global id + size (background skipped)
-                comp_of, size_of, lab_of = {}, {}, {}
-                nz = _np.flatnonzero(flat).tolist()
-                for i in nz:
-                    r = find(i)
-                    g = int(glin[i])
-                    if r in comp_of:
-                        size_of[r] += 1
-                        if g < comp_of[r]:
-                            comp_of[r] = g
-                    else:
-                        comp_of[r] = g
-                        size_of[r] = 1
-                        lab_of[r] = int(flat[r])
-                rows = [(0, comp_of[r], lab_of[r], size_of[r],
-                         None, None, None, None)
-                        for r in comp_of]
-                # face rows keyed by the shared boundary cell; the key
-                # plane is the HIGHER voxel's coordinate, so the low
-                # face uses its own coord and the high face uses
-                # coord + 1 — both sides of a boundary land on one key
-                for ax in range(3):
-                    axes = [0, 1, 2]
-                    axes.remove(ax)
-                    off = (rx0, ry0, rz0)
-                    for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
-                        fsl = [slice(None)] * 3
-                        fsl[ax] = plane_rel
-                        face = block[tuple(fsl)]
-                        fidx = idx[tuple(fsl)]
-                        m = face != 0
-                        if not m.any():
-                            continue
-                        gplane = cut[ax][0] - off[ax] + plane_rel \
-                            + (1 if side else 0)
-                        u0 = cut[axes[0]][0] - off[axes[0]]
-                        v0 = cut[axes[1]][0] - off[axes[1]]
-                        uu, vv = _np.nonzero(m)
-                        for u, v, li in zip((uu + u0).tolist(),
-                                            (vv + v0).tolist(),
-                                            fidx[m].tolist()):
-                            r = find(li)
-                            rows.append((1, comp_of[r], int(flat[li]),
-                                         0, ax, gplane, u, v))
-                yield _pd.DataFrame(
-                    rows, columns=["kind", "comp", "label", "size",
-                                   "axis", "fb", "fu", "fv"])
-
-    stream = chunks.mapInPandas(
-        _on_workers(local_pass),
-        schema=("kind int, comp bigint, label bigint, size bigint, "
-                "axis int, fb long, fu long, fv long")).localCheckpoint(
-        eager=False)    # consumed by comps + faces: decode once
+    stream = vol.map_cuts(
+        local_pass, "kind int, comp bigint, label bigint, size bigint, "
+                    "axis int, fb long, fu long, fv long", req,
+    ).localCheckpoint(eager=False)    # consumed by comps + faces: decode once
 
     comps = (stream.filter(F.col("kind") == 0)
              .select("comp", "label", "size"))

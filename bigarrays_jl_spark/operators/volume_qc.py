@@ -29,15 +29,12 @@ identical expression tree on both engines, emitted unrounded.
 """
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.operators.advanced import demo_volume
-from bigarrays_jl_spark.volume import _on_workers
 
 QC_BOX = ((0, 64), (0, 64), (0, 64))
 
@@ -122,67 +119,57 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
     ``request``: in-chunk pairs reduce to moments inside the UDF;
     boundary pairs ship face planes keyed by (boundary z, x, y)."""
     req = tuple((int(lo), int(hi)) for lo, hi in request)
-    dtype_str = vol.info.data_type
-    chunks = vol._latest(vol._pruned(req))
 
-    def local(it: Iterator) -> Iterator:
+    def local(key, cbox, cut, blk):
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark.volume import decode_chunk
-        for batch in it:
-            for key, enc, payload in zip(batch["key"], batch["enc"],
-                                         batch["payload"]):
-                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
-                if hit is None:
-                    continue
-                _, cut, blk = hit
-                blk = blk[..., 0].astype(_np.int64)
-                z0 = cut[2][0]
-                rows = []
-                # in-chunk adjacent pairs: vectorized along z
-                if blk.shape[2] >= 2:
-                    a = blk[:, :, :-1]
-                    b = blk[:, :, 1:]
-                    rows_n = a.shape[0] * a.shape[1]
-                    for k in range(a.shape[2]):
-                        av, bv = a[:, :, k], b[:, :, k]
-                        rows.append((0, z0 + k, rows_n,
-                                     int(av.sum()), int(bv.sum()),
-                                     int((av * bv).sum()),
-                                     int((av * av).sum()),
-                                     int((bv * bv).sum()),
-                                     None, None, None, None, None))
-                # face planes: low face pairs with the chunk below
-                # (boundary z = z0 - 1), high face with the one above
-                # (boundary z = top); emit only if the partner plane
-                # lies inside the request
-                x0, y0 = cut[0][0], cut[1][0]
-                for side, zz in ((0, z0), (1, cut[2][1] - 1)):
-                    bz = zz - 1 if side == 0 else zz
-                    if side == 0 and zz - 1 < req[2][0]:
-                        continue
-                    if side == 1 and zz + 1 >= req[2][1]:
-                        continue
-                    plane = blk[:, :, zz - z0]
-                    xs, ys = _np.meshgrid(
-                        _np.arange(plane.shape[0]),
-                        _np.arange(plane.shape[1]), indexing="ij")
-                    fdf = _pd.DataFrame({
-                        "kind": 1, "z": bz,
-                        "n": 0, "sa": 0, "sb": 0,
-                        "sab": 0, "saa": 0, "sbb": 0,
-                        "fz": bz, "fu": (xs + x0).ravel(),
-                        "fv": (ys + y0).ravel(), "side": side,
-                        "val": plane.ravel()})
-                    yield fdf
-                if rows:
-                    yield _pd.DataFrame(
-                        rows, columns=["kind", "z", "n", "sa", "sb",
-                                       "sab", "saa", "sbb", "fz", "fu",
-                                       "fv", "side", "val"])
+        blk = blk[..., 0].astype(_np.int64)
+        z0 = cut[2][0]
+        rows = []
+        # in-chunk adjacent pairs: vectorized along z
+        if blk.shape[2] >= 2:
+            a = blk[:, :, :-1]
+            b = blk[:, :, 1:]
+            rows_n = a.shape[0] * a.shape[1]
+            for k in range(a.shape[2]):
+                av, bv = a[:, :, k], b[:, :, k]
+                rows.append((0, z0 + k, rows_n,
+                             int(av.sum()), int(bv.sum()),
+                             int((av * bv).sum()),
+                             int((av * av).sum()),
+                             int((bv * bv).sum()),
+                             None, None, None, None, None))
+        # face planes: low face pairs with the chunk below
+        # (boundary z = z0 - 1), high face with the one above
+        # (boundary z = top); emit only if the partner plane
+        # lies inside the request
+        x0, y0 = cut[0][0], cut[1][0]
+        for side, zz in ((0, z0), (1, cut[2][1] - 1)):
+            bz = zz - 1 if side == 0 else zz
+            if side == 0 and zz - 1 < req[2][0]:
+                continue
+            if side == 1 and zz + 1 >= req[2][1]:
+                continue
+            plane = blk[:, :, zz - z0]
+            xs, ys = _np.meshgrid(
+                _np.arange(plane.shape[0]),
+                _np.arange(plane.shape[1]), indexing="ij")
+            fdf = _pd.DataFrame({
+                "kind": 1, "z": bz,
+                "n": 0, "sa": 0, "sb": 0,
+                "sab": 0, "saa": 0, "sbb": 0,
+                "fz": bz, "fu": (xs + x0).ravel(),
+                "fv": (ys + y0).ravel(), "side": side,
+                "val": plane.ravel()})
+            yield fdf
+        if rows:
+            yield _pd.DataFrame(
+                rows, columns=["kind", "z", "n", "sa", "sb",
+                               "sab", "saa", "sbb", "fz", "fu",
+                               "fv", "side", "val"])
 
-    stream = chunks.mapInPandas(_on_workers(local), schema=_NCC_SCHEMA) \
-        .localCheckpoint(eager=False)
+    stream = vol.map_cuts(local, _NCC_SCHEMA, req).localCheckpoint(
+        eager=False)
     inner = (stream.filter(F.col("kind") == 0)
              .select("z", "n", "sa", "sb", "sab", "saa", "sbb"))
     faces = (stream.filter(F.col("kind") == 1)

@@ -39,31 +39,29 @@ along its three axes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.operators.volume_components import (
     CC_BG_BLOCK, CC_BLOCK, demo_cc_volume)
-from bigarrays_jl_spark.volume import Volume, _on_workers
+from bigarrays_jl_spark.volume import Volume
 
 RAG_STREAM_SCHEMA = ("kind int, a bigint, b bigint, n bigint, "
                      "axis int, fb long, fu long, fv long, "
                      "pcx int, pcy int, pcz int")
 
 
-def rag_stream(vol: Volume, chunks: DataFrame,
-               request: ix.Box) -> DataFrame:
-    """The tagged contribution stream: kind=0 rows are a chunk's
+def rag_stream(vol: Volume, request: ix.Box,
+               ids: list[tuple[int, int, int]] | None = None) -> DataFrame:
+    """The tagged contribution stream of the chunks meeting ``request``
+    (or of the chunk ids ``ids``): kind=0 rows are a chunk's
     pre-aggregated in-chunk pair counts (part = own chunk id), kind=1
     rows are nonzero face voxels keyed by boundary cell (part = the
     LOW chunk of that boundary, + axis).  Decode happens once
     (localCheckpoint) for the two consumers."""
     info = vol.info
     req = tuple((int(lo), int(hi)) for lo, hi in request)
-    dtype_str = info.data_type
     if info.num_channels != 1:
         raise ValueError("region_adjacency requires a single-channel "
                          "segmentation volume")
@@ -71,83 +69,75 @@ def rag_stream(vol: Volume, chunks: DataFrame,
     anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
     chunk_size = tuple(sc.chunk_size)
 
-    def local_pass(it: Iterator) -> Iterator:
+    def local_pass(key, cbox, cut, block):
         import numpy as _np
         import pandas as _pd
         from bigarrays_jl_spark import indexes as _ix
-        from bigarrays_jl_spark.volume import decode_chunk
-        for batch in it:
-            for key, enc, payload in zip(batch["key"], batch["enc"],
-                                         batch["payload"]):
-                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
-                if hit is None:
+        cid = tuple(_ix.chunk_id(cbox[d][0], anchor[d],
+                                 chunk_size[d]) for d in range(3))
+        block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
+        sh = block.shape
+        rows = []
+        # in-chunk contacts: three axis shifts, pre-aggregated
+        # with numpy so a chunk emits pairs, not voxels
+        for ax in range(3):
+            if sh[ax] < 2:
+                continue
+            lo_sl = [slice(None)] * 3
+            hi_sl = [slice(None)] * 3
+            lo_sl[ax] = slice(0, sh[ax] - 1)
+            hi_sl[ax] = slice(1, sh[ax])
+            la = block[tuple(lo_sl)]
+            lb = block[tuple(hi_sl)]
+            m = (la != lb) & (la != 0) & (lb != 0)
+            if not m.any():
+                continue
+            pa, pb = la[m], lb[m]
+            pairs = _np.stack(
+                [_np.minimum(pa, pb), _np.maximum(pa, pb)], axis=1)
+            uniq, counts = _np.unique(pairs, axis=0,
+                                      return_counts=True)
+            for (a, bb), n in zip(uniq.tolist(), counts.tolist()):
+                rows.append((0, a, bb, n, None, None, None, None,
+                             cid[0], cid[1], cid[2]))
+        # face rows: boundary-cell keying (the higher voxel's
+        # plane coordinate), exactly volume_components'
+        # convention so both sides of a boundary share a key;
+        # the part tag is the boundary's LOW chunk — own id for
+        # the high face, own id − 1 along the axis for the low
+        # face — so both sides agree on the owning part
+        for ax in range(3):
+            axes = [0, 1, 2]
+            axes.remove(ax)
+            off = (req[0][0], req[1][0], req[2][0])
+            for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
+                fsl = [slice(None)] * 3
+                fsl[ax] = plane_rel
+                face = block[tuple(fsl)]
+                m = face != 0
+                if not m.any():
                     continue
-                cbox, cut, block = hit
-                cid = tuple(_ix.chunk_id(cbox[d][0], anchor[d],
-                                         chunk_size[d]) for d in range(3))
-                block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
-                sh = block.shape
-                rows = []
-                # in-chunk contacts: three axis shifts, pre-aggregated
-                # with numpy so a chunk emits pairs, not voxels
-                for ax in range(3):
-                    if sh[ax] < 2:
-                        continue
-                    lo_sl = [slice(None)] * 3
-                    hi_sl = [slice(None)] * 3
-                    lo_sl[ax] = slice(0, sh[ax] - 1)
-                    hi_sl[ax] = slice(1, sh[ax])
-                    la = block[tuple(lo_sl)]
-                    lb = block[tuple(hi_sl)]
-                    m = (la != lb) & (la != 0) & (lb != 0)
-                    if not m.any():
-                        continue
-                    pa, pb = la[m], lb[m]
-                    pairs = _np.stack(
-                        [_np.minimum(pa, pb), _np.maximum(pa, pb)], axis=1)
-                    uniq, counts = _np.unique(pairs, axis=0,
-                                              return_counts=True)
-                    for (a, bb), n in zip(uniq.tolist(), counts.tolist()):
-                        rows.append((0, a, bb, n, None, None, None, None,
-                                     cid[0], cid[1], cid[2]))
-                # face rows: boundary-cell keying (the higher voxel's
-                # plane coordinate), exactly volume_components'
-                # convention so both sides of a boundary share a key;
-                # the part tag is the boundary's LOW chunk — own id for
-                # the high face, own id − 1 along the axis for the low
-                # face — so both sides agree on the owning part
-                for ax in range(3):
-                    axes = [0, 1, 2]
-                    axes.remove(ax)
-                    off = (req[0][0], req[1][0], req[2][0])
-                    for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
-                        fsl = [slice(None)] * 3
-                        fsl[ax] = plane_rel
-                        face = block[tuple(fsl)]
-                        m = face != 0
-                        if not m.any():
-                            continue
-                        gplane = cut[ax][0] - off[ax] + plane_rel \
-                            + (1 if side else 0)
-                        low = list(cid)
-                        if side == 0:
-                            low[ax] -= 1
-                        u0 = cut[axes[0]][0] - off[axes[0]]
-                        v0 = cut[axes[1]][0] - off[axes[1]]
-                        uu, vv = _np.nonzero(m)
-                        for u, v, li in zip((uu + u0).tolist(),
-                                            (vv + v0).tolist(),
-                                            face[m].tolist()):
-                            rows.append((1, li, None, None,
-                                         ax, gplane, u, v,
-                                         low[0], low[1], low[2]))
-                yield _pd.DataFrame(
-                    rows, columns=["kind", "a", "b", "n",
-                                   "axis", "fb", "fu", "fv",
-                                   "pcx", "pcy", "pcz"])
+                gplane = cut[ax][0] - off[ax] + plane_rel \
+                    + (1 if side else 0)
+                low = list(cid)
+                if side == 0:
+                    low[ax] -= 1
+                u0 = cut[axes[0]][0] - off[axes[0]]
+                v0 = cut[axes[1]][0] - off[axes[1]]
+                uu, vv = _np.nonzero(m)
+                for u, v, li in zip((uu + u0).tolist(),
+                                    (vv + v0).tolist(),
+                                    face[m].tolist()):
+                    rows.append((1, li, None, None,
+                                 ax, gplane, u, v,
+                                 low[0], low[1], low[2]))
+        yield _pd.DataFrame(
+            rows, columns=["kind", "a", "b", "n",
+                           "axis", "fb", "fu", "fv",
+                           "pcx", "pcy", "pcz"])
 
-    return chunks.mapInPandas(
-        _on_workers(local_pass), schema=RAG_STREAM_SCHEMA).localCheckpoint(eager=False)
+    return vol.map_cuts(local_pass, RAG_STREAM_SCHEMA, req,
+                        ids=ids).localCheckpoint(eager=False)
 
 
 def rag_edges(stream: DataFrame, keep_parts: bool = False) -> DataFrame:
@@ -183,10 +173,7 @@ def region_adjacency(vol: Volume,
     ``request`` → ``(label_a, label_b, contact_faces)`` with
     ``label_a < label_b`` (both nonzero), ``contact_faces`` the number
     of shared voxel faces."""
-    req = request or vol.vol_box
-    req = tuple((int(lo), int(hi)) for lo, hi in req)
-    chunks = vol._latest(vol._pruned(req))
-    return rag_edges(rag_stream(vol, chunks, req))
+    return rag_edges(rag_stream(vol, request or vol.vol_box))
 
 
 def volume_rag(spark: SparkSession, sf: str) -> DataFrame:

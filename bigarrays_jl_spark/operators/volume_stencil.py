@@ -34,13 +34,10 @@ integer scaling, value-hash-identical.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.operators.advanced import demo_volume
-from bigarrays_jl_spark.volume import _on_workers
 
 BOX = ((0, 64), (0, 64), (0, 64))
 SCALE_LCM = 420                      # lcm(4,5,6,7): exact integer scaling
@@ -51,94 +48,84 @@ _STENCIL_SCHEMA = ("kind int, z bigint, ssum long, nvox long, "
 
 def _stencil_stream(vol, request) -> DataFrame:
     req = tuple((int(lo), int(hi)) for lo, hi in request)
-    dtype_str = vol.info.data_type
-    chunks = vol._latest(vol._pruned(req))
 
-    def local(it: Iterator) -> Iterator:
+    def local(key, cbox, cut, blk):
         import numpy as _np
         import pandas as _pd
-        from bigarrays_jl_spark.volume import decode_chunk
         cols = ["kind", "z", "ssum", "nvox", "x", "y", "vz", "term"]
-        for batch in it:
-            for key, enc, payload in zip(batch["key"], batch["enc"],
-                                         batch["payload"]):
-                hit = decode_chunk(key, enc, payload, 1, dtype_str, req)
-                if hit is None:
+        blk = blk[..., 0].astype(_np.int64)
+        (x0, _), (y0, _), (z0, _) = cut
+        # in-chunk partial stencil sum via zero-padded shifts
+        pad = _np.pad(blk, 1)
+        s_in = (blk
+                + pad[:-2, 1:-1, 1:-1] + pad[2:, 1:-1, 1:-1]
+                + pad[1:-1, :-2, 1:-1] + pad[1:-1, 2:, 1:-1]
+                + pad[1:-1, 1:-1, :-2] + pad[1:-1, 1:-1, 2:])
+        dx, dy, dz = blk.shape
+        rows = []
+        # interior voxels: complete (all 6 neighbors in-chunk
+        # ⇒ in-volume ⇒ n+1 = 7, scale 60); reduce per slice
+        if dx > 2 and dy > 2 and dz > 2:
+            inner = s_in[1:-1, 1:-1, 1:-1] * (SCALE_LCM // 7)
+            nv = (dx - 2) * (dy - 2)
+            for k in range(dz - 2):
+                rows.append((0, z0 + 1 + k,
+                             int(inner[:, :, k].sum()), nv,
+                             None, None, None, None))
+        if rows:
+            yield _pd.DataFrame(rows, columns=cols)
+        # surface voxels: ship the in-chunk partial per voxel
+        mask = _np.ones(blk.shape, dtype=bool)
+        if dx > 2 and dy > 2 and dz > 2:
+            mask[1:-1, 1:-1, 1:-1] = False
+        xs, ys, zs = _np.nonzero(mask)
+        yield _pd.DataFrame({
+            "kind": 1, "z": 0, "ssum": 0, "nvox": 0,
+            "x": (xs + x0).astype("int32"),
+            "y": (ys + y0).astype("int32"),
+            "vz": (zs + z0).astype("int32"),
+            "term": s_in[xs, ys, zs]})
+        # face planes → neighbor contributions keyed by the
+        # receiving voxel (face coordinate + direction)
+        faces = []
+        for ax in range(3):
+            lo = [slice(None)] * 3
+            hi = [slice(None)] * 3
+            lo[ax] = 0
+            hi[ax] = blk.shape[ax] - 1
+            for sl3, step in ((tuple(lo), -1), (tuple(hi), 1)):
+                plane = blk[sl3]
+                idx = _np.nonzero(_np.ones(plane.shape,
+                                           dtype=bool))
+                coords = [None, None, None]
+                j = 0
+                for a in range(3):
+                    if a == ax:
+                        base = (0 if step == -1
+                                else blk.shape[ax] - 1)
+                        coords[a] = _np.full(plane.size,
+                                             base, dtype=_np.int64)
+                    else:
+                        coords[a] = idx[j].astype(_np.int64)
+                        j += 1
+                tgt = [coords[0] + x0, coords[1] + y0,
+                       coords[2] + z0]
+                tgt[ax] = tgt[ax] + step
+                keep = ((tgt[0] >= req[0][0]) & (tgt[0] < req[0][1])
+                        & (tgt[1] >= req[1][0]) & (tgt[1] < req[1][1])
+                        & (tgt[2] >= req[2][0]) & (tgt[2] < req[2][1]))
+                if not keep.any():
                     continue
-                _, cut, blk = hit
-                blk = blk[..., 0].astype(_np.int64)
-                (x0, _), (y0, _), (z0, _) = cut
-                # in-chunk partial stencil sum via zero-padded shifts
-                pad = _np.pad(blk, 1)
-                s_in = (blk
-                        + pad[:-2, 1:-1, 1:-1] + pad[2:, 1:-1, 1:-1]
-                        + pad[1:-1, :-2, 1:-1] + pad[1:-1, 2:, 1:-1]
-                        + pad[1:-1, 1:-1, :-2] + pad[1:-1, 1:-1, 2:])
-                dx, dy, dz = blk.shape
-                rows = []
-                # interior voxels: complete (all 6 neighbors in-chunk
-                # ⇒ in-volume ⇒ n+1 = 7, scale 60); reduce per slice
-                if dx > 2 and dy > 2 and dz > 2:
-                    inner = s_in[1:-1, 1:-1, 1:-1] * (SCALE_LCM // 7)
-                    nv = (dx - 2) * (dy - 2)
-                    for k in range(dz - 2):
-                        rows.append((0, z0 + 1 + k,
-                                     int(inner[:, :, k].sum()), nv,
-                                     None, None, None, None))
-                if rows:
-                    yield _pd.DataFrame(rows, columns=cols)
-                # surface voxels: ship the in-chunk partial per voxel
-                mask = _np.ones(blk.shape, dtype=bool)
-                if dx > 2 and dy > 2 and dz > 2:
-                    mask[1:-1, 1:-1, 1:-1] = False
-                xs, ys, zs = _np.nonzero(mask)
-                yield _pd.DataFrame({
+                faces.append(_pd.DataFrame({
                     "kind": 1, "z": 0, "ssum": 0, "nvox": 0,
-                    "x": (xs + x0).astype("int32"),
-                    "y": (ys + y0).astype("int32"),
-                    "vz": (zs + z0).astype("int32"),
-                    "term": s_in[xs, ys, zs]})
-                # face planes → neighbor contributions keyed by the
-                # receiving voxel (face coordinate + direction)
-                faces = []
-                for ax in range(3):
-                    lo = [slice(None)] * 3
-                    hi = [slice(None)] * 3
-                    lo[ax] = 0
-                    hi[ax] = blk.shape[ax] - 1
-                    for sl3, step in ((tuple(lo), -1), (tuple(hi), 1)):
-                        plane = blk[sl3]
-                        idx = _np.nonzero(_np.ones(plane.shape,
-                                                   dtype=bool))
-                        coords = [None, None, None]
-                        j = 0
-                        for a in range(3):
-                            if a == ax:
-                                base = (0 if step == -1
-                                        else blk.shape[ax] - 1)
-                                coords[a] = _np.full(plane.size,
-                                                     base, dtype=_np.int64)
-                            else:
-                                coords[a] = idx[j].astype(_np.int64)
-                                j += 1
-                        tgt = [coords[0] + x0, coords[1] + y0,
-                               coords[2] + z0]
-                        tgt[ax] = tgt[ax] + step
-                        keep = ((tgt[0] >= req[0][0]) & (tgt[0] < req[0][1])
-                                & (tgt[1] >= req[1][0]) & (tgt[1] < req[1][1])
-                                & (tgt[2] >= req[2][0]) & (tgt[2] < req[2][1]))
-                        if not keep.any():
-                            continue
-                        faces.append(_pd.DataFrame({
-                            "kind": 1, "z": 0, "ssum": 0, "nvox": 0,
-                            "x": tgt[0][keep].astype("int32"),
-                            "y": tgt[1][keep].astype("int32"),
-                            "vz": tgt[2][keep].astype("int32"),
-                            "term": plane.reshape(-1)[keep]}))
-                if faces:
-                    yield _pd.concat(faces, ignore_index=True)
+                    "x": tgt[0][keep].astype("int32"),
+                    "y": tgt[1][keep].astype("int32"),
+                    "vz": tgt[2][keep].astype("int32"),
+                    "term": plane.reshape(-1)[keep]}))
+        if faces:
+            yield _pd.concat(faces, ignore_index=True)
 
-    return chunks.mapInPandas(_on_workers(local), schema=_STENCIL_SCHEMA)
+    return vol.map_cuts(local, _STENCIL_SCHEMA, req)
 
 
 def volume_stencil_smooth(spark: SparkSession, sf: str) -> DataFrame:

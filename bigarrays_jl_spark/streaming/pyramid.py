@@ -17,7 +17,7 @@ Scale shape per micro-batch (B = touched chunk count):
 - driver work is pure integer arithmetic over ≤ 27·B candidate ids
   (`child_to_parent_id` closure) — no jobs, no payloads;
 - each level's downsample scans ≤ 4·B_parent source chunks via the
-  BETWEEN + multi-column-IN pruned subset (`Volume._sources_subset`),
+  BETWEEN + multi-column-IN pruned subset (`Volume.map_cuts(ids=)`),
   never the mip table;
 - levels shrink geometrically (2×2×1), so the whole cascade is O(B).
 

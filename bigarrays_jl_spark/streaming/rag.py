@@ -17,7 +17,7 @@ A batch touching chunk set T invalidates exactly parts(T) = the
 in-chunk parts of T plus every face part incident to T (6 per chunk:
 low = c for the high faces, low = c − e_ax for the low faces).  Those
 parts are recomputed from T ∪ neighbors(T) — a BETWEEN+IN pruned scan
-(`Volume._sources_subset`) — and written with the batch id as their
+(`Volume.map_cuts(..., ids=...)`) — and written with the batch id as their
 epoch; every affected part also gets a tombstone row so a part whose
 contacts vanished goes empty instead of stale.
 
@@ -77,8 +77,7 @@ def incremental_rag(vol, touched, rag_root: str, batch_id: int) -> None:
         hi[ax] += 1
         scan_ids.add(lo)
         scan_ids.add(tuple(hi))
-    chunks = vol._latest(vol._sources_subset(vol.mip, sorted(scan_ids)))
-    parts = rag_edges(rag_stream(vol, chunks, vol.vol_box),
+    parts = rag_edges(rag_stream(vol, vol.vol_box, ids=sorted(scan_ids)),
                       keep_parts=True)
     inner_set = {f"{c[0]}:{c[1]}:{c[2]}" for c in inner_parts}
     face_set = {f"{x}:{y}:{z}:{ax}" for (x, y, z, ax) in face_parts}

@@ -30,10 +30,17 @@ Design decisions for 100 TB scale (why this differs from a literal port):
 - **Codec work runs in executors** (Arrow-batched pandas path), exactly
   where the reference pays decode cost in its worker tasks
   (src/modes/multithreads.jl:107-119); Spark's task scheduler replaces
-  the hand-rolled channel + 8-coroutine pool.  Every read path decodes
-  through one function, ``decode_chunk`` (the reference decodes in one
-  place too, src/modes/sequential.jl:23-65), and every executor closure
-  bootstraps through one wrapper, ``_on_workers``.
+  the hand-rolled channel + 8-coroutine pool.  The chunk table has one
+  read site and one write site, like the reference's one read loop and
+  one write loop (src/modes/sequential.jl:23-65 and :4-17): every
+  executor-side read is ``Volume.map_cuts`` (live-chunk selection,
+  epoch dedupe, ``decode_chunk``, skip of chunks outside the request)
+  and every payload is encoded by ``encode_chunk``, which refuses a
+  block or byte string of the wrong size.  No other module knows how
+  live chunks are selected; ``voxels``, ``fsck`` and the driver-local
+  cutout, which need their own loops, still decode through
+  ``decode_chunk``.  Every executor closure bootstraps through one
+  wrapper, ``_on_workers``.
 - **The voxel view is arrays plus Catalyst arithmetic.**  ``voxels()``
   ships one Arrow row per chunk cut holding its values in F order;
   ``posexplode`` and integer expressions derive x, y, z and c in the
@@ -48,6 +55,7 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
+import math
 import os
 import shutil
 import socket
@@ -91,23 +99,65 @@ def _on_workers(fn):
     return run
 
 
-def _encode_batches_fn(enc: str):
-    """Executor-side codec encode over chunk batches — the one shared
-    implementation behind ``write()`` and ``ingest_chunks`` (a fix to
-    the encode path must not need applying twice).
+def _encode_batches_fn(enc: str, nc: int, dtype):
+    """Executor-side encode over raw chunk batches, behind ``write()``
+    and ``ingest_chunks``.
 
     Measured (r17, interleaved A/B at 537 MB): a mapInArrow variant of
     this stage lands within run-to-run noise (282-353 pandas vs
     335-338 arrow MB/s) — the stage is codec-CPU-bound, so the pandas
     object-Series transit is NOT the bottleneck here."""
     def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bigarrays_jl_spark import codecs as _codecs
-        codec = _codecs.get_codec(enc)
+        from bigarrays_jl_spark.volume import encode_chunk
         for b in it:
-            b["payload"] = b["payload"].map(codec.encode)
+            b["payload"] = [encode_chunk(key, enc, payload, nc, dtype)
+                            for key, payload in zip(b["key"], b["payload"])]
             yield b
 
     return _on_workers(encode_batches)
+
+
+def _f_bytes(block: np.ndarray) -> bytes:
+    """The F-order (neuroglancer) bytes of an ndarray block."""
+    return np.asfortranarray(block).tobytes(order="F")
+
+
+def encode_chunk(key: str, enc: str, block_or_bytes, nc: int,
+                 dtype) -> bytes:
+    """The one chunk encode of every write path (the reference's
+    src/modes/sequential.jl:4-17), ``decode_chunk``'s inverse: a
+    chunk's key and its voxels → the encoded payload to store.
+
+    ``block_or_bytes`` is either the ``(x, y, z[, c])`` array of the
+    key's whole box (the channel axis may be dropped when ``nc == 1``)
+    in the volume's ``dtype``, or its raw F-order bytes.  An array of
+    another shape or dtype, or bytes that are not exactly the key's
+    box × channels × dtype, are refused before anything is stored, so
+    a wrong-size payload fails at write time instead of on every later
+    read; every failure raises ``ValueError`` naming the chunk key.
+    Safe to call from executor closures (imports locally)."""
+    import numpy as _np
+
+    from bigarrays_jl_spark import codecs as _codecs
+    from bigarrays_jl_spark import indexes as _ix
+    try:
+        shape = _ix.box_shape(_ix.parse_chunk_key(key))
+        dt = _np.dtype(dtype)
+        data = block_or_bytes
+        if isinstance(data, _np.ndarray):
+            if nc == 1 and data.ndim == 4:
+                data = data[..., 0]
+            want_shape = shape if nc == 1 else (*shape, nc)
+            if data.dtype != dt or data.shape != want_shape:
+                raise ValueError(f"block {data.dtype}{data.shape} != "
+                                 f"expected {dt}{want_shape}")
+            data = _f_bytes(data)
+        want = shape[0] * shape[1] * shape[2] * nc * dt.itemsize
+        if len(data) != want:
+            raise ValueError(f"payload {len(data)} B != expected {want} B")
+        return _codecs.get_codec(enc).encode(data)
+    except Exception as e:
+        raise ValueError(f"chunk {key} ({enc}): cannot encode: {e}") from e
 
 
 def decode_chunk(key: str, enc: str, payload, nc: int, dtype,
@@ -154,7 +204,66 @@ def decode_chunk(key: str, enc: str, payload, nc: int, dtype,
     return cbox, cut, chunk[sl]
 
 
+def _cuts(batch, nc: int, dtype, request: ix.Box | None = None):
+    """``(key, cbox, cut, block)`` of every chunk row of ``batch`` (a
+    pandas frame with ``key, enc, payload``) that meets ``request`` —
+    the decode loop of ``Volume.map_cuts``, also run by ``rechunk``'s
+    merge groups."""
+    for key, enc, payload in zip(batch["key"], batch["enc"],
+                                 batch["payload"]):
+        hit = decode_chunk(key, enc, payload, nc, dtype, request)
+        if hit is not None:
+            yield (key, *hit)
+
+
+def _chunk_assembler(sc: InfoScale, nc: int, dtype, epoch: int):
+    """Executor-side assembly of whole chunks of scale ``sc`` from
+    pieces: ``build(cid, fill)`` clamps chunk ``cid``'s box to the
+    volume, hands a zero ``(x, y, z, c)`` buffer and that box to
+    ``fill(buf, box)`` and returns a one-row ``CHUNK_SCHEMA`` frame of
+    the encoded buffer at ``epoch`` — or an empty frame when the box
+    misses the volume or ``fill`` returns False (nothing placed).
+    Absent pieces stay zero, the missing-data background."""
+    anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
+    chunk_size = tuple(sc.chunk_size)
+    vol = ix.volume_box(sc.voxel_offset, sc.volume_size)
+    enc = sc.encoding
+    dtype = str(np.dtype(dtype))
+
+    def build(cid, fill) -> pd.DataFrame:
+        import numpy as _np
+        import pandas as _pd
+
+        from bigarrays_jl_spark import indexes as _ix
+        from bigarrays_jl_spark.volume import _CHUNK_COLUMNS, encode_chunk
+        box = _ix.intersect_box(tuple(
+            _ix.chunk_global_range(c, a, s)
+            for c, a, s in zip(cid, anchor, chunk_size)), vol)
+        if not _ix.box_is_empty(box):
+            buf = _np.zeros((*_ix.box_shape(box), nc), dtype=dtype,
+                            order="F")
+            if fill(buf, box):
+                key = _ix.chunk_key(box)
+                return _pd.DataFrame(
+                    [(*cid, key, enc, epoch,
+                      encode_chunk(key, enc, buf, nc, dtype))],
+                    columns=_CHUNK_COLUMNS)
+        return _pd.DataFrame([], columns=_CHUNK_COLUMNS)
+
+    return build
+
+
+def _in_ids(ranges):
+    """Predicate: the row's chunk id lies in the per-axis half-open
+    ``ranges`` (pushed down to Parquet row-group statistics)."""
+    (cx0, cx1), (cy0, cy1), (cz0, cz1) = ranges
+    return ((F.col("cx") >= cx0) & (F.col("cx") < cx1)
+            & (F.col("cy") >= cy0) & (F.col("cy") < cy1)
+            & (F.col("cz") >= cz0) & (F.col("cz") < cz1))
+
+
 CHUNK_SCHEMA = "cx int, cy int, cz int, key string, enc string, epoch bigint, payload binary"
+_CHUNK_COLUMNS = ("cx", "cy", "cz", "key", "enc", "epoch", "payload")
 
 
 class ChunkDecodeError(ValueError):
@@ -568,13 +677,11 @@ class Volume:
         """Driver-local twin of ``_write_chunks`` for driver-resident
         arrays: thread-pooled F-order copy + codec encode (numpy copies
         and zlib/zstd release the GIL) + one part file through
-        ``_write_part_local``.  Row payloads may be ndarray views
-        (``write``) or ready bytes."""
+        ``_write_part_local``.  Row payloads are ndarray views."""
         from concurrent.futures import ThreadPoolExecutor
 
-        from bigarrays_jl_spark import codecs as _codecs
-        codec = _codecs.get_codec(enc)
         rows = sorted(rows, key=lambda r: (r[2], r[1], r[0]))
+        nc, dtype = self.info.num_channels, self.info.dtype
 
         # pipelined copy/encode (r18): the F-order copies are numpy
         # loops that HOLD the GIL, so running copy+encode together in
@@ -583,18 +690,15 @@ class Volume:
         # ~2× slower than one thread).  Submitting from the main thread
         # keeps the copies on one contention-free thread while the
         # encodes (zlib releases the GIL) overlap in the pool.
-        def _f_bytes(x):
-            if isinstance(x, (bytes, bytearray)):
-                return x
-            return np.asfortranarray(x).tobytes(order="F")
-
         if enc == "raw":
             # identity encode: a pool would only add thread overhead
-            payloads = [_f_bytes(r[4]) for r in rows]
+            payloads = [encode_chunk(r[3], enc, r[4], nc, dtype)
+                        for r in rows]
         else:
             with ThreadPoolExecutor(
                     max_workers=min(32, os.cpu_count() or 8)) as ex:
-                futs = [ex.submit(codec.encode, _f_bytes(r[4]))
+                futs = [ex.submit(encode_chunk, r[3], enc, _f_bytes(r[4]),
+                                  nc, dtype)
                         for r in rows]
                 payloads = [f.result() for f in futs]
         _write_part_local(
@@ -604,7 +708,7 @@ class Volume:
 
     def _read_latest_local(self, request: ix.Box,
                            mip: int | None = None) -> list | None:
-        """Driver-local twin of ``_latest(_pruned(request))``: the
+        """Driver-local twin of ``live_chunks(request)``: the
         handle's cached chunk index selects the rows in the chunk-id
         box, keeps the max epoch per key and reads only those rows'
         payloads.  Returns ``[(key, enc, payload, part_file), ...]`` or
@@ -612,14 +716,8 @@ class Volume:
         d = self._local_chunks_dir(mip)
         if d is None:
             return None
-        sc = self.info.scale(self.mip if mip is None else mip)
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        clamped = ix.intersect_box(
-            request, ix.volume_box(sc.voxel_offset, sc.volume_size))
-        if ix.box_is_empty(clamped):
-            return []
-        return self._chunk_index(d).latest(
-            ix.chunk_id_ranges(clamped, anchor, sc.chunk_size))
+        ranges = self._id_ranges(request, mip)
+        return [] if ranges is None else self._chunk_index(d).latest(ranges)
 
     def _chunk_index(self, d: str) -> ChunkIndex:
         """The handle's cached chunk index of local mip dir ``d``."""
@@ -657,23 +755,29 @@ class Volume:
             return self.spark.createDataFrame([], CHUNK_SCHEMA)
         return self.spark.read.schema(CHUNK_SCHEMA).parquet(path)
 
-    def _pruned(self, request: ix.Box, mip: int | None = None) -> DataFrame:
-        """Partition/row-group pruning: chunk-id range filter, the Spark
-        analog of the reference's chunk-id bounding box
-        (src/ChunkIterators.jl:20-23)."""
+    def _id_ranges(self, request: ix.Box | None = None,
+                   mip: int | None = None):
+        """Per-axis half-open chunk-id ranges of the chunks meeting
+        ``request`` (the whole volume when None) after clamping it to
+        the volume, the reference's chunk-id bounding box
+        (src/ChunkIterators.jl:20-23); None when nothing is left.
+        Every id in the ranges intersects: the lattice is closed-form."""
         sc = self.info.scale(self.mip if mip is None else mip)
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        clamped = ix.intersect_box(request, ix.volume_box(sc.voxel_offset, sc.volume_size))
+        vol = ix.volume_box(sc.voxel_offset, sc.volume_size)
+        clamped = ix.intersect_box(request or vol, vol)
         if ix.box_is_empty(clamped):
-            return self.chunks_df(mip).limit(0)
-        (cx0, cx1), (cy0, cy1), (cz0, cz1) = ix.chunk_id_ranges(
-            clamped, anchor, sc.chunk_size)
+            return None
+        return ix.chunk_id_ranges(
+            clamped, ix.lattice_anchor(sc.voxel_offset, sc.chunk_size),
+            sc.chunk_size)
+
+    def _pruned(self, request: ix.Box | None,
+                mip: int | None = None) -> DataFrame:
+        """Partition/row-group pruning: the chunk-id range filter of
+        ``_id_ranges``."""
+        ranges = self._id_ranges(request, mip)
         df = self.chunks_df(mip)
-        return df.filter(
-            (F.col("cx") >= cx0) & (F.col("cx") < cx1)
-            & (F.col("cy") >= cy0) & (F.col("cy") < cy1)
-            & (F.col("cz") >= cz0) & (F.col("cz") < cz1)
-        )
+        return df.limit(0) if ranges is None else df.filter(_in_ids(ranges))
 
     def _latest(self, df: DataFrame) -> DataFrame:
         """Latest-epoch-wins per chunk key (LSM semantics, see module doc).
@@ -689,6 +793,45 @@ class Volume:
             F.max_by("enc", "epoch").alias("enc"),
             F.max_by("payload", "epoch").alias("payload"),
         )
+
+    def live_chunks(self, request: ix.Box | None = None) -> DataFrame:
+        """The live chunk rows — latest epoch per key — whose chunk ids
+        meet ``request`` (the whole volume when None): ``cx, cy, cz,
+        key, enc, payload`` with payloads still encoded.  For scans that
+        read more than one volume per row; everything else goes through
+        :meth:`map_cuts`.  Decode payloads with :func:`decode_chunk`."""
+        return self._latest(self._pruned(request))
+
+    def map_cuts(self, fn, schema: str, request: ix.Box | None = None, *,
+                 ids: list[tuple[int, int, int]] | None = None) -> DataFrame:
+        """The one executor-side chunk scan (the reference's read loop,
+        src/modes/sequential.jl:23-65): every live chunk meeting
+        ``request`` (the whole volume when None) is decoded through
+        :func:`decode_chunk` and ``fn(key, cbox, cut, block)`` runs on
+        it, yielding pandas frames of ``schema``; chunks that miss
+        ``request`` are skipped.  ``cbox`` is the chunk's box, ``cut``
+        its intersection with ``request`` and ``block`` the read-only
+        ``(x, y, z, c)`` view of ``cut``.  ``ids`` restricts the scan to
+        an explicit chunk-id set (micro-batch-bounded, a BETWEEN plus
+        multi-column IN at the scan) instead of the request's id box.
+
+        One ``mapInPandas``: no shuffle beyond the epoch dedupe, which
+        only runs once the dataset has overwrite history.  ``fn`` runs
+        on executors, so it imports what it needs in its body."""
+        req = tuple((int(lo), int(hi)) for lo, hi in
+                    (request or self.vol_box))
+        chunks = (self.live_chunks(req) if ids is None
+                  else self._latest(self._sources_subset(self.mip, ids)))
+        nc, dtype = self.info.num_channels, self.info.data_type
+
+        def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from bigarrays_jl_spark.volume import _cuts
+            for b in it:
+                for hit in _cuts(b, nc, dtype, req):
+                    yield from fn(*hit)
+
+        scan.__name__ = fn.__name__      # the name Spark plans show
+        return chunks.mapInPandas(_on_workers(scan), schema)
 
     # -- write / ingest (src/type.jl:137-150, src/modes/sequential.jl:4-17) --
 
@@ -800,9 +943,8 @@ class Volume:
                 "cy": pa.array([r[1] for r in rs], pa.int32()),
                 "cz": pa.array([r[2] for r in rs], pa.int32()),
                 "key": pa.array([r[3] for r in rs], pa.string()),
-                "payload": pa.array(
-                    [np.asfortranarray(r[4]).tobytes(order="F")
-                     for r in rs], pa.binary()),
+                "payload": pa.array([_f_bytes(r[4]) for r in rs],
+                                    pa.binary()),
             })
 
         def _spark_df(tbl):
@@ -827,8 +969,9 @@ class Volume:
                 .withColumn("epoch", F.lit(epoch).cast("bigint"))
                 .select("cx", "cy", "cz", "key", "enc", "epoch", "payload"))
 
-        self._write_chunks(
-            df.mapInPandas(_encode_batches_fn(enc), schema=CHUNK_SCHEMA))
+        self._write_chunks(df.mapInPandas(
+            _encode_batches_fn(enc, info.num_channels, info.data_type),
+            schema=CHUNK_SCHEMA))
         self._maybe_auto_compact()
 
     @_locked_writer()
@@ -839,7 +982,10 @@ class Volume:
         ``df`` columns: ``cx,cy,cz int, key string, payload binary`` with
         payloads as *raw* (unencoded) Fortran-order bytes of full
         volume-clamped chunks.  Encoding runs in executors; partitioning
-        comes from the source, so nothing touches the driver.
+        comes from the source, so nothing touches the driver.  A payload
+        whose size is not its key's box × channels × dtype fails the job
+        naming the key (``encode_chunk``); Spark's commit protocol then
+        leaves no part file behind.
         """
         epoch = self._next_epoch()
         enc = self.scale.encoding
@@ -847,7 +993,9 @@ class Volume:
                          F.lit(enc).alias("enc"),
                          F.lit(epoch).cast("bigint").alias("epoch"),
                          "payload")
-                 .mapInPandas(_encode_batches_fn(enc), schema=CHUNK_SCHEMA))
+                 .mapInPandas(_encode_batches_fn(
+                     enc, self.info.num_channels, self.info.data_type),
+                     schema=CHUNK_SCHEMA))
         self._write_chunks(out)
         self._maybe_auto_compact()
 
@@ -948,10 +1096,7 @@ class Volume:
         for m, sc_ in enumerate(self.info.scales):
             mdir = os.path.join(dest, sc_.key)
             os.makedirs(mdir, exist_ok=True)
-            latest = self._latest(
-                self.spark.read.schema(CHUNK_SCHEMA).parquet(self._mip_dir(m))
-            ) if _fs_exists(self.spark, self._mip_dir(m)) else None
-            if latest is None:
+            if not _fs_exists(self.spark, self._mip_dir(m)):
                 continue
 
             def write_files(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -969,7 +1114,8 @@ class Volume:
                         n += 1
                 yield pd.DataFrame({"n": [n]})
 
-            total += int(latest.mapInPandas(write_files, schema="n long")
+            total += int(self._latest(self.chunks_df(m))
+                         .mapInPandas(write_files, schema="n long")
                          .agg(F.sum("n")).collect()[0][0] or 0)
         return total
 
@@ -1002,32 +1148,17 @@ class Volume:
             F.floor((F.col("z") - anchor[2]) / sc.chunk_size[2]).cast("int").alias("cz"),
             "x", "y", "z", "c", "value")
 
-        epoch = self._next_epoch()
-        enc = sc.encoding
-        dtype_str = info.data_type
-        chunk_size = sc.chunk_size
+        build = _chunk_assembler(sc, nc, info.dtype, self._next_epoch())
 
         def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark import indexes as _ix
-            dt = _np.dtype(dtype_str)
-            cid = (int(pdf.cx.iloc[0]), int(pdf.cy.iloc[0]), int(pdf.cz.iloc[0]))
-            raw = tuple(_ix.chunk_global_range(c, a, s)
-                        for c, a, s in zip(cid, anchor, chunk_size))
-            cbox = _ix.intersect_box(raw, vol)
-            shape = (*_ix.box_shape(cbox), nc)
-            buf = _np.zeros(shape, dtype=dt, order="F")
-            buf[pdf.x.values - cbox[0][0], pdf.y.values - cbox[1][0],
-                pdf.z.values - cbox[2][0], pdf.c.values] = \
-                pdf.value.values.astype(dt)
-            out = buf[..., 0] if nc == 1 else buf
-            codec = _codecs.get_codec(enc)
-            return pd.DataFrame({
-                "cx": [cid[0]], "cy": [cid[1]], "cz": [cid[2]],
-                "key": [_ix.chunk_key(cbox)], "enc": [enc],
-                "epoch": [epoch],
-                "payload": [codec.encode(_np.asfortranarray(out).tobytes(order="F"))]})
+            def fill(buf, box):
+                buf[pdf.x.values - box[0][0], pdf.y.values - box[1][0],
+                    pdf.z.values - box[2][0], pdf.c.values] = \
+                    pdf.value.values.astype(buf.dtype)
+                return True
+
+            return build((int(pdf.cx.iloc[0]), int(pdf.cy.iloc[0]),
+                          int(pdf.cz.iloc[0])), fill)
 
         result = keyed.groupBy("cx", "cy", "cz").applyInPandas(
             _on_workers(assemble), schema=CHUNK_SCHEMA)
@@ -1069,7 +1200,7 @@ class Volume:
         big-memory driver via the attribute, or use ``voxels()`` /
         ``map_blocks`` for analysis that should stay distributed.
         """
-        info, sc = self.info, self.scale
+        info = self.info
         request = tuple((int(lo), int(hi)) for lo, hi in request)
         nc = info.num_channels
         n_voxels = 1
@@ -1094,8 +1225,7 @@ class Volume:
         def _out():
             return (buf[..., 0] if nc == 1 else buf), origin
 
-        expected = sum(1 for _ in ix.iter_chunk_slices(
-            request, sc.voxel_offset, sc.volume_size, sc.chunk_size))
+        expected = self.num_chunks(request)
         if expected == 0:
             return _out()
 
@@ -1111,65 +1241,42 @@ class Volume:
             # each chunk's cut straight into the output buffer — no
             # Python-worker round trip, no intermediate block copies
             from concurrent.futures import ThreadPoolExecutor
-            placed = 0
-            for key, *_ in local_rows:
-                cbox = ix.parse_chunk_key(key)
-                if ix.box_is_empty(ix.intersect_box(cbox, request)):
-                    continue
-                placed += 1
-            if not self.fill_missing and placed < expected:
-                raise MissingChunkError(
-                    f"cutout {request}: {expected - placed} of {expected} "
-                    "chunks missing and fill_missing=False")
 
-            def _decode_place(row) -> None:
+            def _decode_place(row) -> bool:
                 key, enc, payload, part_file = row
                 hit = decode_chunk(key, enc, payload, nc, info.dtype,
                                    request, part_file)
                 if hit is not None:
                     _place(*hit[1:])
+                return hit is not None
 
             # disjoint destination regions per chunk → thread-safe
             with ThreadPoolExecutor(
                     max_workers=min(32, os.cpu_count() or 8)) as ex:
-                list(ex.map(_decode_place, local_rows))
-            return _out()
+                placed = sum(ex.map(_decode_place, local_rows))
+        else:
+            def cut_row(key, cbox, cut, block):
+                (x0, x1), (y0, y1), (z0, z1) = cut
+                yield pd.DataFrame({
+                    "x0": [x0], "y0": [y0], "z0": [z0], "sx": [x1 - x0],
+                    "sy": [y1 - y0], "sz": [z1 - z0],
+                    "data": [block.tobytes(order="F")]})
 
-        latest = self._latest(self._pruned(request))
-        dtype_str, req = info.data_type, request
-
-        def decode_slice(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bigarrays_jl_spark.volume import decode_chunk
-            for b in it:
-                out = {"x0": [], "y0": [], "z0": [], "sx": [], "sy": [],
-                       "sz": [], "data": []}
-                for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    hit = decode_chunk(key, enc, payload, nc, dtype_str, req)
-                    if hit is None:
-                        continue
-                    _, cut, block = hit
-                    for name, (lo, hi) in zip(("x", "y", "z"), cut):
-                        out[name + "0"].append(lo)
-                        out["s" + name].append(hi - lo)
-                    out["data"].append(block.tobytes(order="F"))
-                yield pd.DataFrame(out)
-
-        parts = latest.mapInPandas(
-            _on_workers(decode_slice),
-            schema="x0 int, y0 int, z0 int, sx int, sy int, sz int, "
-                   "data binary",
-        ).toPandas()  # Arrow transfer — binary columns skip py4j row serde
-
-        if not self.fill_missing and len(parts) < expected:
+            parts = self.map_cuts(
+                cut_row, "x0 int, y0 int, z0 int, sx int, sy int, sz int, "
+                         "data binary", request,
+            ).toPandas()  # Arrow transfer — binary columns skip py4j row serde
+            for r in parts.itertuples(index=False):
+                shp = (r.sx, r.sy, r.sz)
+                _place(tuple((o, o + s) for o, s in
+                             zip((r.x0, r.y0, r.z0), shp)),
+                       np.frombuffer(r.data, dtype=info.dtype).reshape(
+                           (*shp, nc), order="F"))
+            placed = len(parts)
+        if not self.fill_missing and placed < expected:
             raise MissingChunkError(
-                f"cutout {request}: {expected - len(parts)} of {expected} chunks missing "
-                "and fill_missing=False")
-
-        for r in parts.itertuples(index=False):
-            shp = (r.sx, r.sy, r.sz)
-            _place(tuple((o, o + s) for o, s in zip((r.x0, r.y0, r.z0), shp)),
-                   np.frombuffer(r.data, dtype=info.dtype).reshape(
-                       (*shp, nc), order="F"))
+                f"cutout {request}: {expected - placed} of {expected} "
+                "chunks missing and fill_missing=False")
         return _out()
 
     # -- voxel view (the relational bridge, SURVEY §1.6) ----------------------
@@ -1192,7 +1299,7 @@ class Volume:
                     (request or self.vol_box))
         nc = info.num_channels
         dtype_str = info.data_type
-        latest = self._latest(self._pruned(req))
+        latest = self.live_chunks(req)
 
         def cuts(it):
             import numpy as _np
@@ -1245,33 +1352,20 @@ class Volume:
         id in the per-axis id range intersects, so the count is the
         product of the range lengths — O(1), not an O(total chunks)
         driver-side enumeration (4e8 chunk objects at 100 TB scale)."""
-        sc = self.scale
-        req = ix.intersect_box(request or self.vol_box, self.vol_box)
-        if ix.box_is_empty(req):
+        ranges = self._id_ranges(request)
+        if ranges is None:
             return 0
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        n = 1
-        for i0, i1 in ix.chunk_id_ranges(req, anchor, sc.chunk_size):
-            n *= max(0, i1 - i0)
-        return n
+        return math.prod(max(0, i1 - i0) for i0, i1 in ranges)
 
     def lattice_df(self, request: ix.Box | None = None) -> DataFrame:
         """Generated DataFrame of every chunk id intersecting ``request``
         (the in-volume chunk lattice) — the join-side for missing-chunk
         queries.  Built from ``spark.range`` cross products so it never
         materializes on the driver."""
-        sc = self.scale
-        req = ix.intersect_box(request or self.vol_box, self.vol_box)
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        if ix.box_is_empty(req):
-            return self.spark.range(0).select(
-                F.col("id").cast("int").alias("cx"),
-                F.col("id").cast("int").alias("cy"),
-                F.col("id").cast("int").alias("cz"))
-        rngs = ix.chunk_id_ranges(req, anchor, sc.chunk_size)
-        xs = self.spark.range(rngs[0][0], rngs[0][1]).select(F.col("id").cast("int").alias("cx"))
-        ys = self.spark.range(rngs[1][0], rngs[1][1]).select(F.col("id").cast("int").alias("cy"))
-        zs = self.spark.range(rngs[2][0], rngs[2][1]).select(F.col("id").cast("int").alias("cz"))
+        rngs = self._id_ranges(request) or ((0, 0),) * 3
+        xs, ys, zs = (self.spark.range(lo, hi).select(
+            F.col("id").cast("int").alias(name))
+            for (lo, hi), name in zip(rngs, ("cx", "cy", "cz")))
         return xs.crossJoin(ys).crossJoin(zs)
 
     def missing_chunks_df(self, request: ix.Box | None = None) -> DataFrame:
@@ -1283,9 +1377,9 @@ class Volume:
         (find holes → re-ingest) must stay a DataFrame end-to-end.  The
         list-returning wrapper keeps the reference's API contract
         (src/type.jl:299-314 returns a key vector) for interactive use."""
-        req = request or self.vol_box
-        stored = self._pruned(req).select("cx", "cy", "cz").distinct()
-        return self.lattice_df(req).join(stored, ["cx", "cy", "cz"], "left_anti")
+        stored = self._pruned(request).select("cx", "cy", "cz").distinct()
+        return self.lattice_df(request).join(stored, ["cx", "cy", "cz"],
+                                             "left_anti")
 
     def list_missing_chunks(self, request: ix.Box | None = None) -> list[tuple[int, int, int]]:
         """Chunk ids in ``request`` with no stored object — the reference's
@@ -1320,18 +1414,10 @@ class Volume:
         (Replaces a driver-enumerated ``isin(doomed_keys)`` that built the
         full key list on the driver — the r9 verdict's one 100×-unsafe plan.)
         """
-        sc = self.scale
-        clamped = ix.intersect_box(request, self.vol_box)
-        if ix.box_is_empty(clamped):
+        ranges = self._id_ranges(request)
+        if ranges is None:
             return  # nothing stored can intersect; skip the rewrite entirely
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        (cx0, cx1), (cy0, cy1), (cz0, cz1) = ix.chunk_id_ranges(
-            clamped, anchor, sc.chunk_size)
-        doomed = (
-            (F.col("cx") >= cx0) & (F.col("cx") < cx1)
-            & (F.col("cy") >= cy0) & (F.col("cy") < cy1)
-            & (F.col("cz") >= cz0) & (F.col("cz") < cz1))
-        self._rewrite_mip(self.chunks_df().filter(~doomed))
+        self._rewrite_mip(self.chunks_df().filter(~_in_ids(ranges)))
 
     @_locked_writer(lambda self, fn, dest: dest)
     def map_blocks(self, fn, dest: "Volume") -> None:
@@ -1370,39 +1456,29 @@ class Volume:
                 f"corrupt a {dest.info.num_channels}-channel dest "
                 "(reads there reshape against ITS channel count)")
         nc = self.info.num_channels
-        src_dtype = self.info.data_type
         dst_dtype = dest.info.data_type
         dst_enc = dst_sc.encoding
         epoch = dest._next_epoch()
+        anchor = ix.lattice_anchor(src_sc.voxel_offset, src_sc.chunk_size)
+        chunk_size = tuple(src_sc.chunk_size)
 
-        def xform(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def xform(key, cbox, cut, arr):
             import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark.volume import decode_chunk
-            ddt = _np.dtype(dst_dtype)
-            out_codec = _codecs.get_codec(dst_enc)
-            for b in it:
-                payloads = []
-                for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    _, _, arr = decode_chunk(key, enc, payload, nc, src_dtype)
-                    out = _np.asarray(fn(arr))
-                    if out.shape != arr.shape:
-                        raise ValueError(
-                            f"map_blocks fn changed chunk shape "
-                            f"{arr.shape} -> {out.shape} at {key}")
-                    out = out.astype(ddt, copy=False)
-                    if nc == 1:
-                        out = out[..., 0]
-                    payloads.append(out_codec.encode(
-                        _np.asfortranarray(out).tobytes(order="F")))
-                yield pd.DataFrame({
-                    "cx": b["cx"], "cy": b["cy"], "cz": b["cz"],
-                    "key": b["key"], "enc": dst_enc,
-                    "epoch": _np.int64(epoch), "payload": payloads})
+            from bigarrays_jl_spark import indexes as _ix
+            from bigarrays_jl_spark.volume import _CHUNK_COLUMNS, encode_chunk
+            out = _np.asarray(fn(arr))
+            if out.shape != arr.shape:
+                raise ValueError(
+                    f"map_blocks fn changed chunk shape "
+                    f"{arr.shape} -> {out.shape} at {key}")
+            cid = (_ix.chunk_id(lo, a, c)
+                   for (lo, _), a, c in zip(cbox, anchor, chunk_size))
+            yield pd.DataFrame(
+                [(*cid, key, dst_enc, epoch,
+                  encode_chunk(key, dst_enc, out.astype(dst_dtype, copy=False),
+                               nc, dst_dtype))], columns=_CHUNK_COLUMNS)
 
-        dest._write_chunks(
-            self._latest(self.chunks_df()).mapInPandas(
-                _on_workers(xform), CHUNK_SCHEMA))
+        dest._write_chunks(self.map_cuts(xform, CHUNK_SCHEMA))
 
     def stats(self, mip: int | None = None) -> dict:
         """Operational summary of one mip's chunk store — the numbers a
@@ -1432,12 +1508,7 @@ class Volume:
               .agg(F.count("*").alias("stored"),
                    F.sum(F.length("payload")).alias("bytes"))
               .collect()[0])
-        anchor = ix.lattice_anchor(sc.voxel_offset, sc.chunk_size)
-        lattice = 1
-        for c0, c1 in ix.chunk_id_ranges(
-                ix.volume_box(sc.voxel_offset, sc.volume_size), anchor,
-                sc.chunk_size):
-            lattice *= max(0, c1 - c0)
+        lattice = self.mip_volume(m).num_chunks()
         stored = int(lr.stored or 0)
         return {
             "mip": m,
@@ -1573,52 +1644,26 @@ class Volume:
         nc = self.info.num_channels
         dtype_str = self.info.data_type
         dst_enc = dst_sc.encoding
-        vol = self.vol_box
         epoch = dest._next_epoch()
         dst_off, dst_size = dst_sc.voxel_offset, dst_sc.volume_size
 
-        def _encode(out, _np, _codecs):
-            o = out[..., 0] if nc == 1 else out
-            return _codecs.get_codec(dst_enc).encode(
-                _np.asfortranarray(o).tobytes(order="F"))
-
         if splits and scs != dcs:
-            def split_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import numpy as _np
-                from bigarrays_jl_spark import codecs as _codecs
+            def split_fn(key, sbox, cut, arr):
                 from bigarrays_jl_spark import indexes as _ix
-                from bigarrays_jl_spark.volume import decode_chunk
-                for b in it:
-                    rows = {k: [] for k in
-                            ("cx", "cy", "cz", "key", "enc", "epoch",
-                             "payload")}
-                    for key, enc, payload in zip(b["key"], b["enc"],
-                                                 b["payload"]):
-                        sbox, _, arr = decode_chunk(key, enc, payload, nc,
-                                                    dtype_str)
-                        # every dst chunk ∩ volume nests inside this src
-                        # chunk (dividing sizes + shared voxel_offset —
-                        # see the nesting proof at the validation above)
-                        for cs in _ix.iter_chunk_slices(
-                                sbox, dst_off, dst_size, dcs):
-                            db = cs.cutout_box
-                            sub = arr[tuple(
-                                slice(lo - s0, hi - s0)
-                                for (lo, hi), (s0, _) in zip(db, sbox))]
-                            rows["cx"].append(cs.cid[0])
-                            rows["cy"].append(cs.cid[1])
-                            rows["cz"].append(cs.cid[2])
-                            rows["key"].append(cs.key)
-                            rows["enc"].append(dst_enc)
-                            rows["epoch"].append(_np.int64(epoch))
-                            # _encode's asfortranarray does the one
-                            # required copy of the non-contiguous slice
-                            rows["payload"].append(
-                                _encode(sub, _np, _codecs))
-                    yield pd.DataFrame(rows)
+                from bigarrays_jl_spark.volume import (_CHUNK_COLUMNS,
+                                                       encode_chunk)
+                rows = []
+                # every dst chunk ∩ volume nests inside this src chunk
+                # (dividing sizes + shared voxel_offset — see the nesting
+                # proof at the validation above)
+                for cs in _ix.iter_chunk_slices(sbox, dst_off, dst_size, dcs):
+                    sub = arr[tuple(slice(lo - s0, hi - s0) for (lo, hi), (s0, _)
+                                    in zip(cs.cutout_box, sbox))]
+                    rows.append((*cs.cid, cs.key, dst_enc, epoch, encode_chunk(
+                        cs.key, dst_enc, sub, nc, dtype_str)))
+                yield pd.DataFrame(rows, columns=_CHUNK_COLUMNS)
 
-            out = self._latest(self.chunks_df()).mapInPandas(
-                _on_workers(split_fn), CHUNK_SCHEMA)
+            out = self.map_cuts(split_fn, CHUNK_SCHEMA)
         else:
             # dst id from src id through BOTH anchors (they differ when
             # voxel_offset is not chunk-aligned):
@@ -1633,30 +1678,19 @@ class Volume:
                 _dst_id("cy", 1).alias("dcy"),
                 _dst_id("cz", 2).alias("dcz"),
                 "key", "enc", "payload")
+            build = _chunk_assembler(dst_sc, nc, dtype_str, epoch)
 
             def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as _np
-                from bigarrays_jl_spark import codecs as _codecs
-                from bigarrays_jl_spark import indexes as _ix
-                from bigarrays_jl_spark.volume import decode_chunk
-                cid = (int(pdf.dcx.iloc[0]), int(pdf.dcy.iloc[0]),
-                       int(pdf.dcz.iloc[0]))
-                raw = tuple(_ix.chunk_global_range(c, a, s)
-                            for c, a, s in zip(cid, dst_anchor, dcs))
-                dbox = _ix.intersect_box(raw, vol)
-                buf = _np.zeros((*_ix.box_shape(dbox), nc),
-                                dtype=_np.dtype(dtype_str), order="F")
-                for key, enc, payload in zip(pdf.key, pdf.enc, pdf.payload):
-                    sbox, _, arr = decode_chunk(key, enc, payload, nc,
-                                                dtype_str)
-                    sl = tuple(slice(lo - d0, hi - d0)
-                               for (lo, hi), (d0, _) in zip(sbox, dbox))
-                    buf[sl] = arr
-                return pd.DataFrame({
-                    "cx": [cid[0]], "cy": [cid[1]], "cz": [cid[2]],
-                    "key": [_ix.chunk_key(dbox)], "enc": [dst_enc],
-                    "epoch": [epoch], "payload": [_encode(buf, _np,
-                                                          _codecs)]})
+                from bigarrays_jl_spark.volume import _cuts
+
+                def fill(buf, dbox):
+                    for _, sbox, _, arr in _cuts(pdf, nc, dtype_str):
+                        buf[tuple(slice(lo - d0, hi - d0) for (lo, hi), (d0, _)
+                                  in zip(sbox, dbox))] = arr
+                    return True
+
+                return build((int(pdf.dcx.iloc[0]), int(pdf.dcy.iloc[0]),
+                              int(pdf.dcz.iloc[0])), fill)
 
             out = keyed.groupBy("dcx", "dcy", "dcz").applyInPandas(
                 _on_workers(merge_fn), CHUNK_SCHEMA)
@@ -1904,104 +1938,78 @@ class Volume:
         dtype_str = info.data_type
         seg = info.layer_type == "segmentation"
         dst_anchor = ix.lattice_anchor(dst_sc.voxel_offset, dst_sc.chunk_size)
-        dst_vol = ix.volume_box(dst_sc.voxel_offset, dst_sc.volume_size)
         dst_chunk = dst_sc.chunk_size
         src_off = src_sc.voxel_offset
         dst_off = dst_sc.voxel_offset
 
-        def to_target(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def to_target(key, cbox, cut, arr):
             import numpy as _np
             from bigarrays_jl_spark import indexes as _ix
-            from bigarrays_jl_spark.volume import decode_chunk
-            dt = _np.dtype(dtype_str)
-            for b in it:
-                rows = {"tcx": [], "tcy": [], "tcz": [], "x0": [], "y0": [], "z0": [],
-                        "sx": [], "sy": [], "sz": [], "data": []}
-                for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
-                    cbox, _, arr = decode_chunk(key, enc, payload, nc, dt)
-                    shape = arr.shape
-                    # 2x2x1 reduce; odd edges truncated to even first
-                    ex = shape[0] - shape[0] % 2 or shape[0]
-                    ey = shape[1] - shape[1] % 2 or shape[1]
-                    if seg:
-                        red = arr[:ex:2, :ey:2, :, :]
-                    else:
-                        a = arr[:ex, :ey].astype(_np.float64)
-                        red = ((a[0::2, 0::2] + a[1::2, 0::2]
-                                + a[0::2, 1::2] + a[1::2, 1::2]) / 4.0)
-                        # integer layers: round the 2x2 mean (half-even)
-                        # instead of truncating toward zero, which would
-                        # bias downsampled intensities low
-                        red = red.astype(dt) if dtype_str.startswith("float") \
-                            else _np.rint(red).astype(dt)
-                    # global coords at target mip: src global / 2 (x,y), z same;
-                    # mip m+1 offset halving follows src/Infos.jl:169-178
-                    gx0 = (cbox[0][0] - src_off[0]) // 2 + dst_off[0]
-                    gy0 = (cbox[1][0] - src_off[1]) // 2 + dst_off[1]
-                    gz0 = cbox[2][0] - src_off[2] + dst_off[2]
-                    tcx = _ix.chunk_id(gx0, dst_anchor[0], dst_chunk[0])
-                    tcy = _ix.chunk_id(gy0, dst_anchor[1], dst_chunk[1])
-                    tcz = _ix.chunk_id(gz0, dst_anchor[2], dst_chunk[2])
-                    rows["tcx"].append(tcx); rows["tcy"].append(tcy); rows["tcz"].append(tcz)
-                    rows["x0"].append(gx0); rows["y0"].append(gy0); rows["z0"].append(gz0)
-                    rows["sx"].append(red.shape[0]); rows["sy"].append(red.shape[1])
-                    rows["sz"].append(red.shape[2])
-                    rows["data"].append(_np.asfortranarray(red).tobytes(order="F"))
-                yield pd.DataFrame(rows)
+            dt = arr.dtype
+            shape = arr.shape
+            # 2x2x1 reduce; odd edges truncated to even first
+            ex = shape[0] - shape[0] % 2 or shape[0]
+            ey = shape[1] - shape[1] % 2 or shape[1]
+            if seg:
+                red = arr[:ex:2, :ey:2, :, :]
+            else:
+                a = arr[:ex, :ey].astype(_np.float64)
+                red = ((a[0::2, 0::2] + a[1::2, 0::2]
+                        + a[0::2, 1::2] + a[1::2, 1::2]) / 4.0)
+                # integer layers: round the 2x2 mean (half-even)
+                # instead of truncating toward zero, which would
+                # bias downsampled intensities low
+                red = red.astype(dt) if dtype_str.startswith("float") \
+                    else _np.rint(red).astype(dt)
+            # global coords at target mip: src global / 2 (x,y), z same;
+            # mip m+1 offset halving follows src/Infos.jl:169-178
+            g0 = ((cbox[0][0] - src_off[0]) // 2 + dst_off[0],
+                  (cbox[1][0] - src_off[1]) // 2 + dst_off[1],
+                  cbox[2][0] - src_off[2] + dst_off[2])
+            tc = [_ix.chunk_id(g, a, c)
+                  for g, a, c in zip(g0, dst_anchor, dst_chunk)]
+            yield pd.DataFrame({
+                "tcx": [tc[0]], "tcy": [tc[1]], "tcz": [tc[2]],
+                "x0": [g0[0]], "y0": [g0[1]], "z0": [g0[2]],
+                "sx": [red.shape[0]], "sy": [red.shape[1]],
+                "sz": [red.shape[2]],
+                "data": [_np.asfortranarray(red).tobytes(order="F")]})
 
-        src = (self.chunks_df(m) if only_sources is None
-               else self._sources_subset(m, only_sources))
-        blocks = self._latest(src).mapInPandas(
-            _on_workers(to_target),
-            schema="tcx int, tcy int, tcz int, x0 int, y0 int, z0 int, "
-                   "sx int, sy int, sz int, data binary")
-
-        enc = dst_sc.encoding
-        epoch = self._next_epoch()
+        src = self.mip_volume(m)
+        blocks = src.map_cuts(
+            to_target, "tcx int, tcy int, tcz int, x0 int, y0 int, z0 int, "
+                       "sx int, sy int, sz int, data binary",
+            ids=only_sources)
+        build = _chunk_assembler(dst_sc, nc, dtype_str, self._next_epoch())
 
         def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
             import numpy as _np
-            from bigarrays_jl_spark import codecs as _codecs
-            from bigarrays_jl_spark import indexes as _ix
-            dt = _np.dtype(dtype_str)
-            tcx, tcy, tcz = int(pdf.tcx.iloc[0]), int(pdf.tcy.iloc[0]), int(pdf.tcz.iloc[0])
-            raw = tuple(_ix.chunk_global_range(c, a, s)
-                        for c, a, s in zip((tcx, tcy, tcz), dst_anchor, dst_chunk))
-            cbox = _ix.intersect_box(raw, dst_vol)
-            if _ix.box_is_empty(cbox):
-                return pd.DataFrame(
-                    {c: [] for c in
-                     ("cx", "cy", "cz", "key", "enc", "epoch", "payload")})
-            shape = _ix.box_shape(cbox)
-            buf = _np.zeros((*shape, nc), dtype=dt, order="F")
-            wrote_any = False
-            for _, r in pdf.iterrows():
-                block = _np.frombuffer(r.data, dtype=dt).reshape(
-                    (r.sx, r.sy, r.sz, nc), order="F")
-                ox, oy, oz = r.x0 - cbox[0][0], r.y0 - cbox[1][0], r.z0 - cbox[2][0]
-                ex = min(r.sx, shape[0] - ox)
-                ey = min(r.sy, shape[1] - oy)
-                ez = min(r.sz, shape[2] - oz)
-                if ex <= 0 or ey <= 0 or ez <= 0:
-                    continue
-                buf[ox:ox + ex, oy:oy + ey, oz:oz + ez, :] = block[:ex, :ey, :ez, :]
-                wrote_any = True
-            if not wrote_any:
+
+            def fill(buf, box):
+                shape = buf.shape
+                wrote_any = False
+                for _, r in pdf.iterrows():
+                    block = _np.frombuffer(r.data, dtype=buf.dtype).reshape(
+                        (r.sx, r.sy, r.sz, nc), order="F")
+                    ox, oy, oz = (r.x0 - box[0][0], r.y0 - box[1][0],
+                                  r.z0 - box[2][0])
+                    ex = min(r.sx, shape[0] - ox)
+                    ey = min(r.sy, shape[1] - oy)
+                    ez = min(r.sz, shape[2] - oz)
+                    if ex <= 0 or ey <= 0 or ez <= 0:
+                        continue
+                    buf[ox:ox + ex, oy:oy + ey, oz:oz + ez, :] = \
+                        block[:ex, :ey, :ez, :]
+                    wrote_any = True
                 # every contributing block fell outside the target box
                 # (size-1 edge chunks reduce to empty, or placement past
                 # the halved dst volume): emitting a chunk here would
                 # materialize spurious zeros where NO source data exists,
                 # breaking fill_missing=False semantics at mip+1
-                return pd.DataFrame(
-                    {c: [] for c in
-                     ("cx", "cy", "cz", "key", "enc", "epoch", "payload")})
-            out = buf[..., 0] if nc == 1 else buf
-            codec = _codecs.get_codec(enc)
-            return pd.DataFrame({
-                "cx": [tcx], "cy": [tcy], "cz": [tcz],
-                "key": [_ix.chunk_key(cbox)], "enc": [enc],
-                "epoch": [epoch],
-                "payload": [codec.encode(_np.asfortranarray(out).tobytes(order="F"))]})
+                return wrote_any
+
+            return build((int(pdf.tcx.iloc[0]), int(pdf.tcy.iloc[0]),
+                          int(pdf.tcz.iloc[0])), fill)
 
         result = blocks.groupBy("tcx", "tcy", "tcz").applyInPandas(
             _on_workers(assemble), schema=CHUNK_SCHEMA)

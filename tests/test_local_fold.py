@@ -10,6 +10,7 @@ import os
 import shutil
 import tracemalloc
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from test_chunk_index import _arr, _check, _chunk_rows, _info, _write_rows
@@ -349,3 +350,53 @@ def test_part_file_writes_are_atomic(spark, tmp_path, monkeypatch):
             reopened.local_io = local
             _check(reopened, mirror)
         assert sorted(reopened.fsck().collect()) == audit
+
+
+def test_ingest_chunks_rejects_wrong_size_payload(spark, tmp_path):
+    """A raw payload that is not its key's box × channels × dtype fails
+    the ingest job at write time, naming the chunk key, instead of being
+    stored to fail every later read; Spark's commit protocol aborts the
+    job, so no part file becomes visible and both readers and ``fsck()``
+    still see the pre-ingest state."""
+    import re
+    info = _info()
+    vol = Volume.create(spark, str(tmp_path / "v"), info)
+    mirror = _arr((128, 128, 128), 80)
+    vol.write(mirror, (0, 0, 0))
+    d = vol._mip_dir()
+    listing, files = sorted(os.listdir(d)), list_part_files(d)
+    audit = sorted(vol.fsck().collect())
+    rows = [(*r[:4], r[6]) for r in
+            _chunk_rows(_arr((128, 128, 128), 81), info, 0, enc="raw")[:8]]
+    bad = rows[5]
+    rows[5] = (*bad[:4], bad[4][:-3])               # truncated payload
+    with pytest.raises(Exception, match=re.escape(f"chunk {bad[3]} (gzip)")):
+        vol.ingest_chunks(spark.createDataFrame(
+            rows, "cx int, cy int, cz int, key string, payload binary"))
+    assert sorted(os.listdir(d)) == listing
+    assert list_part_files(d) == files
+    for local in (True, False):
+        vol.local_io = local
+        _check(vol, mirror)
+    assert sorted(vol.fsck().collect()) == audit
+
+
+def test_encode_chunk_refuses_wrong_blocks():
+    """``encode_chunk`` encodes exactly the key's box × channels ×
+    dtype, array or bytes, and names the key on anything else."""
+    key = "0-4_0-4_0-2"
+    block = np.arange(32, dtype=np.uint8).reshape(4, 4, 2)
+    want = volume_mod.encode_chunk(key, "raw", block, 1, "uint8")
+    assert want == np.asfortranarray(block).tobytes(order="F")
+    # the channel axis of a single-channel block drops; bytes pass
+    assert volume_mod.encode_chunk(key, "raw", block[..., None], 1,
+                                   "uint8") == want
+    assert volume_mod.encode_chunk(key, "raw", want, 1, "uint8") == want
+    for bad, nc, dtype in ((block[:, :, :1], 1, "uint8"),
+                           (block.astype(np.int8), 1, "uint8"),
+                           (block.transpose(1, 0, 2)[:, :2], 1, "uint8"),
+                           (block, 2, "uint8"),
+                           (want[:-1], 1, "uint8"),
+                           (want, 1, "uint16")):
+        with pytest.raises(ValueError, match=f"chunk {key} "):
+            volume_mod.encode_chunk(key, "raw", bad, nc, dtype)

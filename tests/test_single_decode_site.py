@@ -1,8 +1,10 @@
-"""Every chunk read goes through one decode function and every executor
+"""Every chunk read goes through one decode function and one executor
+scan, every chunk write through one encode function, and every executor
 closure through one worker bootstrap: an AST scan of the package fails
-on a hand-rolled copy of either, so a fix to the decode path (the jpeg
-aspect guard, the byte-count check, error context naming the chunk)
-cannot miss a read path again."""
+on a hand-rolled copy of any of them, so a fix to the decode or encode
+path (the jpeg aspect guard, the byte-count checks, error context naming
+the chunk) cannot miss a read or write path again, and no module outside
+``volume.py`` knows how live chunks are selected."""
 import ast
 import os
 
@@ -16,6 +18,28 @@ DECODE_SITES = {
     ("operators/multimodal.py", "decode_media"),
 }
 
+# (file, outermost enclosing function) allowed to call decode_chunk in
+# a loop over chunk rows
+CHUNK_DECODE_LOOPS = {
+    # the loop of Volume.map_cuts, also run by rechunk's merge groups
+    ("volume.py", "_cuts"),
+    # one Arrow ListArray row per cut through mapInArrow
+    ("volume.py", "voxels"),
+    # reports ChunkDecodeError in its error column instead of raising
+    ("volume.py", "fsck"),
+    # two joined volumes per row, read through Volume.live_chunks
+    ("operators/round10i.py", "roi_stats"),
+}
+# ... and outside any loop: the driver-local cutout decodes one chunk
+# per thread-pool call
+CHUNK_DECODE_CALLS = {("volume.py", "cutout")}
+
+# (file, enclosing function) allowed to touch a codec's encode
+ENCODE_SITES = {("volume.py", "encode_chunk")}
+
+# chunk-table selection that only volume.py may know about
+PRIVATE_SCANS = {"_latest", "_pruned", "_sources_subset"}
+
 
 def _is_get_codec(node):
     f = node.func if isinstance(node, ast.Call) else None
@@ -27,17 +51,30 @@ class _Scan(ast.NodeVisitor):
     def __init__(self, rel):
         self.rel = rel
         self.stack = ["<module>"]           # enclosing functions
+        self.loops = [0]                    # loop depth in each of them
         self.codec_names = [set()]
         self.bootstraps, self.decodes = [], []
+        self.chunk_loops, self.chunk_decodes = [], []
+        self.encodes, self.private = [], []
 
     def visit_FunctionDef(self, node):
         self.stack.append(node.name)
+        self.loops.append(0)
         self.codec_names.append(set())
         self.generic_visit(node)
         self.codec_names.pop()
+        self.loops.pop()
         self.stack.pop()
 
     visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_For(self, node):
+        self.loops[-1] += 1
+        self.generic_visit(node)
+        self.loops[-1] -= 1
+
+    visit_AsyncFor = visit_While = visit_ListComp = visit_SetComp = \
+        visit_DictComp = visit_GeneratorExp = visit_For
 
     def visit_Assign(self, node):
         if _is_get_codec(node.value):
@@ -45,25 +82,38 @@ class _Scan(ast.NodeVisitor):
                 t.id for t in node.targets if isinstance(t, ast.Name))
         self.generic_visit(node)
 
+    def _is_codec(self, node):
+        return _is_get_codec(node) or isinstance(node, ast.Name) and any(
+            node.id in s for s in self.codec_names)
+
+    def visit_Attribute(self, node):
+        where = (self.rel, self.stack[1:], node.lineno)
+        # called or passed on (``pool.submit(codec.encode, ...)``)
+        if node.attr == "encode" and self._is_codec(node.value):
+            self.encodes.append(where)
+        if node.attr in PRIVATE_SCANS:
+            self.private.append(where)
+        self.generic_visit(node)
+
     def visit_Call(self, node):
         f, where = node.func, (self.rel, self.stack[1:], node.lineno)
         if isinstance(f, ast.Attribute):
             if f.attr == "insert" and ast.unparse(f.value) == "sys.path":
                 self.bootstraps.append(where)
-            if f.attr == "decode" and (
-                    _is_get_codec(f.value)
-                    or isinstance(f.value, ast.Name)
-                    and any(f.value.id in s for s in self.codec_names)):
+            if f.attr == "decode" and self._is_codec(f.value):
                 self.decodes.append(where)
         name = f.attr if isinstance(f, ast.Attribute) else getattr(
             f, "id", None)
         if name == "decode_payload":
             self.decodes.append(where)
+        if name == "decode_chunk":
+            (self.chunk_loops if self.loops[-1] else
+             self.chunk_decodes).append(where)
         self.generic_visit(node)
 
 
 def _scan():
-    bootstraps, decodes = [], []
+    out = _Scan("<package>")
     for dirpath, _, names in os.walk(PKG):
         for n in names:
             if not n.endswith(".py"):
@@ -75,23 +125,43 @@ def _scan():
             with open(path) as f:
                 scan = _Scan(rel)
                 scan.visit(ast.parse(f.read(), path))
-            bootstraps += scan.bootstraps
-            decodes += scan.decodes
-    return bootstraps, decodes
+            for found in ("bootstraps", "decodes", "chunk_loops",
+                          "chunk_decodes", "encodes", "private"):
+                getattr(out, found).extend(getattr(scan, found))
+    return out
+
+
+def _sites(found):
+    return [(r, fns[0] if fns else None) for r, fns, _ in found]
 
 
 def test_one_worker_bootstrap():
-    bootstraps, _ = _scan()
+    bootstraps = _scan().bootstraps
     assert [(r, fns[0]) for r, fns, _ in bootstraps] == \
         [("volume.py", "_on_workers")], bootstraps
 
 
 def test_one_chunk_decode_site():
-    _, decodes = _scan()
-    sites = [(r, fns[0] if fns else None) for r, fns, _ in decodes]
+    decodes = _scan().decodes
+    sites = _sites(decodes)
     assert set(sites) <= DECODE_SITES, decodes
     assert [s for s in sites if s[0] == "volume.py"] \
         == [("volume.py", "decode_chunk")]
+
+
+def test_one_chunk_scan():
+    scan = _scan()
+    assert set(_sites(scan.chunk_loops)) <= CHUNK_DECODE_LOOPS, \
+        scan.chunk_loops
+    assert set(_sites(scan.chunk_decodes)) <= CHUNK_DECODE_CALLS, \
+        scan.chunk_decodes
+    assert [p for p in scan.private if p[0] != "volume.py"] == [], \
+        scan.private
+
+
+def test_one_chunk_encode_site():
+    encodes = _scan().encodes
+    assert set(_sites(encodes)) == ENCODE_SITES, encodes
 
 
 def test_scan_catches_hand_rolled_copies(tmp_path):
@@ -108,3 +178,28 @@ def f(enc, payload):
     scan.visit(ast.parse(src))
     assert [ln for _, _, ln in scan.bootstraps] == [4]
     assert [ln for _, _, ln in scan.decodes] == [6, 7, 8]
+
+
+def test_scan_catches_hand_rolled_scans_and_encodes():
+    src = '''
+def op(vol, req, pool, x):
+    chunks = vol._latest(vol._pruned(req))
+    subset = vol._sources_subset(0, [(0, 0, 0)])
+
+    def local(it):
+        for b in it:
+            for key, enc, payload in zip(b["key"], b["enc"], b["payload"]):
+                hit = decode_chunk(key, enc, payload, 1, "uint8", req)
+    one = decode_chunk("0-1_0-1_0-1", "raw", b"x", 1, "uint8")
+    codec = _codecs.get_codec("gzip")
+    b = codec.encode(x)
+    pool.submit(codec.encode, x)
+    return get_codec("raw").encode(x)
+'''
+    scan = _Scan("operators/x.py")
+    scan.visit(ast.parse(src))
+    assert [ln for _, _, ln in scan.private] == [3, 3, 4]
+    assert [ln for _, _, ln in scan.chunk_loops] == [9]
+    assert [ln for _, _, ln in scan.chunk_decodes] == [10]
+    assert _sites(scan.chunk_loops) == [("operators/x.py", "op")]
+    assert [ln for _, _, ln in scan.encodes] == [12, 13, 14]
