@@ -32,6 +32,20 @@ with 25-character keys), no payloads.  A parsed Parquet footer costs
 ``FOOTER_CACHE_ROW_GROUPS`` row groups in total; a file whose footer
 was evicted (or never fit) re-reads it when a lookup next needs one of
 its payloads.
+
+Decoded chunks: the driver-local cutout keeps the chunks it decodes in
+one process-wide LRU, shared by every handle and mip.  An entry is keyed
+by ``(part path, size, mtime_ns, row)``, the identity the index itself
+trusts, and holds the read-only ``(x, y, z, c)`` block that
+``volume.decode_chunk`` made of the whole chunk, so a hit skips both the
+payload read and the decode yet has passed every decode check.  The
+blocks held total at most ``DECODED_CACHE_BYTES``; a larger chunk is
+never kept.  ``_refresh`` drops the entries of every file it drops, so
+once a cutout has listed the directory nothing of a compaction or
+delete swap's old files is left, and the next cutouts refill from the
+new files; a file rewritten in place misses on its new size and mtime.
+Writes do not fill the cache: jpeg is lossy, so the only trustworthy
+block is what the store decodes to.
 """
 
 from __future__ import annotations
@@ -52,6 +66,9 @@ FOOTER_CACHE_ROW_GROUPS = 8192
 
 # payload bytes per batch of a fold; the copy holds a few times this
 FOLD_BATCH_BYTES = 64 << 20
+
+# bytes of decoded voxels the process keeps for the driver-local cutout
+DECODED_CACHE_BYTES = 128 << 20
 
 
 def list_part_files(directory: str) -> dict[str, tuple[int, int]]:
@@ -119,6 +136,51 @@ class _PartFile:
         return np.repeat(self.rg_bytes // np.maximum(rows, 1), rows)
 
 
+class _DecodedCache:
+    """The process-wide LRU of decoded chunks (see the module
+    docstring); ``hits`` and ``misses`` count lookups since start."""
+
+    def __init__(self) -> None:
+        self._blocks: OrderedDict = OrderedDict()   # ident -> block
+        self.nbytes = 0
+        self.hits = self.misses = 0
+        self._lock = threading.Lock()
+
+    def get(self, ident: tuple, nc: int, dtype: np.dtype):
+        """The block cached for ``ident`` when it holds ``nc`` channels
+        of ``dtype``, else None."""
+        with self._lock:
+            block = self._blocks.get(ident)
+            if block is not None and (block.dtype != dtype
+                                      or block.shape[3] != nc):
+                block = None
+            if block is None:
+                self.misses += 1
+            else:
+                self.hits += 1
+                self._blocks.move_to_end(ident)
+            return block
+
+    def put(self, ident: tuple, block: np.ndarray) -> None:
+        with self._lock:
+            if block.nbytes > DECODED_CACHE_BYTES or ident in self._blocks:
+                return
+            block.flags.writeable = False
+            self._blocks[ident] = block
+            self.nbytes += block.nbytes
+            while self.nbytes > DECODED_CACHE_BYTES:
+                self.nbytes -= self._blocks.popitem(last=False)[1].nbytes
+
+    def drop(self, paths: set) -> None:
+        """Forget every block read from one of ``paths``."""
+        with self._lock:
+            for ident in [i for i in self._blocks if i[0] in paths]:
+                self.nbytes -= self._blocks.pop(ident).nbytes
+
+
+_decoded = _DecodedCache()
+
+
 class ChunkIndex:
     """Chunk index over one mip directory (see the module docstring)."""
 
@@ -133,6 +195,47 @@ class ChunkIndex:
         """``(key, enc, payload, part_file)`` of the latest epoch of
         every stored key whose chunk id lies in ``ranges`` (half-open
         ``(lo, hi)`` per axis)."""
+        out = []
+        for path, f, rows, keys in self._winners(ranges):
+            out += ((k, f.enc_names[c], p, path) for k, c, p
+                    in zip(keys, f.enc[rows].tolist(),
+                           self._payloads(path, f, rows)))
+        return out
+
+    def latest_decoded(self, ranges, nc: int, dtype) -> list[tuple]:
+        """``(key, enc, payload, part_file, ident, chunk)`` of the same
+        chunks as ``latest``.  When the decoded cache holds a chunk as
+        ``nc`` channels of ``dtype``, ``chunk`` is that block and
+        ``payload`` is None, not read; otherwise ``chunk`` is None, and
+        the caller decodes ``payload`` and hands the whole decoded chunk
+        to ``keep(ident, chunk)``."""
+        dtype = np.dtype(dtype)
+        out = []
+        for path, f, rows, keys in self._winners(ranges):
+            idents = [(path, *f.sig, r) for r in rows.tolist()]
+            chunks = [_decoded.get(i, nc, dtype) for i in idents]
+            miss = np.array([c is None for c in chunks])
+            payloads = iter(self._payloads(path, f, rows[miss])
+                            if miss.any() else ())
+            for k, c, ident, chunk in zip(keys, f.enc[rows].tolist(),
+                                          idents, chunks):
+                payload = next(payloads) if chunk is None else None
+                out.append((k, f.enc_names[c], payload, path, ident, chunk))
+        return out
+
+    def keep(self, ident: tuple, chunk: np.ndarray) -> None:
+        """Cache the decoded ``chunk`` of a ``latest_decoded`` miss,
+        unless its file has left the index since."""
+        with self._lock:
+            f = self._files.get(ident[0])
+            if f is not None and f.sig == ident[1:3]:
+                _decoded.put(ident, chunk)
+
+    def _winners(self, ranges) -> list[tuple[str, _PartFile, np.ndarray,
+                                             list[str]]]:
+        """``(path, part file, rows, keys)`` per part file holding the
+        latest epoch of a key whose chunk id lies in ``ranges``, rows
+        sorted."""
         lo = np.array([r[0] for r in ranges], dtype=np.int64)
         hi = np.array([r[1] for r in ranges], dtype=np.int64)
         with self._lock:
@@ -150,16 +253,17 @@ class ChunkIndex:
             wanted: dict[str, list[tuple[int, str]]] = {}
             for k, (_, path, r) in best.items():
                 wanted.setdefault(path, []).append((r, k))
-            reads = [(path, self._files[path], sorted(hits))
-                     for path, hits in wanted.items()]
-        out = []
-        for path, f, hits in reads:
-            rows = np.array([r for r, _ in hits], dtype=np.int64)
-            payloads = _read_payloads(path, f, self._footer_for(path, f),
-                                      rows)
-            out += ((k, f.enc_names[c], p, path) for (_, k), c, p
-                    in zip(hits, f.enc[rows].tolist(), payloads))
+            out = []
+            for path, hits in wanted.items():
+                hits.sort()
+                out.append((path, self._files[path],
+                            np.array([r for r, _ in hits], dtype=np.int64),
+                            [k for _, k in hits]))
         return out
+
+    def _payloads(self, path: str, f: _PartFile,
+                  rows: np.ndarray) -> list[bytes]:
+        return _read_payloads(path, f, self._footer_for(path, f), rows)
 
     def has_duplicates(self) -> bool:
         """Whether any key is stored more than once, i.e. whether there
@@ -213,8 +317,7 @@ class ChunkIndex:
             rows = row[sel[at]]
             ids = zip(*f.cid[:, rows].tolist(),
                       f.key.take(rows).to_pylist(), f.enc[rows].tolist(),
-                      _read_payloads(path, f, self._footer_for(path, f),
-                                     rows))
+                      self._payloads(path, f, rows))
             for a, (cx, cy, cz, key, c, p) in zip(at.tolist(), ids):
                 out[a] = (cx, cy, cz, key, f.enc_names[c], p)
         return out
@@ -232,6 +335,9 @@ class ChunkIndex:
             files[path] = f
         for path in [p for p in self._footers if p not in files]:
             self._drop_footer(path)
+        gone = {p for p, f in self._files.items() if files.get(p) is not f}
+        if gone:
+            _decoded.drop(gone)
         self._files = files
 
     def _footer_for(self, path: str, f: _PartFile):

@@ -83,6 +83,13 @@ def union_range(a: Range, b: Range) -> Range:
     return min(a[0], b[0]), max(a[1], b[1])
 
 
+def box_slices(inner: Box, outer: Box) -> tuple[slice, ...]:
+    """Slices selecting box ``inner`` in an array that holds box
+    ``outer`` (``inner`` lies inside ``outer``)."""
+    return tuple(slice(lo - olo, hi - olo)
+                 for (lo, hi), (olo, _) in zip(inner, outer))
+
+
 def box_is_empty(box: Box) -> bool:
     return any(hi <= lo for lo, hi in box)
 

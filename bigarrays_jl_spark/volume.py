@@ -18,7 +18,8 @@ Design decisions for 100 TB scale (why this differs from a literal port):
   cutout filter to exactly its chunks, with O(files) not O(chunks)
   listing.  The driver-local cutout skips the statistics altogether: a
   per-handle chunk index (chunk_index.py) maps chunk ids to row groups
-  and reads exactly the k payloads a cutout needs.
+  and reads exactly the k payloads a cutout needs, minus the chunks a
+  process-wide cache already holds decoded.
 - **Latest-epoch-wins (LSM-style) overwrite.**  Parquet is immutable, so
   an overwrite of a region appends rows with a higher ``epoch``; reads
   keep ``max_by(payload, epoch)`` per key after partition pruning (the
@@ -199,9 +200,7 @@ def decode_chunk(key: str, enc: str, payload, nc: int, dtype,
     except Exception as e:
         where = f" in part file {part_file}" if part_file else ""
         raise ChunkDecodeError(f"chunk {key} ({enc}){where}: {e}") from e
-    sl = tuple(slice(lo - clo, hi - clo)
-               for (lo, hi), (clo, _) in zip(cut, cbox))
-    return cbox, cut, chunk[sl]
+    return cbox, cut, chunk[_ix.box_slices(cut, cbox)]
 
 
 def _cuts(batch, nc: int, dtype, request: ix.Box | None = None):
@@ -296,6 +295,20 @@ class ConcurrentWriterError(RuntimeError):
 # Hadoop-FS helpers: scheme-agnostic metadata IO (file://, s3a://, gs://) —
 # the Spark equivalent of the reference's backend dispatch (src/type.jl:39-48).
 # ---------------------------------------------------------------------------
+
+@functools.cache
+def _driver_pool():
+    """The driver's one thread pool for the codec work of the
+    driver-local path (zlib and zstd release the GIL), created on first
+    use and shared by every handle."""
+    from concurrent.futures import ThreadPoolExecutor
+    return ThreadPoolExecutor(max_workers=min(32, os.cpu_count() or 8),
+                              thread_name_prefix="bigarrays-driver")
+
+
+# a forked child has none of the parent's pool threads
+os.register_at_fork(after_in_child=_driver_pool.cache_clear)
+
 
 def _is_local(path: str) -> bool:
     return "://" not in path or path.startswith("file://")
@@ -529,7 +542,9 @@ class Volume:
         # up in a chunk index cached on this handle (chunk_index.py:
         # ids only, ~60 B per stored chunk, no payloads; kept current
         # by one directory listing per cutout) and read exactly those
-        # chunks' row groups.  This mirrors the reference's local
+        # chunks' row groups, skipping the chunks already held decoded
+        # in a process-wide cache (at most
+        # chunk_index.DECODED_CACHE_BYTES).  This mirrors the reference's local
         # BinDict backend reading one object per chunk
         # (ref src/backends/BinDicts.jl:24-48) while every distributed
         # op (ingest_chunks, voxels, map_blocks, delete, …) and every
@@ -675,11 +690,9 @@ class Volume:
     def _write_chunks_local(self, rows: list, enc: str, epoch: int,
                             mip: int | None = None) -> None:
         """Driver-local twin of ``_write_chunks`` for driver-resident
-        arrays: thread-pooled F-order copy + codec encode (numpy copies
-        and zlib/zstd release the GIL) + one part file through
-        ``_write_part_local``.  Row payloads are ndarray views."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        arrays: F-order copy on the calling thread + codec encode in the
+        driver's thread pool (zlib/zstd release the GIL) + one part file
+        through ``_write_part_local``.  Row payloads are ndarray views."""
         rows = sorted(rows, key=lambda r: (r[2], r[1], r[0]))
         nc, dtype = self.info.num_channels, self.info.dtype
 
@@ -695,12 +708,11 @@ class Volume:
             payloads = [encode_chunk(r[3], enc, r[4], nc, dtype)
                         for r in rows]
         else:
-            with ThreadPoolExecutor(
-                    max_workers=min(32, os.cpu_count() or 8)) as ex:
-                futs = [ex.submit(encode_chunk, r[3], enc, _f_bytes(r[4]),
-                                  nc, dtype)
-                        for r in rows]
-                payloads = [f.result() for f in futs]
+            pool = _driver_pool()
+            futs = [pool.submit(encode_chunk, r[3], enc, _f_bytes(r[4]),
+                                nc, dtype)
+                    for r in rows]
+            payloads = [f.result() for f in futs]
         _write_part_local(
             self._local_chunks_dir(mip),
             [(*r[:4], enc, p) for r, p in zip(rows, payloads)], epoch,
@@ -710,14 +722,17 @@ class Volume:
                            mip: int | None = None) -> list | None:
         """Driver-local twin of ``live_chunks(request)``: the
         handle's cached chunk index selects the rows in the chunk-id
-        box, keeps the max epoch per key and reads only those rows'
-        payloads.  Returns ``[(key, enc, payload, part_file), ...]`` or
-        None when the fast path does not apply."""
+        box, keeps the max epoch per key and reads only the payloads of
+        the chunks the decoded cache does not hold.  Returns
+        ``ChunkIndex.latest_decoded``'s ``[(key, enc, payload,
+        part_file, ident, chunk), ...]`` or None when the fast path
+        does not apply."""
         d = self._local_chunks_dir(mip)
         if d is None:
             return None
         ranges = self._id_ranges(request, mip)
-        return [] if ranges is None else self._chunk_index(d).latest(ranges)
+        return [] if ranges is None else self._chunk_index(d).latest_decoded(
+            ranges, self.info.num_channels, self.info.dtype)
 
     def _chunk_index(self, d: str) -> ChunkIndex:
         """The handle's cached chunk index of local mip dir ``d``."""
@@ -886,9 +901,7 @@ class Volume:
                                        sc.chunk_size):
             # slice of the input array contributing to this chunk (must be
             # the full clamped chunk, guaranteed by the alignment check)
-            sl = tuple(
-                slice(lo - rlo, hi - rlo)
-                for (lo, hi), (rlo, _) in zip(cs.cutout_box, request))
+            sl = ix.box_slices(cs.cutout_box, request)
             block = arr[sl] if nc == 1 else arr[(*sl, slice(None))]
             # payload stays an ndarray VIEW here; each sink materializes
             # F-order bytes itself (the local fast path fuses the copy
@@ -1193,6 +1206,16 @@ class Volume:
         the id bounding box, executors decode+slice via Arrow batches,
         only the *contributing sub-blocks* travel to the driver.
 
+        On a local-FS dataset with ``local_io`` the driver does it all
+        instead: the handle's chunk index picks the latest epoch of
+        each chunk in the box, and each chunk's cut is copied straight
+        into the output.  A chunk decoded by an earlier cutout comes
+        from the process-wide decoded cache (chunk_index.py, at most
+        ``DECODED_CACHE_BYTES``) with no payload read and no decode;
+        the rest are read, decoded whole through ``decode_chunk`` in
+        the driver's thread pool and cached.  Overlapping cutouts of
+        an unchanged region therefore decode each chunk once.
+
         ``cutout`` materializes the WHOLE request box as one driver-side
         numpy array, so its size is capped at ``cutout_voxel_budget``
         (default 2**31 voxels ≈ 2 GiB at uint8) — a 100 GB request would
@@ -1230,30 +1253,39 @@ class Volume:
             return _out()
 
         def _place(cut, block) -> None:
-            buf[tuple(slice(lo - rlo, hi - rlo)
-                      for (lo, hi), (rlo, _) in zip(cut, request))] = block
+            buf[ix.box_slices(cut, request)] = block
+
+        def _place_chunk(cbox, chunk) -> bool:
+            cut = ix.intersect_box(cbox, request)
+            if ix.box_is_empty(cut):
+                return False
+            _place(cut, chunk[ix.box_slices(cut, cbox)])
+            return True
 
         local_rows = self._read_latest_local(request)
         if local_rows is not None:
             # driver-local fast path (see local_io in __init__): the
-            # cutout materializes on the driver anyway, so decode
-            # thread-pooled (zlib/zstd release the GIL) and assemble
-            # each chunk's cut straight into the output buffer — no
-            # Python-worker round trip, no intermediate block copies
-            from concurrent.futures import ThreadPoolExecutor
+            # cutout materializes on the driver anyway, so each chunk's
+            # cut goes straight into the output buffer — no
+            # Python-worker round trip, no intermediate block copies.
+            # Chunks the decoded cache holds are placed right here; the
+            # misses are decoded whole in the driver pool (zlib/zstd
+            # release the GIL), cached, then placed.  Destination
+            # regions are disjoint per chunk → thread-safe.
+            index = self._chunk_index(self._local_chunks_dir())
 
             def _decode_place(row) -> bool:
-                key, enc, payload, part_file = row
-                hit = decode_chunk(key, enc, payload, nc, info.dtype,
-                                   request, part_file)
-                if hit is not None:
-                    _place(*hit[1:])
-                return hit is not None
+                key, enc, payload, part_file, ident, _ = row
+                cbox, _, chunk = decode_chunk(key, enc, payload, nc,
+                                              info.dtype, None, part_file)
+                index.keep(ident, chunk)
+                return _place_chunk(cbox, chunk)
 
-            # disjoint destination regions per chunk → thread-safe
-            with ThreadPoolExecutor(
-                    max_workers=min(32, os.cpu_count() or 8)) as ex:
-                placed = sum(ex.map(_decode_place, local_rows))
+            futs = [_driver_pool().submit(_decode_place, r)
+                    for r in local_rows if r[5] is None]
+            placed = sum(_place_chunk(ix.parse_chunk_key(r[0]), r[5])
+                         for r in local_rows if r[5] is not None)
+            placed += sum(f.result() for f in futs)
         else:
             def cut_row(key, cbox, cut, block):
                 (x0, x1), (y0, y1), (z0, z1) = cut
@@ -1657,8 +1689,7 @@ class Volume:
                 # (dividing sizes + shared voxel_offset — see the nesting
                 # proof at the validation above)
                 for cs in _ix.iter_chunk_slices(sbox, dst_off, dst_size, dcs):
-                    sub = arr[tuple(slice(lo - s0, hi - s0) for (lo, hi), (s0, _)
-                                    in zip(cs.cutout_box, sbox))]
+                    sub = arr[_ix.box_slices(cs.cutout_box, sbox)]
                     rows.append((*cs.cid, cs.key, dst_enc, epoch, encode_chunk(
                         cs.key, dst_enc, sub, nc, dtype_str)))
                 yield pd.DataFrame(rows, columns=_CHUNK_COLUMNS)
@@ -1681,12 +1712,12 @@ class Volume:
             build = _chunk_assembler(dst_sc, nc, dtype_str, epoch)
 
             def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+                from bigarrays_jl_spark import indexes as _ix
                 from bigarrays_jl_spark.volume import _cuts
 
                 def fill(buf, dbox):
                     for _, sbox, _, arr in _cuts(pdf, nc, dtype_str):
-                        buf[tuple(slice(lo - d0, hi - d0) for (lo, hi), (d0, _)
-                                  in zip(sbox, dbox))] = arr
+                        buf[_ix.box_slices(sbox, dbox)] = arr
                     return True
 
                 return build((int(pdf.dcx.iloc[0]), int(pdf.dcy.iloc[0]),

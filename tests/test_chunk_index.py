@@ -428,3 +428,263 @@ def __getattr__(name):
         assert "width" in row.error and JPEG_KEY in row.error
     finally:
         marker.unlink()
+
+
+# -- the decoded-chunk cache of the driver-local cutout ----------------------
+#
+# The cache is process-wide; each test gets an empty one of its own.
+
+CHUNK_BYTES = 32 ** 3                  # one uint8 chunk of _info()
+
+
+@pytest.fixture
+def decoded(monkeypatch):
+    cache = chunk_index._DecodedCache()
+    monkeypatch.setattr(chunk_index, "_decoded", cache)
+    return cache
+
+
+def _cached_files(cache):
+    return {ident[0] for ident in cache._blocks}
+
+
+def _count_decodes(monkeypatch):
+    """Count codec decodes from here on through a wrapped get_codec."""
+    from bigarrays_jl_spark import codecs
+    calls = [0]
+    get_codec = codecs.get_codec
+
+    class Counted:
+        def __init__(self, codec):
+            self._codec = codec
+
+        def __getattr__(self, attr):
+            return getattr(self._codec, attr)
+
+        def decode(self, data, **kw):
+            calls[0] += 1
+            return self._codec.decode(data, **kw)
+
+    monkeypatch.setattr(codecs, "get_codec",
+                        lambda enc: Counted(get_codec(enc)))
+    return calls
+
+
+def test_warm_cache_sees_second_handle_overwrite(spark, tmp_path, decoded):
+    root = str(tmp_path / "v")
+    a = Volume.create(spark, root, _info())
+    mirror = _arr((128, 128, 128), 21)
+    a.write(mirror, (0, 0, 0))
+    _check(a, mirror)
+    _check(a, mirror)
+    assert decoded.hits and decoded.nbytes == 64 * CHUNK_BYTES
+    b = Volume.open(spark, root)
+    block = _arr((64, 32, 64), 22)
+    b.write(block, (32, 64, 0))
+    mirror[32:96, 64:96, 0:64] = block
+    _check(a, mirror)
+    _check(b, mirror)
+
+
+def test_part_file_rewritten_in_place_is_not_served(spark, tmp_path,
+                                                    decoded):
+    """A fresh handle over a part file rewritten at the same path must
+    not get the blocks cached from the old file's rows."""
+    root = str(tmp_path / "v")
+    info = _info()
+    vol = Volume.create(spark, root, info)
+    path = os.path.join(vol._mip_dir(), "part-0.parquet")
+    old, new = _arr((128, 128, 128), 23), _arr((128, 128, 128), 24)
+    _write_rows(path, _chunk_rows(old, info, 0), row_group_size=1)
+    _check(vol, old)
+    mtime = os.stat(path).st_mtime_ns
+    _write_rows(path, _chunk_rows(new, info, 0), row_group_size=1)
+    os.utime(path, ns=(mtime + 10 ** 9, mtime + 10 ** 9))
+    _check(Volume.open(spark, root), new)
+    _check(vol, new)
+
+
+@pytest.mark.parametrize("op", ["compact", "delete"])
+def test_cache_forgets_swapped_out_files(spark, tmp_path, decoded, op):
+    root = str(tmp_path / "v")
+    vol = Volume.create(spark, root, _info())
+    vol.auto_compact_epochs = None
+    mirror = _arr((128, 128, 128), 25)
+    vol.write(mirror, (0, 0, 0))
+    block = _arr((32, 64, 32), 26)
+    vol.write(block, (32, 0, 64))
+    mirror[32:64, 0:64, 64:96] = block
+    _check(vol, mirror)
+    before = set(list_part_files(vol._mip_dir()))
+    assert _cached_files(decoded) == before
+    if op == "compact":
+        vol.compact()
+    else:
+        box = ((0, 40), (30, 70), (60, 128))
+        vol.delete(box)
+        doomed = tuple((lo // 32 * 32, -(-hi // 32) * 32) for lo, hi in box)
+        mirror[tuple(slice(lo, hi) for lo, hi in doomed)] = 0
+    after = set(list_part_files(vol._mip_dir()))
+    assert before.isdisjoint(after)
+    _check(vol, mirror)
+    assert _cached_files(decoded) <= after
+    assert decoded.nbytes == sum(b.nbytes for b in decoded._blocks.values())
+    spark_reader = Volume.open(spark, root)
+    spark_reader.local_io = False
+    _check(spark_reader, mirror)
+
+
+def test_cache_stays_within_its_bound(spark, tmp_path, decoded,
+                                      monkeypatch):
+    cap = 3 * CHUNK_BYTES + CHUNK_BYTES // 2
+    monkeypatch.setattr(chunk_index, "DECODED_CACHE_BYTES", cap)
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    vol.auto_compact_epochs = None
+    mirror = _arr((128, 128, 128), 27)
+    vol.write(mirror, (0, 0, 0))
+    rng = np.random.default_rng(28)
+    for i in range(40):
+        if i == 20:
+            block = _arr((64, 32, 32), 29)
+            vol.write(block, (0, 32, 32))
+            mirror[0:64, 32:64, 32:64] = block
+        lo = rng.integers(-8, 120, size=3)
+        box = tuple((int(a), int(a + s)) for a, s in
+                    zip(lo, rng.integers(1, 48, size=3)))
+        out, _ = vol.cutout(box)
+        assert np.array_equal(out, _want(mirror, box)), box
+        assert decoded.nbytes <= cap
+        assert decoded.nbytes == sum(b.nbytes
+                                     for b in decoded._blocks.values())
+        assert len(decoded._blocks) <= 3
+    assert decoded.hits and decoded.misses > 3
+
+
+def test_cutouts_do_not_alias_cached_blocks(spark, tmp_path, decoded):
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 30)
+    vol.write(mirror, (0, 0, 0))
+    box = ((10, 70), (0, 33), (40, 100))
+    for _ in range(3):
+        out, _ = vol.cutout(box)
+        assert np.array_equal(out, _want(mirror, box))
+        out[...] = 7
+    assert decoded._blocks
+    assert not any(b.flags.writeable for b in decoded._blocks.values())
+    with pytest.raises(ValueError):
+        next(iter(decoded._blocks.values()))[0, 0, 0, 0] = 1
+
+
+def test_corrupt_payload_is_not_cached(spark, tmp_path, decoded):
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 31)
+    vol.write(mirror, (0, 0, 0))
+    key = "32-64_0-32_0-32"
+    bad = os.path.join(vol._mip_dir(), "part-bad.parquet")
+    _write_rows(bad, [(1, 0, 0, key, "gzip", 5,
+                       gzip.compress(b"\x00" * 100)[:-4])])
+    for _ in range(2):
+        with pytest.raises(ChunkDecodeError) as ei:
+            vol.cutout(((0, 64), (0, 32), (0, 32)))
+        assert key in str(ei.value) and bad in str(ei.value)
+        assert bad not in _cached_files(decoded)
+    os.remove(bad)
+    _check(vol, mirror)
+
+
+def test_chunk_larger_than_cap_is_read_uncached(spark, tmp_path, decoded,
+                                                monkeypatch):
+    monkeypatch.setattr(chunk_index, "DECODED_CACHE_BYTES", CHUNK_BYTES - 1)
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 32)
+    vol.write(mirror, (0, 0, 0))
+    calls = _count_decodes(monkeypatch)
+    box = ((20, 40), (20, 40), (20, 40))
+    for n in (1, 2):
+        out, _ = vol.cutout(box)
+        assert np.array_equal(out, _want(mirror, box))
+        assert calls[0] == 8 * n
+    assert decoded.nbytes == 0 and not decoded._blocks
+
+
+def test_repeat_cutout_decodes_nothing(spark, tmp_path, decoded,
+                                       monkeypatch):
+    """The second cut of a box is served from the cache: no codec
+    decode and no thread pool."""
+    from bigarrays_jl_spark import volume
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 33)
+    vol.write(mirror, (0, 0, 0))
+    calls = _count_decodes(monkeypatch)
+    box = ((5, 61), (17, 90), (3, 127))
+    out, _ = vol.cutout(box)
+    assert np.array_equal(out, _want(mirror, box))
+    assert calls[0] == 2 * 3 * 4
+    monkeypatch.setattr(volume, "_driver_pool", None)    # not callable
+    out, _ = vol.cutout(box)
+    assert np.array_equal(out, _want(mirror, box))
+    assert calls[0] == 2 * 3 * 4
+
+
+def test_cache_misses_on_another_dtype(spark, tmp_path, decoded):
+    """A handle reading the same files as another dtype decodes them
+    itself: uint16 over uint8 payloads fails the byte-count check
+    instead of reusing the uint8 blocks."""
+    root = str(tmp_path / "v")
+    vol = Volume.create(spark, root, _info())
+    mirror = _arr((128, 128, 128), 34)
+    vol.write(mirror, (0, 0, 0))
+    _check(vol, mirror)
+    info16 = Info.from_dict({**_info().to_dict(), "data_type": "uint16"})
+    with pytest.raises(ChunkDecodeError, match="expected"):
+        Volume(spark, root, info16).cutout(((0, 32), (0, 32), (0, 32)))
+
+
+def test_concurrent_cutouts_while_files_arrive(spark, tmp_path, decoded,
+                                               monkeypatch):
+    """Eight threads cut overlapping boxes of one handle while another
+    handle writes whole-volume epochs: every cutout shows one whole
+    epoch no older than the last one written before it started, and
+    the cache's byte count stays exact under a small bound."""
+    monkeypatch.setattr(chunk_index, "DECODED_CACHE_BYTES", 6 * CHUNK_BYTES)
+    root = str(tmp_path / "v")
+    info = _info(size=(64, 64, 64))
+    a = Volume.create(spark, root, info)
+    a.write(np.zeros((64, 64, 64), np.uint8), (0, 0, 0))
+    b = Volume.open(spark, root)
+    b.auto_compact_epochs = None
+    committed, errors, done = [0], [], threading.Event()
+    boxes = [((0, 64), (0, 64), (0, 64)), ((10, 50), (20, 40), (0, 64)),
+             ((30, 34), (30, 34), (30, 34)), ((0, 33), (31, 64), (5, 40))]
+
+    def reader(i):
+        try:
+            while not done.is_set():
+                box = boxes[i % len(boxes)]
+                floor = committed[0]
+                out, _ = a.cutout(box)
+                values = np.unique(out)
+                assert len(values) == 1 and values[0] >= floor, values
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        for epoch in range(1, 13):
+            b.write(np.full((64, 64, 64), epoch, np.uint8), (0, 0, 0))
+            committed[0] = epoch
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert decoded.nbytes == sum(
+        b.nbytes for b in decoded._blocks.values()) <= 6 * CHUNK_BYTES
+    out, _ = a.cutout(boxes[0])
+    assert (out == 12).all()

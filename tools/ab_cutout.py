@@ -16,6 +16,12 @@ numpy mirror.  For each pair it reports the mean driver CPU per cutout
 - place:  the rest (key parsing, reshape, copies into the output,
           thread-pool overhead).
 
+Per pair it also counts the decoded-chunk cache's hits, the misses (the
+chunks the cutouts decoded; every chunk is a miss in a tree without the
+cache) and the bytes of decoded chunks held at the pair's end, and per
+tree the driver's peak RSS over its runs, so the cache's memory shows
+as its own figure.
+
 It also reports the mean process-tree CPU (``perfbench/common.TreeCPU``:
 the driver, the Spark JVM and its Python workers) per plain write and
 per compacting write, the write that reaches the auto-compaction
@@ -43,6 +49,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import resource
 import shutil
 import subprocess
 import sys
@@ -53,6 +60,7 @@ import types
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPLIT = ("cutout_ms", "scan_ms", "decode_ms", "place_ms")
+CACHE = ("hits", "misses", "held_mib")
 WRITES = ("write_ms", "compact_write_ms")
 
 
@@ -65,12 +73,14 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
     import array_rw as aw
     from common import TreeCPU
 
-    from bigarrays_jl_spark import codecs
+    from bigarrays_jl_spark import chunk_index, codecs
     from bigarrays_jl_spark.session import get_spark
     from bigarrays_jl_spark.volume import Volume
 
     lock = threading.Lock()
-    acc = {"scan": 0.0, "decode": 0.0}
+    acc = {"scan": 0.0, "decode": 0.0, "decodes": 0}
+    # the decoded-chunk cache, absent from trees older than it
+    cache = getattr(chunk_index, "_decoded", None)
 
     class TimedCodec:
         def __init__(self, codec):
@@ -85,6 +95,7 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
             dt = time.thread_time() - t0
             with lock:
                 acc["decode"] += dt
+                acc["decodes"] += 1
             return out
 
     get_codec = codecs.get_codec
@@ -128,6 +139,8 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
         mirror, out, failed = original.copy(), [], 0
         for _ in range(pairs):
             tot = scan = dec = 0.0
+            decodes = 0
+            hits0 = cache.hits if cache else 0
             writes = {"write_ms": [], "compact_write_ms": []}
             for op in pair:
                 if op[0] == "write":
@@ -143,19 +156,26 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
                                  for o, s in zip(off, arr.shape))] = arr
                     continue
                 acc["scan"] = acc["decode"] = 0.0
+                acc["decodes"] = 0
                 t0 = time.process_time()
                 arr, _ = vol.cutout(op[1])
                 tot += time.process_time() - t0
                 scan += acc["scan"]
                 dec += acc["decode"]
+                decodes += acc["decodes"]
                 failed += not np.array_equal(
                     arr, aw.expected_cutout(mirror, op[1]))
             n = len(cutouts)
             out.append({"cutout_ms": tot / n * 1e3, "scan_ms": scan / n * 1e3,
                         "decode_ms": dec / n * 1e3,
                         "place_ms": (tot - scan - dec) / n * 1e3,
+                        "hits": (cache.hits if cache else 0) - hits0,
+                        "misses": decodes,
+                        "held_mib": (cache.nbytes if cache else 0) / 2**20,
                         **{k: sum(v) / len(v) for k, v in writes.items()}})
-        return {"pairs": out, "failed_cutouts": failed}
+        peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+        return {"pairs": out, "failed_cutouts": failed,
+                "peak_rss_mib": peak}
     finally:
         spark.stop()
 
@@ -207,12 +227,14 @@ def main(argv=None) -> int:
     names = {"A": args.trees[0], "B": args.trees[1]}
     best: dict[str, dict] = {}
     wbest: dict[str, dict] = {"A": {}, "B": {}}
+    peak_rss = {"A": 0.0, "B": 0.0}
     for rep in range(args.reps):
         for name in ("AB" if rep % 2 == 0 else "BA"):
             res = run_child(names[name], args)
             if res["failed_cutouts"]:
                 raise SystemExit(f"{names[name]}: {res['failed_cutouts']} "
                                  "cutouts differ from the mirror")
+            peak_rss[name] = max(peak_rss[name], res["peak_rss_mib"])
             for p in res["pairs"]:
                 if name not in best or p["cutout_ms"] < best[name]["cutout_ms"]:
                     best[name] = p
@@ -231,6 +253,14 @@ def main(argv=None) -> int:
         print(f"{name}     {fmt(best[name])}   {names[name]}")
     ratio = best["B"]["cutout_ms"] / best["A"]["cutout_ms"]
     print(f"B/A cutout CPU: {ratio:.3f}")
+    print("decoded-chunk cache in that pair, driver peak RSS over all runs")
+    print("tree  " + "  ".join(f"{k:>8}" for k in CACHE)
+          + "  peak_rss_mib")
+    for name in "AB":
+        print(f"{name}     " + "  ".join(
+            f"{best[name][k]:8.0f}" if k != "held_mib"
+            else f"{best[name][k]:8.1f}" for k in CACHE)
+            + f"  {peak_rss[name]:12.1f}")
     print("process-tree CPU per write (ms), best pair")
     print("tree  " + "  ".join(f"{k:>16}" for k in WRITES))
     for name in "AB":
