@@ -4,12 +4,16 @@ A cutout needs only the chunks its box touches (the reference fetches
 exactly those objects, src/type.jl:212-223).  Instead of scanning the
 mip's part files on every call, a ``ChunkIndex`` keeps, per part file,
 the id columns of every row (``cx, cy, cz, key, enc, epoch``) and each
-row's row group.  A lookup selects the rows inside the chunk-id box in
-memory, keeps the latest epoch per key, and reads only the ``payload``
-column of the row groups that hold the winners.  Both writers put one
-chunk in each row group, so that read is exactly the k payloads; files
-in the older layout (many chunks per row group) still read correctly,
-at whole-row-group granularity.
+row's row group.  Whenever the set of part files changes it resolves
+the latest epoch of every key once, into one winner table sorted by
+(cz, cy, cx); a key stored twice at the same epoch resolves to the
+first file in listing order, and to the first row within it.  A lookup
+is then one numpy mask of that table over the chunk-id box, followed
+by a read of only the ``payload`` column of the row groups that hold
+the selected winners.  Both writers put one chunk in each row group,
+so that read is exactly the k payloads; files in the older layout
+(many chunks per row group) still read correctly, at whole-row-group
+granularity.
 
 Staying current: part files are immutable and uuid-named, so every
 lookup lists the directory and keys its entries by
@@ -19,33 +23,50 @@ from other handles and processes.  Discovery follows
 ``pyarrow.dataset``'s rules: recurse into subdirectories and skip names
 starting with ``.`` or ``_`` (Spark's ``_SUCCESS`` and ``.crc`` files).
 
-Compaction: ``fold`` streams the latest-epoch winner of every key,
-payloads still encoded, in (cz, cy, cx) order and in batches of at
-most ``FOLD_BATCH_BYTES`` of payload, so the driver-local compaction
-is a byte copy whose memory is bounded by that constant, not by the
-mip.  ``has_duplicates`` is the auto-compaction probe: it answers from
-the cached keys without reading any payload.
+Compaction: ``fold`` streams the winner table, payloads still encoded,
+in (cz, cy, cx) order and in batches of at most ``FOLD_BATCH_BYTES``
+of payload, so the driver-local compaction is a byte copy whose memory
+is bounded by that constant, not by the mip.  Each row it yields
+carries its source's identity, so the decoded blocks of the folded
+chunks can follow them into the new files (see below).
+``has_duplicates`` is the auto-compaction probe: it compares the
+winner count with the stored row count and reads no payload.
 
 Memory: the ids cost about 70 B per chunk of the files present (65 B
-with 25-character keys), no payloads.  A parsed Parquet footer costs
-~5 KB per row group in memory, so footers live in an LRU bounded at
+with 25-character keys), no payloads, and the winner table about 45 B
+more per live chunk; a rebuild briefly holds a few arrays of one
+entry per stored row.  A parsed Parquet footer costs ~5 KB per row
+group in memory, so footers live in an LRU bounded at
 ``FOOTER_CACHE_ROW_GROUPS`` row groups in total; a file whose footer
 was evicted (or never fit) re-reads it when a lookup next needs one of
 its payloads.
 
-Decoded chunks: the driver-local cutout keeps the chunks it decodes in
-one process-wide LRU, shared by every handle and mip.  An entry is keyed
+Decoded chunks: the driver-local path keeps decoded chunks in one
+process-wide LRU, shared by every handle and mip.  An entry is keyed
 by ``(part path, size, mtime_ns, row)``, the identity the index itself
-trusts, and holds the read-only ``(x, y, z, c)`` block that
-``volume.decode_chunk`` made of the whole chunk, so a hit skips both the
-payload read and the decode yet has passed every decode check.  The
-blocks held total at most ``DECODED_CACHE_BYTES``; a larger chunk is
-never kept.  ``_refresh`` drops the entries of every file it drops, so
-once a cutout has listed the directory nothing of a compaction or
-delete swap's old files is left, and the next cutouts refill from the
-new files; a file rewritten in place misses on its new size and mtime.
-Writes do not fill the cache: jpeg is lossy, so the only trustworthy
-block is what the store decodes to.
+trusts, and holds the read-only ``(x, y, z, c)`` block of the whole
+chunk.  The blocks held total at most ``DECODED_CACHE_BYTES``; a larger
+chunk is never kept.  Three events fill or re-key it:
+
+- a cutout miss: the block ``volume.decode_chunk`` made of the stored
+  payload, so it has passed every decode check;
+- a driver-local write (``cache_written``): the F-order bytes the
+  writer encoded, keyed by the rows of the part file it has just put in
+  place.  Every codec that can encode (raw, gzip, zstd, blosclz) is
+  lossless, and jpeg, the one lossy codec, refuses to encode, so these
+  bytes are exactly what the stored payload decodes to;
+- a driver-local compaction (``carry_over``): the fold copies payloads
+  byte for byte, so once its swap has succeeded each winner's block
+  moves from its old file's row to its row in the new file.  A fold or
+  swap that fails moves nothing, and the old files stay live.
+
+Whenever a lookup finds the directory's file set changed, it drops the
+entries of every file under the directory that the listing no longer
+holds in the version cached, so nothing of a swapped-out, deleted or
+rewritten file is left, whoever removed it (a writer's blocks outlive
+its files when the dataset is removed and re-created); a file
+rewritten in place misses on its new size and mtime in any case.  On an unchanged or locally rewritten volume, steady-state
+cutouts therefore read and decode no payload at all.
 """
 
 from __future__ import annotations
@@ -96,8 +117,8 @@ class _PartFile:
     ``enc_names``; ``rg_start`` holds each row group's first row and
     ``rg_bytes`` the size of its ``payload`` column chunk."""
 
-    __slots__ = ("sig", "cid", "lo", "hi", "epoch", "key", "enc",
-                 "enc_names", "rg_start", "rg_bytes")
+    __slots__ = ("sig", "cid", "epoch", "key", "enc", "enc_names",
+                 "rg_start", "rg_bytes")
 
     def __init__(self, sig: tuple[int, int], pf: pq.ParquetFile) -> None:
         ids = pf.read(columns=ID_COLUMNS)
@@ -105,10 +126,6 @@ class _PartFile:
         self.sig = sig
         self.cid = np.stack([ids.column(c).to_numpy().astype(np.int32)
                              for c in ("cx", "cy", "cz")])
-        if ids.num_rows:
-            self.lo, self.hi = self.cid.min(axis=1), self.cid.max(axis=1)
-        else:
-            self.lo = self.hi = None
         self.epoch = ids.column("epoch").to_numpy().astype(np.int64)
         self.key = ids.column("key").combine_chunks()
         enc = pc.dictionary_encode(ids.column("enc").combine_chunks())
@@ -121,13 +138,6 @@ class _PartFile:
         self.rg_bytes = np.array(
             [g.column(payload).total_uncompressed_size for g in rgs],
             dtype=np.int64)
-
-    def rows_in(self, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
-        """Indices of the rows whose chunk id lies in ``[lo, hi)``."""
-        if self.lo is None or (self.hi < lo).any() or (self.lo >= hi).any():
-            return np.empty(0, dtype=np.int64)
-        inside = ((self.cid >= lo[:, None]) & (self.cid < hi[:, None]))
-        return np.flatnonzero(inside.all(axis=0))
 
     def row_bytes(self) -> np.ndarray:
         """Each row's share of its row group's payload bytes (its own
@@ -171,14 +181,96 @@ class _DecodedCache:
             while self.nbytes > DECODED_CACHE_BYTES:
                 self.nbytes -= self._blocks.popitem(last=False)[1].nbytes
 
-    def drop(self, paths: set) -> None:
-        """Forget every block read from one of ``paths``."""
+    def drop_stale(self, directory: str, listing: dict) -> None:
+        """Forget every block of a part file under ``directory`` that
+        ``listing`` (``{path: (size, mtime_ns)}`` of the files there)
+        does not hold, or holds in another version."""
+        prefix = os.path.join(directory, "")
         with self._lock:
-            for ident in [i for i in self._blocks if i[0] in paths]:
+            for ident in [i for i in self._blocks if i[0].startswith(prefix)
+                          and listing.get(i[0]) != i[1:3]]:
                 self.nbytes -= self._blocks.pop(ident).nbytes
+
+    def move(self, moves) -> None:
+        """Re-key the block of each ``(old ident, new ident)`` pair that
+        is cached; it becomes the most recently used."""
+        with self._lock:
+            for old, new in moves:
+                block = self._blocks.pop(old, None)
+                if block is None:
+                    continue
+                if new in self._blocks:   # a cutout decoded it since
+                    self.nbytes -= block.nbytes
+                else:
+                    self._blocks[new] = block
 
 
 _decoded = _DecodedCache()
+
+
+def _idents(path: str, n: int) -> list[tuple]:
+    """The decoded-cache idents of rows ``0..n-1`` of the part file at
+    ``path``, from one ``os.stat``."""
+    st = os.stat(path)
+    return [(path, st.st_size, st.st_mtime_ns, row) for row in range(n)]
+
+
+def cache_written(path: str, blocks: list) -> None:
+    """Write-through: cache ``blocks[i]``, the voxels written to row i
+    of the part file just put in place at ``path``, as that row's
+    decoded chunk (see the module docstring for why this is sound)."""
+    for ident, block in zip(_idents(path, len(blocks)), blocks):
+        _decoded.put(ident, block)
+
+
+def carry_over(path: str, sources: list) -> None:
+    """After a compaction swap: move each cached block of ``sources``
+    (the idents ``ChunkIndex.fold`` reported for the rows of the part
+    file now at ``path``, in its row order) to that row."""
+    _decoded.move(zip(sources, _idents(path, len(sources))))
+
+
+class _Winners:
+    """The latest-epoch row of every key stored in ``files`` (a list
+    of ``(path, _PartFile)`` in listing order), sorted by (cz, cy, cx):
+    winner i is row ``row[i]`` of ``files[fid[i]]``, with chunk id
+    ``cid[:, i]`` and key ``key[i]``; ``stored`` counts every row."""
+
+    __slots__ = ("files", "fid", "row", "cid", "key", "stored")
+
+    def __init__(self, files: list[tuple[str, _PartFile]]) -> None:
+        parts = [f for _, f in files]
+        n = [len(f.epoch) for f in parts]
+        self.files, self.stored = files, sum(n)
+        if not self.stored:
+            self.fid = self.row = np.empty(0, dtype=np.int32)
+            self.cid = np.empty((3, 0), dtype=np.int32)
+            self.key = pa.array([], pa.string())
+            return
+        fid = np.repeat(np.arange(len(parts), dtype=np.int32), n)
+        row = np.concatenate([np.arange(k, dtype=np.int32) for k in n])
+        keys = pa.concat_arrays([f.key for f in parts])
+        code = pc.dictionary_encode(keys).indices.to_numpy()
+        # stable: on a (key, epoch) tie the first file and row win
+        order = np.lexsort((-np.concatenate([f.epoch for f in parts]), code))
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = code[order[1:]] != code[order[:-1]]
+        win = order[first]
+        cid = np.concatenate([f.cid for f in parts], axis=1)
+        win = win[np.lexsort(cid[:, win])]
+        self.fid, self.row, self.cid = fid[win], row[win], cid[:, win]
+        self.key = keys.take(win)
+
+    def by_file(self, sel: np.ndarray):
+        """``(path, part file, rows, at)`` per file holding one of the
+        winners ``sel``: its ``rows`` sorted, ``at`` the positions in
+        ``sel`` of those winners."""
+        fid = self.fid[sel]
+        order = np.lexsort((self.row[sel], fid))
+        cuts = np.flatnonzero(np.diff(fid[order])) + 1
+        for at in np.split(order, cuts) if len(order) else ():
+            path, f = self.files[fid[at[0]]]
+            yield path, f, self.row[sel[at]], at
 
 
 class ChunkIndex:
@@ -187,6 +279,7 @@ class ChunkIndex:
     def __init__(self, directory: str):
         self.directory = directory
         self._files: dict[str, _PartFile] = {}
+        self._table = _Winners([])
         self._footers: OrderedDict = OrderedDict()   # path -> footer
         self._footer_rgs = 0
         self._lock = threading.Lock()
@@ -231,35 +324,24 @@ class ChunkIndex:
             if f is not None and f.sig == ident[1:3]:
                 _decoded.put(ident, chunk)
 
+    def _current(self) -> _Winners:
+        """The winner table of the part files present now."""
+        with self._lock:
+            self._refresh()
+            return self._table
+
     def _winners(self, ranges) -> list[tuple[str, _PartFile, np.ndarray,
                                              list[str]]]:
         """``(path, part file, rows, keys)`` per part file holding the
         latest epoch of a key whose chunk id lies in ``ranges``, rows
         sorted."""
-        lo = np.array([r[0] for r in ranges], dtype=np.int64)
-        hi = np.array([r[1] for r in ranges], dtype=np.int64)
-        with self._lock:
-            self._refresh()
-            best: dict[str, tuple[int, str, int]] = {}
-            for path, f in self._files.items():
-                rows = f.rows_in(lo, hi)
-                if not len(rows):
-                    continue
-                keys = f.key.take(rows).to_pylist()
-                for k, e, r in zip(keys, f.epoch[rows].tolist(),
-                                   rows.tolist()):
-                    if k not in best or e > best[k][0]:
-                        best[k] = (e, path, r)
-            wanted: dict[str, list[tuple[int, str]]] = {}
-            for k, (_, path, r) in best.items():
-                wanted.setdefault(path, []).append((r, k))
-            out = []
-            for path, hits in wanted.items():
-                hits.sort()
-                out.append((path, self._files[path],
-                            np.array([r for r, _ in hits], dtype=np.int64),
-                            [k for _, k in hits]))
-        return out
+        t = self._current()
+        lo = np.array([r[0] for r in ranges], dtype=np.int64)[:, None]
+        hi = np.array([r[1] for r in ranges], dtype=np.int64)[:, None]
+        sel = np.flatnonzero(((t.cid >= lo) & (t.cid < hi)).all(axis=0))
+        keys = t.key.take(sel).to_pylist()
+        return [(path, f, rows, [keys[a] for a in at.tolist()])
+                for path, f, rows, at in t.by_file(sel)]
 
     def _payloads(self, path: str, f: _PartFile,
                   rows: np.ndarray) -> list[bytes]:
@@ -268,58 +350,42 @@ class ChunkIndex:
     def has_duplicates(self) -> bool:
         """Whether any key is stored more than once, i.e. whether there
         is overwrite history to fold.  Reads no payloads."""
-        with self._lock:
-            self._refresh()
-            keys = [f.key for f in self._files.values()]
-        n = sum(len(k) for k in keys)
-        return n > 0 and len(pc.unique(pa.chunked_array(keys))) < n
+        t = self._current()
+        return len(t.fid) < t.stored
 
     def fold(self):
         """Yield the latest-epoch winner of every stored key as lists of
-        ``(cx, cy, cz, key, enc, payload)``, payloads still encoded,
-        sorted by (cz, cy, cx) within and across lists.  A list carries
-        at most ``FOLD_BATCH_BYTES`` of payload (a larger chunk comes
-        alone), read when the list is due."""
-        with self._lock:
-            self._refresh()
-            files = list(self._files.items())
-        parts = [f for _, f in files]
-        n = [len(f.epoch) for f in parts]
-        if not sum(n):
+        ``(cx, cy, cz, key, enc, payload, ident)``, payloads still
+        encoded, sorted by (cz, cy, cx) within and across lists;
+        ``ident`` is the decoded-cache identity of the row the winner
+        came from (see ``carry_over``).  A list carries at most
+        ``FOLD_BATCH_BYTES`` of payload (a larger chunk comes alone),
+        read when the list is due."""
+        t = self._current()
+        if not len(t.fid):
             return
-        fid = np.repeat(np.arange(len(parts)), n)
-        row = np.concatenate([np.arange(k) for k in n])
-        code = pc.dictionary_encode(
-            pa.concat_arrays([f.key for f in parts])).indices.to_numpy()
-        order = np.lexsort((-np.concatenate([f.epoch for f in parts]), code))
-        first = np.ones(len(order), dtype=bool)
-        first[1:] = code[order[1:]] != code[order[:-1]]
-        win = order[first]
-        win = win[np.lexsort(np.concatenate([f.cid for f in parts],
-                                            axis=1)[:, win])]
-        nbytes = np.concatenate([f.row_bytes() for f in parts])[win]
+        rb = [f.row_bytes() for _, f in t.files]
+        base = np.cumsum([len(b) for b in rb]) - [len(b) for b in rb]
+        nbytes = np.concatenate(rb)[base[t.fid] + t.row]
         start = size = 0
         for j, b in enumerate(nbytes.tolist()):
             if size and size + b > FOLD_BATCH_BYTES:
-                yield self._read_rows(files, fid, row, win[start:j])
+                yield self._read_rows(t, np.arange(start, j))
                 start, size = j, 0
             size += b
-        yield self._read_rows(files, fid, row, win[start:])
+        yield self._read_rows(t, np.arange(start, len(nbytes)))
 
-    def _read_rows(self, files, fid, row, sel) -> list[tuple]:
-        """``(cx, cy, cz, key, enc, payload)`` of the global rows ``sel``
-        (``files[fid[i]]``, row ``row[i]``), in the order of ``sel``."""
+    def _read_rows(self, t: _Winners, sel: np.ndarray) -> list[tuple]:
+        """``(cx, cy, cz, key, enc, payload, ident)`` of the winners
+        ``sel`` of ``t``, in the order of ``sel``."""
         out = [None] * len(sel)
-        for k in np.unique(fid[sel]).tolist():
-            path, f = files[k]
-            at = np.flatnonzero(fid[sel] == k)
-            at = at[np.argsort(row[sel[at]], kind="stable")]
-            rows = row[sel[at]]
+        for path, f, rows, at in t.by_file(sel):
             ids = zip(*f.cid[:, rows].tolist(),
                       f.key.take(rows).to_pylist(), f.enc[rows].tolist(),
-                      self._payloads(path, f, rows))
-            for a, (cx, cy, cz, key, c, p) in zip(at.tolist(), ids):
-                out[a] = (cx, cy, cz, key, f.enc_names[c], p)
+                      self._payloads(path, f, rows), rows.tolist())
+            for a, (cx, cy, cz, key, c, p, r) in zip(at.tolist(), ids):
+                out[a] = (cx, cy, cz, key, f.enc_names[c], p,
+                          (path, *f.sig, r))
         return out
 
     def _refresh(self) -> None:
@@ -335,9 +401,10 @@ class ChunkIndex:
             files[path] = f
         for path in [p for p in self._footers if p not in files]:
             self._drop_footer(path)
-        gone = {p for p, f in self._files.items() if files.get(p) is not f}
-        if gone:
-            _decoded.drop(gone)
+        if len(files) != len(self._files) or any(
+                self._files.get(p) is not f for p, f in files.items()):
+            _decoded.drop_stale(self.directory, listing)
+            self._table = _Winners(list(files.items()))
         self._files = files
 
     def _footer_for(self, path: str, f: _PartFile):

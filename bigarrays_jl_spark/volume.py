@@ -69,7 +69,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigarrays_jl_spark import indexes as ix
-from bigarrays_jl_spark.chunk_index import ChunkIndex
+from bigarrays_jl_spark.chunk_index import (ChunkIndex, cache_written,
+                                            carry_over)
 from bigarrays_jl_spark.infos import Info, InfoScale
 
 # Executor closures re-import this package on python workers; a harness
@@ -310,6 +311,21 @@ def _driver_pool():
 os.register_at_fork(after_in_child=_driver_pool.cache_clear)
 
 
+def _await_idle(spark: SparkSession) -> None:
+    """Wait until Spark reports no active stage and no running task,
+    for at most 10 s (another thread's job may keep it busy).  A failed
+    job's stage stops being active at once, but its other tasks end
+    only once they have noticed they were killed."""
+    tracker = spark.sparkContext.statusTracker()
+    executors = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + 10
+    while (tracker.getActiveStageIds()
+           or any(e.numRunningTasks() for e in executors.getExecutorInfos())):
+        if time.monotonic() > deadline:
+            return
+        time.sleep(0.02)
+
+
 def _is_local(path: str) -> bool:
     return "://" not in path or path.startswith("file://")
 
@@ -422,13 +438,13 @@ def _fs_create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
     return True
 
 def _write_part_local(directory: str, rows: list, epoch: int,
-                      raw: bool) -> None:
-    """Write ``rows``, ``(cx, cy, cz, key, enc, payload)`` with encoded
-    payloads sorted by (cz,cy,cx), as one pyarrow part file in
+                      raw: bool) -> str:
+    """Write ``rows``, ``(cx, cy, cz, key, enc, payload, ...)`` with
+    encoded payloads sorted by (cz,cy,cx), as one pyarrow part file in
     ``directory`` at ``epoch``, one chunk per row group like the
-    Spark-written files beside it.  ``raw`` (the mip's encoding is
-    ``raw``) turns on page compression, the only compression layer of
-    raw payloads."""
+    Spark-written files beside it, row i holding ``rows[i]``; return
+    the file's name.  ``raw`` (the mip's encoding is ``raw``) turns on
+    page compression, the only compression layer of raw payloads."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -471,13 +487,14 @@ def _write_part_local(directory: str, rows: list, epoch: int,
     # are a writer-side granularity).  Written under a hidden name and
     # renamed into place: a torn part file would break every later scan
     # of the mip, ``fsck()`` included
-    with _replacing(os.path.join(
-            directory, f"part-local-{uuid.uuid4().hex}.parquet")) as tmp:
+    name = f"part-local-{uuid.uuid4().hex}.parquet"
+    with _replacing(os.path.join(directory, name)) as tmp:
         pq.write_table(
             tbl, tmp, compression="zstd" if raw else "none",
             row_group_size=1, use_dictionary=False,
             data_page_size=8 << 20,
             write_statistics=["cx", "cy", "cz", "epoch"])
+    return name
 
 
 def _locked_writer(get_lock_target=None):
@@ -692,7 +709,14 @@ class Volume:
         """Driver-local twin of ``_write_chunks`` for driver-resident
         arrays: F-order copy on the calling thread + codec encode in the
         driver's thread pool (zlib/zstd release the GIL) + one part file
-        through ``_write_part_local``.  Row payloads are ndarray views."""
+        through ``_write_part_local``.  Row payloads are ndarray views.
+
+        Write-through: once the part file is in place, each chunk's
+        F-order bytes go into the process-wide decoded cache as the
+        decoded block of its row (``chunk_index.cache_written``), so a
+        cutout right after a write reads and decodes nothing.  Every
+        codec that encodes is lossless, so those bytes are what the
+        stored payload decodes to."""
         rows = sorted(rows, key=lambda r: (r[2], r[1], r[0]))
         nc, dtype = self.info.num_channels, self.info.dtype
 
@@ -705,18 +729,24 @@ class Volume:
         # encodes (zlib releases the GIL) overlap in the pool.
         if enc == "raw":
             # identity encode: a pool would only add thread overhead
-            payloads = [encode_chunk(r[3], enc, r[4], nc, dtype)
-                        for r in rows]
+            payloads = data = [encode_chunk(r[3], enc, r[4], nc, dtype)
+                               for r in rows]
         else:
             pool = _driver_pool()
-            futs = [pool.submit(encode_chunk, r[3], enc, _f_bytes(r[4]),
-                                nc, dtype)
-                    for r in rows]
+            data, futs = [], []
+            for r in rows:
+                data.append(_f_bytes(r[4]))
+                futs.append(pool.submit(encode_chunk, r[3], enc, data[-1],
+                                        nc, dtype))
             payloads = [f.result() for f in futs]
-        _write_part_local(
-            self._local_chunks_dir(mip),
-            [(*r[:4], enc, p) for r, p in zip(rows, payloads)], epoch,
+        d = self._local_chunks_dir(mip)
+        name = _write_part_local(
+            d, [(*r[:4], enc, p) for r, p in zip(rows, payloads)], epoch,
             raw=enc == "raw")
+        cache_written(os.path.join(d, name), [
+            np.frombuffer(b, dtype=dtype).reshape((*r[4].shape[:3], nc),
+                                                  order="F")
+            for r, b in zip(rows, data)])
 
     def _read_latest_local(self, request: ix.Box,
                            mip: int | None = None) -> list | None:
@@ -753,13 +783,30 @@ class Volume:
         would recompress incompressible data (measured 6× slower
         writes).  For ``raw`` the page codec IS the compression layer
         (the documented raw-passthrough divergence, infos.py).
+
+        When the job fails, tasks of it that are still running after
+        Spark's abort has removed ``<path>/_temporary`` can create it
+        again.  On a local dataset the failed write therefore waits
+        for those tasks to end (``_await_idle``) and removes
+        ``<path>/_temporary`` before the error propagates, so a
+        refused write leaves the directory as it found it.
         """
         enc = self.info.scale(self.mip if mip is None else mip).encoding
-        (df.sortWithinPartitions("cz", "cy", "cx")
-           .write.mode(mode)
-           .option("compression", "zstd" if enc == "raw" else "uncompressed")
-           .option("parquet.block.row.count.limit", "1")
-           .parquet(path or self._mip_dir(mip)))
+        path = path or self._mip_dir(mip)
+        try:
+            (df.sortWithinPartitions("cz", "cy", "cx")
+               .write.mode(mode)
+               .option("compression",
+                       "zstd" if enc == "raw" else "uncompressed")
+               .option("parquet.block.row.count.limit", "1")
+               .parquet(path))
+        except Exception:
+            if _is_local(path):
+                _await_idle(self.spark)
+                shutil.rmtree(os.path.join(_strip_file_scheme(path),
+                                           "_temporary"),
+                              ignore_errors=True)
+            raise
 
     # -- chunk DataFrame ------------------------------------------------------
 
@@ -1209,12 +1256,16 @@ class Volume:
         On a local-FS dataset with ``local_io`` the driver does it all
         instead: the handle's chunk index picks the latest epoch of
         each chunk in the box, and each chunk's cut is copied straight
-        into the output.  A chunk decoded by an earlier cutout comes
-        from the process-wide decoded cache (chunk_index.py, at most
-        ``DECODED_CACHE_BYTES``) with no payload read and no decode;
-        the rest are read, decoded whole through ``decode_chunk`` in
-        the driver's thread pool and cached.  Overlapping cutouts of
-        an unchanged region therefore decode each chunk once.
+        into the output.  A chunk held by the process-wide decoded
+        cache (chunk_index.py, at most ``DECODED_CACHE_BYTES``) is
+        placed with no payload read and no decode; the rest are read,
+        decoded whole through ``decode_chunk`` in the driver's thread
+        pool and cached.  An earlier cutout, a driver-local write of
+        the chunk (write-through) and a driver-local compaction (which
+        moves the blocks it folds into its new files) all leave the
+        chunk cached, so on a volume written and compacted through
+        this path steady-state cutouts decode nothing; a chunk written
+        by Spark or by another process is decoded once.
 
         ``cutout`` materializes the WHOLE request box as one driver-side
         numpy array, so its size is capped at ``cutout_voxel_budget``
@@ -1822,16 +1873,22 @@ class Volume:
         encoded (each row keeps its own ``enc``), into ``<mip>.tmp`` at
         epoch 0 in batches of at most ``chunk_index.FOLD_BATCH_BYTES``
         (one part file per batch), then the rename-swap puts it live.
-        A byte copy: no decode, no re-encode, no Spark job."""
+        A byte copy: no decode, no re-encode, no Spark job.  Once the
+        swap has succeeded, the decoded blocks of the folded chunks move
+        to their rows in the new files (``chunk_index.carry_over``); a
+        fold or swap that raises moves nothing."""
         self._recover_mip(mip)  # roll back any earlier crashed swap first
         d = self._local_chunks_dir(mip)
         tmp = d + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)   # a crashed fold's leftover
         os.makedirs(tmp)
         raw = self.info.scale(mip).encoding == "raw"
-        for batch in self._chunk_index(d).fold():
-            _write_part_local(tmp, batch, 0, raw)
+        written = [(_write_part_local(tmp, batch, 0, raw),
+                    [r[6] for r in batch])
+                   for batch in self._chunk_index(d).fold()]
         self._swap_mip_dir(mip)
+        for name, sources in written:
+            carry_over(os.path.join(d, name), sources)
 
     def _rewrite_mip(self, df: DataFrame, mip: int | None = None) -> None:
         """Replace a mip directory with the rows of ``df``, written by

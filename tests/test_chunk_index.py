@@ -2,10 +2,14 @@
 current when other handles write, compact or re-open the dataset, read
 older on-disk layouts exactly as before, and report which chunk broke
 when a payload does not decode.  Both writers must put one chunk in
-each row group.  Every case is checked against a numpy mirror."""
+each row group.  Driver-local writes and compactions keep the
+decoded-chunk cache filled with exactly what the store decodes to, and
+the index's one winner table agrees with a brute-force reference.
+Every case is checked against a numpy mirror."""
 import gzip
 import importlib.util
 import os
+import shutil
 import sys
 import threading
 import zipfile
@@ -610,11 +614,13 @@ def test_chunk_larger_than_cap_is_read_uncached(spark, tmp_path, decoded,
 def test_repeat_cutout_decodes_nothing(spark, tmp_path, decoded,
                                        monkeypatch):
     """The second cut of a box is served from the cache: no codec
-    decode and no thread pool."""
+    decode and no thread pool.  The write fills the cache, so an empty
+    cache replaces it before the first cut."""
     from bigarrays_jl_spark import volume
     vol = Volume.create(spark, str(tmp_path / "v"), _info())
     mirror = _arr((128, 128, 128), 33)
     vol.write(mirror, (0, 0, 0))
+    monkeypatch.setattr(chunk_index, "_decoded", chunk_index._DecodedCache())
     calls = _count_decodes(monkeypatch)
     box = ((5, 61), (17, 90), (3, 127))
     out, _ = vol.cutout(box)
@@ -688,3 +694,295 @@ def test_concurrent_cutouts_while_files_arrive(spark, tmp_path, decoded,
         b.nbytes for b in decoded._blocks.values()) <= 6 * CHUNK_BYTES
     out, _ = a.cutout(boxes[0])
     assert (out == 12).all()
+
+
+def test_cut_right_after_write_decodes_nothing(spark, tmp_path, decoded,
+                                               monkeypatch):
+    """A driver-local write fills the cache with the chunks it wrote,
+    so the first cut after it reads and decodes nothing."""
+    from bigarrays_jl_spark import volume
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    vol.auto_compact_epochs = None
+    mirror = _arr((128, 128, 128), 35)
+    vol.write(mirror, (0, 0, 0))
+    block = _arr((64, 32, 32), 36)
+    vol.write(block, (32, 64, 96))
+    mirror[32:96, 64:96, 96:128] = block
+    calls = _count_decodes(monkeypatch)
+    monkeypatch.setattr(volume, "_driver_pool", None)    # not callable
+    _check(vol, mirror)
+    assert calls[0] == 0 and decoded.misses == 0
+
+
+def _stored_rows(d):
+    """``(ident, key, enc, payload)`` of every row stored under ``d``."""
+    out = []
+    for path, (size, mtime) in list_part_files(d).items():
+        t = pq.read_table(path, columns=["key", "enc", "payload"])
+        out += [((path, size, mtime, i), *r) for i, r in enumerate(
+            zip(*(t[c].to_pylist() for c in ("key", "enc", "payload"))))]
+    return out
+
+
+@pytest.mark.parametrize("enc", ["raw", "gzip", "zstd", "blosclz"])
+@pytest.mark.parametrize("dtype", ["uint8", "uint16"])
+@pytest.mark.parametrize("nc", [1, 3])
+def test_write_through_blocks_equal_decoded_payloads(spark, tmp_path,
+                                                     decoded, enc, dtype,
+                                                     nc):
+    """Every block a write caches is byte-identical to what its stored
+    payload decodes to, edge chunks clamped by the volume bounds
+    included, and is read-only."""
+    from bigarrays_jl_spark.volume import decode_chunk
+    size, chunk = (40, 36, 20), (16, 16, 16)
+    info = Info.from_dict({
+        "num_channels": nc, "type": "image", "data_type": dtype,
+        "scales": [{"encoding": enc, "chunk_sizes": [list(chunk)],
+                    "key": "1_1_1", "resolution": [1, 1, 1],
+                    "voxel_offset": [0, 0, 0], "size": list(size)}]})
+    vol = Volume.create(spark, str(tmp_path / "v"), info)
+    rng = np.random.default_rng(37)
+    shape = size if nc == 1 else (*size, nc)
+    arr = rng.integers(0, 300, size=shape).astype(dtype)
+    arr[:20] //= 64                          # some compressible content
+    vol.write(arr, (0, 0, 0))
+    rows = _stored_rows(vol._mip_dir())
+    assert len(rows) == 3 * 3 * 2 == len(decoded._blocks)
+    clamped = 0
+    for ident, key, row_enc, payload in rows:
+        assert row_enc == enc
+        block = decoded._blocks[ident]
+        _, _, want = decode_chunk(key, enc, payload, nc, dtype)
+        assert block.dtype == want.dtype and block.shape == want.shape
+        assert block.tobytes(order="F") == want.tobytes(order="F"), key
+        assert not block.flags.writeable
+        clamped += block.shape[:3] != chunk
+    assert clamped == 3 * 3 * 2 - 2 * 2 * 1
+    out, _ = vol.cutout(((0, 40), (0, 36), (0, 20)))
+    assert np.array_equal(out, arr)
+
+
+def _overwritten(spark, root, auto=None):
+    """A volume with four overwrites of a whole-volume write, and its
+    mirror."""
+    vol = Volume.create(spark, root, _info())
+    vol.auto_compact_epochs = auto
+    mirror = _arr((128, 128, 128), 38)
+    vol.write(mirror, (0, 0, 0))
+    for i, off in enumerate([(0, 0, 0), (32, 64, 32), (0, 0, 0),
+                             (96, 96, 96)]):
+        block = _arr((32, 64, 32), 39 + i)
+        off = tuple(min(o, 128 - s) for o, s in zip(off, block.shape))
+        vol.write(block, off)
+        mirror[tuple(slice(o, o + s) for o, s in zip(off, block.shape))] \
+            = block
+    return vol, mirror
+
+
+def _assert_cache_current(cache, d):
+    assert _cached_files(cache) <= set(list_part_files(d))
+    assert cache.nbytes == sum(b.nbytes for b in cache._blocks.values())
+
+
+def test_compaction_carries_blocks_over(spark, tmp_path, decoded,
+                                        monkeypatch):
+    """After ``compact()`` the folded chunks are served from the cache
+    under their new files: no decode, on this handle or a fresh one."""
+    root = str(tmp_path / "v")
+    vol, mirror = _overwritten(spark, root)
+    before = set(list_part_files(vol._mip_dir()))
+    monkeypatch.setattr(chunk_index, "FOLD_BATCH_BYTES", 8 * CHUNK_BYTES)
+    vol.compact()
+    after = set(list_part_files(vol._mip_dir()))
+    assert before.isdisjoint(after) and len(after) > 1
+    assert max(pq.read_metadata(p).num_rows for p in after) > 1
+    calls = _count_decodes(monkeypatch)
+    _check(vol, mirror)
+    _check(Volume.open(spark, root), mirror)
+    assert calls[0] == 0
+    _assert_cache_current(decoded, vol._mip_dir())
+    assert _cached_files(decoded) == after
+    assert len(decoded._blocks) == 64
+
+
+def test_auto_compaction_carries_blocks_over(spark, tmp_path, decoded,
+                                             monkeypatch):
+    vol, mirror = _overwritten(spark, str(tmp_path / "v"), auto=5)
+    assert vol._current_epoch() == 0         # the last write compacted
+    calls = _count_decodes(monkeypatch)
+    _check(vol, mirror)
+    assert calls[0] == 0
+    _assert_cache_current(decoded, vol._mip_dir())
+
+
+def _fail_swap_before_renames(mp):
+    def swap(self, mip=None):
+        raise OSError("injected: crash before the swap")
+    mp.setattr(Volume, "_swap_mip_dir", swap)
+
+
+def _fail_swap_between_renames(mp):
+    real = os.rename
+
+    def rename(src, dst, *a, **kw):
+        if str(src).endswith(".tmp"):
+            raise OSError("injected: crash between renames")
+        return real(src, dst, *a, **kw)
+    mp.setattr(os, "rename", rename)
+
+
+@pytest.mark.parametrize("inject", [_fail_swap_before_renames,
+                                    _fail_swap_between_renames])
+def test_failed_fold_moves_nothing(spark, tmp_path, decoded, monkeypatch,
+                                   inject):
+    """A fold that fails after writing its batches but before its swap
+    completes moves no block: the old files stay live (or come back)
+    and keep their blocks, and nothing stale is served before or after
+    a later compaction."""
+    root = str(tmp_path / "v")
+    vol, mirror = _overwritten(spark, root)
+    _check(vol, mirror)
+    blocks = dict(decoded._blocks)
+    monkeypatch.setattr(chunk_index, "FOLD_BATCH_BYTES", 20 * 1024)
+    with monkeypatch.context() as mp:
+        inject(mp)
+        with pytest.raises(OSError, match="injected"):
+            vol.compact()
+    assert os.path.isdir(vol._mip_dir() + ".tmp")
+    assert decoded._blocks.keys() == blocks.keys()
+    assert all(decoded._blocks[i] is b for i, b in blocks.items())
+    reopened = Volume.open(spark, root)          # rolls a crashed swap back
+    calls = _count_decodes(monkeypatch)
+    _check(reopened, mirror)
+    _check(vol, mirror)
+    assert calls[0] == 0
+    reopened.compact()
+    _check(reopened, mirror)
+    _check(vol, mirror)
+    assert calls[0] == 0
+    _assert_cache_current(decoded, vol._mip_dir())
+
+
+def test_cache_forgets_files_of_a_recreated_dataset(spark, tmp_path,
+                                                   decoded):
+    """Blocks written through for files removed behind every index's
+    back (the dataset deleted and created again) are dropped once a
+    cutout has listed the directory."""
+    root = str(tmp_path / "v")
+    for seed in (46, 47, 48):
+        shutil.rmtree(root, ignore_errors=True)
+        vol = Volume.create(spark, root, _info())
+        mirror = _arr((128, 128, 128), seed)
+        vol.write(mirror, (0, 0, 0))
+    assert len(decoded._blocks) == 3 * 64
+    _check(vol, mirror)
+    _assert_cache_current(decoded, vol._mip_dir())
+    assert len(decoded._blocks) == 64
+
+
+def test_write_larger_than_cache_stays_within_bound(spark, tmp_path,
+                                                    decoded, monkeypatch):
+    cap = 5 * CHUNK_BYTES + CHUNK_BYTES // 2
+    monkeypatch.setattr(chunk_index, "DECODED_CACHE_BYTES", cap)
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 45)
+    vol.write(mirror, (0, 0, 0))
+    assert len(decoded._blocks) == 5
+    assert decoded.nbytes == 5 * CHUNK_BYTES == sum(
+        b.nbytes for b in decoded._blocks.values())
+    _check(vol, mirror)
+    assert decoded.nbytes <= cap
+    assert decoded.nbytes == sum(b.nbytes for b in decoded._blocks.values())
+
+
+# -- the one winner rule ------------------------------------------------------
+
+def _random_index(tmp_path, seed):
+    """Part files of random rows on a 4x4x3 chunk grid: epochs drawn
+    from a small range, so a key often repeats an epoch in another
+    file; ``enc`` drawn per row; some files in the old layout (many
+    chunks per row group, no statistics).  Each payload names its file
+    and row.  Returns the directory."""
+    rng = np.random.default_rng(seed)
+    d = tmp_path / f"idx{seed}"
+    for fi in range(int(rng.integers(2, 7))):
+        n = int(rng.integers(1, 40))
+        cid = rng.integers(0, [4, 4, 3], size=(n, 3))
+        rows = [(int(x), int(y), int(z), f"k{x}_{y}_{z}",
+                 str(rng.choice(["gzip", "raw", "zstd"])),
+                 int(rng.integers(0, 4)), f"{fi}:{r}".encode())
+                for r, (x, y, z) in enumerate(cid)]
+        old = rng.random() < 0.4
+        _write_rows(str(d / f"part-{fi}.parquet"), rows,
+                    row_group_size=int(rng.integers(3, 9)) if old else 1,
+                    write_statistics=not old)
+    return str(d)
+
+
+def _brute_force(d):
+    """``{key: (cid, enc, payload, path, row)}`` of the latest epoch of
+    every key, the first file in listing order and the first row within
+    it winning a tie; and the number of rows stored."""
+    best, stored = {}, 0
+    for path in list_part_files(d):
+        t = pq.read_table(path)
+        cols = [t[c].to_pylist() for c in
+                ("cx", "cy", "cz", "key", "enc", "epoch", "payload")]
+        for r, (cx, cy, cz, key, enc, epoch, p) in enumerate(zip(*cols)):
+            stored += 1
+            if key not in best or epoch > best[key][0]:
+                best[key] = (epoch, (cx, cy, cz), enc, p, path, r)
+    return {k: v[1:] for k, v in best.items()}, stored
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_winner_table_matches_brute_force(tmp_path, decoded, seed):
+    d = _random_index(tmp_path, seed)
+    want, stored = _brute_force(d)
+    index = ChunkIndex(d)
+    rng = np.random.default_rng(100 + seed)
+    boxes = [((0, 4), (0, 4), (0, 3)), ((-5, 9), (-5, 9), (-5, 9))] + [
+        tuple((int(lo), int(lo + s)) for lo, s in
+              zip(rng.integers(-1, 4, 3), rng.integers(0, 4, 3)))
+        for _ in range(12)]
+    for box in boxes:
+        inside = {k: w for k, w in want.items()
+                  if all(lo <= c < hi for c, (lo, hi) in zip(w[0], box))}
+        got = index.latest(box)
+        assert len(got) == len({k for k, *_ in got})
+        assert {k: (enc, p, path) for k, enc, p, path in got} == \
+            {k: w[1:4] for k, w in inside.items()}, box
+        got = index.latest_decoded(box, 1, np.uint8)
+        assert {k: (enc, p, path, ident[0], ident[3], chunk)
+                for k, enc, p, path, ident, chunk in got} == \
+            {k: (*w[1:4], w[3], w[4], None) for k, w in inside.items()}
+    flat = [r for batch in index.fold() for r in batch]
+    assert [(r[2], r[1], r[0]) for r in flat] == \
+        sorted((w[0][2], w[0][1], w[0][0]) for w in want.values())
+    sigs = list_part_files(d)
+    assert {r[3]: (tuple(r[:3]), r[4], r[5], r[6]) for r in flat} == \
+        {k: (w[0], w[1], w[2], (w[3], *sigs[w[3]], w[4]))
+         for k, w in want.items()}
+    assert index.has_duplicates() == (stored > len(want))
+
+
+def test_winner_table_follows_file_set(tmp_path, decoded):
+    """A file that arrives or leaves rebuilds the table; has_duplicates
+    follows."""
+    d = tmp_path / "idx"
+    _write_rows(str(d / "part-0.parquet"),
+                [(0, 0, 0, "a", "raw", 0, b"a0"), (1, 0, 0, "b", "raw", 0,
+                                                   b"b0")])
+    index = ChunkIndex(str(d))
+    box = ((0, 2), (0, 1), (0, 1))
+    assert not index.has_duplicates()
+    _write_rows(str(d / "part-1.parquet"), [(1, 0, 0, "b", "gzip", 1, b"b1")])
+    assert index.has_duplicates()
+    assert sorted((k, e, p) for k, e, p, _ in index.latest(box)) == \
+        [("a", "raw", b"a0"), ("b", "gzip", b"b1")]
+    os.remove(str(d / "part-0.parquet"))
+    assert not index.has_duplicates()
+    assert [(k, p) for k, _, p, _ in index.latest(box)] == [("b", b"b1")]
+    assert list_part_files(str(tmp_path / "none")) == {}
+    assert ChunkIndex(str(tmp_path / "none")).latest(box) == []
+    assert list(ChunkIndex(str(tmp_path / "none")).fold()) == []

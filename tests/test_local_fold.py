@@ -400,3 +400,25 @@ def test_encode_chunk_refuses_wrong_blocks():
                            (want, 1, "uint16")):
         with pytest.raises(ValueError, match=f"chunk {key} "):
             volume_mod.encode_chunk(key, "raw", bad, nc, dtype)
+
+
+def test_failed_ingest_leaves_no_temporary_dir(spark, tmp_path):
+    """A refused ``ingest_chunks`` job leaves the mip dir exactly as it
+    found it, try after try: tasks of the failed job that outlive
+    Spark's abort must not leave a ``_temporary`` directory behind."""
+    info = _info()
+    vol = Volume.create(spark, str(tmp_path / "v"), info)
+    mirror = _arr((128, 128, 128), 90)
+    vol.write(mirror, (0, 0, 0))
+    d = vol._mip_dir()
+    listing = sorted(os.listdir(d))
+    rows = [(*r[:4], r[6]) for r in
+            _chunk_rows(_arr((128, 128, 128), 91), info, 0, enc="raw")[:8]]
+    rows[5] = (*rows[5][:4], rows[5][4][:-3])      # truncated payload
+    df = spark.createDataFrame(
+        rows, "cx int, cy int, cz int, key string, payload binary")
+    for attempt in range(10):
+        with pytest.raises(Exception, match="cannot encode"):
+            vol.ingest_chunks(df)
+        assert sorted(os.listdir(d)) == listing, attempt
+    _check(vol, mirror)

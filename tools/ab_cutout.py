@@ -20,7 +20,11 @@ Per pair it also counts the decoded-chunk cache's hits, the misses (the
 chunks the cutouts decoded; every chunk is a miss in a tree without the
 cache) and the bytes of decoded chunks held at the pair's end, and per
 tree the driver's peak RSS over its runs, so the cache's memory shows
-as its own figure.
+as its own figure.  The misses are split by the last write before each
+cutout: ``after_write`` counts those of cutouts that follow a plain
+write, ``after_compact`` those of cutouts that follow a compacting
+write, so a cache that writes fill and one that compactions re-key
+each show their own figure.
 
 It also reports the mean process-tree CPU (``perfbench/common.TreeCPU``:
 the driver, the Spark JVM and its Python workers) per plain write and
@@ -60,7 +64,7 @@ import types
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPLIT = ("cutout_ms", "scan_ms", "decode_ms", "place_ms")
-CACHE = ("hits", "misses", "held_mib")
+CACHE = ("hits", "misses", "after_write", "after_compact", "held_mib")
 WRITES = ("write_ms", "compact_write_ms")
 
 
@@ -132,7 +136,10 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
         cutouts = [op[1] for op in pair if op[0] == "cutout"]
         for op in [op for op in pair if op[0] == "write"][
                 aw.WRITES_PER_CYCLE:]:
+            n0 = compactions[0]
             vol.write(op[2], op[1])
+        # the kind of the last write, which the next cutouts follow
+        after = "after_compact" if compactions[0] > n0 else "after_write"
         for box in cutouts[:20]:
             vol.cutout(box)
 
@@ -140,6 +147,7 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
         for _ in range(pairs):
             tot = scan = dec = 0.0
             decodes = 0
+            split = {"after_write": 0, "after_compact": 0}
             hits0 = cache.hits if cache else 0
             writes = {"write_ms": [], "compact_write_ms": []}
             for op in pair:
@@ -152,6 +160,8 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
                     kind = ("compact_write_ms" if compactions[0] > n0
                             else "write_ms")
                     writes[kind].append(dc * 1e3)
+                    after = ("after_compact" if compactions[0] > n0
+                             else "after_write")
                     mirror[tuple(slice(o, o + s)
                                  for o, s in zip(off, arr.shape))] = arr
                     continue
@@ -163,6 +173,7 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
                 scan += acc["scan"]
                 dec += acc["decode"]
                 decodes += acc["decodes"]
+                split[after] += acc["decodes"]
                 failed += not np.array_equal(
                     arr, aw.expected_cutout(mirror, op[1]))
             n = len(cutouts)
@@ -170,7 +181,7 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
                         "decode_ms": dec / n * 1e3,
                         "place_ms": (tot - scan - dec) / n * 1e3,
                         "hits": (cache.hits if cache else 0) - hits0,
-                        "misses": decodes,
+                        "misses": decodes, **split,
                         "held_mib": (cache.nbytes if cache else 0) / 2**20,
                         **{k: sum(v) / len(v) for k, v in writes.items()}})
         peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
@@ -253,14 +264,15 @@ def main(argv=None) -> int:
         print(f"{name}     {fmt(best[name])}   {names[name]}")
     ratio = best["B"]["cutout_ms"] / best["A"]["cutout_ms"]
     print(f"B/A cutout CPU: {ratio:.3f}")
-    print("decoded-chunk cache in that pair, driver peak RSS over all runs")
-    print("tree  " + "  ".join(f"{k:>8}" for k in CACHE)
+    print("decoded-chunk cache in that pair (misses split by the last "
+          "write before the cutout), driver peak RSS over all runs")
+    width = {k: max(8, len(k)) for k in CACHE}
+    print("tree  " + "  ".join(f"{k:>{width[k]}}" for k in CACHE)
           + "  peak_rss_mib")
     for name in "AB":
         print(f"{name}     " + "  ".join(
-            f"{best[name][k]:8.0f}" if k != "held_mib"
-            else f"{best[name][k]:8.1f}" for k in CACHE)
-            + f"  {peak_rss[name]:12.1f}")
+            f"{best[name][k]:{width[k]}.{1 if k == 'held_mib' else 0}f}"
+            for k in CACHE) + f"  {peak_rss[name]:12.1f}")
     print("process-tree CPU per write (ms), best pair")
     print("tree  " + "  ".join(f"{k:>16}" for k in WRITES))
     for name in "AB":
