@@ -23,12 +23,13 @@ from other handles and processes.  Discovery follows
 ``pyarrow.dataset``'s rules: recurse into subdirectories and skip names
 starting with ``.`` or ``_`` (Spark's ``_SUCCESS`` and ``.crc`` files).
 
-Compaction: ``fold`` streams the winner table, payloads still encoded,
-in (cz, cy, cx) order and in batches of at most ``FOLD_BATCH_BYTES``
-of payload, so the driver-local compaction is a byte copy whose memory
-is bounded by that constant, not by the mip.  Each row it yields
-carries its source's identity, so the decoded blocks of the folded
-chunks can follow them into the new files (see below).
+Compaction and delete: ``fold`` streams the winner table, less the
+winners in an optional chunk-id box, payloads still encoded, in
+(cz, cy, cx) order and in batches of at most ``FOLD_BATCH_BYTES`` of
+payload, so the driver-local compaction and delete are byte copies
+whose memory is bounded by that constant, not by the mip.  Each row it
+yields carries its source's identity, so the decoded blocks of the
+folded chunks can follow them into the new files (see below).
 ``has_duplicates`` is the auto-compaction probe: it compares the
 winner count with the stored row count and reads no payload.
 
@@ -55,10 +56,11 @@ chunk is never kept.  Three events fill or re-key it:
   place.  Every codec that can encode (raw, gzip, zstd, blosclz) is
   lossless, and jpeg, the one lossy codec, refuses to encode, so these
   bytes are exactly what the stored payload decodes to;
-- a driver-local compaction (``carry_over``): the fold copies payloads
-  byte for byte, so once its swap has succeeded each winner's block
-  moves from its old file's row to its row in the new file.  A fold or
-  swap that fails moves nothing, and the old files stay live.
+- a driver-local compaction or delete (``carry_over``): the fold
+  copies payloads byte for byte, so once its swap has succeeded each
+  winner's block moves from its old file's row to its row in the new
+  file.  A fold or swap that fails moves nothing, and the old files
+  stay live.
 
 Whenever a lookup finds the directory's file set changed, it drops the
 entries of every file under the directory that the listing no longer
@@ -261,6 +263,13 @@ class _Winners:
         self.fid, self.row, self.cid = fid[win], row[win], cid[:, win]
         self.key = keys.take(win)
 
+    def in_box(self, ranges) -> np.ndarray:
+        """Mask of the winners whose chunk id lies in ``ranges``
+        (half-open ``(lo, hi)`` per axis)."""
+        lo = np.array([r[0] for r in ranges], dtype=np.int64)[:, None]
+        hi = np.array([r[1] for r in ranges], dtype=np.int64)[:, None]
+        return ((self.cid >= lo) & (self.cid < hi)).all(axis=0)
+
     def by_file(self, sel: np.ndarray):
         """``(path, part file, rows, at)`` per file holding one of the
         winners ``sel``: its ``rows`` sorted, ``at`` the positions in
@@ -336,9 +345,7 @@ class ChunkIndex:
         latest epoch of a key whose chunk id lies in ``ranges``, rows
         sorted."""
         t = self._current()
-        lo = np.array([r[0] for r in ranges], dtype=np.int64)[:, None]
-        hi = np.array([r[1] for r in ranges], dtype=np.int64)[:, None]
-        sel = np.flatnonzero(((t.cid >= lo) & (t.cid < hi)).all(axis=0))
+        sel = np.flatnonzero(t.in_box(ranges))
         keys = t.key.take(sel).to_pylist()
         return [(path, f, rows, [keys[a] for a in at.tolist()])
                 for path, f, rows, at in t.by_file(sel)]
@@ -353,27 +360,31 @@ class ChunkIndex:
         t = self._current()
         return len(t.fid) < t.stored
 
-    def fold(self):
-        """Yield the latest-epoch winner of every stored key as lists of
-        ``(cx, cy, cz, key, enc, payload, ident)``, payloads still
-        encoded, sorted by (cz, cy, cx) within and across lists;
-        ``ident`` is the decoded-cache identity of the row the winner
-        came from (see ``carry_over``).  A list carries at most
-        ``FOLD_BATCH_BYTES`` of payload (a larger chunk comes alone),
-        read when the list is due."""
+    def fold(self, drop=None):
+        """Yield the latest-epoch winner of every stored key whose chunk
+        id lies outside the optional ``drop`` ranges (half-open
+        ``(lo, hi)`` per axis) as lists of ``(cx, cy, cz, key, enc,
+        payload, ident)``, payloads still encoded, sorted by (cz, cy,
+        cx) within and across lists; ``ident`` is the decoded-cache
+        identity of the row the winner came from (see ``carry_over``).
+        A list carries at most ``FOLD_BATCH_BYTES`` of payload (a larger
+        chunk comes alone), read when the list is due."""
         t = self._current()
-        if not len(t.fid):
+        keep = (np.ones(len(t.fid), dtype=bool) if drop is None
+                else ~t.in_box(drop))
+        sel = np.flatnonzero(keep)
+        if not len(sel):
             return
         rb = [f.row_bytes() for _, f in t.files]
         base = np.cumsum([len(b) for b in rb]) - [len(b) for b in rb]
-        nbytes = np.concatenate(rb)[base[t.fid] + t.row]
+        nbytes = np.concatenate(rb)[base[t.fid[sel]] + t.row[sel]]
         start = size = 0
         for j, b in enumerate(nbytes.tolist()):
             if size and size + b > FOLD_BATCH_BYTES:
-                yield self._read_rows(t, np.arange(start, j))
+                yield self._read_rows(t, sel[start:j])
                 start, size = j, 0
             size += b
-        yield self._read_rows(t, np.arange(start, len(nbytes)))
+        yield self._read_rows(t, sel[start:])
 
     def _read_rows(self, t: _Winners, sel: np.ndarray) -> list[tuple]:
         """``(cx, cy, cz, key, enc, payload, ident)`` of the winners

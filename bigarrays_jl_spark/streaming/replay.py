@@ -147,7 +147,7 @@ def migrate_to_partitioned(spark: SparkSession, path: str) -> int:
     """One-time migration of a pre-partitioning guarded output (flat
     parquet with a ``batch_id`` column) to the ``batch_id=N`` layout
     ``guarded_rows_append`` writes.  Rewrites into a sibling temp dir
-    then swaps via two renames (the ``_rewrite_mip`` idiom: the crash
+    then swaps via two renames (the ``_swap_mip_dir`` idiom: the crash
     window leaves either the old dir or a complete new dir, never a
     half state — ``.old`` is removed last).  Run it ONCE, with the
     stream stopped.  Returns the number of rows migrated; no-op (0)

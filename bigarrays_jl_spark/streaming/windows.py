@@ -635,7 +635,7 @@ def streaming_apply_changes(changes: DataFrame, table_root: str,
     IMMUTABLE snapshot directory ``v<batch_id>`` under ``table_root``.
 
     Snapshot-per-batch is the object-store-safe MVCC scheme (the
-    rename-swap trick ``Volume._rewrite_mip`` uses is atomic only on
+    rename-swap trick ``Volume._swap_mip_dir`` uses is atomic only on
     real filesystems): readers resolve the highest snapshot whose
     _SUCCESS marker exists, a crash mid-write leaves a markerless
     directory that no reader sees, and a REPLAYED micro-batch

@@ -24,8 +24,10 @@ Design decisions for 100 TB scale (why this differs from a literal port):
   an overwrite of a region appends rows with a higher ``epoch``; reads
   keep ``max_by(payload, epoch)`` per key after partition pruning (the
   dedupe shuffles only the *pruned* chunk set, not the table).
-  ``compact()`` folds history down, like the reference's KV delete+put
-  (src/backends/S3Dicts.jl:55-77) but append-only and cloud-atomic: a
+  ``compact()`` folds history down and ``delete(box)`` folds it less
+  the box, like the reference's KV delete+put
+  (src/backends/S3Dicts.jl:55-77, :100-103) but append-only and
+  cloud-atomic.  Both go through one mip rewrite, ``_fold_mip``: a
   Spark ``max_by`` rewrite in general, a driver-side byte copy of each
   key's latest payload through the chunk index on local datasets.
 - **Codec work runs in executors** (Arrow-batched pandas path), exactly
@@ -99,24 +101,6 @@ def _on_workers(fn):
 
     run.__name__ = fn.__name__       # the name Spark plans show
     return run
-
-
-def _encode_batches_fn(enc: str, nc: int, dtype):
-    """Executor-side encode over raw chunk batches, behind ``write()``
-    and ``ingest_chunks``.
-
-    Measured (r17, interleaved A/B at 537 MB): a mapInArrow variant of
-    this stage lands within run-to-run noise (282-353 pandas vs
-    335-338 arrow MB/s) — the stage is codec-CPU-bound, so the pandas
-    object-Series transit is NOT the bottleneck here."""
-    def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bigarrays_jl_spark.volume import encode_chunk
-        for b in it:
-            b["payload"] = [encode_chunk(key, enc, payload, nc, dtype)
-                            for key, payload in zip(b["key"], b["payload"])]
-            yield b
-
-    return _on_workers(encode_batches)
 
 
 def _f_bytes(block: np.ndarray) -> bytes:
@@ -349,6 +333,11 @@ def _replacing(path: str):
             os.remove(tmp)
         raise
 
+def _hadoop(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under Spark's Hadoop conf."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
 def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     if _is_local(path):
         # a torn ``_epoch`` would make every later read and write fail
@@ -356,10 +345,7 @@ def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
                 open(tmp, "wb") as f:
             f.write(data)
         return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
+    fs, jpath = _hadoop(spark, path)
     out = fs.create(jpath, True)
     out.write(bytearray(data))
     out.close()
@@ -368,26 +354,22 @@ def _fs_read_bytes(spark: SparkSession, path: str) -> bytes:
     if _is_local(path):
         with open(_strip_file_scheme(path), "rb") as f:
             return f.read()
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
+    fs, jpath = _hadoop(spark, path)
     stream = fs.open(jpath)
     try:
         # a JVM-side drain that RETURNS byte[] — py4j converts returned
         # byte[] to Python bytes, whereas passing a Python bytearray to
         # InputStream.read(byte[]) fills only the JVM-side copy
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils
+                     .toByteArray(stream))
     finally:
         stream.close()
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     if _is_local(path):
         return os.path.exists(_strip_file_scheme(path))
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(conf).exists(jpath)
+    fs, jpath = _hadoop(spark, path)
+    return fs.exists(jpath)
 
 def _fs_create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
     """Create-if-absent: write ``data`` to ``path`` only if no file exists
@@ -407,10 +389,7 @@ def _fs_create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
         with os.fdopen(fd, "wb") as f:
             f.write(data)
         return True
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
+    fs, jpath = _hadoop(spark, path)
     try:
         out = fs.create(jpath, False)  # overwrite=False → throws if present
     except Exception as e:
@@ -511,15 +490,28 @@ def _locked_writer(get_lock_target=None):
     return deco
 
 
-def _fs_delete(spark: SparkSession, path: str) -> None:
+def _fs_delete(spark: SparkSession, path: str, tree: bool = False) -> None:
+    """Remove the file, or with ``tree`` the directory tree, at ``path``
+    if there is one."""
     if _is_local(path):
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(_strip_file_scheme(path))
+        if tree:
+            shutil.rmtree(_strip_file_scheme(path), ignore_errors=True)
+        else:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(_strip_file_scheme(path))
         return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    jpath.getFileSystem(conf).delete(jpath, False)
+    fs, jpath = _hadoop(spark, path)
+    fs.delete(jpath, tree)
+
+def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``, which must not exist.  Hadoop's
+    ``rename`` reports failure by returning false; that raises here."""
+    if _is_local(src):
+        os.rename(_strip_file_scheme(src), _strip_file_scheme(dst))
+        return
+    fs, jsrc = _hadoop(spark, src)
+    if not fs.rename(jsrc, _hadoop(spark, dst)[1]):
+        raise OSError(f"rename {src} -> {dst} failed")
 
 
 class Volume:
@@ -564,11 +556,11 @@ class Volume:
         # chunk_index.DECODED_CACHE_BYTES).  This mirrors the reference's local
         # BinDict backend reading one object per chunk
         # (ref src/backends/BinDicts.jl:24-48) while every distributed
-        # op (ingest_chunks, voxels, map_blocks, delete, …) and every
-        # non-local scheme stays on the Spark path.  ``compact`` and the
-        # auto-compaction duplicate probe run here too: the chunk index
-        # already knows every key, epoch and row group, so the fold is a
-        # byte copy on the driver (memory bounded by
+        # op (ingest_chunks, voxels, map_blocks, …) and every non-local
+        # scheme stays on the Spark path.  ``compact``, ``delete`` and
+        # the auto-compaction duplicate probe run here too: the chunk
+        # index already knows every key, epoch and row group, so the
+        # fold is a byte copy on the driver (memory bounded by
         # chunk_index.FOLD_BATCH_BYTES) instead of a shuffle of every
         # payload.  Set False to force the Spark path on local datasets.
         self.local_io: bool = True
@@ -600,7 +592,7 @@ class Volume:
         info = Info.from_json(_fs_read_bytes(spark, root.rstrip("/") + "/info"))
         vol = cls(spark, root, info, mip=mip, fill_missing=fill_missing)
         # roll back any rewrite that crashed between its rename pair
-        # (live dir missing, .old generation present) — see _rewrite_mip
+        # (live dir missing, .old generation present) — see _swap_mip_dir
         for m in range(len(info.scales)):
             vol._recover_mip(m)
         return vol
@@ -856,13 +848,23 @@ class Volume:
             F.max_by("payload", "epoch").alias("payload"),
         )
 
-    def live_chunks(self, request: ix.Box | None = None) -> DataFrame:
-        """The live chunk rows — latest epoch per key — whose chunk ids
-        meet ``request`` (the whole volume when None): ``cx, cy, cz,
-        key, enc, payload`` with payloads still encoded.  For scans that
-        read more than one volume per row; everything else goes through
-        :meth:`map_cuts`.  Decode payloads with :func:`decode_chunk`."""
-        return self._latest(self._pruned(request))
+    def live_chunks(self, request: ix.Box | None = None, *,
+                    mip: int | None = None,
+                    ids: list[tuple[int, int, int]] | None = None
+                    ) -> DataFrame:
+        """The live chunk rows of mip ``mip`` (this handle's by default),
+        latest epoch per key: ``cx, cy, cz, key, enc, payload``, payloads
+        still encoded — the one live-chunk selection of every Spark
+        read.  ``request`` keeps the chunks whose ids meet it, ``ids``
+        an explicit chunk-id set (a BETWEEN plus multi-column IN at the
+        scan); with neither every stored row counts, ids outside the
+        volume included (``fsck`` audits those).  Scans of one volume
+        go through :meth:`map_cuts`; decode with :func:`decode_chunk`."""
+        m = self.mip if mip is None else mip
+        if ids is not None:
+            return self._latest(self._sources_subset(m, ids))
+        return self._latest(self.chunks_df(m) if request is None
+                            else self._pruned(request, m))
 
     def map_cuts(self, fn, schema: str, request: ix.Box | None = None, *,
                  ids: list[tuple[int, int, int]] | None = None) -> DataFrame:
@@ -874,16 +876,15 @@ class Volume:
         ``request`` are skipped.  ``cbox`` is the chunk's box, ``cut``
         its intersection with ``request`` and ``block`` the read-only
         ``(x, y, z, c)`` view of ``cut``.  ``ids`` restricts the scan to
-        an explicit chunk-id set (micro-batch-bounded, a BETWEEN plus
-        multi-column IN at the scan) instead of the request's id box.
+        an explicit chunk-id set instead of the request's id box (see
+        :meth:`live_chunks`).
 
         One ``mapInPandas``: no shuffle beyond the epoch dedupe, which
         only runs once the dataset has overwrite history.  ``fn`` runs
         on executors, so it imports what it needs in its body."""
         req = tuple((int(lo), int(hi)) for lo, hi in
                     (request or self.vol_box))
-        chunks = (self.live_chunks(req) if ids is None
-                  else self._latest(self._sources_subset(self.mip, ids)))
+        chunks = self.live_chunks(req, ids=ids)
         nc, dtype = self.info.num_channels, self.info.data_type
 
         def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -956,14 +957,12 @@ class Volume:
             # than copy-then-encode)
             rows.append((cs.cid[0], cs.cid[1], cs.cid[2], cs.key, block))
 
-        epoch = self._next_epoch()
-        enc = sc.encoding
         if self._local_chunks_dir() is not None:
             # driver-local fast path (see local_io in __init__): the
             # array is already on the driver — encode thread-pooled,
             # write one format-identical parquet part file, skip the
             # JVM transit + shuffle + Python-worker round trip
-            self._write_chunks_local(rows, enc, epoch)
+            self._write_chunks_local(rows, sc.encoding, self._next_epoch())
             self._maybe_auto_compact()
             return
         # A driver-array write carries few, FAT rows.  Each slice is
@@ -974,8 +973,10 @@ class Volume:
         # which Spark caches the relation whole.  Arrow-built relations
         # arrive as ONE partition each, so the union is repartitioned
         # across the executors before the codec stage — one shuffle of
-        # the array's own bytes keeps the encode parallel.  Measured
-        # honestly (r13, interleaved best-of-4 A/B vs the previous
+        # the array's own bytes keeps the encode parallel; the raw-chunk
+        # frame then goes through ``ingest_chunks`` (epoch, executor
+        # encode, write, auto-compaction).  Measured honestly (r13,
+        # interleaved best-of-4 A/B vs the previous
         # pandas path): END-TO-END this is a wash (~27 vs ~29 MB/s,
         # ±40% window variance) — the driver-array path is bound by the
         # one inescapable driver transit of the array, not by either
@@ -1025,14 +1026,7 @@ class Volume:
         n_tgt = min(len(rows), self.spark.sparkContext.defaultParallelism)
         if n_tgt > len(slices):
             df = df.repartition(n_tgt)
-        df = (df.withColumn("enc", F.lit(enc))
-                .withColumn("epoch", F.lit(epoch).cast("bigint"))
-                .select("cx", "cy", "cz", "key", "enc", "epoch", "payload"))
-
-        self._write_chunks(df.mapInPandas(
-            _encode_batches_fn(enc, info.num_channels, info.data_type),
-            schema=CHUNK_SCHEMA))
-        self._maybe_auto_compact()
+        self.ingest_chunks(df)     # the write lock is reentrant
 
     @_locked_writer()
     def ingest_chunks(self, df: DataFrame) -> None:
@@ -1049,14 +1043,21 @@ class Volume:
         """
         epoch = self._next_epoch()
         enc = self.scale.encoding
-        out = (df.select("cx", "cy", "cz", "key",
-                         F.lit(enc).alias("enc"),
-                         F.lit(epoch).cast("bigint").alias("epoch"),
-                         "payload")
-                 .mapInPandas(_encode_batches_fn(
-                     enc, self.info.num_channels, self.info.data_type),
-                     schema=CHUNK_SCHEMA))
-        self._write_chunks(out)
+        nc, dtype = self.info.num_channels, self.info.data_type
+
+        def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            # codec-CPU-bound: a mapInArrow variant measured within noise
+            # (r17, 537 MB: 282-353 pandas vs 335-338 arrow MB/s)
+            from bigarrays_jl_spark.volume import encode_chunk
+            for b in it:
+                b["payload"] = [encode_chunk(key, enc, payload, nc, dtype)
+                                for key, payload in zip(b["key"], b["payload"])]
+                yield b
+
+        self._write_chunks(
+            df.select("cx", "cy", "cz", "key", F.lit(enc).alias("enc"),
+                      F.lit(epoch).cast("bigint").alias("epoch"), "payload")
+              .mapInPandas(_on_workers(encode_batches), schema=CHUNK_SCHEMA))
         self._maybe_auto_compact()
 
     @classmethod
@@ -1174,7 +1175,7 @@ class Volume:
                         n += 1
                 yield pd.DataFrame({"n": [n]})
 
-            total += int(self._latest(self.chunks_df(m))
+            total += int(self.live_chunks(mip=m)
                          .mapInPandas(write_files, schema="n long")
                          .agg(F.sum("n")).collect()[0][0] or 0)
         return total
@@ -1485,22 +1486,24 @@ class Volume:
 
     @_locked_writer()
     def delete(self, request: ix.Box) -> None:
-        """Delete stored chunks intersecting ``request`` — Parquet is
-        immutable, so this is a compaction rewrite excluding the doomed
-        chunk-id box (reference: per-object delete, src/backends/S3Dicts.jl:100-103).
+        """Delete stored chunks intersecting ``request`` (reference:
+        per-object delete, src/backends/S3Dicts.jl:100-103).  Parquet is
+        immutable, so this is ``compact``'s fold of this handle's mip
+        (``_fold_mip``) less the doomed chunk-id box: survivors keep
+        only their latest row, at epoch 0, and the dataset's epoch
+        counter stays as it is.  Under ``local_io`` on a local dataset
+        that is a driver byte copy with no Spark job.
 
         Scale shape: the doomed set of a rectangular request is EXACTLY a
         chunk-id range box (every id in the per-axis range intersects, the
         same closed form as ``num_chunks``), so the keep-predicate is three
         NOT-BETWEENs on the ``cx/cy/cz`` columns — O(1) plan size and zero
         driver enumeration, however many million chunks the box spans.
-        (Replaces a driver-enumerated ``isin(doomed_keys)`` that built the
-        full key list on the driver — the r9 verdict's one 100×-unsafe plan.)
         """
         ranges = self._id_ranges(request)
         if ranges is None:
             return  # nothing stored can intersect; skip the rewrite entirely
-        self._rewrite_mip(self.chunks_df().filter(~_in_ids(ranges)))
+        self._fold_mip(self.mip, drop=ranges)
 
     @_locked_writer(lambda self, fn, dest: dest)
     def map_blocks(self, fn, dest: "Volume") -> None:
@@ -1587,7 +1590,7 @@ class Volume:
         rr = raw.agg(F.count("*").alias("rows"),
                      F.sum(F.length("payload")).alias("bytes"),
                      F.countDistinct("epoch").alias("n_epochs")).collect()[0]
-        lr = (self._latest(raw)
+        lr = (self.live_chunks(mip=m)
               .agg(F.count("*").alias("stored"),
                    F.sum(F.length("payload")).alias("bytes"))
               .collect()[0])
@@ -1624,10 +1627,12 @@ class Volume:
           wrong-aspect images); ``error`` holds the
           ``ChunkDecodeError`` message.
 
-        Scale shape: inherits the scan's partitioning, no shuffle
-        beyond `_latest`'s (skipped entirely for uncompacted
-        write-once data); nothing touches the driver — filter
-        ``ok = false`` and count/collect as needed.
+        Every stored row is audited, ids outside the volume included
+        (``live_chunks`` with no request).  Scale shape: inherits the
+        scan's partitioning, no shuffle beyond the epoch dedupe's
+        (skipped entirely for uncompacted write-once data); nothing
+        touches the driver — filter ``ok = false`` and count/collect
+        as needed.
         """
         m = self.mip if mip is None else mip
         sc = self.info.scale(m)
@@ -1666,7 +1671,7 @@ class Volume:
                                     "ok": [e is None for e in errs],
                                     "error": errs})
 
-        return self._latest(self.chunks_df(m)).mapInPandas(
+        return self.live_chunks(mip=m).mapInPandas(
             _on_workers(audit),
             "key string, enc string, ok boolean, error string")
 
@@ -1755,7 +1760,7 @@ class Volume:
                                                - dst_anchor[axis]))
                 return F.floor(g / dcs[axis]).cast("int")
 
-            keyed = self._latest(self.chunks_df()).select(
+            keyed = self.live_chunks().select(
                 _dst_id("cx", 0).alias("dcx"),
                 _dst_id("cy", 1).alias("dcy"),
                 _dst_id("cz", 2).alias("dcz"),
@@ -1847,56 +1852,57 @@ class Volume:
         to mip+1 too), so resetting it is only sound once no mip retains
         multi-epoch history.
 
-        Where the driver-local path applies (see ``local_io``) each mip
-        is folded on the driver with no Spark job (``_fold_mip_local``);
-        every other dataset folds through a Spark ``max_by`` shuffle.
+        Each mip is rewritten by ``_fold_mip``: on the driver with no
+        Spark job where the driver-local path applies (see
+        ``local_io``), through a Spark ``max_by`` shuffle elsewhere.
         """
         if self._current_epoch() <= 0:
             return  # already single-epoch everywhere
         for m in range(len(self.info.scales)):
-            if not _fs_exists(self.spark, self._mip_dir(m)):
-                continue
-            if self._local_chunks_dir(m) is not None:
-                self._fold_mip_local(m)
-                continue
-            self._rewrite_mip(
-                self._latest(self.chunks_df(m))
-                    .withColumn("epoch", F.lit(0).cast("bigint"))
-                    .select("cx", "cy", "cz", "key", "enc", "epoch", "payload"),
-                mip=m)
+            self._fold_mip(m)
         _fs_write_bytes(self.spark, self.root + "/_epoch", b"0")
 
-    def _fold_mip_local(self, mip: int) -> None:
-        """Driver-local compaction of one mip, the reference's per-object
-        overwrite (src/backends/BinDicts.jl:24-48) applied to a whole
-        mip: the chunk index streams each key's latest payload, still
-        encoded (each row keeps its own ``enc``), into ``<mip>.tmp`` at
-        epoch 0 in batches of at most ``chunk_index.FOLD_BATCH_BYTES``
-        (one part file per batch), then the rename-swap puts it live.
-        A byte copy: no decode, no re-encode, no Spark job.  Once the
-        swap has succeeded, the decoded blocks of the folded chunks move
-        to their rows in the new files (``chunk_index.carry_over``); a
-        fold or swap that raises moves nothing."""
+    def _fold_mip(self, mip: int, drop=None) -> None:
+        """The one mip rewrite, behind ``compact`` and ``delete``: the
+        latest row of every key whose chunk id lies outside the optional
+        ``drop`` id ranges goes into ``<mip>.tmp`` at epoch 0, which
+        ``_swap_mip_dir`` puts live.  A mip with no directory is skipped.
+
+        Where the driver-local path applies (see ``local_io``) the chunk
+        index streams the kept payloads, still encoded (each row keeps
+        its own ``enc``), in batches of at most
+        ``chunk_index.FOLD_BATCH_BYTES`` (one part file per batch): a
+        byte copy with no decode and no Spark job.  Once the swap has
+        succeeded, the decoded blocks of the kept chunks move to their
+        rows in the new files (``chunk_index.carry_over``); a fold or
+        swap that raises moves nothing.  Every other dataset folds
+        ``live_chunks(mip=mip)`` less the ``drop`` box through Spark."""
         self._recover_mip(mip)  # roll back any earlier crashed swap first
+        final = self._mip_dir(mip)
+        if not _fs_exists(self.spark, final):
+            return
         d = self._local_chunks_dir(mip)
-        tmp = d + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)   # a crashed fold's leftover
-        os.makedirs(tmp)
-        raw = self.info.scale(mip).encoding == "raw"
-        written = [(_write_part_local(tmp, batch, 0, raw),
-                    [r[6] for r in batch])
-                   for batch in self._chunk_index(d).fold()]
+        written = []
+        if d is not None:
+            tmp = d + ".tmp"
+            shutil.rmtree(tmp, ignore_errors=True)  # a crashed fold's leftover
+            os.makedirs(tmp)
+            raw = self.info.scale(mip).encoding == "raw"
+            written = [(_write_part_local(tmp, batch, 0, raw),
+                        [r[6] for r in batch])
+                       for batch in self._chunk_index(d).fold(drop)]
+        else:
+            live = self.live_chunks(mip=mip)
+            if drop is not None:
+                live = live.filter(~_in_ids(drop))
+            self._write_chunks(
+                live.select("cx", "cy", "cz", "key", "enc",
+                            F.lit(0).cast("bigint").alias("epoch"),
+                            "payload"),
+                mip=mip, mode="overwrite", path=final + ".tmp")
         self._swap_mip_dir(mip)
         for name, sources in written:
             carry_over(os.path.join(d, name), sources)
-
-    def _rewrite_mip(self, df: DataFrame, mip: int | None = None) -> None:
-        """Replace a mip directory with the rows of ``df``, written by
-        Spark into ``<mip>.tmp`` and swapped in by ``_swap_mip_dir``."""
-        self._recover_mip(mip)  # roll back any earlier crashed swap first
-        self._write_chunks(df, mip=mip, mode="overwrite",
-                           path=self._mip_dir(mip) + ".tmp")
-        self._swap_mip_dir(mip)
 
     def _swap_mip_dir(self, mip: int | None = None) -> None:
         """Put ``<mip>.tmp`` live via rename-swap, never delete-then-
@@ -1908,25 +1914,11 @@ class Volume:
         dataset's only copy lives in a ``.tmp`` no reader looks at."""
         final = self._mip_dir(mip)
         old = final + ".old"
-        tmp = final + ".tmp"
-        if _is_local(final):
-            fp, op, tp = (_strip_file_scheme(p) for p in (final, old, tmp))
-            shutil.rmtree(op, ignore_errors=True)
-            if os.path.exists(fp):
-                os.rename(fp, op)
-            os.rename(tp, fp)
-            shutil.rmtree(op, ignore_errors=True)
-        else:  # pragma: no cover - cloud path
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            P = jvm.org.apache.hadoop.fs.Path
-            src, dst, aside = P(tmp), P(final), P(old)
-            fs = dst.getFileSystem(conf)
-            fs.delete(aside, True)
-            if fs.exists(dst):
-                fs.rename(dst, aside)
-            fs.rename(src, dst)
-            fs.delete(aside, True)
+        _fs_delete(self.spark, old, tree=True)
+        if _fs_exists(self.spark, final):
+            _fs_rename(self.spark, final, old)
+        _fs_rename(self.spark, final + ".tmp", final)
+        _fs_delete(self.spark, old, tree=True)
 
     def _recover_mip(self, mip: int | None = None) -> None:
         """If a prior rewrite crashed between its two renames (live dir
@@ -1934,13 +1926,7 @@ class Volume:
         final = self._mip_dir(mip)
         old = final + ".old"
         if _fs_exists(self.spark, old) and not _fs_exists(self.spark, final):
-            if _is_local(final):
-                os.rename(_strip_file_scheme(old), _strip_file_scheme(final))
-            else:  # pragma: no cover - cloud path
-                jvm = self.spark._jvm
-                conf = self.spark._jsc.hadoopConfiguration()
-                P = jvm.org.apache.hadoop.fs.Path
-                P(old).getFileSystem(conf).rename(P(old), P(final))
+            _fs_rename(self.spark, old, final)
 
     # -- mip pyramid build (extension of A5: the reference generates only
     #    *metadata* for mips; we also produce the pixels) --------------------

@@ -1,10 +1,11 @@
-"""Driver-local compaction (``Volume.compact`` under ``local_io``): the
-chunk index folds overwrite history on the driver, a byte copy with no
+"""Driver-local compaction and delete (``Volume.compact`` and
+``Volume.delete`` under ``local_io``): the chunk index folds overwrite
+history on the driver, less a deleted chunk-id box, a byte copy with no
 Spark job.  It must keep exactly the rows the Spark fold keeps, write
 one chunk per row group sorted by (cz, cy, cx) in bounded batches, and
-leave the dataset readable after a crash at any step.  Metadata files
-(``info``, ``_epoch``) are replaced atomically.  Every case is checked
-against a numpy mirror."""
+leave the dataset readable after a crash at any step, on the Python and
+on the Hadoop-FS swap alike.  Metadata files (``info``, ``_epoch``) are
+replaced atomically.  Every case is checked against a numpy mirror."""
 import errno
 import os
 import shutil
@@ -13,7 +14,8 @@ import tracemalloc
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
-from test_chunk_index import _arr, _check, _chunk_rows, _info, _write_rows
+from test_chunk_index import (_arr, _check, _chunk_rows, _count_decodes,
+                              _info, _write_rows, decoded)  # noqa: F401
 
 from bigarrays_jl_spark import chunk_index
 from bigarrays_jl_spark import indexes as ix
@@ -63,7 +65,7 @@ def _rows(d):
     out = []
     for p in list_part_files(d):
         t = pq.read_table(p)
-        assert set(t["epoch"].to_pylist()) == {0}
+        assert set(t["epoch"].to_pylist()) <= {0}
         out += zip(*(t[c].to_pylist()
                      for c in ("cx", "cy", "cz", "key", "enc", "payload")))
     return sorted(out)
@@ -85,6 +87,42 @@ def _spans(d):
 
 def _disjoint(spans):
     return all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+
+
+DOOMED = ((20, 70), (0, 40), (60, 128))     # chunk ids 0-2 x 0-1 x 1-3
+
+
+def _delete(vol, mirror, box=DOOMED):
+    """Delete ``box`` from ``vol`` and zero its chunks in ``mirror``."""
+    vol.delete(box)
+    sc = vol.scale
+    for cs in ix.iter_chunk_slices(ix.intersect_box(box, vol.vol_box),
+                                   sc.voxel_offset, sc.volume_size,
+                                   sc.chunk_size):
+        mirror[tuple(slice(lo, hi) for lo, hi in cs.chunk_box)] = 0
+
+
+def _audit(vol, mirror):
+    """``fsck()`` passes every live chunk, and the live chunks are the
+    chunks of ``mirror`` that hold data (no chunk of the mixed volumes
+    is all zeros unless deleted)."""
+    sc = vol.scale
+    want = sorted(cs.key for cs in ix.iter_chunk_slices(
+        vol.vol_box, sc.voxel_offset, sc.volume_size, sc.chunk_size)
+        if mirror[tuple(slice(lo, hi) for lo, hi in cs.chunk_box)].any())
+    rows = vol.fsck().collect()
+    assert all(r.ok for r in rows), [r.error for r in rows if not r.ok]
+    assert sorted(r.key for r in rows) == want
+
+
+def _check_all(vol, mirror):
+    """Both readers and ``fsck()`` against ``mirror``."""
+    local = vol.local_io
+    for each in (True, False):
+        vol.local_io = each
+        _check(vol, mirror)
+    vol.local_io = local
+    _audit(vol, mirror)
 
 
 def test_local_fold_matches_spark_fold(spark, tmp_path):
@@ -181,6 +219,82 @@ def test_local_compaction_starts_no_spark_jobs(spark, tmp_path):
     assert run(False, "spark-fold")       # the check sees Spark's jobs
 
 
+def test_local_delete_matches_spark_delete(spark, tmp_path):
+    """A delete folds its mip less the doomed box: the local fold and
+    the Spark rewrite leave the same rows, all at epoch 0, and leave
+    the dataset's epoch counter alone."""
+    a, mirror = _mixed_volume(spark, str(tmp_path / "a"))
+    shutil.copytree(a.root, str(tmp_path / "b"))
+    b = Volume.open(spark, str(tmp_path / "b"))
+    b.local_io = False
+    _delete(a, mirror)
+    b.delete(DOOMED)
+    rows = _rows(a._mip_dir())
+    assert rows == _rows(b._mip_dir())
+    assert len(rows) == 64 - 18 and len({r[3] for r in rows}) == len(rows)
+    assert {r[4] for r in rows} == {"gzip", "raw"}     # each row's own enc
+    _spans(b._mip_dir())
+    assert len(_spans(a._mip_dir())) == 1
+    for vol in (a, b):
+        assert vol._current_epoch() == 4
+        assert not os.path.exists(vol._mip_dir() + ".tmp")
+        _check_all(vol, mirror)
+
+
+def test_local_delete_starts_no_spark_jobs_and_decodes_nothing(
+        spark, tmp_path, monkeypatch, decoded):
+    """A local delete is a byte copy on the driver: no Spark job, and
+    the surviving chunks keep their decoded blocks, so a cutout of them
+    right after it decodes nothing."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    kept = ((0, 128), (64, 128), (0, 128))      # chunks DOOMED misses
+
+    def run(local, group):
+        vol = Volume.create(spark, str(tmp_path / group), _info())
+        vol.local_io = local
+        vol.auto_compact_epochs = None
+        mirror = _arr((128, 128, 128), 100)
+        vol.write(mirror, (0, 0, 0))
+        block = _arr((64, 64, 32), 101)
+        vol.write(block, (32, 32, 0))
+        mirror[32:96, 32:96, 0:32] = block
+        vol.local_io = True
+        _check(vol, mirror)                     # every chunk cached
+        vol.local_io = local
+        sc.setJobGroup(group, "delete under test")
+        try:
+            _delete(vol, mirror)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        vol.local_io = True
+        with monkeypatch.context() as mp:
+            calls = _count_decodes(mp)
+            out, _ = vol.cutout(kept)
+        assert np.array_equal(out, mirror[:, 64:128, :])
+        _check_all(vol, mirror)
+        return tracker.getJobIdsForGroup(group), calls[0]
+
+    assert run(True, "local-delete") == ([], 0)
+    jobs, calls = run(False, "spark-delete")
+    assert jobs and calls > 0           # the checks see Spark's jobs and
+                                        # the decodes of swapped-in files
+
+
+def test_delete_everything_leaves_empty_mip(spark, tmp_path):
+    for local in (True, False):
+        vol, mirror = _mixed_volume(spark, str(tmp_path / str(local)))
+        vol.local_io = local
+        _delete(vol, mirror, ((-10, 200), (0, 128), (0, 128)))
+        assert not mirror.any()
+        assert _rows(vol._mip_dir()) == []
+        assert vol.keys() == []
+        _check_all(vol, mirror)
+        vol.write(_arr((32, 32, 32), 102), (0, 0, 0))   # still writable
+        assert len(vol.keys()) == 1
+
+
 # -- crash injection ----------------------------------------------------------
 
 def _inject_part_write(mp):
@@ -220,12 +334,19 @@ def _inject_before_epoch_reset(mp):
     mp.setattr(volume_mod, "_fs_write_bytes", write_bytes)
 
 
-@pytest.mark.parametrize("inject,leaves_tmp", [
-    (_inject_part_write, True),
-    (_inject_between_renames, True),
-    (_inject_before_epoch_reset, False)])
+@pytest.mark.parametrize("inject,leaves_tmp,op", [
+    pytest.param(_inject_part_write, True, "compact",
+                 id="_inject_part_write-True"),
+    pytest.param(_inject_between_renames, True, "compact",
+                 id="_inject_between_renames-True"),
+    pytest.param(_inject_before_epoch_reset, False, "compact",
+                 id="_inject_before_epoch_reset-False"),
+    pytest.param(_inject_part_write, True, "delete",
+                 id="delete-_inject_part_write"),
+    pytest.param(_inject_between_renames, True, "delete",
+                 id="delete-_inject_between_renames")])
 def test_crashed_local_fold_leaves_dataset_readable(
-        spark, tmp_path, monkeypatch, inject, leaves_tmp):
+        spark, tmp_path, monkeypatch, inject, leaves_tmp, op):
     root = str(tmp_path / "v")
     vol = Volume.create(spark, root, _info())
     vol.auto_compact_epochs = None
@@ -241,22 +362,82 @@ def test_crashed_local_fold_leaves_dataset_readable(
     with monkeypatch.context() as mp:
         inject(mp)
         with pytest.raises(OSError, match="injected"):
-            vol.compact()
+            vol.compact() if op == "compact" else vol.delete(DOOMED)
     assert os.path.isdir(d + ".tmp") == leaves_tmp
     reopened = Volume.open(spark, root)
     assert not os.path.exists(d + ".old")
-    for local in (True, False):
-        reopened.local_io = local
-        _check(reopened, mirror)
+    _check_all(reopened, mirror)
     _check(vol, mirror)                     # the crashed handle's index
     reopened.local_io = True
-    reopened.compact()
+    if op == "compact":
+        reopened.compact()
+    else:
+        _delete(reopened, mirror)
     assert not os.path.exists(d + ".tmp")
     assert not os.path.exists(d + ".old")
-    assert reopened._current_epoch() == 0
-    assert len(_rows(d)) == 64 and _disjoint(_spans(d))
-    _check(reopened, mirror)
+    assert reopened._current_epoch() == (0 if op == "compact" else 3)
+    assert len(_rows(d)) == (64 if op == "compact" else 64 - 18)
+    assert _disjoint(_spans(d))
+    _check_all(reopened, mirror)
     _check(Volume.open(spark, root), mirror)
+
+
+def test_hadoop_fs_swap_and_recovery(spark, tmp_path, monkeypatch):
+    """With every path taken for a non-local one, ``compact``,
+    ``delete`` and the recovery from a crash between the two renames
+    of the swap run through Hadoop's FileSystem API (here its local
+    file system), and leave what the Python branches leave."""
+    root = "file://" + str(tmp_path / "v")
+    d = str(tmp_path / "v" / "chunks" / "mip=1_1_1")
+    renames, crash = [], []
+    real_rename = volume_mod._fs_rename
+
+    def rename(spark, src, dst):
+        renames.append(src)
+        if src.endswith(".tmp") and crash:
+            crash.pop()
+            raise OSError(errno.EIO, "injected: crash between renames")
+        return real_rename(spark, src, dst)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(volume_mod, "_is_local", lambda path: False)
+        mp.setattr(volume_mod, "_fs_rename", rename)
+        mp.setattr(os, "rename", None)           # no Python rename runs
+        vol = Volume.create(spark, root, _info())
+        vol.auto_compact_epochs = None
+        mirror = _arr((128, 128, 128), 110)
+        vol.write(mirror, (0, 0, 0))
+        for i, off in enumerate([(0, 0, 0), (32, 64, 32), (0, 0, 0)]):
+            block = _arr((64, 32, 32), 111 + i)
+            vol.write(block, off)
+            mirror[tuple(slice(o, o + s) for o, s in
+                         zip(off, block.shape))] = block
+        vol.compact()
+        assert vol._current_epoch() == 0
+        _check(vol, mirror)
+        _delete(vol, mirror)
+        assert vol._current_epoch() == 0
+        _check(vol, mirror)
+        _audit(vol, mirror)
+        assert renames == [d.join(("file://", "")),
+                           d.join(("file://", ".tmp"))] * 2
+        block = _arr((32, 32, 32), 120)
+        vol.write(block, (96, 96, 96))
+        mirror[96:, 96:, 96:] = block
+        crash.append(True)
+        with pytest.raises(OSError, match="injected"):
+            vol.compact()
+        assert os.path.isdir(d + ".old") and not os.path.exists(d)
+        reopened = Volume.open(spark, root)      # rolls back the swap
+        assert not os.path.exists(d + ".old")
+        _check(reopened, mirror)
+        _audit(reopened, mirror)
+        reopened.compact()
+        assert reopened._current_epoch() == 0
+        assert not os.path.exists(d + ".tmp")
+        _check(reopened, mirror)
+    assert len(_rows(d)) == 64 - 18
+    _check_all(Volume.open(spark, root), mirror)
 
 
 def test_metadata_writes_are_atomic(spark, tmp_path, monkeypatch):

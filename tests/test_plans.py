@@ -2,6 +2,9 @@
 engine viable at 100 TB (pushdown, broadcast, partial agg, heap top-k,
 chunk pruning at the scan)."""
 
+import glob
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -416,18 +419,19 @@ def test_delete_plans_range_predicates(spark, tmp_path, monkeypatch):
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0], "size": [1000, 1000, 400]}]})
     vol = Volume.create(spark, str(tmp_path / "bigdel"), info)
+    vol.local_io = False        # the Spark rewrite; locally a numpy mask
     vol.write(np.full((10, 10, 4), 7, dtype=np.uint8), (0, 0, 0))       # doomed
     vol.write(np.full((10, 10, 4), 9, dtype=np.uint8), (990, 990, 396))  # kept
     captured = {}
-    orig = vol._rewrite_mip
+    orig = vol._write_chunks
 
-    def spy(df, mip=None):
-        captured["df"] = df
-        return orig(df, mip)
+    def spy(df, mip=None, mode="append", path=None):
+        captured[mode] = df
+        return orig(df, mip, mode, path)
 
-    monkeypatch.setattr(vol, "_rewrite_mip", spy)
+    monkeypatch.setattr(vol, "_write_chunks", spy)
     vol.delete(((0, 950), (0, 950), (0, 390)))  # 95*95*98 ≈ 884k doomed ids
-    plan = simple_plan(captured["df"])
+    plan = simple_plan(captured["overwrite"])   # the frame _fold_mip writes
     assert "cx" in plan and "cy" in plan and "cz" in plan, plan
     # no In-expression proportional to the doomed chunk count
     assert len(plan) < 20_000, f"plan size {len(plan)} suggests an In-list"
@@ -446,9 +450,17 @@ def test_delete_empty_intersection_is_noop(spark, tmp_path, monkeypatch):
     vol = Volume.create(spark, str(tmp_path / "noopdel"), info)
     vol.write(np.full((20, 20, 8), 3, dtype=np.uint8), (0, 0, 0))
     calls = []
-    monkeypatch.setattr(vol, "_rewrite_mip", lambda df, mip=None: calls.append(df))
+    monkeypatch.setattr(vol, "_fold_mip", lambda *a, **kw: calls.append(a))
+
+    def listing():
+        return sorted((p, os.stat(p).st_mtime_ns)
+                      for p in glob.glob(vol.root + "/**", recursive=True)
+                      if os.path.isfile(p))
+
+    before = listing()
     vol.delete(((500, 600), (0, 10), (0, 4)))  # outside the volume
     assert calls == []  # no rewrite triggered
+    assert listing() == before                  # no file changed
     assert len(vol.keys()) == 8
 
 

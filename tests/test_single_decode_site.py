@@ -4,7 +4,9 @@ closure through one worker bootstrap: an AST scan of the package fails
 on a hand-rolled copy of any of them, so a fix to the decode or encode
 path (the jpeg aspect guard, the byte-count checks, error context naming
 the chunk) cannot miss a read or write path again, and no module outside
-``volume.py`` knows how live chunks are selected."""
+``volume.py`` knows how live chunks are selected.  Inside ``volume.py``
+the epoch dedupe has one caller, ``live_chunks``, and a mip is replaced
+by one rewrite, ``_fold_mip``, behind both ``compact`` and ``delete``."""
 import ast
 import os
 
@@ -40,6 +42,13 @@ ENCODE_SITES = {("volume.py", "encode_chunk")}
 # chunk-table selection that only volume.py may know about
 PRIVATE_SCANS = {"_latest", "_pruned", "_sources_subset"}
 
+# (method called, the one volume.py method allowed to call it): the
+# live-chunk selection and the mip rewrite ("_write_chunks" stands for
+# a call with a mode other than "append")
+VOLUME_ONLY_FROM = {"_latest": "live_chunks",
+                    "_swap_mip_dir": "_fold_mip",
+                    "_write_chunks": "_fold_mip"}
+
 
 def _is_get_codec(node):
     f = node.func if isinstance(node, ast.Call) else None
@@ -56,6 +65,7 @@ class _Scan(ast.NodeVisitor):
         self.bootstraps, self.decodes = [], []
         self.chunk_loops, self.chunk_decodes = [], []
         self.encodes, self.private = [], []
+        self.volume_calls = []              # (name, rel, fns, line)
 
     def visit_FunctionDef(self, node):
         self.stack.append(node.name)
@@ -109,7 +119,27 @@ class _Scan(ast.NodeVisitor):
         if name == "decode_chunk":
             (self.chunk_loops if self.loops[-1] else
              self.chunk_decodes).append(where)
+        if name in VOLUME_ONLY_FROM and not (
+                name == "_write_chunks" and _appends(node)):
+            self.volume_calls.append((name, *where))
         self.generic_visit(node)
+
+
+def _appends(call):
+    """Whether a ``_write_chunks`` call keeps the default append mode."""
+    mode = [k.value for k in call.keywords if k.arg == "mode"]
+    if len(call.args) > 2:
+        mode.append(call.args[2])
+    return all(isinstance(m, ast.Constant) and m.value == "append"
+               for m in mode)
+
+
+def _volume_violations(scan):
+    """Calls of ``VOLUME_ONLY_FROM`` names in ``volume.py`` from any
+    other method than the one allowed."""
+    return [(name, fns, ln) for name, rel, fns, ln in scan.volume_calls
+            if rel == "volume.py"
+            and (fns[0] if fns else None) != VOLUME_ONLY_FROM[name]]
 
 
 def _scan():
@@ -126,7 +156,8 @@ def _scan():
                 scan = _Scan(rel)
                 scan.visit(ast.parse(f.read(), path))
             for found in ("bootstraps", "decodes", "chunk_loops",
-                          "chunk_decodes", "encodes", "private"):
+                          "chunk_decodes", "encodes", "private",
+                          "volume_calls"):
                 getattr(out, found).extend(getattr(scan, found))
     return out
 
@@ -157,6 +188,14 @@ def test_one_chunk_scan():
         scan.chunk_decodes
     assert [p for p in scan.private if p[0] != "volume.py"] == [], \
         scan.private
+
+
+def test_one_live_chunk_selection_and_one_mip_rewrite():
+    scan = _scan()
+    assert _volume_violations(scan) == [], scan.volume_calls
+    # each of them is still called, from where it is allowed
+    assert {(name, fns[0]) for name, rel, fns, _ in scan.volume_calls
+            if rel == "volume.py"} == set(VOLUME_ONLY_FROM.items())
 
 
 def test_one_chunk_encode_site():
@@ -203,3 +242,27 @@ def op(vol, req, pool, x):
     assert [ln for _, _, ln in scan.chunk_decodes] == [10]
     assert _sites(scan.chunk_loops) == [("operators/x.py", "op")]
     assert [ln for _, _, ln in scan.encodes] == [12, 13, 14]
+
+    src = '''
+class Volume:
+    def live_chunks(self, request=None):
+        return self._latest(self._pruned(request))
+
+    def stats(self, m):
+        return self._latest(self.chunks_df(m)).count()
+
+    def _fold_mip(self, mip, drop=None):
+        self._write_chunks(df, mip=mip, mode="overwrite", path=tmp)
+        self._swap_mip_dir(mip)
+
+    def delete(self, ranges):
+        self._write_chunks(df, None, "overwrite")
+        self._swap_mip_dir(self.mip)
+        self._write_chunks(df)
+        self._write_chunks(df, mode="append")
+'''
+    scan = _Scan("volume.py")
+    scan.visit(ast.parse(src))
+    assert _volume_violations(scan) == [
+        ("_latest", ["stats"], 7), ("_write_chunks", ["delete"], 14),
+        ("_swap_mip_dir", ["delete"], 15)]
