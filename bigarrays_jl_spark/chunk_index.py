@@ -3,14 +3,17 @@
 A cutout needs only the chunks its box touches (the reference fetches
 exactly those objects, src/type.jl:212-223).  Instead of scanning the
 mip's part files on every call, a ``ChunkIndex`` keeps, per part file,
-the id columns of every row (``cx, cy, cz, key, enc, epoch``) and each
-row's row group.  Whenever the set of part files changes it resolves
-the latest epoch of every key once, into one winner table sorted by
-(cz, cy, cx); a key stored twice at the same epoch resolves to the
-first file in listing order, and to the first row within it.  A lookup
-is then one numpy mask of that table over the chunk-id box, followed
-by a read of only the ``payload`` column of the row groups that hold
-the selected winners.  Both writers put one chunk in each row group,
+the id columns of every row (``cx, cy, cz, key, enc, epoch``), each
+row's row group, and each row's chunk box, parsed from its key once
+when the file is indexed (``parse_chunk_keys``, vectorised).  Whenever
+the set of part files changes it resolves the latest epoch of every
+key once, into one winner table sorted by (cz, cy, cx); a key stored
+twice at the same epoch resolves to the first file in listing order,
+and to the first row within it.  A lookup is then one numpy mask of
+that table over the chunk-id box and one probe of the decoded cache
+(below); it returns the boxes and blocks of the hits as they are, and
+reads keys, and only the ``payload`` column of the row groups that
+hold them, for the misses alone.  Both writers put one chunk in each row group,
 so that read is exactly the k payloads; files in the older layout
 (many chunks per row group) still read correctly, at whole-row-group
 granularity.
@@ -19,7 +22,11 @@ Staying current: part files are immutable and uuid-named, so every
 lookup lists the directory and keys its entries by
 ``(path, size, mtime_ns)``.  Files that disappeared (a compaction swap)
 are dropped and new files are indexed once, which also picks up writes
-from other handles and processes.  Discovery follows
+from other handles and processes.  A driver-local write, compaction or
+delete hands the index the id columns and footer of each file it has
+just put in place (``ChunkIndex.add``), so only files written by
+another handle or process are read back; a registered file rewritten
+in place differs in size or mtime and is read again.  Discovery follows
 ``pyarrow.dataset``'s rules: recurse into subdirectories and skip names
 starting with ``.`` or ``_`` (Spark's ``_SUCCESS`` and ``.crc`` files).
 
@@ -33,10 +40,11 @@ folded chunks can follow them into the new files (see below).
 ``has_duplicates`` is the auto-compaction probe: it compares the
 winner count with the stored row count and reads no payload.
 
-Memory: the ids cost about 70 B per chunk of the files present (65 B
-with 25-character keys), no payloads, and the winner table about 45 B
-more per live chunk; a rebuild briefly holds a few arrays of one
-entry per stored row.  A parsed Parquet footer costs ~5 KB per row
+Memory: the ids cost about 95 B per chunk of the files present (90 B
+with 25-character keys: 24 B of it the parsed box), no payloads, and
+the winner table about 45 B more per live chunk (24 B of it the
+boxes); a rebuild briefly holds a few arrays of one entry per stored
+row.  A parsed Parquet footer costs ~5 KB per row
 group in memory, so footers live in an LRU bounded at
 ``FOOTER_CACHE_ROW_GROUPS`` row groups in total; a file whose footer
 was evicted (or never fit) re-reads it when a lookup next needs one of
@@ -67,8 +75,10 @@ entries of every file under the directory that the listing no longer
 holds in the version cached, so nothing of a swapped-out, deleted or
 rewritten file is left, whoever removed it (a writer's blocks outlive
 its files when the dataset is removed and re-created); a file
-rewritten in place misses on its new size and mtime in any case.  On an unchanged or locally rewritten volume, steady-state
-cutouts therefore read and decode no payload at all.
+rewritten in place misses on its new size and mtime in any case.  On
+an unchanged or locally rewritten volume, steady-state cutouts
+therefore open no part file: they read and decode no payload and
+index no file from disk.
 """
 
 from __future__ import annotations
@@ -76,11 +86,14 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+from bigarrays_jl_spark import indexes as ix
 
 ID_COLUMNS = ["cx", "cy", "cz", "key", "enc", "epoch"]
 
@@ -114,27 +127,58 @@ def list_part_files(directory: str) -> dict[str, tuple[int, int]]:
     return out
 
 
+_BOUNDS = ("x0", "x1", "y0", "y1", "z0", "z1")
+_INT32 = np.iinfo(np.int32)
+
+
+def parse_chunk_keys(keys: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """``(box, ok)`` of a string array of chunk keys, vectorised:
+    ``box[i]`` is the ``(3, 2)`` int32 box ``indexes.parse_chunk_key``
+    makes of key i, and ``ok[i]`` is False where it cannot be had here:
+    a key the grammar refuses, a bound outside int32, or a key only
+    Python's ``re`` accepts (non-ASCII digits, a trailing newline).
+    Such rows get a zero box; lookups send them down the miss path,
+    whose decode parses the key itself and raises naming it."""
+    m = pc.extract_regex(keys, pattern=ix.KEY_PATTERN)
+    ok = m.is_valid().to_numpy(zero_copy_only=False)
+    # bounds by field, "" where the key did not match
+    flat = pa.concat_arrays([m.field(b) for b in _BOUNDS])
+    # a sign and at most 10 digits: int64 holds it, int32 may
+    ok &= (pc.utf8_length(flat).to_numpy(zero_copy_only=False)
+           <= 11).reshape(6, -1).all(axis=0)
+    bounds = pc.cast(flat.filter(pa.array(np.tile(ok, 6))), pa.int64())
+    bounds = bounds.to_numpy().reshape(6, -1).T
+    fits = ((bounds >= _INT32.min) & (bounds <= _INT32.max)).all(axis=1)
+    box = np.zeros((len(ok), 6), dtype=np.int32)
+    box[np.flatnonzero(ok)[fits]] = bounds[fits]
+    ok[ok] = fits
+    return box.reshape(-1, 3, 2), ok
+
+
 class _PartFile:
-    """The id columns of one part file.  ``enc`` holds codes into
-    ``enc_names``; ``rg_start`` holds each row group's first row and
-    ``rg_bytes`` the size of its ``payload`` column chunk."""
+    """The id columns of one part file, from its ``ID_COLUMNS`` table
+    ``ids`` and parsed ``footer``, whether ``ChunkIndex._refresh`` read
+    them from disk or the writer handed them over (``ChunkIndex.add``).
+    ``enc`` holds codes into ``enc_names``; ``box`` and ``ok`` hold each
+    row's chunk box parsed from its key (``parse_chunk_keys``);
+    ``rg_start`` holds each row group's first row and ``rg_bytes`` the
+    size of its ``payload`` column chunk."""
 
-    __slots__ = ("sig", "cid", "epoch", "key", "enc", "enc_names",
-                 "rg_start", "rg_bytes")
+    __slots__ = ("sig", "cid", "epoch", "key", "enc", "enc_names", "box",
+                 "ok", "rg_start", "rg_bytes")
 
-    def __init__(self, sig: tuple[int, int], pf: pq.ParquetFile) -> None:
-        ids = pf.read(columns=ID_COLUMNS)
-        md = pf.metadata
+    def __init__(self, sig: tuple[int, int], ids: pa.Table, footer) -> None:
         self.sig = sig
         self.cid = np.stack([ids.column(c).to_numpy().astype(np.int32)
                              for c in ("cx", "cy", "cz")])
         self.epoch = ids.column("epoch").to_numpy().astype(np.int64)
         self.key = ids.column("key").combine_chunks()
+        self.box, self.ok = parse_chunk_keys(self.key)
         enc = pc.dictionary_encode(ids.column("enc").combine_chunks())
         self.enc = enc.indices.to_numpy()
         self.enc_names = enc.dictionary.to_pylist()
-        rgs = [md.row_group(i) for i in range(md.num_row_groups)]
-        payload = md.schema.names.index("payload")
+        rgs = [footer.row_group(i) for i in range(footer.num_row_groups)]
+        payload = footer.schema.names.index("payload")
         sizes = np.array([g.num_rows for g in rgs], dtype=np.int32)
         self.rg_start = np.cumsum(sizes, dtype=np.int32) - sizes
         self.rg_bytes = np.array(
@@ -158,20 +202,22 @@ class _DecodedCache:
         self.hits = self.misses = 0
         self._lock = threading.Lock()
 
-    def get(self, ident: tuple, nc: int, dtype: np.dtype):
-        """The block cached for ``ident`` when it holds ``nc`` channels
-        of ``dtype``, else None."""
+    def get_many(self, idents: list, nc: int, dtype: np.dtype):
+        """``(at, blocks)``: the positions in ``idents`` whose block is
+        cached as ``nc`` channels of ``dtype``, and those blocks, which
+        become the most recently used.  One lock acquisition."""
+        at, blocks = [], []
         with self._lock:
-            block = self._blocks.get(ident)
-            if block is not None and (block.dtype != dtype
-                                      or block.shape[3] != nc):
-                block = None
-            if block is None:
-                self.misses += 1
-            else:
-                self.hits += 1
-                self._blocks.move_to_end(ident)
-            return block
+            for i, ident in enumerate(idents):
+                block = self._blocks.get(ident)
+                if (block is not None and block.dtype == dtype
+                        and block.shape[3] == nc):
+                    self._blocks.move_to_end(ident)
+                    at.append(i)
+                    blocks.append(block)
+            self.hits += len(at)
+            self.misses += len(idents) - len(at)
+        return np.array(at, dtype=np.intp), blocks
 
     def put(self, ident: tuple, block: np.ndarray) -> None:
         with self._lock:
@@ -210,35 +256,32 @@ class _DecodedCache:
 _decoded = _DecodedCache()
 
 
-def _idents(path: str, n: int) -> list[tuple]:
-    """The decoded-cache idents of rows ``0..n-1`` of the part file at
-    ``path``, from one ``os.stat``."""
-    st = os.stat(path)
-    return [(path, st.st_size, st.st_mtime_ns, row) for row in range(n)]
-
-
-def cache_written(path: str, blocks: list) -> None:
+def cache_written(path: str, sig: tuple[int, int], blocks: list) -> None:
     """Write-through: cache ``blocks[i]``, the voxels written to row i
-    of the part file just put in place at ``path``, as that row's
-    decoded chunk (see the module docstring for why this is sound)."""
-    for ident, block in zip(_idents(path, len(blocks)), blocks):
-        _decoded.put(ident, block)
+    of the part file just put in place at ``path`` (whose ``(size,
+    mtime_ns)`` is ``sig``), as that row's decoded chunk (see the module
+    docstring for why this is sound)."""
+    for row, block in enumerate(blocks):
+        _decoded.put((path, *sig, row), block)
 
 
-def carry_over(path: str, sources: list) -> None:
+def carry_over(path: str, sig: tuple[int, int], sources: list) -> None:
     """After a compaction swap: move each cached block of ``sources``
     (the idents ``ChunkIndex.fold`` reported for the rows of the part
-    file now at ``path``, in its row order) to that row."""
-    _decoded.move(zip(sources, _idents(path, len(sources))))
+    file now at ``path``, whose ``(size, mtime_ns)`` is ``sig``, in its
+    row order) to that row."""
+    _decoded.move((src, (path, *sig, row))
+                  for row, src in enumerate(sources))
 
 
 class _Winners:
     """The latest-epoch row of every key stored in ``files`` (a list
     of ``(path, _PartFile)`` in listing order), sorted by (cz, cy, cx):
     winner i is row ``row[i]`` of ``files[fid[i]]``, with chunk id
-    ``cid[:, i]`` and key ``key[i]``; ``stored`` counts every row."""
+    ``cid[:, i]`` and the box ``box[i]`` parsed from its key (``ok[i]``
+    whether it parsed); ``stored`` counts every row."""
 
-    __slots__ = ("files", "fid", "row", "cid", "key", "stored")
+    __slots__ = ("files", "fid", "row", "cid", "box", "ok", "stored")
 
     def __init__(self, files: list[tuple[str, _PartFile]]) -> None:
         parts = [f for _, f in files]
@@ -247,7 +290,8 @@ class _Winners:
         if not self.stored:
             self.fid = self.row = np.empty(0, dtype=np.int32)
             self.cid = np.empty((3, 0), dtype=np.int32)
-            self.key = pa.array([], pa.string())
+            self.box = np.empty((0, 3, 2), dtype=np.int32)
+            self.ok = np.empty(0, dtype=bool)
             return
         fid = np.repeat(np.arange(len(parts), dtype=np.int32), n)
         row = np.concatenate([np.arange(k, dtype=np.int32) for k in n])
@@ -261,7 +305,8 @@ class _Winners:
         cid = np.concatenate([f.cid for f in parts], axis=1)
         win = win[np.lexsort(cid[:, win])]
         self.fid, self.row, self.cid = fid[win], row[win], cid[:, win]
-        self.key = keys.take(win)
+        self.box = np.concatenate([f.box for f in parts])[win]
+        self.ok = np.concatenate([f.ok for f in parts])[win]
 
     def in_box(self, ranges) -> np.ndarray:
         """Mask of the winners whose chunk id lies in ``ranges``
@@ -269,6 +314,12 @@ class _Winners:
         lo = np.array([r[0] for r in ranges], dtype=np.int64)[:, None]
         hi = np.array([r[1] for r in ranges], dtype=np.int64)[:, None]
         return ((self.cid >= lo) & (self.cid < hi)).all(axis=0)
+
+    def idents(self, sel: np.ndarray) -> list[tuple]:
+        """The decoded-cache idents of the winners ``sel``."""
+        pre = [(path, *f.sig) for path, f in self.files]
+        return [(*pre[f], r) for f, r
+                in zip(self.fid[sel].tolist(), self.row[sel].tolist())]
 
     def by_file(self, sel: np.ndarray):
         """``(path, part file, rows, at)`` per file holding one of the
@@ -282,48 +333,64 @@ class _Winners:
             yield path, f, self.row[sel[at]], at
 
 
+class Lookup(NamedTuple):
+    """What ``ChunkIndex.latest_decoded`` found: ``boxes[i]`` (an
+    ``(h, 3, 2)`` int32 array) is the global box of the i-th winner the
+    decoded cache holds and ``blocks[i]`` its cached block; ``misses``
+    are the other winners as ``fold`` rows ``(cx, cy, cz, key, enc,
+    payload, ident)``, payloads read."""
+
+    boxes: np.ndarray
+    blocks: list
+    misses: list
+
+
 class ChunkIndex:
-    """Chunk index over one mip directory (see the module docstring)."""
+    """Chunk index over one mip directory (see the module docstring).
+    ``files_read`` counts the part files it has indexed from disk,
+    ``files_added`` those writers handed over."""
 
     def __init__(self, directory: str):
         self.directory = directory
         self._files: dict[str, _PartFile] = {}
-        self._table = _Winners([])
+        self._table: _Winners | None = None     # None: rebuild when due
         self._footers: OrderedDict = OrderedDict()   # path -> footer
         self._footer_rgs = 0
         self._lock = threading.Lock()
+        self.files_read = self.files_added = 0
 
-    def latest(self, ranges) -> list[tuple[str, str, bytes, str]]:
-        """``(key, enc, payload, part_file)`` of the latest epoch of
-        every stored key whose chunk id lies in ``ranges`` (half-open
-        ``(lo, hi)`` per axis)."""
-        out = []
-        for path, f, rows, keys in self._winners(ranges):
-            out += ((k, f.enc_names[c], p, path) for k, c, p
-                    in zip(keys, f.enc[rows].tolist(),
-                           self._payloads(path, f, rows)))
-        return out
+    def add(self, path: str, ids: pa.Table, footer) -> tuple[int, int]:
+        """Index the part file a driver-local writer has just put in
+        place at ``path`` from what the writer holds: ``ids``, the
+        ``ID_COLUMNS`` of the table it wrote, and ``footer``, the footer
+        it wrote.  The next lookup rebuilds the winner table without
+        opening the file.  Returns the file's ``(size, mtime_ns)``, from
+        one ``os.stat``; a file rewritten after this differs in it and
+        is read from disk again."""
+        st = os.stat(path)
+        f = _PartFile((st.st_size, st.st_mtime_ns), ids, footer)
+        with self._lock:
+            self._files[path] = f
+            self._drop_footer(path)
+            self._keep_footer(path, footer)
+            self._table = None
+            self.files_added += 1
+        return f.sig
 
-    def latest_decoded(self, ranges, nc: int, dtype) -> list[tuple]:
-        """``(key, enc, payload, part_file, ident, chunk)`` of the same
-        chunks as ``latest``.  When the decoded cache holds a chunk as
-        ``nc`` channels of ``dtype``, ``chunk`` is that block and
-        ``payload`` is None, not read; otherwise ``chunk`` is None, and
-        the caller decodes ``payload`` and hands the whole decoded chunk
-        to ``keep(ident, chunk)``."""
-        dtype = np.dtype(dtype)
-        out = []
-        for path, f, rows, keys in self._winners(ranges):
-            idents = [(path, *f.sig, r) for r in rows.tolist()]
-            chunks = [_decoded.get(i, nc, dtype) for i in idents]
-            miss = np.array([c is None for c in chunks])
-            payloads = iter(self._payloads(path, f, rows[miss])
-                            if miss.any() else ())
-            for k, c, ident, chunk in zip(keys, f.enc[rows].tolist(),
-                                          idents, chunks):
-                payload = next(payloads) if chunk is None else None
-                out.append((k, f.enc_names[c], payload, path, ident, chunk))
-        return out
+    def latest_decoded(self, ranges, nc: int, dtype) -> Lookup:
+        """The latest epoch of every stored key whose chunk id lies in
+        ``ranges`` (half-open ``(lo, hi)`` per axis), as a ``Lookup``.
+        A winner the decoded cache holds as ``nc`` channels of
+        ``dtype`` is a hit: its box and block come back, and neither
+        its key nor its payload is read.  The caller decodes each miss
+        and hands the whole decoded chunk to ``keep(ident, chunk)``.  A
+        key ``parse_chunk_keys`` does not parse is always a miss."""
+        t = self._current()
+        sel = np.flatnonzero(t.in_box(ranges))
+        good = sel[t.ok[sel]]
+        at, blocks = _decoded.get_many(t.idents(good), nc, np.dtype(dtype))
+        miss = np.setdiff1d(sel, good[at], assume_unique=True)
+        return Lookup(t.box[good[at]], blocks, self._read_rows(t, miss))
 
     def keep(self, ident: tuple, chunk: np.ndarray) -> None:
         """Cache the decoded ``chunk`` of a ``latest_decoded`` miss,
@@ -338,17 +405,6 @@ class ChunkIndex:
         with self._lock:
             self._refresh()
             return self._table
-
-    def _winners(self, ranges) -> list[tuple[str, _PartFile, np.ndarray,
-                                             list[str]]]:
-        """``(path, part file, rows, keys)`` per part file holding the
-        latest epoch of a key whose chunk id lies in ``ranges``, rows
-        sorted."""
-        t = self._current()
-        sel = np.flatnonzero(t.in_box(ranges))
-        keys = t.key.take(sel).to_pylist()
-        return [(path, f, rows, [keys[a] for a in at.tolist()])
-                for path, f, rows, at in t.by_file(sel)]
 
     def _payloads(self, path: str, f: _PartFile,
                   rows: np.ndarray) -> list[bytes]:
@@ -406,13 +462,14 @@ class ChunkIndex:
             f = self._files.get(path)
             if f is None or f.sig != sig:
                 pf = pq.ParquetFile(path)
-                f = _PartFile(sig, pf)
+                f = _PartFile(sig, pf.read(columns=ID_COLUMNS), pf.metadata)
+                self.files_read += 1
                 self._drop_footer(path)
                 self._keep_footer(path, pf.metadata)
             files[path] = f
         for path in [p for p in self._footers if p not in files]:
             self._drop_footer(path)
-        if len(files) != len(self._files) or any(
+        if self._table is None or len(files) != len(self._files) or any(
                 self._files.get(p) is not f for p, f in files.items()):
             _decoded.drop_stale(self.directory, listing)
             self._table = _Winners(list(files.items()))

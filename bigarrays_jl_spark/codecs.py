@@ -78,13 +78,17 @@ class GzipCodec(Codec):
     ~50 MB/s/core on data it cannot compress (measured: level 1 and
     level 6 are equally slow AND equally useless on high-entropy
     chunks — EM noise, already-compressed payloads), so large payloads
-    are probed first — three spread 8 KiB slices through level-1
-    deflate.  If even the fast probe cannot shave 10 %, the payload is
-    emitted as a STORED-block gzip stream (``compresslevel=0`` — still
-    a standard gzip frame, ~1.0002× the input, decodable by any
-    inflater including the reference's GzipDecompressorStream) at
-    memcpy+CRC32 speed (~2 GB/s/core) instead of paying two orders of
-    magnitude more CPU for zero size win.  Compressible payloads take
+    are probed first — evenly spread 8 KiB slices through level-1
+    deflate, three of them up to 384 KiB and one per 128 KiB above
+    that, so the probe stays within 1/16 of a large payload while a
+    payload that mixes smooth and noisy regions is sampled across
+    them, not at three points.  If even the fast probe cannot shave
+    10 %, the payload is emitted as a STORED-block gzip stream
+    (``compresslevel=0`` — still a standard gzip frame, ~1.0002× the
+    input, decodable by any inflater including the reference's
+    GzipDecompressorStream) at memcpy+CRC32 speed (~2 GB/s/core)
+    instead of paying two orders of magnitude more CPU for zero size
+    win.  Compressible payloads take
     the probe (~0.2 ms) and then compress at level 6 exactly as
     before, so stored ratios are unchanged where compression pays.
     This is the same cost model as c-blosc's clevel-0 memcpy fallback
@@ -95,16 +99,18 @@ class GzipCodec(Codec):
 
     name = "gzip"
 
-    _PROBE = 8192          # bytes per probe slice (×3 slices)
+    _PROBE = 8192          # bytes per probe slice
+    _PROBE_SHARE = 16      # past three slices, probe 1/16 of the payload
     _THRESHOLD = 0.90      # probe must beat this ratio to earn deflate
 
     def encode(self, data: bytes) -> bytes:
         n = len(data)
-        if n > 6 * self._PROBE:
+        p = self._PROBE
+        if n > 6 * p:
+            k = max(3, n // (self._PROBE_SHARE * p))
             mv = memoryview(data)
-            p = self._PROBE
-            probe = (bytes(mv[:p]) + bytes(mv[n // 2:n // 2 + p])
-                     + bytes(mv[n - p:]))
+            probe = b"".join(mv[(n - p) * i // (k - 1):][:p]
+                             for i in range(k))
             if len(_zlib.compress(probe, 1)) >= self._THRESHOLD * len(probe):
                 return _gzip.compress(data, compresslevel=0)
         return _gzip.compress(data, compresslevel=6)

@@ -29,7 +29,11 @@ from collections.abc import Iterator, Sequence
 Range = tuple[int, int]
 Box = tuple[Range, ...]
 
-_KEY_RE = re.compile(r"^(-?\d+)-(-?\d+)_(-?\d+)-(-?\d+)_(-?\d+)-(-?\d+)(?:\.gz)?$")
+# the chunk-key grammar, one group per bound; also run vectorised by
+# the driver's chunk index (RE2 accepts it too)
+KEY_PATTERN = (r"^(?P<x0>-?\d+)-(?P<x1>-?\d+)_(?P<y0>-?\d+)-(?P<y1>-?\d+)"
+               r"_(?P<z0>-?\d+)-(?P<z1>-?\d+)(?:\.gz)?$")
+_KEY_RE = re.compile(KEY_PATTERN)
 
 
 def lattice_anchor(offset: Sequence[int], chunk_size: Sequence[int]) -> tuple[int, ...]:

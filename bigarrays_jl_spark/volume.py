@@ -71,8 +71,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigarrays_jl_spark import indexes as ix
-from bigarrays_jl_spark.chunk_index import (ChunkIndex, cache_written,
-                                            carry_over)
+from bigarrays_jl_spark.chunk_index import (ID_COLUMNS, ChunkIndex, Lookup,
+                                            cache_written, carry_over)
 from bigarrays_jl_spark.infos import Info, InfoScale
 
 # Executor closures re-import this package on python workers; a harness
@@ -186,6 +186,35 @@ def decode_chunk(key: str, enc: str, payload, nc: int, dtype,
         where = f" in part file {part_file}" if part_file else ""
         raise ChunkDecodeError(f"chunk {key} ({enc}){where}: {e}") from e
     return cbox, cut, chunk[_ix.box_slices(cut, cbox)]
+
+
+def _id_count(ranges) -> int:
+    """The number of chunk ids in ``_id_ranges``'s ``ranges`` (0 for
+    None)."""
+    return 0 if ranges is None else math.prod(max(0, hi - lo)
+                                               for lo, hi in ranges)
+
+
+def _place_blocks(buf: np.ndarray, request: ix.Box, boxes: np.ndarray,
+                  blocks: list) -> int:
+    """Copy the part of each whole-chunk block ``blocks[i]`` (global box
+    ``boxes[i]``, an ``(n, 3, 2)`` array) that meets ``request`` into
+    ``buf``, which holds ``request``; returns how many met it.  Every
+    cut and both slice sets come from one numpy pass."""
+    if not blocks:
+        return 0
+    box = np.asarray(boxes, dtype=np.int64)
+    req = np.array(request, dtype=np.int64)
+    lo = np.maximum(box[:, :, 0], req[:, 0])
+    hi = np.minimum(box[:, :, 1], req[:, 1])
+    meets = (hi > lo).all(axis=1)
+    src = np.concatenate([lo - box[:, :, 0], hi - box[:, :, 0]], axis=1)
+    dst = np.concatenate([lo - req[:, 0], hi - req[:, 0]], axis=1)
+    for block, m, (a, b, c, a1, b1, c1), (x, y, z, x1, y1, z1) in zip(
+            blocks, meets.tolist(), src.tolist(), dst.tolist()):
+        if m:
+            buf[x:x1, y:y1, z:z1] = block[a:a1, b:b1, c:c1]
+    return int(meets.sum())
 
 
 def _cuts(batch, nc: int, dtype, request: ix.Box | None = None):
@@ -417,13 +446,15 @@ def _fs_create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
     return True
 
 def _write_part_local(directory: str, rows: list, epoch: int,
-                      raw: bool) -> str:
+                      raw: bool) -> tuple[str, object, object]:
     """Write ``rows``, ``(cx, cy, cz, key, enc, payload, ...)`` with
     encoded payloads sorted by (cz,cy,cx), as one pyarrow part file in
     ``directory`` at ``epoch``, one chunk per row group like the
-    Spark-written files beside it, row i holding ``rows[i]``; return
-    the file's name.  ``raw`` (the mip's encoding is ``raw``) turns on
-    page compression, the only compression layer of raw payloads."""
+    Spark-written files beside it, row i holding ``rows[i]``.  Returns
+    the file's name, the ``ID_COLUMNS`` table of its rows and the
+    footer written (``ChunkIndex.add`` takes both).  ``raw`` (the
+    mip's encoding is ``raw``) turns on page compression, the only
+    compression layer of raw payloads."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -467,13 +498,15 @@ def _write_part_local(directory: str, rows: list, epoch: int,
     # renamed into place: a torn part file would break every later scan
     # of the mip, ``fsck()`` included
     name = f"part-local-{uuid.uuid4().hex}.parquet"
+    footer = []
     with _replacing(os.path.join(directory, name)) as tmp:
         pq.write_table(
             tbl, tmp, compression="zstd" if raw else "none",
             row_group_size=1, use_dictionary=False,
             data_page_size=8 << 20,
-            write_statistics=["cx", "cy", "cz", "epoch"])
-    return name
+            write_statistics=["cx", "cy", "cz", "epoch"],
+            metadata_collector=footer)
+    return name, tbl.select(ID_COLUMNS), footer[0]
 
 
 def _locked_writer(get_lock_target=None):
@@ -703,12 +736,14 @@ class Volume:
         driver's thread pool (zlib/zstd release the GIL) + one part file
         through ``_write_part_local``.  Row payloads are ndarray views.
 
-        Write-through: once the part file is in place, each chunk's
-        F-order bytes go into the process-wide decoded cache as the
-        decoded block of its row (``chunk_index.cache_written``), so a
-        cutout right after a write reads and decodes nothing.  Every
-        codec that encodes is lossless, so those bytes are what the
-        stored payload decodes to."""
+        Once the part file is in place, the handle's chunk index takes
+        its ids and footer from the writer (``ChunkIndex.add``), so no
+        lookup opens it.  Write-through: each chunk's F-order bytes go
+        into the process-wide decoded cache as the decoded block of its
+        row (``chunk_index.cache_written``), so a cutout right after a
+        write reads and decodes nothing.  Every codec that encodes is
+        lossless, so those bytes are what the stored payload decodes
+        to."""
         rows = sorted(rows, key=lambda r: (r[2], r[1], r[0]))
         nc, dtype = self.info.num_channels, self.info.dtype
 
@@ -732,28 +767,27 @@ class Volume:
                                         nc, dtype))
             payloads = [f.result() for f in futs]
         d = self._local_chunks_dir(mip)
-        name = _write_part_local(
+        name, ids, footer = _write_part_local(
             d, [(*r[:4], enc, p) for r, p in zip(rows, payloads)], epoch,
             raw=enc == "raw")
-        cache_written(os.path.join(d, name), [
+        path = os.path.join(d, name)
+        cache_written(path, self._chunk_index(d).add(path, ids, footer), [
             np.frombuffer(b, dtype=dtype).reshape((*r[4].shape[:3], nc),
                                                   order="F")
             for r, b in zip(rows, data)])
 
-    def _read_latest_local(self, request: ix.Box,
-                           mip: int | None = None) -> list | None:
-        """Driver-local twin of ``live_chunks(request)``: the
-        handle's cached chunk index selects the rows in the chunk-id
-        box, keeps the max epoch per key and reads only the payloads of
-        the chunks the decoded cache does not hold.  Returns
-        ``ChunkIndex.latest_decoded``'s ``[(key, enc, payload,
-        part_file, ident, chunk), ...]`` or None when the fast path
-        does not apply."""
+    def _read_latest_local(self, ranges,
+                           mip: int | None = None) -> Lookup | None:
+        """Driver-local twin of ``live_chunks``: the handle's cached
+        chunk index selects the latest epoch of every key in the
+        chunk-id ``ranges`` (from ``_id_ranges``) and reads only the
+        payloads of the chunks the decoded cache does not hold.
+        Returns ``ChunkIndex.latest_decoded``'s ``Lookup``, or None
+        when the fast path does not apply."""
         d = self._local_chunks_dir(mip)
         if d is None:
             return None
-        ranges = self._id_ranges(request, mip)
-        return [] if ranges is None else self._chunk_index(d).latest_decoded(
+        return self._chunk_index(d).latest_decoded(
             ranges, self.info.num_channels, self.info.dtype)
 
     def _chunk_index(self, d: str) -> ChunkIndex:
@@ -1300,22 +1334,16 @@ class Volume:
         def _out():
             return (buf[..., 0] if nc == 1 else buf), origin
 
-        expected = self.num_chunks(request)
+        ranges = self._id_ranges(request)
+        expected = _id_count(ranges)
         if expected == 0:
             return _out()
 
         def _place(cut, block) -> None:
             buf[ix.box_slices(cut, request)] = block
 
-        def _place_chunk(cbox, chunk) -> bool:
-            cut = ix.intersect_box(cbox, request)
-            if ix.box_is_empty(cut):
-                return False
-            _place(cut, chunk[ix.box_slices(cut, cbox)])
-            return True
-
-        local_rows = self._read_latest_local(request)
-        if local_rows is not None:
+        found = self._read_latest_local(ranges)
+        if found is not None:
             # driver-local fast path (see local_io in __init__): the
             # cutout materializes on the driver anyway, so each chunk's
             # cut goes straight into the output buffer — no
@@ -1326,17 +1354,17 @@ class Volume:
             # regions are disjoint per chunk → thread-safe.
             index = self._chunk_index(self._local_chunks_dir())
 
-            def _decode_place(row) -> bool:
-                key, enc, payload, part_file, ident, _ = row
+            def _decode_place(row) -> int:
+                _, _, _, key, enc, payload, ident = row
                 cbox, _, chunk = decode_chunk(key, enc, payload, nc,
-                                              info.dtype, None, part_file)
+                                              info.dtype, None, ident[0])
                 index.keep(ident, chunk)
-                return _place_chunk(cbox, chunk)
+                return _place_blocks(buf, request, np.array([cbox]),
+                                     [chunk])
 
             futs = [_driver_pool().submit(_decode_place, r)
-                    for r in local_rows if r[5] is None]
-            placed = sum(_place_chunk(ix.parse_chunk_key(r[0]), r[5])
-                         for r in local_rows if r[5] is not None)
+                    for r in found.misses]
+            placed = _place_blocks(buf, request, found.boxes, found.blocks)
             placed += sum(f.result() for f in futs)
         else:
             def cut_row(key, cbox, cut, block):
@@ -1436,10 +1464,7 @@ class Volume:
         id in the per-axis id range intersects, so the count is the
         product of the range lengths — O(1), not an O(total chunks)
         driver-side enumeration (4e8 chunk objects at 100 TB scale)."""
-        ranges = self._id_ranges(request)
-        if ranges is None:
-            return 0
-        return math.prod(max(0, i1 - i0) for i0, i1 in ranges)
+        return _id_count(self._id_ranges(request))
 
     def lattice_df(self, request: ix.Box | None = None) -> DataFrame:
         """Generated DataFrame of every chunk id intersecting ``request``
@@ -1873,9 +1898,11 @@ class Volume:
         its own ``enc``), in batches of at most
         ``chunk_index.FOLD_BATCH_BYTES`` (one part file per batch): a
         byte copy with no decode and no Spark job.  Once the swap has
-        succeeded, the decoded blocks of the kept chunks move to their
-        rows in the new files (``chunk_index.carry_over``); a fold or
-        swap that raises moves nothing.  Every other dataset folds
+        succeeded, the chunk index takes each new file's ids and footer
+        from the writer (``ChunkIndex.add``) and the decoded blocks of
+        the kept chunks move to their rows in the new files
+        (``chunk_index.carry_over``); a fold or swap that raises
+        registers and moves nothing.  Every other dataset folds
         ``live_chunks(mip=mip)`` less the ``drop`` box through Spark."""
         self._recover_mip(mip)  # roll back any earlier crashed swap first
         final = self._mip_dir(mip)
@@ -1888,9 +1915,9 @@ class Volume:
             shutil.rmtree(tmp, ignore_errors=True)  # a crashed fold's leftover
             os.makedirs(tmp)
             raw = self.info.scale(mip).encoding == "raw"
+            index = self._chunk_index(d)
             written = [(_write_part_local(tmp, batch, 0, raw),
-                        [r[6] for r in batch])
-                       for batch in self._chunk_index(d).fold(drop)]
+                        [r[6] for r in batch]) for batch in index.fold(drop)]
         else:
             live = self.live_chunks(mip=mip)
             if drop is not None:
@@ -1901,8 +1928,9 @@ class Volume:
                             "payload"),
                 mip=mip, mode="overwrite", path=final + ".tmp")
         self._swap_mip_dir(mip)
-        for name, sources in written:
-            carry_over(os.path.join(d, name), sources)
+        for (name, ids, footer), sources in written:
+            path = os.path.join(d, name)
+            carry_over(path, index.add(path, ids, footer), sources)
 
     def _swap_mip_dir(self, mip: int | None = None) -> None:
         """Put ``<mip>.tmp`` live via rename-swap, never delete-then-

@@ -92,6 +92,16 @@ def _write_rows(path, rows, **kw):
     pq.write_table(tbl, path, **kw)
 
 
+def _latest(index, box):
+    """``(key, enc, payload, part_file)`` of the winners of ``box``,
+    through ``latest_decoded``: nothing caches a block of these files,
+    so every winner is a miss and comes back with its payload."""
+    found = index.latest_decoded(box, 1, np.uint8)
+    assert found.blocks == [] and found.boxes.shape == (0, 3, 2)
+    return [(key, enc, p, ident[0])
+            for _, _, _, key, enc, p, ident in found.misses]
+
+
 def test_second_handle_overwrite_is_seen(spark, tmp_path):
     root = str(tmp_path / "v")
     a = Volume.create(spark, root, _info())
@@ -207,7 +217,7 @@ def test_footer_cache_is_bounded(tmp_path, monkeypatch):
         want.update({r[3]: r[6] for r in rows})
     index = ChunkIndex(str(tmp_path))
     for _ in range(2):
-        got = index.latest(((0, 3), (0, 8), (0, 1)))
+        got = _latest(index, ((0, 3), (0, 8), (0, 1)))
         assert {k: p for k, _, p, _ in got} == want
         assert all(enc == "raw" for _, enc, _, _ in got)
         assert index._footer_rgs <= 6
@@ -236,7 +246,7 @@ def test_concurrent_lookups_while_files_arrive(tmp_path, monkeypatch):
         try:
             while not done.is_set():
                 floor = committed[0]
-                got = index.latest(((0, 8), (0, 1), (0, 1)))
+                got = _latest(index, ((0, 8), (0, 1), (0, 1)))
                 epochs = {int(p) for _, _, p, _ in got}
                 assert sorted(k for k, *_ in got) == keys, got
                 assert len(epochs) == 1 and min(epochs) >= floor, epochs
@@ -897,26 +907,42 @@ def test_write_larger_than_cache_stays_within_bound(spark, tmp_path,
 
 # -- the one winner rule ------------------------------------------------------
 
+# voxel_offset, size and chunk size of the random indexes: a negative
+# offset off the chunk lattice, and edge chunks clamped on every side
+LATTICE = ((-5, 3, -12), (30, 20, 17), (8, 8, 8))
+
+
 def _random_index(tmp_path, seed):
-    """Part files of random rows on a 4x4x3 chunk grid: epochs drawn
-    from a small range, so a key often repeats an epoch in another
-    file; ``enc`` drawn per row; some files in the old layout (many
-    chunks per row group, no statistics).  Each payload names its file
-    and row.  Returns the directory."""
+    """Part files of random rows on the chunks of ``LATTICE``, keyed as
+    the writers key them, a quarter of the keys ``.gz``-suffixed (a key
+    of its own on the same chunk): epochs drawn from a small range, so
+    a key often repeats an epoch in another file; ``enc`` drawn per
+    row; some files in the old layout (many chunks per row group, no
+    statistics).  Each payload names its file and row.  Returns the
+    directory."""
+    off, size, chunk = LATTICE
+    lattice = [(cs.cid, cs.key) for cs in ix.iter_chunk_slices(
+        ix.volume_box(off, size), off, size, chunk)]
     rng = np.random.default_rng(seed)
     d = tmp_path / f"idx{seed}"
     for fi in range(int(rng.integers(2, 7))):
         n = int(rng.integers(1, 40))
-        cid = rng.integers(0, [4, 4, 3], size=(n, 3))
-        rows = [(int(x), int(y), int(z), f"k{x}_{y}_{z}",
-                 str(rng.choice(["gzip", "raw", "zstd"])),
-                 int(rng.integers(0, 4)), f"{fi}:{r}".encode())
-                for r, (x, y, z) in enumerate(cid)]
+        rows = []
+        for r, i in enumerate(rng.integers(0, len(lattice), n).tolist()):
+            (x, y, z), key = lattice[i]
+            rows.append((x, y, z, key + (".gz" if rng.random() < 0.25
+                                         else ""),
+                         str(rng.choice(["gzip", "raw", "zstd"])),
+                         int(rng.integers(0, 4)), f"{fi}:{r}".encode()))
         old = rng.random() < 0.4
         _write_rows(str(d / f"part-{fi}.parquet"), rows,
                     row_group_size=int(rng.integers(3, 9)) if old else 1,
                     write_statistics=not old)
     return str(d)
+
+
+def _box(b):
+    return tuple(map(tuple, b))
 
 
 def _brute_force(d):
@@ -937,25 +963,63 @@ def _brute_force(d):
 
 @pytest.mark.parametrize("seed", range(6))
 def test_winner_table_matches_brute_force(tmp_path, decoded, seed):
+    """The winner table agrees with a brute-force reference: lookups
+    return exactly the latest row of every key in the box, each winner's
+    box is ``parse_chunk_key`` of its key, and so is the box of every
+    cache hit a lookup returns."""
     d = _random_index(tmp_path, seed)
     want, stored = _brute_force(d)
     index = ChunkIndex(d)
     rng = np.random.default_rng(100 + seed)
-    boxes = [((0, 4), (0, 4), (0, 3)), ((-5, 9), (-5, 9), (-5, 9))] + [
+    boxes = [((-1, 3), (0, 3), (-2, 1)), ((-9, 9), (-9, 9), (-9, 9))] + [
         tuple((int(lo), int(lo + s)) for lo, s in
-              zip(rng.integers(-1, 4, 3), rng.integers(0, 4, 3)))
+              zip(rng.integers(-2, 3, 3), rng.integers(0, 4, 3)))
         for _ in range(12)]
+
+    def inside(box):
+        return {k: w for k, w in want.items()
+                if all(lo <= c < hi for c, (lo, hi) in zip(w[0], box))}
+
     for box in boxes:
-        inside = {k: w for k, w in want.items()
-                  if all(lo <= c < hi for c, (lo, hi) in zip(w[0], box))}
-        got = index.latest(box)
+        found = index.latest_decoded(box, 1, np.uint8)
+        assert found.blocks == [] and len(found.boxes) == 0
+        got = [r[3:] for r in found.misses]
         assert len(got) == len({k for k, *_ in got})
-        assert {k: (enc, p, path) for k, enc, p, path in got} == \
-            {k: w[1:4] for k, w in inside.items()}, box
-        got = index.latest_decoded(box, 1, np.uint8)
-        assert {k: (enc, p, path, ident[0], ident[3], chunk)
-                for k, enc, p, path, ident, chunk in got} == \
-            {k: (*w[1:4], w[3], w[4], None) for k, w in inside.items()}
+        assert {k: (enc, p, ident[0], ident[3])
+                for k, enc, p, ident in got} == \
+            {k: (*w[1:4], w[4]) for k, w in inside(box).items()}, box
+
+    t = index._current()
+    keys = [t.files[f][1].key[r].as_py()
+            for f, r in zip(t.fid.tolist(), t.row.tolist())]
+    assert sorted(keys) == sorted(want)
+    assert t.ok.all() and t.box.dtype == np.int32
+    assert [_box(b) for b in t.box.tolist()] == \
+        [ix.parse_chunk_key(k) for k in keys]
+    for _, f in t.files:
+        assert f.ok.all()
+        assert [_box(b) for b in f.box.tolist()] == \
+            [ix.parse_chunk_key(k) for k in f.key.to_pylist()]
+
+    # cache every other winner: those come back as box + block, the
+    # rest as misses
+    cached = {}
+    for i, (key, ident) in enumerate(zip(keys,
+                                         t.idents(np.arange(len(keys))))):
+        if i % 2:
+            shape = ix.box_shape(ix.parse_chunk_key(key))
+            decoded.put(ident, np.full((*shape, 1), i, np.uint8))
+            cached[key] = i
+    for box in boxes:
+        found = index.latest_decoded(box, 1, np.uint8)
+        hit = {k for k in inside(box) if k in cached}
+        assert sorted((_box(b), int(blk[0, 0, 0, 0]))
+                      for b, blk in zip(found.boxes.tolist(),
+                                        found.blocks)) == \
+            sorted((ix.parse_chunk_key(k), cached[k]) for k in hit), box
+        assert sorted(r[3] for r in found.misses) == \
+            sorted(set(inside(box)) - hit), box
+
     flat = [r for batch in index.fold() for r in batch]
     assert [(r[2], r[1], r[0]) for r in flat] == \
         sorted((w[0][2], w[0][1], w[0][0]) for w in want.values())
@@ -964,6 +1028,23 @@ def test_winner_table_matches_brute_force(tmp_path, decoded, seed):
         {k: (w[0], w[1], w[2], (w[3], *sigs[w[3]], w[4]))
          for k, w in want.items()}
     assert index.has_duplicates() == (stored > len(want))
+
+
+def test_parse_chunk_keys_flags_what_it_cannot_parse():
+    """The vectorised parse agrees with ``parse_chunk_key`` where it
+    parses, and flags the rest: keys the grammar refuses, bounds beyond
+    int32, and keys only Python's ``re`` accepts."""
+    good = ["0-64_0-64_0-64", "-69-0_3-11_-12-0.gz", "-2147483648-0_0-1_0-1",
+            "00-07_1-2_3-4"]
+    bad = ["k0", "", "0-64_0-64", "0-64_0-64_0-64.zst", "0-2147483648_0-1_0-1",
+           "0-99999999999999999999_0-1_0-1", "0-64_0-64_0-64\n",
+           "0-6\u0664_0-64_0-64"]
+    box, ok = chunk_index.parse_chunk_keys(pa.array(good + bad + [None]))
+    assert box.shape == (len(good) + len(bad) + 1, 3, 2)
+    assert ok.tolist() == [True] * len(good) + [False] * (len(bad) + 1)
+    assert [_box(b) for b in box[:len(good)].tolist()] == \
+        [ix.parse_chunk_key(k) for k in good]
+    assert not box[len(good):].any()
 
 
 def test_winner_table_follows_file_set(tmp_path, decoded):
@@ -978,11 +1059,184 @@ def test_winner_table_follows_file_set(tmp_path, decoded):
     assert not index.has_duplicates()
     _write_rows(str(d / "part-1.parquet"), [(1, 0, 0, "b", "gzip", 1, b"b1")])
     assert index.has_duplicates()
-    assert sorted((k, e, p) for k, e, p, _ in index.latest(box)) == \
+    assert sorted((k, e, p) for k, e, p, _ in _latest(index, box)) == \
         [("a", "raw", b"a0"), ("b", "gzip", b"b1")]
     os.remove(str(d / "part-0.parquet"))
     assert not index.has_duplicates()
-    assert [(k, p) for k, _, p, _ in index.latest(box)] == [("b", b"b1")]
+    assert [(k, p) for k, _, p, _ in _latest(index, box)] == [("b", b"b1")]
     assert list_part_files(str(tmp_path / "none")) == {}
-    assert ChunkIndex(str(tmp_path / "none")).latest(box) == []
+    assert _latest(ChunkIndex(str(tmp_path / "none")), box) == []
     assert list(ChunkIndex(str(tmp_path / "none")).fold()) == []
+
+
+@pytest.mark.parametrize("bad", ["k1_0_0", "32-64_0-32_0-32_",
+                                 "32-64_0-99999999999_0-32"])
+def test_malformed_key_fails_only_cutouts_that_touch_it(spark, tmp_path,
+                                                       decoded, bad):
+    """A stored key the chunk grammar refuses (or whose box leaves
+    int32) fails the cutouts that touch its chunk with a ValueError
+    naming the key; cutouts elsewhere read as before."""
+    import re
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    mirror = _arr((128, 128, 128), 61)
+    vol.write(mirror, (0, 0, 0))
+    _write_rows(os.path.join(vol._mip_dir(), "part-bad.parquet"),
+                [(1, 0, 0, bad, "gzip", 9,
+                  gzip.compress(b"\0" * CHUNK_BYTES))],
+                row_group_size=1)
+    for _ in range(2):
+        with pytest.raises(ValueError, match=re.escape(bad)):
+            vol.cutout(((40, 50), (0, 10), (0, 10)))
+        for box in [((0, 32), (0, 128), (0, 128)),
+                    ((32, 64), (32, 64), (0, 128)),
+                    ((64, 128), (0, 40), (32, 100))]:
+            assert np.array_equal(vol.cutout(box)[0], _want(mirror, box))
+
+
+def test_key_only_python_parses_still_reads(spark, tmp_path, decoded):
+    """A key the vectorised parse leaves to Python (a trailing newline)
+    takes the miss path every time and still lands where
+    ``parse_chunk_key`` puts it."""
+    info = _info()
+    vol = Volume.create(spark, str(tmp_path / "v"), info)
+    mirror = np.zeros((128, 128, 128), np.uint8)
+    mirror[:32] = _arr((32, 128, 128), 62)
+    vol.write(mirror[:32], (0, 0, 0))
+    block = _arr((32, 32, 32), 63)
+    mirror[32:64, :32, :32] = block
+    _write_rows(os.path.join(vol._mip_dir(), "part-nl.parquet"),
+                [(1, 0, 0, "32-64_0-32_0-32\n", "gzip", 9,
+                  gzip.compress(block.tobytes(order="F")))],
+                row_group_size=1)
+    _check(vol, mirror)
+    _check(vol, mirror)
+
+
+def _count_opens(monkeypatch):
+    """Paths pyarrow opens through ``ParquetFile`` or ``read_metadata``
+    from here on."""
+    opened = []
+    for name in ("ParquetFile", "read_metadata"):
+        real = getattr(pq, name)
+
+        def spy(path, *a, _real=real, **kw):
+            opened.append(str(path))
+            return _real(path, *a, **kw)
+        monkeypatch.setattr(pq, name, spy)
+    return opened
+
+
+def test_writes_and_folds_register_their_files(spark, tmp_path, decoded,
+                                               monkeypatch):
+    """After a driver-local write, compaction or delete, the next cutout
+    indexes no part file from disk and opens none: the writer handed
+    the index its ids and footer."""
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    vol.auto_compact_epochs = None
+    index = vol._chunk_index(vol._local_chunks_dir())
+    mirror = _arr((128, 128, 128), 64)
+    vol.write(mirror, (0, 0, 0))
+    opened = _count_opens(monkeypatch)
+    calls = _count_decodes(monkeypatch)
+    _check(vol, mirror)
+    added = index.files_added
+    assert added == 1
+    for i, op in enumerate(["write", "write", "compact", "delete"]):
+        if op == "write":
+            block = _arr((32, 64, 32), 65 + i)
+            vol.write(block, (32 * i, 64, 32))
+            mirror[32 * i:32 * i + 32, 64:128, 32:64] = block
+        elif op == "compact":
+            vol.compact()
+        else:
+            vol.delete(((0, 32), (0, 64), (64, 128)))
+            mirror[0:32, 0:64, 64:128] = 0
+        assert index.files_added > added, op
+        added = index.files_added
+        opened.clear()           # a fold reads the payloads it copies
+        _check(vol, mirror)
+        assert index.files_read == 0 and opened == [] and calls[0] == 0, op
+
+
+def test_second_handle_file_is_read_from_disk_once(spark, tmp_path,
+                                                   decoded):
+    root = str(tmp_path / "v")
+    a = Volume.create(spark, root, _info())
+    mirror = _arr((128, 128, 128), 70)
+    a.write(mirror, (0, 0, 0))
+    _check(a, mirror)
+    index = a._chunk_index(a._local_chunks_dir())
+    b = Volume.open(spark, root)
+    block = _arr((64, 32, 32), 71)
+    b.write(block, (0, 32, 64))
+    mirror[0:64, 32:64, 64:96] = block
+    _check(a, mirror)
+    _check(a, mirror)
+    assert (index.files_read, index.files_added) == (1, 1)
+
+
+def test_registered_file_rewritten_in_place_is_read_again(spark, tmp_path,
+                                                          decoded):
+    vol = Volume.create(spark, str(tmp_path / "v"), _info())
+    info = vol.info
+    old, new = _arr((128, 128, 128), 72), _arr((128, 128, 128), 73)
+    vol.write(old, (0, 0, 0))
+    index = vol._chunk_index(vol._local_chunks_dir())
+    (path,) = list_part_files(vol._mip_dir())
+    _check(vol, old)
+    mtime = os.stat(path).st_mtime_ns
+    _write_rows(path, _chunk_rows(new, info, 1), row_group_size=1)
+    os.utime(path, ns=(mtime + 10 ** 9, mtime + 10 ** 9))
+    _check(vol, new)
+    assert index.files_read == 1
+
+
+def _disk_part_file(path):
+    from bigarrays_jl_spark.chunk_index import ID_COLUMNS
+    pf = pq.ParquetFile(path)
+    sig = list_part_files(os.path.dirname(path))[path]
+    return chunk_index._PartFile(sig, pf.read(columns=ID_COLUMNS),
+                                 pq.read_metadata(path))
+
+
+@pytest.mark.parametrize("enc", ["raw", "gzip", "zstd", "blosclz"])
+def test_registered_part_file_equals_disk_built(spark, tmp_path, decoded,
+                                                monkeypatch, enc):
+    """What a writer hands the index equals what the index would read
+    back, field by field, for a plain write and for the files of a
+    fold; payloads read through the collected footer equal those read
+    through ``pq.read_metadata``."""
+    vol = Volume.create(spark, str(tmp_path / "v"),
+                        _info(enc, size=(96, 64, 64)))
+    vol.auto_compact_epochs = None
+    index = vol._chunk_index(vol._local_chunks_dir())
+    arr = _arr((96, 64, 64), 74)
+    arr[:32] //= 64                          # some compressible content
+    vol.write(arr, (0, 0, 0))
+    vol.write(arr[:32, :32, :32], (32, 0, 32))
+    monkeypatch.setattr(chunk_index, "FOLD_BATCH_BYTES", 5 * CHUNK_BYTES)
+    checked = 0
+    for step in ("write", "fold"):
+        if step == "fold":
+            vol.compact()
+        files = list_part_files(vol._mip_dir())
+        assert set(files) <= set(index._files)
+        for path in files:
+            f, disk = index._files[path], _disk_part_file(path)
+            footer = index._footers[path]
+            assert footer.equals(pq.read_metadata(path))
+            assert f.sig == disk.sig
+            for name in ("cid", "epoch", "enc", "box", "ok", "rg_start",
+                         "rg_bytes"):
+                assert np.array_equal(getattr(f, name),
+                                      getattr(disk, name)), name
+            assert f.key.equals(disk.key) and f.enc_names == disk.enc_names
+            rows = np.arange(len(f.epoch))
+            assert chunk_index._read_payloads(path, f, footer, rows) == \
+                chunk_index._read_payloads(path, disk,
+                                           pq.read_metadata(path), rows)
+            checked += 1
+    assert index.files_read == 0 and checked >= 4
+    mirror = arr.copy()
+    mirror[32:64, 0:32, 32:64] = arr[:32, :32, :32]
+    assert np.array_equal(vol.cutout(((0, 96), (0, 64), (0, 64)))[0], mirror)

@@ -1,5 +1,7 @@
 """Codec tests — magic-sniffing decode semantics from src/Codings.jl."""
 
+import gzip
+
 import numpy as np
 import pytest
 
@@ -191,3 +193,29 @@ def test_jpeg_real_pillow_roundtrip():
     with pytest.raises(ValueError, match="width"):
         codecs.get_codec("jpeg").decode(bio.getvalue(),
                                         expected_width=sx * 2)
+
+
+def test_gzip_probe_samples_the_whole_payload():
+    """A 128^3 uint8 chunk whose start, middle and end are noise but
+    whose other z-slabs are smooth is mostly compressible: the probe
+    slices, one per 128 KiB of it, must find that and deflate it.
+    Uniform 64^3 chunks keep the decision three slices made."""
+    c = codecs.get_codec("gzip")
+    rng = np.random.default_rng(11)
+    x, y, z = np.meshgrid(np.arange(128), np.arange(128), np.arange(128),
+                          indexing="ij")
+    chunk = ((x // 4 + y // 8 + z // 16) % 256).astype(np.uint8)
+    noisy = np.zeros(128, bool)
+    noisy[:8] = noisy[60:68] = noisy[120:] = True
+    chunk[:, :, noisy] = rng.integers(0, 256, size=(128, 128, noisy.sum()),
+                                      dtype=np.uint8)
+    data = chunk.tobytes(order="F")
+    enc = c.encode(data)
+    assert c.decode(enc) == data
+    assert len(enc) < 0.5 * len(data)
+    smooth = np.ascontiguousarray(
+        ((x // 4 + y // 8 + z // 16) % 256).astype(np.uint8)[:64, :64, :64]
+    ).tobytes(order="F")
+    noise = rng.integers(0, 256, size=64 ** 3, dtype=np.uint8).tobytes()
+    assert len(c.encode(smooth)) == len(gzip.compress(smooth, 6))
+    assert len(c.encode(noise)) == len(gzip.compress(noise, 0))

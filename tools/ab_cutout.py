@@ -9,12 +9,17 @@ does, then runs whole cycle pairs, checking every cutout against a
 numpy mirror.  For each pair it reports the mean driver CPU per cutout
 (process CPU of the driver Python process, all threads), split into:
 
-- scan:   CPU inside ``Volume._read_latest_local``, which finds the
-          chunks' rows and reads their payloads;
-- decode: thread CPU inside codec ``decode`` calls, summed over the
-          decode pool's threads;
-- place:  the rest (key parsing, reshape, copies into the output,
-          thread-pool overhead).
+- lookup:  CPU inside ``Volume._read_latest_local``: the chunk index
+           lists the mip, indexes new part files, selects the winners
+           in the box, probes the decoded cache and reads the payloads
+           of the misses;
+- refresh: the part of lookup inside ``ChunkIndex._refresh`` (listing
+           the mip, indexing part files from disk, rebuilding the
+           winner table);
+- decode:  thread CPU inside codec ``decode`` calls, summed over the
+           decode pool's threads;
+- place:   the rest (cuts and slices, copies into the output,
+           thread-pool overhead).
 
 Per pair it also counts the decoded-chunk cache's hits, the misses (the
 chunks the cutouts decoded; every chunk is a miss in a tree without the
@@ -24,7 +29,10 @@ as its own figure.  The misses are split by the last write before each
 cutout: ``after_write`` counts those of cutouts that follow a plain
 write, ``after_compact`` those of cutouts that follow a compacting
 write, so a cache that writes fill and one that compactions re-key
-each show their own figure.
+each show their own figure.  It also counts the part files the chunk
+indexes built per pair: ``from_disk`` read their id columns and footer
+back from the file, ``from_writer`` took them from the writer that had
+just written the file (``ChunkIndex.add``; 0 in trees without it).
 
 It also reports the mean process-tree CPU (``perfbench/common.TreeCPU``:
 the driver, the Spark JVM and its Python workers) per plain write and
@@ -63,8 +71,9 @@ import time
 import types
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SPLIT = ("cutout_ms", "scan_ms", "decode_ms", "place_ms")
+SPLIT = ("cutout_ms", "lookup_ms", "refresh_ms", "decode_ms", "place_ms")
 CACHE = ("hits", "misses", "after_write", "after_compact", "held_mib")
+INDEXED = ("from_disk", "from_writer")
 WRITES = ("write_ms", "compact_write_ms")
 
 
@@ -82,7 +91,8 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
     from bigarrays_jl_spark.volume import Volume
 
     lock = threading.Lock()
-    acc = {"scan": 0.0, "decode": 0.0, "decodes": 0}
+    acc = {"lookup": 0.0, "refresh": 0.0, "decode": 0.0, "decodes": 0}
+    built = {"files": 0, "added": 0}
     # the decoded-chunk cache, absent from trees older than it
     cache = getattr(chunk_index, "_decoded", None)
 
@@ -109,10 +119,36 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
     def timed_read(self, *a, **kw):
         t0 = time.process_time()
         out = read_latest(self, *a, **kw)
-        acc["scan"] += time.process_time() - t0
+        acc["lookup"] += time.process_time() - t0
         return out
 
     Volume._read_latest_local = timed_read
+    refresh = chunk_index.ChunkIndex._refresh
+
+    def timed_refresh(self):
+        t0 = time.process_time()
+        refresh(self)
+        acc["refresh"] += time.process_time() - t0
+
+    chunk_index.ChunkIndex._refresh = timed_refresh
+
+    class CountedPartFile(chunk_index._PartFile):
+        __slots__ = ()
+
+        def __init__(self, *a, **kw):
+            with lock:
+                built["files"] += 1
+            super().__init__(*a, **kw)
+
+    chunk_index._PartFile = CountedPartFile
+    add = getattr(chunk_index.ChunkIndex, "add", None)
+    if add is not None:
+        def counted_add(self, *a, **kw):
+            with lock:
+                built["added"] += 1
+            return add(self, *a, **kw)
+
+        chunk_index.ChunkIndex.add = counted_add
     compact = Volume.compact
     compactions = [0]
 
@@ -145,10 +181,11 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
 
         mirror, out, failed = original.copy(), [], 0
         for _ in range(pairs):
-            tot = scan = dec = 0.0
+            tot = lookup = refreshed = dec = 0.0
             decodes = 0
             split = {"after_write": 0, "after_compact": 0}
             hits0 = cache.hits if cache else 0
+            files0, added0 = built["files"], built["added"]
             writes = {"write_ms": [], "compact_write_ms": []}
             for op in pair:
                 if op[0] == "write":
@@ -165,21 +202,27 @@ def child(tree: str, seed: int, pairs: int, work: str) -> dict:
                     mirror[tuple(slice(o, o + s)
                                  for o, s in zip(off, arr.shape))] = arr
                     continue
-                acc["scan"] = acc["decode"] = 0.0
+                acc["lookup"] = acc["refresh"] = acc["decode"] = 0.0
                 acc["decodes"] = 0
                 t0 = time.process_time()
                 arr, _ = vol.cutout(op[1])
                 tot += time.process_time() - t0
-                scan += acc["scan"]
+                lookup += acc["lookup"]
+                refreshed += acc["refresh"]
                 dec += acc["decode"]
                 decodes += acc["decodes"]
                 split[after] += acc["decodes"]
                 failed += not np.array_equal(
                     arr, aw.expected_cutout(mirror, op[1]))
             n = len(cutouts)
-            out.append({"cutout_ms": tot / n * 1e3, "scan_ms": scan / n * 1e3,
+            added = built["added"] - added0
+            out.append({"cutout_ms": tot / n * 1e3,
+                        "lookup_ms": lookup / n * 1e3,
+                        "refresh_ms": refreshed / n * 1e3,
                         "decode_ms": dec / n * 1e3,
-                        "place_ms": (tot - scan - dec) / n * 1e3,
+                        "place_ms": (tot - lookup - dec) / n * 1e3,
+                        "from_disk": built["files"] - files0 - added,
+                        "from_writer": added,
                         "hits": (cache.hits if cache else 0) - hits0,
                         "misses": decodes, **split,
                         "held_mib": (cache.nbytes if cache else 0) / 2**20,
@@ -254,7 +297,10 @@ def main(argv=None) -> int:
             print(f"rep {rep} {name}: " + " ".join(
                 f"{p['cutout_ms']:.2f}/{p['write_ms']:.1f}/"
                 f"{p['compact_write_ms']:.1f}" for p in res["pairs"])
-                + " ms per cutout/write/compacting write, per pair",
+                + " ms per cutout/write/compacting write; part files "
+                "indexed from disk/from writers " + " ".join(
+                    f"{p['from_disk']}/{p['from_writer']}"
+                    for p in res["pairs"]) + ", per pair",
                 file=sys.stderr, flush=True)
 
     print(f"driver CPU per cutout, best pair of {args.reps} runs x "
@@ -273,6 +319,11 @@ def main(argv=None) -> int:
         print(f"{name}     " + "  ".join(
             f"{best[name][k]:{width[k]}.{1 if k == 'held_mib' else 0}f}"
             for k in CACHE) + f"  {peak_rss[name]:12.1f}")
+    print("part files indexed in that pair")
+    print("tree  " + "  ".join(f"{k:>11}" for k in INDEXED))
+    for name in "AB":
+        print(f"{name}     " + "  ".join(f"{best[name][k]:11d}"
+                                        for k in INDEXED))
     print("process-tree CPU per write (ms), best pair")
     print("tree  " + "  ".join(f"{k:>16}" for k in WRITES))
     for name in "AB":
