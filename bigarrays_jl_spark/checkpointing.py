@@ -1,39 +1,62 @@
 """Materialization switch: executor-local vs reliable checkpointing.
 
-Every global-ordering primitive (``operators/ordering.py``), the LSH
-signature table and the connected-components loop (``operators/
-dedup.py``) truncate lineage with ``localCheckpoint`` — the right
-default on a stable cluster because it costs no storage write.  But
-``localCheckpoint`` blocks live ON the executors that computed them:
-with dynamic allocation (or any executor loss) the blocks vanish and,
-lineage having been truncated, the job dies with no way to recompute.
-On a long-lived 1000-executor cluster that is not a corner case — it is
-the steady state.
+Every lineage cut in the package is a call to ``materialize(df,
+eager=...)``:
 
-``materialize(df)`` is the one switch point.  Default: executor-local
-(``localCheckpoint``).  Opt in to reliable checkpointing with
+- the global-ordering primitives (``operators/ordering.py``);
+- the tables that feed self-joins or several consumers: LSH signature
+  and bucket-key tables, k-NN and LSH edge tables, token, shingle and
+  histogram tables, the decoded ``map_cuts`` streams of the volume
+  operators;
+- one cut per round of the bounded-round loops: connected components
+  (``dedup.py``, ``volume_components.py``), agglomeration, label
+  propagation, shortest paths and hop counts, entity resolution;
+- the micro-batch tables of the ``foreachBatch`` bridges in
+  ``streaming/``.
+
+``tests/test_single_decode_site.py`` fails on a ``.localCheckpoint(``
+or ``.checkpoint(`` call anywhere else in the package.
+
+Default: executor-local (``localCheckpoint``), the right default on a
+stable cluster because it costs no storage write.  But those blocks
+live ON the executors that computed them: with dynamic allocation (or
+any executor loss) they vanish and, lineage having been truncated, the
+job dies with no way to recompute.  On a long-lived 1000-executor
+cluster that is the steady state, not a corner case.  Opt in to
+reliable checkpointing with
 
     spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")
     spark.conf.set("sparkgraft.checkpoint.reliable", "true")
 
-and every call site writes its materialized blocks to the checkpoint
-directory (``DataFrame.checkpoint`` — one extra write, survives any
-executor loss).  Results are bit-identical in both modes — the switch
-changes WHERE the truncated-lineage blocks live, never their content —
-and ``tests/test_reliable_checkpoint.py`` pins that for the primitives'
-consumers.
+and every call writes its blocks to the checkpoint directory
+(``DataFrame.checkpoint``: one extra write, survives any executor
+loss).  A long-running stream in reliable mode writes new checkpoint
+files every micro-batch; set
+``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so Spark
+deletes each batch's files once its DataFrames are garbage-collected.
 
-``eager`` semantics are preserved across both modes: ``eager=True``
-materializes at construction (the ordering primitives need this — they
-run driver-side probes immediately after), ``eager=False`` defers to
-the first action (signature tables consumed by later self-joins).
+Results are bit-identical in both modes (the switch changes WHERE the
+truncated-lineage blocks live, never their content), and
+``tests/test_reliable_checkpoint.py`` pins that for a consumer of each
+of 40 modules that call ``materialize``.  ``eager`` means the same in
+both modes: ``eager=True`` materializes at construction (the ordering
+primitives run driver-side probes right after), ``eager=False`` defers
+to the first action (tables consumed by later self-joins).
+
+The first call per Spark application and mode logs one INFO record on
+this module's logger, naming the mode and the checkpoint directory.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 
 RELIABLE_CONF = "sparkgraft.checkpoint.reliable"
+
+log = logging.getLogger(__name__)
+_logged: set[tuple[str, str]] = set()   # (application id, mode)
 
 
 def reliable_enabled(spark) -> bool:
@@ -46,11 +69,18 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     true (requires ``setCheckpointDir``; raises a clear error instead of
     Spark's late NPE if the directory is missing)."""
     spark = df.sparkSession
-    if reliable_enabled(spark):
-        if spark.sparkContext.getCheckpointDir() is None:
-            raise RuntimeError(
-                f"{RELIABLE_CONF}=true but no checkpoint directory is "
-                "set; call spark.sparkContext.setCheckpointDir(...) with "
-                "a fault-tolerant path (HDFS/S3) before running queries")
+    sc = spark.sparkContext
+    reliable = reliable_enabled(spark)
+    if reliable and sc.getCheckpointDir() is None:
+        raise RuntimeError(
+            f"{RELIABLE_CONF}=true but no checkpoint directory is "
+            "set; call spark.sparkContext.setCheckpointDir(...) with "
+            "a fault-tolerant path (HDFS/S3) before running queries")
+    key = (sc.applicationId, "reliable" if reliable else "local")
+    if key not in _logged:
+        _logged.add(key)
+        log.info("checkpoint mode %s for application %s, checkpoint "
+                 "directory %s", key[1], key[0], sc.getCheckpointDir())
+    if reliable:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import dot as _dot
 from bigarrays_jl_spark.functions import norm2 as _norm2
 from bigarrays_jl_spark.operators.ordering import capped_by_hash_order
@@ -758,10 +759,10 @@ def text_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
                         F.element_at(t, i).alias("w1"),
                         F.element_at(t, i + 1).alias("w2")))
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    pairs = (d.select("doc_id", F.explode(bigr).alias("p"))
-              .select("doc_id", F.col("p.w1").alias("w1"),
-                      F.col("p.w2").alias("w2"))
-              .localCheckpoint(eager=False))
+    pairs = materialize(
+        d.select("doc_id", F.explode(bigr).alias("p"))
+         .select("doc_id", F.col("p.w1").alias("w1"),
+                 F.col("p.w2").alias("w2")), eager=False)
     cbg = pairs.groupBy("w1", "w2").agg(F.count("*").alias("cbg"))
     cw1 = cbg.groupBy("w1").agg(F.sum("cbg").alias("cw1"))
     nll = (cbg.join(cw1, "w1")
@@ -1249,8 +1250,8 @@ FROM tok GROUP BY source
 
 def events_rolling_dau(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "events")
-    du = (e.select(F.to_date("ts").alias("day"), "user_id").distinct()
-           .localCheckpoint(eager=False))  # reused by both aggregates
+    du = materialize(e.select(F.to_date("ts").alias("day"), "user_id")
+                     .distinct(), eager=False)  # reused by both aggregates
     days = du.select("day").distinct()
     dau = du.groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
     rolling = (du.join(F.broadcast(days.select(F.col("day").alias("d"))),

@@ -17,7 +17,7 @@ Scale posture: the demo edge construction is brute-force all-pairs
 (``similarity.sim_lsh_pairs``) or the IVF-routed scan — both already in
 tree — and PageRank itself only ever touches the *edge table*, whose
 size is nodes×k, never pairs.  Each iteration is one shuffle (join on
-src + groupBy dst); the edge table is localCheckpoint'd once so the
+src + groupBy dst); the edge table is materialized once so the
 k-NN construction is not re-evaluated five times (same
 executor-loss tradeoff as ordering.distributed_prefix_sum).
 
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import dot as _dot
 from bigarrays_jl_spark.functions import norm2 as _norm2
 # DuckDB twins of the functions.dot / functions.norm2 fold canon —
@@ -115,7 +116,7 @@ def _knn_edges(spark: SparkSession, sf: str) -> DataFrame:
 # before round 11 each query re-paid the O(N²) construction from
 # scratch (8.8 s of the 8.8 s graph_pagerank clean time was the fit).
 # Same idiom as the demo_volume sentinel (round10k), in-memory because
-# a localCheckpoint is already executor-resident.  Keyed by
+# a checkpointed table is already materialized.  Keyed by
 # applicationId so a fresh session (fresh executors — old checkpoint
 # blocks gone) can never see a stale handle.
 _EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
@@ -131,7 +132,7 @@ def _knn_edges_cached(spark: SparkSession, sf: str) -> DataFrame:
         # stale DataFrame handles (and pin their lineage) forever
         for k in [k for k in _EDGE_CACHE if k[0] != app]:
             del _EDGE_CACHE[k]
-        df = _knn_edges(spark, sf).localCheckpoint(eager=True)
+        df = materialize(_knn_edges(spark, sf), eager=True)
         _EDGE_CACHE[key] = df
     return df
 
@@ -178,7 +179,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
     Every node has out-degree exactly K_NN (no dangling mass), so the
     uniform-split contribution is r/K_NN.  The edge table is
-    localCheckpoint'd so the five join+agg iterations reuse one
+    materialized so the five join+agg iterations reuse one
     materialization instead of re-running the k-NN construction; each
     iteration is a single shuffle.  Ranks re-round to RANK_DIGITS on
     both engines per iteration (see module doc)."""
@@ -246,11 +247,11 @@ def graph_triangle_stats(spark: SparkSession, sf: str) -> DataFrame:
     equi-join — the standard two-shuffle distributed triangle count,
     never an all-pairs product.  Wedge count Σ d(d-1)/2 comes from the
     degree table; both are exact integers on both engines."""
-    und = (_knn_edges_cached(spark, sf)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint(eager=True))     # reused by 3 joins + degrees
+    und = materialize(
+        _knn_edges_cached(spark, sf)
+        .select(F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"))
+        .distinct(), eager=True)  # reused by 3 joins + degrees
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x3"), F.col("b").alias("z3"))

@@ -50,10 +50,10 @@ def _lsh_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Directed symmetrization (src, dst) of the LSH similarity pairs,
     materialized once for the iteration loop."""
     p = sim_lsh_pairs(spark, sf).select("vec_a", "vec_b")
-    return (p.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-             .unionAll(p.select(F.col("vec_b").alias("src"),
-                                F.col("vec_a").alias("dst")))
-             .localCheckpoint(eager=True))
+    return materialize(
+        p.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
+         .unionAll(p.select(F.col("vec_b").alias("src"),
+                            F.col("vec_a").alias("dst"))), eager=True)
 
 
 # the shared DuckDB edge CTE: the full LSH pair query nests as a
@@ -62,7 +62,7 @@ def _lsh_edges(spark: SparkSession, sf: str) -> DataFrame:
 # 2×N_ITER times, and letting the optimizer inline the 48-plane LSH
 # projection per reference blows the oracle's memory (observed
 # bad_alloc at sf0.1 in the full-registry sweep) — one evaluation is
-# also what the Spark side does (localCheckpoint'd edge table).
+# also what the Spark side does (materialized edge table).
 _LSH_EDGES_CTE = f"""
 pairs AS MATERIALIZED ({SIM_LSH_PAIRS_SQL}),
 edges AS MATERIALIZED (
@@ -146,9 +146,8 @@ def graph_triangles_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Triangle count + global clustering of the LSH similarity graph
     (pairs already canonical a < b, so each triangle appears once as
     a < b < c via the standard two-shuffle wedge join)."""
-    und = (sim_lsh_pairs(spark, sf)
-           .select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
-           .localCheckpoint(eager=True))
+    und = materialize(sim_lsh_pairs(spark, sf).select(
+        F.col("vec_a").alias("a"), F.col("vec_b").alias("b")), eager=True)
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x3"), F.col("b").alias("z3"))

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.sources.tables import fan_out, load
 
 
@@ -678,8 +679,8 @@ def mm_phash_neardup(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": b["doc_id"],
                                 "phash": pd.Series(out, dtype="int64")})
 
-    hashed = (aug.mapInPandas(phash, schema="doc_id bigint, phash bigint")
-              .localCheckpoint(eager=False))   # both self-join sides read it
+    hashed = materialize(aug.mapInPandas(      # both self-join sides read it
+        phash, schema="doc_id bigint, phash bigint"), eager=False)
     width = PHASH_BITS // PHASH_BANDS
     bands = hashed.select("doc_id", "phash", F.explode(F.array(*[
         F.struct(F.lit(b).alias("b"),

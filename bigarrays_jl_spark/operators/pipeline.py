@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
 from bigarrays_jl_spark.operators.ordering import distributed_prefix_sum
 from bigarrays_jl_spark.sources.tables import load
@@ -50,10 +51,8 @@ DECON_NGRAM = 8
 
 def pipeline_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents").select("doc_id", tokens().alias("t"))
-    arr = (d.select("doc_id",
-                    F.array_distinct(
-                        shingle_array("t", DECON_NGRAM)).alias("ss"))
-            .localCheckpoint(eager=False))
+    arr = materialize(d.select("doc_id", F.array_distinct(
+        shingle_array("t", DECON_NGRAM)).alias("ss")), eager=False)
     ev = (arr.filter(F.col("doc_id") % 10 == 0)
              .select(F.explode("ss").alias("s")).distinct())
     tr = (arr.filter(F.col("doc_id") % 10 != 0)

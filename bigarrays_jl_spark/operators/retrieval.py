@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import tokens as _toks
 from bigarrays_jl_spark.sources.tables import load
 
@@ -59,10 +60,10 @@ def text_bm25(spark: SparkSession, sf: str) -> DataFrame:
     # lazy materialization instead of re-tokenizing per consumer (the
     # dedup._bands signature-table canon; plan audit showed 3 corpus
     # scans without it)
-    d = (load(spark, sf, "documents")
-         .select("doc_id", _toks().alias("t"))
-         .withColumn("dl", F.size("t"))
-         .localCheckpoint(eager=False))
+    d = materialize(
+        load(spark, sf, "documents")
+        .select("doc_id", _toks().alias("t"))
+        .withColumn("dl", F.size("t")), eager=False)
     stats = d.agg(F.count("*").cast("double").alias("n_docs"),
                   F.avg("dl").alias("avgdl"))
     tf = (d.select("doc_id", "dl", F.explode("t").alias("term"))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.sources.tables import load
 
 # --------------------------------------------------------------------------
@@ -40,7 +41,7 @@ from bigarrays_jl_spark.sources.tables import load
 # whose distance term is 0) are fixpoints, so extra rounds are no-ops.
 #
 # Scale shape: 6 key-partitioned self-joins, shuffle ∝ node count per
-# round; lazy localCheckpoint per round truncates the doubling plan's
+# round; lazy materialize per round truncates the doubling plan's
 # exponential lineage (the pagerank idiom).  A WITH RECURSIVE oracle
 # walks the same forest edge-by-edge in DuckDB.
 # --------------------------------------------------------------------------
@@ -59,10 +60,10 @@ def q62_hierarchy_depth(spark: SparkSession, sf: str) -> DataFrame:
         b = anc.select(F.col("node").alias("b_node"),
                        F.col("anc").alias("b_anc"),
                        F.col("d").alias("b_d"))
-        anc = (anc.join(b, anc["anc"] == b["b_node"])
-               .select("node", F.col("b_anc").alias("anc"),
-                       (F.col("d") + F.col("b_d")).alias("d"))
-               .localCheckpoint(eager=False))
+        anc = materialize(
+            anc.join(b, anc["anc"] == b["b_node"])
+            .select("node", F.col("b_anc").alias("anc"),
+                    (F.col("d") + F.col("b_d")).alias("d")), eager=False)
     return (anc.join(p, anc["node"] == p["p_partkey"])
             .groupBy(F.col("d").alias("depth"))
             .agg(F.count("*").alias("n_parts"),

@@ -47,7 +47,7 @@ from bigarrays_jl_spark.sources.tables import load
 # than HOP_ROUNDS (or disconnected) report -1.
 #
 # Scale shape: each round shuffles the EDGE table once (join on src +
-# min-agg on dst) — never the corpus; lazy localCheckpoint truncates
+# min-agg on dst) — never the corpus; lazy materialize truncates
 # the per-round lineage (the pagerank idiom).  The DuckDB twin unrolls
 # the same bounded relaxation over MATERIALIZED CTEs (a WITH RECURSIVE
 # min-dist walk would enumerate paths, not frontiers).
@@ -76,9 +76,9 @@ def graph_hops_lsh(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("dst").alias("vec_id"),
                          (F.col("f_d") + F.lit(1)).cast("int")
                           .alias("dist")))
-        d = (d.select("vec_id", "dist").union(relax)
-             .groupBy("vec_id").agg(F.min("dist").alias("dist"))
-             .localCheckpoint(eager=False))
+        d = materialize(
+            d.select("vec_id", "dist").union(relax)
+            .groupBy("vec_id").agg(F.min("dist").alias("dist")), eager=False)
     return (d.groupBy(F.coalesce(F.col("dist"), F.lit(-1))
                        .cast("bigint").alias("hops"))
             .agg(F.count("*").alias("n_nodes")))
@@ -136,8 +136,8 @@ def basket_pairs(spark: SparkSession, sf: str) -> DataFrame:
           .agg(F.count("*").alias("item_sup"))
           .filter(F.col("item_sup") >= MIN_ITEM_SUP),
         eager=False)
-    li2 = li.join(F.broadcast(freq.select("l_partkey")), "l_partkey",
-                  "semi").localCheckpoint(eager=False)
+    li2 = materialize(li.join(F.broadcast(freq.select("l_partkey")),
+                              "l_partkey", "semi"), eager=False)
     n = li2.select("l_orderkey").distinct().agg(
         F.count("*").cast("double").alias("n_orders"))
     a = li2.select("l_orderkey", F.col("l_partkey").alias("part_a"))
@@ -233,9 +233,9 @@ SIM_WINDOW_CAP = 8
 def set_sim_join(spark: SparkSession, sf: str,
                  window_cap: int | None = SIM_WINDOW_CAP) -> DataFrame:
     docs = load(spark, sf, "documents")
-    tok_all = (docs.select("doc_id",
-                           F.explode(_tokens("text")).alias("token"))
-               .distinct().localCheckpoint(eager=False))
+    tok_all = materialize(docs.select(
+        "doc_id", F.explode(_tokens("text")).alias("token")).distinct(),
+        eager=False)
     # stage 1: identical-token-set families -> min-doc_id reps
     setfp = (tok_all.groupBy("doc_id")
              .agg(F.md5(F.concat_ws(
@@ -243,8 +243,8 @@ def set_sim_join(spark: SparkSession, sf: str,
     fam = (setfp.groupBy("fp")
            .agg(F.min("doc_id").alias("doc_id"),
                 F.count("*").cast("bigint").alias("n_same_set")))
-    tok = (tok_all.join(fam.select("doc_id"), "doc_id", "left_semi")
-           .localCheckpoint(eager=False))    # prefix + verify legs reuse
+    tok = materialize(                  # prefix + verify legs reuse
+        tok_all.join(fam.select("doc_id"), "doc_id", "left_semi"), eager=False)
     df = tok.groupBy("token").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "token")
     r = (tok.join(df, "token")

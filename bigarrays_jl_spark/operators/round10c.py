@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import tokens as _tokens
 from bigarrays_jl_spark.sources.tables import load
 
@@ -122,10 +123,10 @@ FROM iv GROUP BY event_type
 
 def phrase_search(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents")
-    idx = (docs.select("doc_id",
-                       F.posexplode(_tokens("text"))
-                        .alias("pos", "token"))
-           .localCheckpoint(eager=False))
+    idx = materialize(
+        docs.select("doc_id",
+                    F.posexplode(_tokens("text"))
+                     .alias("pos", "token")), eager=False)
     nxt = idx.select("doc_id", (F.col("pos") - 1).alias("pos"),
                      F.col("token").alias("token2"))
     big = (idx.join(nxt, ["doc_id", "pos"])
@@ -220,8 +221,8 @@ def emb_covariance(spark: SparkSession, sf: str) -> DataFrame:
                         [G[iu], XI.sum(axis=0), [XI.shape[0]]])}
             yield _pd.DataFrame(rows)
 
-    stream = e.mapInPandas(
-        gram, schema="i int, j int, v long").localCheckpoint(eager=False)
+    stream = materialize(
+        e.mapInPandas(gram, schema="i int, j int, v long"), eager=False)
     sxy = (stream.filter(F.col("j") >= 0)
            .groupBy("i", "j").agg(F.sum("v").alias("sxy")))
     sums = (stream.filter((F.col("j") == -1) & (F.col("i") >= 0))

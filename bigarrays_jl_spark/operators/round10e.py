@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.sources.tables import fan_out, load
 
 SESSION_S = 1800
@@ -130,8 +131,8 @@ def q70_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
     # h1 feeds BOTH the median and the deviation histogram —
     # ReuseExchange won't match column-pruned duplicate subplans, so
     # checkpoint the aggregate once (the q50/text_bm25 idiom)
-    h1 = (li.groupBy("l_returnflag", "cents")
-          .agg(F.count("*").alias("w")).localCheckpoint(eager=False))
+    h1 = materialize(li.groupBy("l_returnflag", "cents")
+                     .agg(F.count("*").alias("w")), eager=False)
     med = _lower_median(h1, "l_returnflag", "cents", "w", "med")
     dev = (h1.join(F.broadcast(med), "l_returnflag")
            .withColumn("d", F.abs(F.col("cents") - F.col("med"))))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.sources.tables import fan_out, load
 
 EMB_Q = 1_000_000
@@ -59,7 +60,6 @@ def q71_quantile_screen(spark: SparkSession, sf: str) -> DataFrame:
     # elc matters: ReuseExchange does NOT match its two consumers
     # (A/B: 2.5 s unmaterialized vs 1.2 s with it), and the cell table
     # is value-domain × label bounded, never corpus-sized.
-    from bigarrays_jl_spark.checkpointing import materialize
     elc = materialize(
         el.groupBy("label", "i", "xi").agg(F.count("*").alias("v")),
         eager=False)
@@ -114,17 +114,6 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 
-def _lower_quantile(hist: DataFrame, num: int, den: int,
-                    out: str) -> DataFrame:
-    """Smallest cents per flag with den·cum ≥ num·tot — bucketed
-    two-phase pick (ordering.bucketed_quantile_pick), bit-identical to
-    the naive per-flag window without ever funneling a flag's whole
-    distinct-cents domain through one task (the 4.9× sf1 family)."""
-    from bigarrays_jl_spark.operators.ordering import bucketed_quantile_pick
-    return bucketed_quantile_pick(hist, "l_returnflag", "cents", "w",
-                                  num, den, out)
-
-
 def q72_winsorized_mean(spark: SparkSession, sf: str) -> DataFrame:
     # fan_out: parallelize the single-split (flag, cents) partial agg —
     # the q70 treatment (A/B at sf0.1: 1.61 → 1.29 s)
@@ -132,8 +121,8 @@ def q72_winsorized_mean(spark: SparkSession, sf: str) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
          .alias("cents")))
-    hist = (li.groupBy("l_returnflag", "cents")
-            .agg(F.count("*").alias("w")).localCheckpoint(eager=False))
+    hist = materialize(li.groupBy("l_returnflag", "cents")
+                       .agg(F.count("*").alias("w")), eager=False)
     # both fences ride ONE shared pick chain (r18: the per-pick form
     # re-ran the bucket fold + its checkpoint per fraction)
     from bigarrays_jl_spark.operators.ordering import bucketed_quantile_picks

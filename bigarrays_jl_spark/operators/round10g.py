@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.graph_lsh import _LSH_EDGES_CTE
 from bigarrays_jl_spark.operators.similarity import sim_lsh_pairs
 from bigarrays_jl_spark.sources.tables import load
@@ -144,11 +145,11 @@ def graph_sssp_lsh(spark: SparkSession, sf: str) -> DataFrame:
         "vec_a", "vec_b",
         (F.round((F.lit(1.0) - F.col("cosine")) * VQ).cast("bigint")
          + 1).alias("w"))
-    edges = (p.select(F.col("vec_a").alias("src"),
-                      F.col("vec_b").alias("dst"), "w")
-             .unionAll(p.select(F.col("vec_b").alias("src"),
-                                F.col("vec_a").alias("dst"), "w"))
-             .localCheckpoint(eager=True))
+    edges = materialize(
+        p.select(F.col("vec_a").alias("src"),
+                 F.col("vec_b").alias("dst"), "w")
+        .unionAll(p.select(F.col("vec_b").alias("src"),
+                           F.col("vec_a").alias("dst"), "w")), eager=True)
     nodes = edges.select(F.col("src").alias("vec_id")).distinct()
     seed = nodes.agg(F.min("vec_id").alias("s"))
     d = (nodes.crossJoin(F.broadcast(seed))
@@ -165,9 +166,9 @@ def graph_sssp_lsh(spark: SparkSession, sf: str) -> DataFrame:
         relax = (edges.join(fr, edges.src == fr.f_id)
                  .select(F.col("dst").alias("vec_id"),
                          (F.col("f_d") + F.col("w")).alias("dist")))
-        d = (d.select("vec_id", "dist").union(relax)
-             .groupBy("vec_id").agg(F.min("dist").alias("dist"))
-             .localCheckpoint(eager=False))
+        d = materialize(
+            d.select("vec_id", "dist").union(relax)
+            .groupBy("vec_id").agg(F.min("dist").alias("dist")), eager=False)
     return d.select("vec_id",
                     F.coalesce("dist", F.lit(-1)).alias("sssp_dist"))
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import dot as _dot
 from bigarrays_jl_spark.functions import norm2 as _norm2
 from bigarrays_jl_spark.operators.ordering import distributed_prefix_sum
@@ -185,12 +186,12 @@ ORDER BY rrf DESC, doc_id LIMIT {RRF_TOP}
 
 
 def q79_mutual_info(spark: SparkSession, sf: str) -> DataFrame:
-    el = (load(spark, sf, "embeddings")
-          .select("label", F.posexplode("embedding").alias("i", "x"))
-          .select("label", "i",
-                  F.round(F.col("x").cast("double") * EMB_Q)
-                   .cast("bigint").alias("xi"))
-          .localCheckpoint(eager=False))
+    el = materialize(
+        load(spark, sf, "embeddings")
+        .select("label", F.posexplode("embedding").alias("i", "x"))
+        .select("label", "i",
+                F.round(F.col("x").cast("double") * EMB_Q)
+                 .cast("bigint").alias("xi")), eager=False)
     hist = el.groupBy("i", "xi").agg(F.count("*").alias("w"))
     w_cum = (Window.partitionBy("i").orderBy("xi")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))

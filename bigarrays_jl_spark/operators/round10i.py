@@ -49,6 +49,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.advanced import demo_volume
 from bigarrays_jl_spark.operators.graph_lsh import (_LSH_EDGES_CTE,
                                                     _lsh_edges)
@@ -79,13 +80,13 @@ def graph_lpa_lsh(spark: SparkSession, sf: str) -> DataFrame:
         # label ASC) sort, so the pick is identical while the sort-
         # based Window (exchange + per-key sort + rn filter) becomes a
         # map-side-combinable aggregate
-        labels = (cnt.groupBy("dst")
-                  .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                                      F.col("label").alias("l")))
-                        .alias("p"))
-                  .select(F.col("dst").alias("vec_id"),
-                          F.col("p.l").alias("label"))
-                  .localCheckpoint(eager=False))
+        labels = materialize(
+            cnt.groupBy("dst")
+            .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
+                                F.col("label").alias("l")))
+                  .alias("p"))
+            .select(F.col("dst").alias("vec_id"),
+                    F.col("p.l").alias("label")), eager=False)
     return (labels.groupBy(F.col("label").alias("community"))
             .agg(F.count("*").cast("bigint").alias("n_members"),
                  F.min("vec_id").alias("min_member")))
@@ -206,13 +207,13 @@ def q81_cuped(spark: SparkSession, sf: str) -> DataFrame:
         "user_id", "event_type",
         F.round(F.col("value").cast("double") * VQ)
          .cast("bigint").alias("vi"))
-    u = (e.groupBy("user_id")
-         .agg(F.sum(F.when(F.col("event_type") == "view", F.col("vi"))
-                     .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase",
-                           F.col("vi")).otherwise(0)).alias("y"))
-         .withColumn("arm", F.col("user_id") % 2)
-         .localCheckpoint(eager=False))
+    u = materialize(
+        e.groupBy("user_id")
+        .agg(F.sum(F.when(F.col("event_type") == "view", F.col("vi"))
+                    .otherwise(0)).alias("x"),
+             F.sum(F.when(F.col("event_type") == "purchase",
+                          F.col("vi")).otherwise(0)).alias("y"))
+        .withColumn("arm", F.col("user_id") % 2), eager=False)
     g = u.agg(F.count("*").cast("double").alias("n"),
               F.sum(F.col("x").cast("decimal(38,0)"))
                .cast("double").alias("sx"),

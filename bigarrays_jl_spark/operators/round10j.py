@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.retrieval import (FUZZY_NAME_PAIRS_SQL,
                                                     fuzzy_name_pairs)
 from bigarrays_jl_spark.sources.tables import load
@@ -53,11 +54,11 @@ LAG_DAYS = 7
 
 def entity_res_golden(spark: SparkSession, sf: str) -> DataFrame:
     pairs = fuzzy_name_pairs(spark, sf).select("name_a", "name_b")
-    edges = (pairs.union(pairs.select(F.col("name_b").alias("name_a"),
-                                      F.col("name_a").alias("name_b")))
-             .toDF("src", "dst").localCheckpoint())
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")).localCheckpoint())
+    edges = materialize(pairs.union(pairs.select(
+        F.col("name_b").alias("name_a"), F.col("name_a").alias("name_b")))
+        .toDF("src", "dst"), eager=True)
+    labels = materialize(edges.select(F.col("src").alias("node")).distinct()
+                         .withColumn("label", F.col("node")), eager=True)
     changed = None
     for _ in range(ER_MAX_ROUNDS):
         # the convergence check rides the SAME shuffle as the label
@@ -67,13 +68,13 @@ def entity_res_golden(spark: SparkSession, sf: str) -> DataFrame:
         prop = (edges.join(labels, edges["src"] == labels["node"])
                 .select(F.col("dst").alias("node"), "label",
                         F.lit(0).alias("own")))
-        merged = (labels.select("node", "label", F.lit(1).alias("own"))
-                  .union(prop)
-                  .groupBy("node")
-                  .agg(F.min("label").alias("label"),
-                       F.min(F.when(F.col("own") == 1, F.col("label")))
-                        .alias("old"))
-                  .localCheckpoint())
+        merged = materialize(
+            labels.select("node", "label", F.lit(1).alias("own"))
+            .union(prop)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"),
+                 F.min(F.when(F.col("own") == 1, F.col("label")))
+                  .alias("old")), eager=True)
         changed = merged.filter(F.col("label") != F.col("old")).count()
         labels = merged.select("node", "label")
         if changed == 0:
@@ -175,8 +176,8 @@ def q83_seasonal_backtest(spark: SparkSession, sf: str) -> DataFrame:
          .alias("day"),
         F.round(F.col("value").cast("double") * VQ)
          .cast("bigint").alias("vi"))
-    daily = (e.groupBy("event_type", "day")
-             .agg(F.sum("vi").alias("rev")).localCheckpoint(eager=False))
+    daily = materialize(e.groupBy("event_type", "day")
+                        .agg(F.sum("vi").alias("rev")), eager=False)
     fc = daily.select("event_type",
                       (F.col("day") + LAG_DAYS).alias("day"),
                       F.col("rev").alias("fc"))

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.ordering import bucketed_running
 from bigarrays_jl_spark.sources.tables import load
 
@@ -60,12 +61,13 @@ def q86_kaplan_meier(spark: SparkSession, sf: str) -> DataFrame:
          .select("user_id", "event_id", _day().alias("day")))
     horizon = e.agg(F.max("day").alias("h"))
     w = Window.partitionBy("user_id").orderBy("day", "event_id")
-    lif = (e.withColumn("nxt", F.lead("day").over(w))
-           .crossJoin(F.broadcast(horizon))
-           .select(F.coalesce(F.col("nxt") - F.col("day"),
-                              F.col("h") - F.col("day")).alias("t"),
-                   F.col("nxt").isNotNull().cast("int").alias("churned"))
-           .localCheckpoint(eager=False))
+    lif = materialize(
+        e.withColumn("nxt", F.lead("day").over(w))
+        .crossJoin(F.broadcast(horizon))
+        .select(F.coalesce(F.col("nxt") - F.col("day"),
+                           F.col("h") - F.col("day")).alias("t"),
+                F.col("nxt").isNotNull().cast("int").alias("churned")),
+        eager=False)
     hist = (lif.groupBy("t")
             .agg(F.count("*").alias("w"),
                  F.sum("churned").alias("d")))
@@ -149,8 +151,8 @@ def q87_autocorr(spark: SparkSession, sf: str) -> DataFrame:
         "event_type", _day().alias("day"),
         F.round(F.col("value").cast("double") * VQ)
          .cast("bigint").alias("vi"))
-    daily = (e.groupBy("event_type", "day")
-             .agg(F.sum("vi").alias("rev")).localCheckpoint(eager=False))
+    daily = materialize(e.groupBy("event_type", "day")
+                        .agg(F.sum("vi").alias("rev")), eager=False)
     prev = daily.select("event_type",
                         (F.col("day") + 1).alias("day"),
                         F.col("rev").alias("x"))
@@ -221,10 +223,10 @@ def q88_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.col("value").cast("double") * 100)
          .cast("bigint").alias("cents"))
     p = e.filter(F.col("event_type") == "purchase")
-    first = (p.groupBy("user_id")
-             .agg(F.min("day").alias("cday"))
-             .select("user_id", F.col("cday").alias("cohort"), "cday")
-             .localCheckpoint(eager=False))
+    first = materialize(
+        p.groupBy("user_id")
+        .agg(F.min("day").alias("cday"))
+        .select("user_id", F.col("cday").alias("cohort"), "cday"), eager=False)
     sizes = first.groupBy("cohort").agg(
         F.count("*").alias("cohort_users"))
     rev = (p.join(first, "user_id")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.ordering import bucketed_running
 from bigarrays_jl_spark.sources.tables import load
 
@@ -41,12 +42,12 @@ def ks_two_sample(spark: SparkSession, sf: str) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
         .alias("cents"))
-    hist = (li.groupBy("cents")
-            .agg(F.sum(F.when(F.col("l_returnflag") == "R", 1)
-                       .otherwise(0)).alias("w1"),
-                 F.sum(F.when(F.col("l_returnflag") == "A", 1)
-                       .otherwise(0)).alias("w2"))
-            .localCheckpoint(eager=False))   # CDF merge + totals reuse
+    hist = materialize(                  # CDF merge + totals reuse
+        li.groupBy("cents")
+        .agg(F.sum(F.when(F.col("l_returnflag") == "R", 1)
+                   .otherwise(0)).alias("w1"),
+             F.sum(F.when(F.col("l_returnflag") == "A", 1)
+                   .otherwise(0)).alias("w2")), eager=False)
     # r13 de-funnel: the CDF merge ran a whole-cent-domain ORDER BY
     # window (allowlisted value-domain funnel) — now the two-level
     # bucketed running sum; integer sums make it bit-identical

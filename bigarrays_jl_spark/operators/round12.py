@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.round11d import HASH_BITS, KMV_K
 from bigarrays_jl_spark.sources.tables import load
 
@@ -71,7 +72,7 @@ def _type_minima(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sketch_union_distinct(spark: SparkSession, sf: str) -> DataFrame:
-    mins = _type_minima(spark, sf).localCheckpoint(eager=False)
+    mins = materialize(_type_minima(spark, sf), eager=False)
     types = mins.select("event_type").distinct()
     pairs = (types.select(F.col("event_type").alias("type_a"))
              .join(types.select(F.col("event_type").alias("type_b")),
@@ -168,8 +169,8 @@ def text_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
     # corpus, and the vocab-sized df table shuffle-joined the postings
     # (r13: the sf1 proof read 7.5× on exactly those two defects; the
     # bm25 sibling with the checkpoint+broadcast shape reads 1.9×)
-    tf = (toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=False))
+    tf = materialize(toks.groupBy("doc_id", "term")
+                     .agg(F.count("*").alias("tf")), eager=False)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     # same doc set as toks (groupBy preserves it) without re-tokenizing
     n = tf.select("doc_id").distinct().agg(

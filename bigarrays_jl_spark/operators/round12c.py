@@ -98,8 +98,7 @@ def basket_triples(spark: SparkSession, sf: str) -> DataFrame:
                   F.col("p_brand").alias("p")).distinct())
     freq = (li.groupBy("p").agg(F.count("*").alias("s"))
             .filter(F.col("s") >= TRI_ITEM_SUP).select("p"))
-    li2 = li.join(F.broadcast(freq), "p", "semi") \
-            .localCheckpoint(eager=False)
+    li2 = materialize(li.join(F.broadcast(freq), "p", "semi"), eager=False)
     a = li2.select("o", F.col("p").alias("pa"))
     b = li2.select("o", F.col("p").alias("pb"))
     c = li2.select("o", F.col("p").alias("pc"))

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.round11d import KMV_K
 from bigarrays_jl_spark.operators.round12 import _type_minima
 from bigarrays_jl_spark.sources.tables import load
@@ -129,7 +130,7 @@ FROM per_class GROUP BY c_mktsegment
 
 
 def sketch_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    mins = _type_minima(spark, sf).localCheckpoint(eager=False)
+    mins = materialize(_type_minima(spark, sf), eager=False)
     types = mins.select("event_type").distinct()
     pairs = (types.select(F.col("event_type").alias("type_a"))
              .join(types.select(F.col("event_type").alias("type_b")),

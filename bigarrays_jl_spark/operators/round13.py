@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import fingerprint, shingle_array
 from bigarrays_jl_spark.operators.ordering import bucketed_running
 from bigarrays_jl_spark.sources.tables import fan_out, load
@@ -58,8 +59,8 @@ def lorenz_curve(spark: SparkSession, sf: str) -> DataFrame:
            .groupBy("o_custkey")
            .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
                  .alias("rev_c")))
-    hist = (rev.groupBy("rev_c").agg(F.count("*").alias("nc"))
-            .localCheckpoint(eager=False))      # cum pass + totals reuse
+    hist = materialize(                  # cum pass + totals reuse
+        rev.groupBy("rev_c").agg(F.count("*").alias("nc")), eager=False)
     h = bucketed_running(
         hist, "rev_c",
         [("cum_c", "nc", "sum", True),
@@ -201,9 +202,9 @@ def cross_source_leakage(spark: SparkSession, sf: str) -> DataFrame:
     # fan_out: the 8-gram md5 shingling is CPU-heavy map work on a
     # single-split scan (q01 treatment); the streaming twin shares
     # doc_shingles unchanged — its micro-batches are already parallel
-    sp = (doc_shingles(fan_out(spark, load(spark, sf, "documents")
-                               .select("source", "text")))
-          .localCheckpoint(eager=False))      # sizes + pair join reuse
+    sp = materialize(                    # sizes + pair join reuse
+        doc_shingles(fan_out(spark, load(spark, sf, "documents")
+                             .select("source", "text"))), eager=False)
     return leakage_matrix(sp)
 
 

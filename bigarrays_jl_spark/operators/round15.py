@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array
 from bigarrays_jl_spark.sources.tables import load
 
@@ -82,7 +83,7 @@ def cm_sketch_of(grams: DataFrame) -> DataFrame:
 
 
 def cm_heavyhitters(spark: SparkSession, sf: str) -> DataFrame:
-    exact = gram_counts(spark, sf).localCheckpoint(eager=False)
+    exact = materialize(gram_counts(spark, sf), eager=False)
     sketch = cm_sketch_of(exact)
     top = (exact.orderBy(F.col("n").desc(), "gram").limit(CM_TOPK)
            .select("gram", F.col("n").alias("exact_n")))
@@ -183,19 +184,18 @@ def bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     from bigarrays_jl_spark.functions.expressions import tokens
     from bigarrays_jl_spark.operators.pipeline import DECON_NGRAM
     d = load(spark, sf, "documents").select("doc_id", tokens().alias("t"))
-    arr = (d.select("doc_id",
-                    F.array_distinct(
-                        shingle_array("t", DECON_NGRAM)).alias("ss"))
-           .localCheckpoint(eager=False))     # eval + train legs reuse
-    ev = (arr.filter(F.col("doc_id") % 10 == 0)
-          .select(F.explode("ss").alias("s")).distinct()
-          .localCheckpoint(eager=False))      # bitset + exact-audit legs
+    arr = materialize(                   # eval + train legs reuse
+        d.select("doc_id", F.array_distinct(
+            shingle_array("t", DECON_NGRAM)).alias("ss")), eager=False)
+    ev = materialize(                    # bitset + exact-audit legs
+        arr.filter(F.col("doc_id") % 10 == 0)
+        .select(F.explode("ss").alias("s")).distinct(), eager=False)
     jarr = F.array(*[F.lit(j) for j in range(BLOOM_K)])
     bits = (ev.select(F.explode(jarr).alias("j"), "s")
             .select("j", bloom_bit_col().alias("bit")).distinct())
-    tr = (arr.filter(F.col("doc_id") % 10 != 0)
-          .select("doc_id", F.explode("ss").alias("s"))
-          .localCheckpoint(eager=False))      # screen + audit legs
+    tr = materialize(                    # screen + audit legs
+        arr.filter(F.col("doc_id") % 10 != 0)
+        .select("doc_id", F.explode("ss").alias("s")), eager=False)
     n_pos = bloom_screen_counts(tr, bits)
     exact = tr.join(ev, "s", "left_semi")
     n_ex = (exact.groupBy("doc_id")
@@ -253,7 +253,6 @@ def bloom_screen_counts(tr_grams: DataFrame, bits: DataFrame) -> DataFrame:
 def _bloom_survivors(tr_grams: DataFrame, bits: DataFrame) -> DataFrame:
     """The K chained broadcast semi-probes shared by the count screen
     above and round16's gram-emitting screen."""
-    from bigarrays_jl_spark.checkpointing import materialize
     # one evaluation of the (distinct) bitset feeds K broadcast builds
     bset = materialize(bits.select("j", "bit").distinct(), eager=False)
     surv = tr_grams.select("doc_id", "s")

@@ -102,11 +102,11 @@ def _curated_survivors(spark: SparkSession, sf: str) -> DataFrame:
                        eager=False)        # gram screen + packer reuse
     # stage 3: decontamination — eval 8-gram set -> Bloom bitset ->
     # map-side screen -> exact semi-join on bloom-positives only
-    ev = (docs.filter(F.col("doc_id") % 10 == 0)
-          .select(tokens().alias("t"))
-          .select(F.explode(F.array_distinct(
-              shingle_array("t", DECON_NGRAM))).alias("s"))
-          .distinct().localCheckpoint(eager=False))  # bitset + verify
+    ev = materialize(                    # bitset + verify
+        docs.filter(F.col("doc_id") % 10 == 0).select(tokens().alias("t"))
+        .select(F.explode(F.array_distinct(
+            shingle_array("t", DECON_NGRAM))).alias("s"))
+        .distinct(), eager=False)
     jarr = F.array(*[F.lit(j) for j in range(BLOOM_K)])
     bits = (ev.select(F.explode(jarr).alias("j"), "s")
             .select("j", bloom_bit_col().alias("bit")).distinct())

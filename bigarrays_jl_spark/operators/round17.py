@@ -72,7 +72,7 @@ def ann_pq_recall_knee(spark: SparkSession, sf: str) -> DataFrame:
     # subvector row) that must not run on one task
     e = fan_out(spark, load(spark, sf, "embeddings")).select(
         "vec_id", "embedding")
-    sub = _pq_sub(e).localCheckpoint(eager=False)
+    sub = materialize(_pq_sub(e), eager=False)
 
     # seeded init per leg: vectors 0..pk-1, tagged with their leg key
     cent = None

@@ -23,6 +23,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import cosine as _cosine_fn
 from bigarrays_jl_spark.functions import dot as _dot
 from bigarrays_jl_spark.functions import norm2 as _norm2
@@ -219,17 +220,17 @@ def sim_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # pairs that collide in several bands before the exact-cosine verify.
     e = (fan_out(spark, load(spark, sf, "embeddings"))
          .withColumn("bits", F.expr(_BITS_SPARK)))
-    keys = (e.select("vec_id", "embedding", F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"), _band_key(b).alias("bkey"))
-                for b in range(N_BANDS)])).alias("bk"))
-             .select("vec_id", "embedding",
-                     F.col("bk.band").alias("band"),
-                     F.col("bk.bkey").alias("bkey"))
-            # materialize the bucket-key table once (lazy): both self-join
-            # sides consume it, and the 48-plane sign projection is the
-            # dominant map cost — same signature-table pattern and
-            # fault-tolerance caveat as dedup._bands
-            .localCheckpoint(eager=False))
+    # materialize the bucket-key table once (lazy): both self-join
+    # sides consume it, and the 48-plane sign projection is the
+    # dominant map cost — same signature-table pattern and
+    # fault-tolerance caveat as dedup._bands
+    keys = materialize(
+        e.select("vec_id", "embedding", F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), _band_key(b).alias("bkey"))
+            for b in range(N_BANDS)])).alias("bk"))
+         .select("vec_id", "embedding",
+                 F.col("bk.band").alias("band"),
+                 F.col("bk.bkey").alias("bkey")), eager=False)
     a = keys.select(F.col("vec_id").alias("vec_a"),
                     F.col("embedding").alias("ea"), "band", "bkey")
     b = keys.select(F.col("vec_id").alias("vec_b"),
@@ -456,9 +457,9 @@ def _kmeans_fit(spark: SparkSession, sf: str,
     # broadcast join + k_cells 64-dim L2 evals per row — CPU-heavy
     # map work that would otherwise run on the source's ONE split for
     # every round (§2.5); the checkpoint pins the fanned layout
-    e = (fan_out(spark, load(spark, sf, "embeddings"))
-         .select("vec_id", "embedding")
-         .localCheckpoint(eager=False))
+    e = materialize(
+        fan_out(spark, load(spark, sf, "embeddings"))
+        .select("vec_id", "embedding"), eager=False)
     cent = (e.filter(F.col("vec_id") < k_cells)
             .select(F.col("vec_id").alias("cell"),
                     F.transform("embedding", lambda x: x.cast("double"))
@@ -494,7 +495,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf: str,
     column, now over cells this engine itself fitted."""
     # the fitted assignment feeds both the query side and the cell scan
     final, cent = _kmeans_fit(spark, sf, k_cells, iters)
-    final = final.localCheckpoint(eager=False)
+    final = materialize(final, eager=False)
     q = (final.filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")))
     routed = (q.crossJoin(F.broadcast(cent))
@@ -828,7 +829,7 @@ def _pq_fit(spark: SparkSession, sf: str,
         # reused every round — and shareable ACROSS fits: the subvector
         # table depends only on pq_m, so a codebook-size sweep
         # (round17.ann_pq_recall_knee) passes one table to every leg
-        sub = _pq_sub(e, pq_m).localCheckpoint(eager=False)
+        sub = materialize(_pq_sub(e, pq_m), eager=False)
     cent = (sub.filter(F.col("vec_id") < pq_k)
             .select("s", F.col("vec_id").alias("cell"),
                     F.col("sv").alias("centroid")))

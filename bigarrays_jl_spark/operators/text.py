@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions import tokens as _toks
 from bigarrays_jl_spark.sources.tables import load
 
@@ -382,8 +383,8 @@ def text_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     # materialized once (lazy): the exploded token table feeds BOTH the
     # frequency aggregation and the per-doc join — without this the
     # corpus scan+explode runs twice (same discipline as dedup sh_all)
-    toks = (d.select("doc_id", F.explode(_toks()).alias("term"))
-            .localCheckpoint(eager=False))
+    toks = materialize(
+        d.select("doc_id", F.explode(_toks()).alias("term")), eager=False)
     tf = toks.groupBy("term").agg(F.count("*").alias("tf"))
     n_total = tf.agg(F.sum("tf").cast("double").alias("n"))
     nll = (tf.crossJoin(F.broadcast(n_total))

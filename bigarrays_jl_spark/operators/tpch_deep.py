@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.relational import _dsum2
 from bigarrays_jl_spark.sources.tables import load
 
@@ -72,8 +73,8 @@ def _elig_costs(spark: SparkSession, sf: str) -> DataFrame:
     # without this the lineitem scan + (part, supplier) aggregate run
     # TWICE (verified in the physical plan).  Same signature-table
     # pattern and fault-tolerance caveat as dedup._bands.
-    return (ps.join(F.broadcast(s), ps.sk == s.s_suppkey).drop("sk")
-              .localCheckpoint(eager=False))
+    return materialize(
+        ps.join(F.broadcast(s), ps.sk == s.s_suppkey).drop("sk"), eager=False)
 
 
 def q50_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
@@ -115,15 +116,15 @@ WHERE p.p_type = '{Q50_TYPE}' AND p.p_size <= {Q50_MAX_SIZE}
 def q51_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q15: supplier(s) with the maximum quarterly revenue —
     agg-of-agg view + scalar-max equality."""
-    rev = (load(spark, sf, "lineitem")
-           .filter((F.col("l_shipdate") >= Q51_DATE_LO)
-                   & (F.col("l_shipdate") < Q51_DATE_HI))
-           .groupBy(F.col("l_suppkey").alias("supplier_no"))
-           .agg(_dsum2(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .alias("total_revenue"))
-           # view consumed twice (global max + winner filter);
-           # materialize once — see _elig_costs
-           .localCheckpoint(eager=False))
+    # view consumed twice (global max + winner filter);
+    # materialize once — see _elig_costs
+    rev = materialize(
+        load(spark, sf, "lineitem")
+        .filter((F.col("l_shipdate") >= Q51_DATE_LO)
+                & (F.col("l_shipdate") < Q51_DATE_HI))
+        .groupBy(F.col("l_suppkey").alias("supplier_no"))
+        .agg(_dsum2(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+             .alias("total_revenue")), eager=False)
     top = rev.agg(F.max("total_revenue").alias("mr"))
     winners = (rev.crossJoin(F.broadcast(top))
                   .filter(F.col("total_revenue") == F.col("mr"))

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.relational import _dsum2
 from bigarrays_jl_spark.sources.tables import load
 
@@ -48,14 +49,14 @@ def q53_important_parts(spark: SparkSession, sf: str) -> DataFrame:
     s = (load(spark, sf, "supplier")
          .filter(F.col("s_nationkey") % Q53_NATION_MOD == Q53_NATION_REM)
          .select("s_suppkey"))
-    v = (load(spark, sf, "lineitem")
-         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-         .groupBy("l_partkey")
-         .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))
-              .alias("dv"))
-         # the scalar-subquery threshold re-aggregates this SAME
-         # relation; materialize once — see tpch_deep._elig_costs
-         .localCheckpoint(eager=False))
+    # the scalar-subquery threshold re-aggregates this SAME
+    # relation; materialize once — see tpch_deep._elig_costs
+    v = materialize(
+        load(spark, sf, "lineitem")
+        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy("l_partkey")
+        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))
+             .alias("dv")), eager=False)
     total = v.agg(F.sum("dv").cast("double").alias("t"),
                   F.count("*").cast("double").alias("n"))
     return (v.crossJoin(F.broadcast(total))

@@ -7,7 +7,7 @@ distributed relabel.
   RAG edges whose contact area clears the threshold — min-label
   propagation with pointer jumping (the ``volume_components`` /
   ``dedup_components`` discipline: O(log diameter) rounds, honest
-  non-convergence failure, localCheckpoint per round).  Nodes are ALL
+  non-convergence failure, materialize per round).  Nodes are ALL
   labels present in the RAG, so untouched labels map to themselves.
 - ``relabel_volume(vol, mapping, dest)``: applies the merge map to
   every voxel through ONE ``map_blocks`` pass — sorted-key
@@ -37,6 +37,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.volume_rag import region_adjacency
 from bigarrays_jl_spark.volume import Volume
 
@@ -63,14 +64,12 @@ def agglomerate_map(rag: DataFrame, min_contact: int,
     strong = (rag.filter(F.col("contact_faces") >= min_contact)
               .select(F.col("label_a").alias("a"),
                       F.col("label_b").alias("b")))
-    e = (strong.unionAll(strong.select(F.col("b").alias("a"),
-                                       F.col("a").alias("b")))
-         .distinct().localCheckpoint(eager=True))
+    e = materialize(strong.unionAll(strong.select(
+        F.col("b").alias("a"), F.col("a").alias("b"))).distinct(), eager=True)
     nodes = (rag.select(F.col("label_a").alias("lab"))
              .unionAll(rag.select(F.col("label_b").alias("lab")))
              .distinct())
-    lab = (nodes.withColumn("root", F.col("lab"))
-           .localCheckpoint(eager=True))
+    lab = materialize(nodes.withColumn("root", F.col("lab")), eager=True)
     for _ in range(max_rounds):
         nbr = (e.join(lab, e.b == lab.lab)
                .select(F.col("a").alias("lab"), "root"))
@@ -78,9 +77,8 @@ def agglomerate_map(rag: DataFrame, min_contact: int,
               .groupBy("lab").agg(F.min("root").alias("root")))
         jump = nl.select(F.col("lab").alias("j_lab"),
                          F.col("root").alias("j_root"))
-        nl = (nl.join(jump, nl.root == jump.j_lab, "left")
-              .select("lab", F.coalesce("j_root", "root").alias("root"))
-              .localCheckpoint(eager=True))
+        nl = materialize(nl.join(jump, nl.root == jump.j_lab, "left").select(
+            "lab", F.coalesce("j_root", "root").alias("root")), eager=True)
         changed = (nl.alias("n").join(lab.alias("o"), "lab")
                    .filter(F.col("n.root") != F.col("o.root")).count())
         lab = nl

@@ -29,7 +29,7 @@ parallel first phase:
    pairs): each round takes the min root over neighbors, then jumps
    root → root-of-root, so convergence is O(log diameter) rounds — the
    same bounded-round, honest-failure discipline as
-   ``dedup.dedup_components``; each round localCheckpoints to keep the
+   ``dedup.dedup_components``; each round materializes to keep the
    plan flat (lineage would otherwise double per round).
 
 Final aggregate: component id = min global linear index over the
@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.volume import Volume
 
 CC_MAX_ROUNDS = 20
@@ -174,10 +175,10 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
             rows, columns=["kind", "comp", "label", "size",
                            "axis", "fb", "fu", "fv"])
 
-    stream = vol.map_cuts(
+    stream = materialize(vol.map_cuts(
         local_pass, "kind int, comp bigint, label bigint, size bigint, "
                     "axis int, fb long, fu long, fv long", req,
-    ).localCheckpoint(eager=False)    # consumed by comps + faces: decode once
+    ), eager=False)    # consumed by comps + faces: decode once
 
     comps = (stream.filter(F.col("kind") == 0)
              .select("comp", "label", "size"))
@@ -189,11 +190,11 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
              .select("a", "b").distinct())
     e = edges.unionAll(edges.select(F.col("b").alias("a"),
                                     F.col("a").alias("b")))
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e, eager=True)
 
-    lab = (comps.select("comp").distinct()
-           .withColumn("root", F.col("comp"))
-           .localCheckpoint(eager=True))
+    lab = materialize(
+        comps.select("comp").distinct()
+        .withColumn("root", F.col("comp")), eager=True)
     for _ in range(max_rounds):
         # the convergence check rides the propagation shuffle (the
         # entity_res_golden idiom): each comp appears exactly once with
@@ -210,10 +211,10 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
                     .alias("old")))
         jump = nl.select(F.col("comp").alias("j_comp"),
                          F.col("root").alias("j_root"))
-        nl = (nl.join(jump, nl.root == jump.j_comp, "left")
-              .select("comp", F.coalesce("j_root", "root").alias("root"),
-                      "old")
-              .localCheckpoint(eager=True))
+        nl = materialize(
+            nl.join(jump, nl.root == jump.j_comp, "left")
+            .select("comp", F.coalesce("j_root", "root").alias("root"),
+                    "old"), eager=True)
         changed = nl.filter(F.col("root") != F.col("old")).count()
         lab = nl.select("comp", "root")
         if changed == 0:

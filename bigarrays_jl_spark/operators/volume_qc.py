@@ -34,6 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.advanced import demo_volume
 
 QC_BOX = ((0, 64), (0, 64), (0, 64))
@@ -52,9 +53,9 @@ def volume_slice_qc(spark: SparkSession, sf: str) -> DataFrame:
     w_cum = (Window.partitionBy("z").orderBy("v")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     w_all = Window.partitionBy("z")
-    h = (hist.withColumn("cum", F.sum("w").over(w_cum))
-         .withColumn("tot", F.sum("w").over(w_all))
-         .localCheckpoint(eager=False))
+    h = materialize(
+        hist.withColumn("cum", F.sum("w").over(w_cum))
+        .withColumn("tot", F.sum("w").over(w_all)), eager=False)
 
     def pick(num, den, out):
         return (h.filter(den * F.col("cum") >= num * F.col("tot"))
@@ -168,8 +169,7 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
                                "sab", "saa", "sbb", "fz", "fu",
                                "fv", "side", "val"])
 
-    stream = vol.map_cuts(local, _NCC_SCHEMA, req).localCheckpoint(
-        eager=False)
+    stream = materialize(vol.map_cuts(local, _NCC_SCHEMA, req), eager=False)
     inner = (stream.filter(F.col("kind") == 0)
              .select("z", "n", "sa", "sb", "sab", "saa", "sbb"))
     faces = (stream.filter(F.col("kind") == 1)

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.volume_components import (
     CC_BG_BLOCK, CC_BLOCK, demo_cc_volume)
 from bigarrays_jl_spark.volume import Volume
@@ -59,7 +60,7 @@ def rag_stream(vol: Volume, request: ix.Box,
     pre-aggregated in-chunk pair counts (part = own chunk id), kind=1
     rows are nonzero face voxels keyed by boundary cell (part = the
     LOW chunk of that boundary, + axis).  Decode happens once
-    (localCheckpoint) for the two consumers."""
+    (``materialize``) for the two consumers."""
     info = vol.info
     req = tuple((int(lo), int(hi)) for lo, hi in request)
     if info.num_channels != 1:
@@ -136,8 +137,8 @@ def rag_stream(vol: Volume, request: ix.Box,
                            "axis", "fb", "fu", "fv",
                            "pcx", "pcy", "pcz"])
 
-    return vol.map_cuts(local_pass, RAG_STREAM_SCHEMA, req,
-                        ids=ids).localCheckpoint(eager=False)
+    return materialize(vol.map_cuts(local_pass, RAG_STREAM_SCHEMA, req,
+                                    ids=ids), eager=False)
 
 
 def rag_edges(stream: DataFrame, keep_parts: bool = False) -> DataFrame:

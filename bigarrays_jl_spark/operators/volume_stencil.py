@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.advanced import demo_volume
 
 BOX = ((0, 64), (0, 64), (0, 64))
@@ -133,7 +134,7 @@ def volume_stencil_smooth(spark: SparkSession, sf: str) -> DataFrame:
     volume: n_vox, the lcm-scaled integer sum, and the mean smoothed
     value (one division at output)."""
     vol = demo_volume(spark)
-    stream = _stencil_stream(vol, BOX).localCheckpoint(eager=False)
+    stream = materialize(_stencil_stream(vol, BOX), eager=False)
     inner = (stream.filter(F.col("kind") == 0)
              .groupBy("z")
              .agg(F.sum("ssum").alias("s"), F.sum("nvox").alias("n")))

@@ -102,11 +102,6 @@ def uses_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in simple_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen span count (wider spans = more fused operators)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))
-
-
 def single_partition_windows(df: DataFrame) -> list[str]:
     """Window nodes fed by an ``Exchange SinglePartition`` — the
     one-task whole-table funnel that is correct at test scale and dead

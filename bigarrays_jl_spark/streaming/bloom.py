@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
 from bigarrays_jl_spark.operators.round15 import (BLOOM_K, bloom_bit_col,
                                                   bloom_screen_counts)
@@ -82,7 +83,7 @@ def streaming_bloom_screen(docs: DataFrame, bits_path: str,
             raise ValueError(
                 "streaming_bloom_screen requires non-negative doc_ids "
                 "(doc_id = -1 is reserved as the commit sentinel)")
-        grams = _doc_grams(batch_df).localCheckpoint(eager=True)
+        grams = materialize(_doc_grams(batch_df), eager=True)
 
         # 1. grow the bitset with this batch's eval docs (always runs;
         #    re-appends from a replay are collapsed by the anti-join,

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
 from bigarrays_jl_spark.operators.extensions import _gopher_metrics
 from bigarrays_jl_spark.operators.pipeline import DECON_NGRAM
@@ -82,7 +83,7 @@ def streaming_curate(docs: DataFrame, fp_index_path: str, grams_path: str,
             raise ValueError(
                 "streaming_curate requires non-negative doc_ids "
                 "(doc_id = -1 is reserved as the commit sentinel)")
-        batch_df = batch_df.localCheckpoint(eager=True)  # many consumers
+        batch_df = materialize(batch_df, eager=True)  # many consumers
 
         # 1. grow the eval gram index + bitset (idempotent: anti-join
         #    appends against distinct-read standing sets)
@@ -92,7 +93,7 @@ def streaming_curate(docs: DataFrame, fp_index_path: str, grams_path: str,
         new_g = (ev_grams if standing_g is None
                  else ev_grams.join(standing_g.select("s"), "s",
                                     "left_anti"))
-        new_g = new_g.localCheckpoint(eager=True)   # write + union
+        new_g = materialize(new_g, eager=True)  # write + union
         new_g.write.mode("append").parquet(grams_path)
         # Bit delta is derived from the BATCH's grams (ev_grams), not
         # from the gram-index delta (new_g): a crash between the two
@@ -107,7 +108,7 @@ def streaming_curate(docs: DataFrame, fp_index_path: str, grams_path: str,
         nb = (new_bits if standing_b is None
               else new_bits.join(standing_b.select("j", "bit"),
                                  ["j", "bit"], "left_anti"))
-        nb = nb.localCheckpoint(eager=True)         # write + union
+        nb = materialize(nb, eager=True)  # write + union
         nb.write.mode("append").parquet(bits_path)
         # bits/grams-so-far, combined IN MEMORY (the bloom.py idiom —
         # no re-list of a growing dir in the ingest hot path)
@@ -140,7 +141,7 @@ def streaming_curate(docs: DataFrame, fp_index_path: str, grams_path: str,
             idx = read_index_or_none(spark, fp_index_path)
             fresh = (best if idx is None
                      else best.join(idx.select("fp"), "fp", "left_anti"))
-            fresh = fresh.localCheckpoint(eager=True)  # grams + out + idx
+            fresh = materialize(fresh, eager=True)  # grams + out + idx
             kg = (fresh.select("doc_id", tokens().alias("t"))
                   .select("doc_id", F.explode(F.array_distinct(
                       shingle_array("t", DECON_NGRAM))).alias("s")))

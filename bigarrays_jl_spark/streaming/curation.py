@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.events import SESSION_GAP_MIN, sessionized
 from bigarrays_jl_spark.operators.round13b import BOILER_K, BOILER_TOPK
 from bigarrays_jl_spark.streaming.replay import (
@@ -205,7 +206,7 @@ def streaming_session_bounce(events: DataFrame, state_path: str,
                   .withColumn("m_n",
                               F.when(merged, F.col("n_ev") + F.col("p_n"))
                                .otherwise(F.col("n_ev"))))
-        per = per.localCheckpoint(eager=True)   # four consumers below
+        per = materialize(per, eager=True)  # four consumers below
 
         # ordering-contract guard (r14 verdict task 2): the state merge
         # assumes per-user event-time-ordered micro-batches (module
@@ -307,7 +308,7 @@ def session_bounce_snapshot(spark: SparkSession, out_path: str,
         if cand is None:
             break
         try:
-            latest = cand.localCheckpoint(eager=True)
+            latest = materialize(cand, eager=True)
             break
         except Exception as e:                      # noqa: BLE001
             if "FileNotFound" not in str(e) and \

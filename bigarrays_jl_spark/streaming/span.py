@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
 from bigarrays_jl_spark.operators.dedup import RUN_LEN
 from bigarrays_jl_spark.streaming.replay import (guarded_append,
@@ -76,7 +77,7 @@ def streaming_span_excise(docs: DataFrame, win_index_path: str,
             raise ValueError(
                 "streaming_span_excise requires non-negative doc_ids "
                 "(doc_id = -1 is reserved as the commit sentinel)")
-        batch_df = batch_df.localCheckpoint(eager=True)  # wins + base
+        batch_df = materialize(batch_df, eager=True)  # wins + base
 
         def index_delta() -> DataFrame:
             """Fresh window hashes — derived from BATCH data, so the
@@ -96,7 +97,7 @@ def streaming_span_excise(docs: DataFrame, win_index_path: str,
             index_delta().write.mode("append").parquet(win_index_path)
 
         def write() -> None:
-            wins = _batch_wins(batch_df).localCheckpoint(eager=True)
+            wins = materialize(_batch_wins(batch_df), eager=True)
             standing = read_index_or_none(spark, win_index_path)
             if standing is None:
                 hit = wins.limit(0)

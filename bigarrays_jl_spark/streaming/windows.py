@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigarrays_jl_spark.checkpointing import materialize
+
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 
@@ -224,7 +226,7 @@ def streaming_incremental_dedup(docs: DataFrame, index_path: str,
             fresh = (best if idx is None
                      else best.join(idx, "fp", "left_anti"))
             # one evaluation, two consumers: avoid recomputing the join
-            fresh = fresh.localCheckpoint(eager=True)
+            fresh = materialize(fresh, eager=True)
             _guarded_rows_append(fresh.select("doc_id", "source", "fp"),
                                  out_path, batch_id)
             fresh.select("fp").write.mode("append").parquet(index_path)
@@ -275,8 +277,8 @@ def streaming_minhash_neardup(docs: DataFrame, index_path: str,
 
     def process_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bands = (band_signatures(batch_df.select("doc_id", "text"))
-                 .localCheckpoint(eager=True))  # one signature pass
+        bands = materialize(            # one signature pass
+            band_signatures(batch_df.select("doc_id", "text")), eager=True)
         # missing-path only; real I/O errors fail the batch for retry
         # (see streaming_incremental_dedup)
         idx = _read_index_or_none(spark, index_path)
@@ -397,7 +399,7 @@ def streaming_paragraph_dedup(docs: DataFrame, index_path: str,
             idx = _read_index_or_none(spark, index_path)
             if idx is not None:
                 best = best.join(idx.select("ph"), "ph", "left_anti")
-            fresh = best.localCheckpoint(eager=True)  # two consumers
+            fresh = materialize(best, eager=True)  # two consumers
             _guarded_rows_append(
                 fresh.select(F.col("k.doc_id").alias("doc_id"),
                              F.col("k.pidx").alias("pidx"),

@@ -98,3 +98,18 @@ def test_normalize_index():
         == ((0, 510), (0, 510), (5, 6))
     with pytest.raises(IndexError):
         ix.normalize_index((slice(0, 1, 2), slice(None), slice(None)), vol)
+
+
+@pytest.mark.parametrize("a, b, want", [
+    ((0, 10), (5, 20), (0, 20)),                # overlapping
+    ((0, 5), (10, 15), (0, 15)),                # disjoint: the gap is inside
+    ((0, 100), (10, 20), (0, 100)),             # nested
+    ((-300, -200), (-250, -100), (-300, -100)),  # negative, overlapping
+    ((-5, -1), (2, 4), (-5, 4)),                # disjoint across zero
+    ((-10, 10), (-3, 3), (-10, 10)),            # nested around zero
+])
+def test_union_range_is_the_bounding_range(a, b, want):
+    # src/Indexes.jl:111-118: min of the starts to max of the stops,
+    # whether the ranges meet or not
+    assert ix.union_range(a, b) == want
+    assert ix.union_range(b, a) == want

@@ -1,35 +1,83 @@
-"""Reliable-checkpoint mode (r13 verdict task 1): with
-``sparkgraft.checkpoint.reliable=true`` + ``setCheckpointDir``, every
-materialization inside the global-ordering primitives and the dedup LSH
-tables swaps executor-local ``localCheckpoint`` for a reliable
-``DataFrame.checkpoint`` — so on a real cluster with dynamic allocation
-a lost executor recovers from storage instead of killing the job.
+"""Reliable-checkpoint mode: with ``sparkgraft.checkpoint.reliable=true``
++ ``setCheckpointDir``, every lineage cut in the package (each one a
+``checkpointing.materialize`` call, pinned by
+``tests/test_single_decode_site.py``) swaps executor-local
+``localCheckpoint`` for a reliable ``DataFrame.checkpoint``, so on a
+real cluster with dynamic allocation a lost executor recovers from
+storage instead of killing the job.
 
 The switch must change WHERE blocks live and nothing else: these tests
-re-run the primitives' most representative consumers in both modes and
-require bit-identical row sets.  Coverage maps one query per swapped
-call site:
-
-- ``q84_rfm_segments``       → distributed_prefix_sum / distributed_ntile
-- ``text_quality_buckets``   → grouped_ntile (per-group boundary maps)
-- ``q70_mad_outliers``     → bucketed_quantile_pick (two-level picks)
-- ``lorenz_curve``         → bucketed_running (dual cumulative sums)
-- ``dedup_minhash_pairs``  → the LSH signature-table materialization
-- ``dedup_components``     → the iterative label-propagation loop
+run consumers in both modes and require bit-identical row sets.  Each
+consumer stands for one module that calls ``materialize``: the ordering
+primitives, the dedup LSH tables, and 38 more modules of ``operators/``
+and ``streaming/``.  Under reliable mode a spy on the DataFrame class
+counts the calls: no ``localCheckpoint`` at all, and at least one
+``checkpoint`` made by a ``materialize`` call in the module the
+consumer stands for.  Registry queries cover ``operators/``; each
+``foreachBatch`` bridge in ``streaming/`` runs two micro-batches.
 """
 
+import contextlib
+import logging
+import sys
+
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+from bigarrays_jl_spark import checkpointing
+from bigarrays_jl_spark.sources.tables import load
+from bigarrays_jl_spark.streaming.bloom import streaming_bloom_screen
+from bigarrays_jl_spark.streaming.curate import streaming_curate
+from bigarrays_jl_spark.streaming.curation import (session_bounce_snapshot,
+                                                   streaming_session_bounce)
+from bigarrays_jl_spark.streaming.span import streaming_span_excise
+from bigarrays_jl_spark.streaming.windows import streaming_minhash_neardup
 
 RELIABLE_CONF = "sparkgraft.checkpoint.reliable"
 
-PRIMITIVE_CONSUMERS = [
-    "q84_rfm_segments",
-    "text_quality_buckets",
-    "q70_mad_outliers",
-    "lorenz_curve",
-    "dedup_minhash_pairs",
-    "dedup_components",
-]
+# registry query -> the operators module whose materialize calls it must
+# reach (the first six are the ordering primitives' and the LSH tables'
+# consumers)
+CONSUMERS = {
+    "q84_rfm_segments": "ordering",
+    "text_quality_buckets": "ordering",
+    "q70_mad_outliers": "round10e",
+    "lorenz_curve": "round13",
+    "dedup_minhash_pairs": "dedup",
+    "dedup_components": "dedup",
+    "events_rolling_dau": "extensions",
+    "graph_triangle_stats": "graph",
+    "graph_triangles_lsh": "graph_lsh",
+    "mm_phash_neardup": "multimodal",
+    "pipeline_decontaminate": "pipeline",
+    "text_bm25": "retrieval",
+    "q62_hierarchy_depth": "round10",
+    "basket_pairs": "round10b",
+    "phrase_search": "round10c",
+    "q72_winsorized_mean": "round10f",
+    "graph_sssp_lsh": "round10g",
+    "q79_mutual_info": "round10h",
+    "q81_cuped": "round10i",
+    "entity_res_golden": "round10j",
+    "q87_autocorr": "round10l",
+    "ks_two_sample": "round11b",
+    "text_tfidf_topk": "round12",
+    "basket_triples": "round12c",
+    "sketch_jaccard": "round12d",
+    "cm_heavyhitters": "round15",
+    "pipeline_e2e_curate": "round16",
+    "ann_pq_recall_knee": "round17",
+    "sim_lsh_pairs": "similarity",
+    "text_unigram_logprob": "text",
+    "q51_top_supplier": "tpch_deep",
+    "q53_important_parts": "tpch_more",
+    "volume_agglomerate": "volume_agglo",
+    "volume_components": "volume_components",
+    "volume_slice_qc": "volume_qc",
+    "volume_rag": "volume_rag",
+    "volume_stencil_smooth": "volume_stencil",
+}
 
 
 def test_reliable_without_dir_raises(spark):
@@ -56,19 +104,141 @@ def ckpt_dir(spark, tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("qname", PRIMITIVE_CONSUMERS)
+@contextlib.contextmanager
+def _reliable(spark):
+    """Reliable mode on; yields the modules that called
+    ``DataFrame.checkpoint`` / ``localCheckpoint`` through
+    ``materialize``, one entry per call, from any thread."""
+    calls = {"checkpoint": [], "localCheckpoint": []}
+
+    def spy(name):
+        orig = getattr(ClassicDataFrame, name)
+
+        def counted(self, *args, **kwargs):
+            # frame 1 is materialize, frame 2 the lineage cut
+            calls[name].append(sys._getframe(2).f_globals["__name__"])
+            return orig(self, *args, **kwargs)
+        return counted
+
+    spark.conf.set(RELIABLE_CONF, "true")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            for name in calls:
+                mp.setattr(ClassicDataFrame, name, spy(name))
+            yield calls
+    finally:
+        spark.conf.set(RELIABLE_CONF, "false")
+
+
+def _assert_switched(calls, module):
+    assert calls["localCheckpoint"] == [], calls
+    assert module in calls["checkpoint"], calls
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("qname", list(CONSUMERS))
 def test_reliable_mode_bit_identical(spark, sf_dir, ckpt_dir, qname):
     from bigarrays_jl_spark.operators import ALL_QUERIES
     fn = ALL_QUERIES[qname]
-    base = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    base = _rows(fn(spark, sf_dir))
     assert base, qname
-    spark.conf.set(RELIABLE_CONF, "true")
-    try:
-        reliable = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    finally:
-        spark.conf.set(RELIABLE_CONF, "false")
+    with _reliable(spark) as calls:
+        reliable = _rows(fn(spark, sf_dir))
     assert base == reliable, \
         f"{qname} output changed under reliable checkpointing"
+    _assert_switched(calls,
+                     f"bigarrays_jl_spark.operators.{CONSUMERS[qname]}")
+
+
+def _docs(spark, sf):
+    return load(spark, sf, "documents").select("doc_id", "text")
+
+
+def _events(spark, sf):
+    return load(spark, sf, "events").select("user_id", "ts", "event_id",
+                                            "event_type")
+
+
+def _tables(spark, *paths):
+    # compared by column name: the appends to one table may order their
+    # columns differently
+    dfs = [spark.read.parquet(p) for p in paths]
+    return [df.select(*sorted(df.columns)) for df in dfs]
+
+
+def _bounce(spark, state, out):
+    # the open-session state is versioned; the snapshot folds it in
+    return [session_bounce_snapshot(spark, out, state)]
+
+
+# bridge -> (source, key that splits it into two micro-batches, number
+# of tables it writes before its checkpoint path, reader of its results
+# from those tables)
+STREAM_CONSUMERS = {
+    streaming_bloom_screen: (_docs, "doc_id", 2, _tables),
+    streaming_curate: (_docs, "doc_id", 4, _tables),
+    streaming_session_bounce: (_events, "ts", 2, _bounce),
+    streaming_span_excise: (_docs, "doc_id", 2, _tables),
+    streaming_minhash_neardup: (_docs, "doc_id", 2, _tables),
+}
+
+
+def _stream_tables(spark, sf_dir, root, bridge):
+    """Feed the bridge two micro-batches (rows at or below the median
+    key, then the rest) and return the sorted rows of its results."""
+    source, key, n_tables, results = STREAM_CONSUMERS[bridge]
+    df = source(spark, sf_dir)
+    mid = df.agg(F.percentile_approx(key, 0.5)).first()[0]
+    src = str(root / "src")
+    tables = [str(root / f"t{i}") for i in range(n_tables)]
+    for part in (F.col(key) <= mid, F.col(key) > mid):
+        df.filter(part).coalesce(1).write.mode("append").parquet(src)
+        q = bridge(spark.readStream.schema(df.schema).parquet(src), *tables,
+                   str(root / "ckpt"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return [_rows(df) for df in results(spark, *tables)]
+
+
+@pytest.mark.parametrize("bridge", list(STREAM_CONSUMERS),
+                         ids=lambda b: b.__module__.rsplit(".", 1)[1])
+def test_reliable_mode_stream_bit_identical(spark, sf_dir, ckpt_dir,
+                                            tmp_path, bridge):
+    base = _stream_tables(spark, sf_dir, tmp_path / "local", bridge)
+    assert any(base), bridge.__name__
+    with _reliable(spark) as calls:
+        reliable = _stream_tables(spark, sf_dir, tmp_path / "reliable",
+                                  bridge)
+    assert base == reliable, \
+        f"{bridge.__name__} output changed under reliable checkpointing"
+    _assert_switched(calls, bridge.__module__)
+
+
+def test_mode_is_logged_once_per_application(spark, ckpt_dir, caplog,
+                                             monkeypatch):
+    monkeypatch.setattr(checkpointing, "_logged", set())
+    caplog.set_level(logging.INFO, logger=checkpointing.__name__)
+
+    def records():
+        return [r.getMessage() for r in caplog.records
+                if r.name == checkpointing.__name__]
+
+    for _ in range(2):
+        checkpointing.materialize(spark.range(3), eager=False)
+    assert len(records()) == 1 and "mode local" in records()[0], records()
+    spark.conf.set(RELIABLE_CONF, "true")
+    try:
+        for _ in range(2):
+            checkpointing.materialize(spark.range(3), eager=False)
+    finally:
+        spark.conf.set(RELIABLE_CONF, "false")
+    assert len(records()) == 2, records()
+    assert "mode reliable" in records()[1] and ckpt_dir in records()[1]
 
 
 def test_materialize_default_is_local(spark):

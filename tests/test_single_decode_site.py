@@ -6,7 +6,9 @@ path (the jpeg aspect guard, the byte-count checks, error context naming
 the chunk) cannot miss a read or write path again, and no module outside
 ``volume.py`` knows how live chunks are selected.  Inside ``volume.py``
 the epoch dedupe has one caller, ``live_chunks``, and a mip is replaced
-by one rewrite, ``_fold_mip``, behind both ``compact`` and ``delete``."""
+by one rewrite, ``_fold_mip``, behind both ``compact`` and ``delete``.
+Every lineage cut goes through ``checkpointing.materialize``, so the
+reliable-checkpoint switch reaches all of them."""
 import ast
 import os
 
@@ -42,6 +44,10 @@ ENCODE_SITES = {("volume.py", "encode_chunk")}
 # chunk-table selection that only volume.py may know about
 PRIVATE_SCANS = {"_latest", "_pruned", "_sources_subset"}
 
+# DataFrame methods that cut lineage: only checkpointing.materialize
+# may call them
+CHECKPOINTS = {"localCheckpoint", "checkpoint"}
+
 # (method called, the one volume.py method allowed to call it): the
 # live-chunk selection and the mip rewrite ("_write_chunks" stands for
 # a call with a mode other than "append")
@@ -66,6 +72,7 @@ class _Scan(ast.NodeVisitor):
         self.chunk_loops, self.chunk_decodes = [], []
         self.encodes, self.private = [], []
         self.volume_calls = []              # (name, rel, fns, line)
+        self.checkpoints = []
 
     def visit_FunctionDef(self, node):
         self.stack.append(node.name)
@@ -112,6 +119,8 @@ class _Scan(ast.NodeVisitor):
                 self.bootstraps.append(where)
             if f.attr == "decode" and self._is_codec(f.value):
                 self.decodes.append(where)
+            if f.attr in CHECKPOINTS:
+                self.checkpoints.append(where)
         name = f.attr if isinstance(f, ast.Attribute) else getattr(
             f, "id", None)
         if name == "decode_payload":
@@ -142,14 +151,14 @@ def _volume_violations(scan):
             and (fns[0] if fns else None) != VOLUME_ONLY_FROM[name]]
 
 
-def _scan():
+def _scan(pkg=PKG):
     out = _Scan("<package>")
-    for dirpath, _, names in os.walk(PKG):
+    for dirpath, _, names in os.walk(pkg):
         for n in names:
             if not n.endswith(".py"):
                 continue
             path = os.path.join(dirpath, n)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
             if rel == "codecs.py":
                 continue
             with open(path) as f:
@@ -157,7 +166,7 @@ def _scan():
                 scan.visit(ast.parse(f.read(), path))
             for found in ("bootstraps", "decodes", "chunk_loops",
                           "chunk_decodes", "encodes", "private",
-                          "volume_calls"):
+                          "volume_calls", "checkpoints"):
                 getattr(out, found).extend(getattr(scan, found))
     return out
 
@@ -203,6 +212,12 @@ def test_one_chunk_encode_site():
     assert set(_sites(encodes)) == ENCODE_SITES, encodes
 
 
+def test_one_materialization_switch():
+    cuts = _scan().checkpoints
+    assert [(r, fns) for r, fns, _ in cuts] == \
+        [("checkpointing.py", ["materialize"])] * 2, cuts
+
+
 def test_scan_catches_hand_rolled_copies(tmp_path):
     src = '''
 def f(enc, payload):
@@ -217,6 +232,20 @@ def f(enc, payload):
     scan.visit(ast.parse(src))
     assert [ln for _, _, ln in scan.bootstraps] == [4]
     assert [ln for _, _, ln in scan.decodes] == [6, 7, 8]
+
+    # a lineage cut planted in a module of the package fails the guard
+    mod = tmp_path / "bigarrays_jl_spark" / "operators"
+    mod.mkdir(parents=True)
+    (mod / "x.py").write_text('''
+def op(df, spark):
+    a = df.localCheckpoint()
+    b = (df.groupBy("k").count()
+         .checkpoint(eager=False))
+    return materialize(a.union(b), eager=True)
+''')
+    cuts = _scan(str(tmp_path / "bigarrays_jl_spark")).checkpoints
+    assert [(r, fns[0], ln) for r, fns, ln in cuts] == [
+        ("operators/x.py", "op", 3), ("operators/x.py", "op", 4)]
 
 
 def test_scan_catches_hand_rolled_scans_and_encodes():

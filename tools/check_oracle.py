@@ -153,14 +153,16 @@ def main():
     # tail of a 140-query sweep the long-lived Spark JVM owns much of
     # that — the combination turned heavy oracles into bad_alloc
     # failures that a bounded, spill-capable config completes fine
-    # limit derives from the host (1/4 of physical RAM, capped at 24GB)
+    # limit derives from the host (1/2 of physical RAM, capped at 24GB)
     # unless ORACLE_DUCKDB_MEM overrides — a hardcoded 24GB over-commits
-    # on smaller hosts and gets OOM-killed instead of spilling
+    # on smaller hosts and gets OOM-killed instead of spilling, and a
+    # quarter of a 15 GiB host (3GB) fails the dedup_components and
+    # dedup_audit_pr oracles with "Out of Memory Error" even with spill
     mem = os.environ.get("ORACLE_DUCKDB_MEM")
     if not mem:
         try:
             gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) / 2**30
-            mem = f"{max(2, min(24, int(gb // 4)))}GB"
+            mem = f"{max(2, min(24, int(gb // 2)))}GB"
         except (ValueError, OSError):
             mem = "8GB"
     con.execute(f"SET memory_limit='{mem}'")
