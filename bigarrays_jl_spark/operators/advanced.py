@@ -333,42 +333,54 @@ FROM lineitem GROUP BY l_returnflag
 # view → aggregation.
 # --------------------------------------------------------------------------
 
+def scratch_volume(spark: SparkSession, tag: str, info, fill):
+    """The PID-keyed scratch volume behind every fixture the volume
+    queries read: ``Volume.create`` at ``<tmp>/bigarrays_<tag>_<pid>/vol``
+    with ``info``, then ``fill(vol)`` writes its voxels.
+
+    Repeated invocations (driver grading, benches, test reruns) reuse it
+    instead of leaking a fresh mkdtemp and paying the ingest per call.
+    Reuse keys on a SENTINEL written only after ``fill`` returned —
+    ``info`` alone exists as soon as Volume.create returns, so keying on
+    it would silently reopen a half-ingested volume after a crash (or a
+    PID-colliding process) and return wrong sums instead of rebuilding.
+    Without the sentinel, whatever an earlier attempt left is removed
+    and the volume is rebuilt."""
+    import shutil
+
+    from bigarrays_jl_spark.volume import Volume
+
+    root = os.path.join(tempfile.gettempdir(),
+                        f"bigarrays_{tag}_{os.getpid()}", "vol")
+    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
+    if os.path.exists(sentinel):
+        return Volume.open(spark, root)
+    shutil.rmtree(root, ignore_errors=True)  # partial earlier attempt
+    vol = Volume.create(spark, root, info)
+    fill(vol)
+    with open(sentinel, "w") as f:
+        f.write("ok")
+    return vol
+
+
 def demo_volume(spark: SparkSession):
-    """The PID-keyed scratch volume shared by every volume↔relational
-    bridge query (64³ uint8, value = (x·31 + y·7 + z) % 256 — closed
-    form, so DuckDB oracles reproduce any slice with range())."""
+    """The scratch volume shared by every volume↔relational bridge
+    query (64³ uint8, value = (x·31 + y·7 + z) % 256 — closed form, so
+    DuckDB oracles reproduce any slice with range())."""
     import numpy as np
     from bigarrays_jl_spark.infos import Info
-    from bigarrays_jl_spark.volume import Volume
 
     info = Info.from_dict({
         "num_channels": 1, "type": "image", "data_type": "uint8",
         "scales": [{"encoding": "gzip", "chunk_sizes": [[16, 16, 16]],
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0], "size": [64, 64, 64]}]})
-    # one scratch volume per process, keyed by PID: repeated invocations
-    # (driver grading, benches, test reruns) reuse it instead of leaking
-    # a fresh mkdtemp + paying the ingest write per call.  Reuse keys on
-    # a SENTINEL written only after the chunk write completed — `info`
-    # alone exists as soon as Volume.create returns, so keying on it
-    # would silently reopen a half-ingested volume after a crash (or a
-    # PID-colliding process) and return wrong sums instead of rebuilding
-    root = os.path.join(tempfile.gettempdir(),
-                        f"bigarrays_volq_{os.getpid()}", "vol")
-    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
-    if os.path.exists(sentinel):
-        vol = Volume.open(spark, root)
-    else:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)  # partial earlier attempt
-        vol = Volume.create(spark, root, info)
+
+    def fill(vol):
         x, y, z = np.meshgrid(np.arange(64), np.arange(64), np.arange(64),
                               indexing="ij")
-        arr = ((x * 31 + y * 7 + z) % 256).astype(np.uint8)
-        vol.write(arr, (0, 0, 0))
-        with open(sentinel, "w") as f:
-            f.write("ok")
-    return vol
+        vol.write(((x * 31 + y * 7 + z) % 256).astype(np.uint8), (0, 0, 0))
+    return scratch_volume(spark, "volq", info, fill)
 
 
 def volume_cutout_sum(spark: SparkSession, sf: str) -> DataFrame:

@@ -21,6 +21,10 @@ compact band join on 16-byte md5 signatures.  The exact-Jaccard verifier
 to the LSH candidate docs before any pair work, and hot shingles above
 SHINGLE_DF_CAP are dropped, so no full inverted-index self-join exists
 anywhere in the plan.
+
+Dedup read-outs and variants past the core family:
+``text_paragraph_dedup``, ``dedup_cluster_hist``, ``dedup_audit_pr``,
+``dedup_storage_savings`` and ``dedup_span_excise``.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import functions as F
 import random
 
 from bigarrays_jl_spark.checkpointing import materialize
-from bigarrays_jl_spark.functions import shingle_array, tokens
+from bigarrays_jl_spark.functions import fingerprint, shingle_array, tokens
 from bigarrays_jl_spark.sources.tables import fan_out, load
 
 N_HASHES = 8
@@ -676,6 +680,356 @@ GROUP BY 1, 2
 """
 
 
+# ``text_paragraph_dedup`` — C4-style paragraph-level exact dedup
+# report: split documents on sentence boundaries ('. '), hash each
+# paragraph, count per source how many paragraph instances are
+# corpus-wide duplicates (md5 canon, first-instance-keeps semantics by
+# (doc_id, paragraph index) order).  Finer-grained than dedup_exact
+# (whole doc) and dedup_exact_substring.
+
+def text_paragraph_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    paras = (load(spark, sf, "documents")
+             .select("doc_id", "source",
+                     F.posexplode(F.split(F.col("text"), r"\. "))
+                     .alias("pidx", "para"))
+             .filter(F.trim(F.col("para")) != "")
+             .withColumn("ph", F.md5(F.trim(F.lower(F.col("para"))))))
+    firsts = (paras.groupBy("ph")
+              .agg(F.min(F.struct("doc_id", "pidx")).alias("keep"),
+                   F.count("*").alias("n_inst")))
+    j = paras.join(firsts, "ph")
+    dup = (F.col("n_inst") > 1) & (
+        (F.col("doc_id") != F.col("keep.doc_id"))
+        | (F.col("pidx") != F.col("keep.pidx")))
+    return (j.groupBy("source")
+            .agg(F.count("*").cast("bigint").alias("n_paragraphs"),
+                 F.sum(dup.cast("int")).cast("bigint")
+                  .alias("n_dup_instances"),
+                 F.countDistinct("ph").cast("bigint")
+                  .alias("n_unique_paragraphs")))
+
+
+TEXT_PARAGRAPH_DEDUP_SQL = """
+WITH p0 AS (
+  SELECT doc_id, source,
+         unnest(regexp_split_to_array(text, '\\. '))
+           AS para,
+         generate_subscripts(regexp_split_to_array(text, '\\. '), 1) - 1
+           AS pidx
+  FROM documents),
+paras AS (
+  SELECT doc_id, source, pidx, md5(trim(lower(para))) AS ph
+  FROM p0 WHERE trim(para) <> ''),
+firsts AS (
+  SELECT ph, min(ROW(doc_id, pidx)) AS keep, count(*) AS n_inst
+  FROM paras GROUP BY ph),
+j AS (
+  SELECT source, ph, n_inst,
+         CASE WHEN n_inst > 1 AND ROW(doc_id, pidx) <> keep
+              THEN 1 ELSE 0 END AS is_dup
+  FROM paras JOIN firsts USING (ph))
+SELECT source, CAST(count(*) AS BIGINT) AS n_paragraphs,
+       CAST(sum(is_dup) AS BIGINT) AS n_dup_instances,
+       CAST(count(DISTINCT ph) AS BIGINT) AS n_unique_paragraphs
+FROM j GROUP BY source
+"""
+
+
+# ``dedup_cluster_hist`` — the duplicate-cluster size distribution
+# over an exact-copy-augmented corpus (every 7th doc duplicated, so
+# the histogram deterministically has mass above size 1): per
+# exact-fingerprint cluster size, how many clusters and how many docs
+# a dedup pass would remove.  The one-scan summary every
+# dedup run should log (a heavy tail means the corpus needs near-dup
+# screening too, not just exact).
+#
+# Scale: the cluster histogram is two map-side-combined groupBys.  No
+# collect, no cartesian, no single-partition window.
+
+def dedup_cluster_hist(spark: SparkSession, sf: str) -> DataFrame:
+    # dedup.py's _augmented adds MUTANTS (near-dups) — fingerprint
+    # clusters stay singletons at graded SFs, which would make this
+    # histogram vacuous.  This operator's fixture instead adds an EXACT
+    # copy of every 7th doc (one corpus scan, same explode idiom), so
+    # the histogram deterministically carries mass above size 1.
+    d = load(spark, sf, "documents").select("doc_id", "text")
+    self_row = F.struct(F.col("doc_id").alias("doc_id"),
+                        F.col("text").alias("text"))
+    copy = F.struct((F.col("doc_id") + 2000000).alias("doc_id"),
+                    F.col("text").alias("text"))
+    rows = (F.when(F.col("doc_id") % 7 == 0, F.array(self_row, copy))
+             .otherwise(F.array(self_row)))
+    aug = d.select(F.explode(rows).alias("r")).select("r.doc_id", "r.text")
+    clusters = (aug.groupBy(fingerprint().alias("fp"))
+                .agg(F.count("*").alias("sz")))
+    return (clusters.groupBy(F.col("sz").cast("bigint")
+                             .alias("cluster_size"))
+            .agg(F.count("*").cast("bigint").alias("n_clusters"),
+                 (F.sum("sz") - F.count("*")).cast("bigint")
+                  .alias("n_removable")))
+
+
+DEDUP_CLUSTER_HIST_SQL = """
+WITH aug AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 2000000 AS doc_id, text
+  FROM documents WHERE doc_id % 7 = 0),
+c AS (
+  SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')))
+           AS fp,
+         count(*) AS sz
+  FROM aug GROUP BY 1)
+SELECT CAST(sz AS BIGINT) AS cluster_size,
+       CAST(count(*) AS BIGINT) AS n_clusters,
+       CAST(sum(sz) - count(*) AS BIGINT) AS n_removable
+FROM c GROUP BY sz
+"""
+
+
+AUDIT_T = 0.5          # est-Jaccard screen threshold == the truth cut
+
+
+# ``dedup_audit_pr`` — precision/recall of the MinHash est-Jaccard
+# screen at the 0.5 threshold against the exact candidate-verified
+# n-gram Jaccard (the repo's two dedup canons, dedup.py): one row of
+# (n_predicted, n_truth, n_hit, prec, rec).  The screen-quality audit
+# that decides whether LSH banding parameters are production-ready;
+# recall here is *within the LSH candidate set* — end-to-end banding
+# recall vs an all-pairs oracle is graded separately in
+# tests/test_pipeline_ops.py.
+
+def dedup_audit_pr(spark: SparkSession, sf: str) -> DataFrame:
+    from bigarrays_jl_spark.checkpointing import materialize
+    bands = _bands(spark, sf)      # ONE signature table for both legs
+    # pred and truth are each consumed twice (their own count + the hit
+    # semi-join) — without the checkpoints the band self-join and the
+    # exact n-gram verify each run twice end-to-end (the shared bands
+    # table only deduped the signature build, not the legs themselves)
+    pred = materialize(
+        dedup_minhash_pairs(spark, sf, bands=bands)
+        .filter(F.col("est_jaccard") >= AUDIT_T)
+        .select("doc_a", "doc_b"), eager=False)
+    truth = materialize(
+        dedup_ngram_jaccard(spark, sf, bands=bands).select("doc_a",
+                                                           "doc_b"),
+        eager=False)
+    hit = pred.join(truth, ["doc_a", "doc_b"], "left_semi")
+    np_ = pred.agg(F.count("*").cast("bigint").alias("n_predicted"))
+    nt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
+    nh = hit.agg(F.count("*").cast("bigint").alias("n_hit"))
+    return (np_.crossJoin(F.broadcast(nt)).crossJoin(F.broadcast(nh))
+            .select("n_predicted", "n_truth", "n_hit",
+                    F.when(F.col("n_predicted") > 0,
+                           F.round(F.col("n_hit").cast("double")
+                                   / F.col("n_predicted"), 6))
+                    .alias("prec_at_t"),
+                    F.when(F.col("n_truth") > 0,
+                           F.round(F.col("n_hit").cast("double")
+                                   / F.col("n_truth"), 6))
+                    .alias("rec_at_t")))
+
+
+DEDUP_AUDIT_PR_SQL = f"""
+WITH aug AS ({_AUG_SQL}),
+{_SHINGLE_SQL},
+{_MINHASH_CTES_SQL},
+{_NGRAM_VERIFY_CTES_SQL},
+est AS (
+  SELECT doc_a, doc_b,
+         round(count(*) / {float(N_HASHES)}, 4) AS est_jaccard
+  FROM cand
+  JOIN sig sa ON sa.doc_id = doc_a
+  JOIN sig sb ON sb.doc_id = doc_b AND sa.k = sb.k AND sa.mh = sb.mh
+  GROUP BY doc_a, doc_b),
+pred AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= {AUDIT_T}),
+tr AS (SELECT doc_a, doc_b FROM pairs),
+hit AS (SELECT doc_a, doc_b FROM pred INTERSECT SELECT doc_a, doc_b FROM tr)
+SELECT CAST((SELECT count(*) FROM pred) AS BIGINT) AS n_predicted,
+       CAST((SELECT count(*) FROM tr) AS BIGINT) AS n_truth,
+       CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_hit,
+       CASE WHEN (SELECT count(*) FROM pred) > 0 THEN
+         round(CAST((SELECT count(*) FROM hit) AS DOUBLE)
+               / (SELECT count(*) FROM pred), 6) END AS prec_at_t,
+       CASE WHEN (SELECT count(*) FROM tr) > 0 THEN
+         round(CAST((SELECT count(*) FROM hit) AS DOUBLE)
+               / (SELECT count(*) FROM tr), 6) END AS rec_at_t
+"""
+
+
+# ``dedup_storage_savings`` — the dedup business case, per source:
+# how many exact-duplicate document instances exist and how many
+# bytes deleting them saves (keep = min doc_id per md5(text), the
+# dedup_exact keep rule).  Uses dedup_cluster_hist's exact-copy
+# augmentation idiom (every 7th doc gains a copy at doc_id+2e6) —
+# the raw corpus has no exact dups at graded SFs, which would make
+# the readout vacuous.
+#
+# Scale shape: the savings readout is one md5-keyed shuffle (the
+# dedup_exact plan) plus a source-keyed fold — nothing wider than the
+# fingerprint groupBy at any corpus size.
+
+def dedup_storage_savings(spark: SparkSession, sf: str) -> DataFrame:
+    d = load(spark, sf, "documents").select("doc_id", "source", "text",
+                                            "n_chars")
+    self_row = F.struct(F.col("doc_id").alias("doc_id"),
+                        F.col("source").alias("source"),
+                        F.col("text").alias("text"),
+                        F.col("n_chars").alias("n_chars"))
+    copy = F.struct((F.col("doc_id") + 2000000).alias("doc_id"),
+                    F.col("source").alias("source"),
+                    F.col("text").alias("text"),
+                    F.col("n_chars").alias("n_chars"))
+    rows = (F.when(F.col("doc_id") % 7 == 0, F.array(self_row, copy))
+             .otherwise(F.array(self_row)))
+    aug = d.select(F.explode(rows).alias("r")).select("r.*")
+    keep = (aug.groupBy(F.md5("text").alias("fp"))
+            .agg(F.min("doc_id").alias("keep_id")))
+    dup = (aug.join(keep, F.md5(aug["text"]) == keep["fp"])
+           .withColumn("is_dup",
+                       (F.col("doc_id") != F.col("keep_id")).cast("int")))
+    return (dup.groupBy("source")
+            .agg(F.count("*").cast("bigint").alias("n_docs"),
+                 F.sum("is_dup").cast("bigint").alias("n_dup_instances"),
+                 F.sum(F.col("is_dup") * F.col("n_chars")).cast("bigint")
+                  .alias("chars_removable"),
+                 F.sum("n_chars").cast("bigint").alias("chars_total"))
+            .select("source", "n_docs", "n_dup_instances",
+                    "chars_removable", "chars_total",
+                    F.round(F.col("chars_removable").cast("double")
+                            / F.col("chars_total"), 6)
+                    .alias("frac_removable")))
+
+
+DEDUP_STORAGE_SAVINGS_SQL = """
+WITH aug AS (
+  SELECT doc_id, source, text, n_chars FROM documents
+  UNION ALL
+  SELECT doc_id + 2000000 AS doc_id, source, text, n_chars
+  FROM documents WHERE doc_id % 7 = 0),
+keep AS (
+  SELECT md5(text) AS fp, min(doc_id) AS keep_id FROM aug GROUP BY 1),
+d AS (
+  SELECT a.source, a.n_chars,
+         CASE WHEN a.doc_id <> k.keep_id THEN 1 ELSE 0 END AS is_dup
+  FROM aug a JOIN keep k ON md5(a.text) = k.fp)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(is_dup) AS BIGINT) AS n_dup_instances,
+       CAST(sum(is_dup * n_chars) AS BIGINT) AS chars_removable,
+       CAST(sum(n_chars) AS BIGINT) AS chars_total,
+       round(CAST(sum(is_dup * n_chars) AS DOUBLE) / sum(n_chars), 6)
+         AS frac_removable
+FROM d GROUP BY source
+"""
+
+
+# --------------------------------------------------------------------------
+# dedup_span_excise — span-level duplicated-text EXCISION census (the
+# "deduplicating training data" substring family's removal step;
+# dedup_exact_substring only DETECTS shared runs between doc pairs).
+# First occurrence wins: for every distinct RUN_LEN-token window, the
+# globally earliest (doc_id, pos) occurrence is canonical; every other
+# occurrence — in later docs OR later in the same doc — marks its
+# RUN_LEN token positions for excision.  Output is the per-doc census
+# (n_tok, n_dup_win, n_excised, n_clean_tok) a curation pipeline uses
+# to decide span-dedup savings before rewriting text.
+#
+# Scale shape: NO pair join anywhere (the detection op needs a df cap
+# to bound its inverted-index self-join; excision doesn't — each
+# occurrence contributes exactly one row).  Shuffles are (1) ONE
+# window-hash shuffle (the canonical-marking window below), O(total
+# windows) compact md5 keys, and (2) one per-doc distinct over covered
+# positions, fan-out bounded by the constant RUN_LEN.  A license header
+# repeated a million times costs a million rows — linear — not the
+# million² a pair join pays.  Hot-key note: a groupBy-min + join-back
+# alternative (AQE skew-splittable, map-side-combined canon) was
+# A/B-measured 1.7× slower at sf0.1 — it re-shuffles every window row
+# for the join anyway; the window form pays one sort per hash key
+# instead, so only a corpus DOMINATED by one verbatim span (one key
+# holding a meaningful fraction of all windows in a single sort task)
+# would prefer the join form.
+# --------------------------------------------------------------------------
+
+def dedup_span_excise(spark: SparkSession, sf: str) -> DataFrame:
+    from pyspark.sql import Window as W
+    from bigarrays_jl_spark.functions.expressions import (shingle_array,
+                                                          tokens)
+    from bigarrays_jl_spark.sources.tables import load
+    docs = load(spark, sf, "documents").select("doc_id", "text")
+    toks = docs.select("doc_id", tokens().alias("t"))
+    base = toks.select("doc_id", F.size("t").alias("n_tok"))
+    wins = (toks.filter(F.size("t") >= RUN_LEN)
+            .select("doc_id",
+                    F.posexplode(shingle_array("t", RUN_LEN))
+                     .alias("pos0", "w"))
+            .select("doc_id", (F.col("pos0") + 1).alias("pos"),
+                    F.md5("w").alias("h")))
+    # canonical occurrence per window content = rn 1 under
+    # (doc_id, pos) — everything later is a duplicated span
+    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id", "pos"))
+    nc = (wins.withColumn("rn", rn).filter(F.col("rn") > 1)
+          .select("doc_id", "pos"))
+    # both censuses fold in ONE pass over nc (guide §1.2/§2.4): the old
+    # two-branch form (ndup groupBy + cov explode/distinct/groupBy) ran
+    # the h-window sort twice over the shared shingle+md5 exchange and
+    # paid two join-backs.  A (doc_id, pos) pair is unique in nc (one h
+    # per position), so n_dup_win == countDistinct(pos) survives the
+    # coverage explode, and n_excised == countDistinct(p) replaces the
+    # distinct+count pair — value-identical, one branch, one join.
+    census = (nc.select("doc_id", "pos",
+                        F.explode(F.sequence(
+                            F.col("pos"),
+                            F.col("pos") + F.lit(RUN_LEN - 1))).alias("p"))
+              .groupBy("doc_id")
+              .agg(F.countDistinct("pos").alias("n_dup_win"),
+                   F.countDistinct("p").alias("n_excised")))
+    return (base.join(census, "doc_id", "left")
+            .select("doc_id",
+                    F.col("n_tok").cast("bigint").alias("n_tok"),
+                    F.coalesce("n_dup_win", F.lit(0)).cast("bigint")
+                     .alias("n_dup_win"),
+                    F.coalesce("n_excised", F.lit(0)).cast("bigint")
+                     .alias("n_excised"),
+                    (F.col("n_tok") - F.coalesce("n_excised", F.lit(0)))
+                     .cast("bigint").alias("n_clean_tok")))
+
+
+def _span_excise_sql() -> str:
+    return rf"""
+WITH toks AS (
+  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+  FROM documents),
+base AS (SELECT doc_id, len(t) AS n_tok FROM toks),
+wins AS (
+  SELECT doc_id, i AS pos,
+         md5(array_to_string(t[i:i+{RUN_LEN - 1}], ' ')) AS h
+  FROM toks, UNNEST(generate_series(1, len(t) - {RUN_LEN - 1})) u(i)
+  WHERE len(t) >= {RUN_LEN}),
+rn AS (
+  SELECT doc_id, pos,
+         row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
+  FROM wins),
+nc AS (SELECT doc_id, pos FROM rn WHERE rn > 1),
+ndup AS (SELECT doc_id, count(*) AS n_dup_win FROM nc GROUP BY doc_id),
+cov AS (
+  SELECT doc_id, count(*) AS n_excised FROM (
+    SELECT DISTINCT doc_id, pos + j AS p
+    FROM nc, UNNEST(generate_series(0, {RUN_LEN - 1})) v(j)) cp
+  GROUP BY doc_id)
+SELECT b.doc_id, CAST(b.n_tok AS BIGINT) AS n_tok,
+       CAST(coalesce(n.n_dup_win, 0) AS BIGINT) AS n_dup_win,
+       CAST(coalesce(c.n_excised, 0) AS BIGINT) AS n_excised,
+       CAST(b.n_tok - coalesce(c.n_excised, 0) AS BIGINT) AS n_clean_tok
+FROM base b
+LEFT JOIN ndup n ON n.doc_id = b.doc_id
+LEFT JOIN cov c ON c.doc_id = b.doc_id
+"""
+
+
+DEDUP_SPAN_EXCISE_SQL = _span_excise_sql()
+
+
 QUERIES = {
     "dedup_exact": dedup_exact,
     "dedup_incremental": dedup_incremental,
@@ -691,6 +1045,11 @@ QUERIES = {
     "dedup_incremental_minhash": dedup_incremental_minhash,
     "dedup_exact_substring": dedup_exact_substring,
     "text_simhash": text_simhash,
+    "text_paragraph_dedup": text_paragraph_dedup,
+    "dedup_cluster_hist": dedup_cluster_hist,
+    "dedup_audit_pr": dedup_audit_pr,
+    "dedup_storage_savings": dedup_storage_savings,
+    "dedup_span_excise": dedup_span_excise,
 }
 
 ORACLES = {
@@ -704,4 +1063,9 @@ ORACLES = {
     "dedup_incremental_minhash": DEDUP_INCREMENTAL_MINHASH_SQL,
     "dedup_exact_substring": DEDUP_EXACT_SUBSTRING_SQL,
     "text_simhash": TEXT_SIMHASH_SQL,
+    "text_paragraph_dedup": TEXT_PARAGRAPH_DEDUP_SQL,
+    "dedup_cluster_hist": DEDUP_CLUSTER_HIST_SQL,
+    "dedup_audit_pr": DEDUP_AUDIT_PR_SQL,
+    "dedup_storage_savings": DEDUP_STORAGE_SAVINGS_SQL,
+    "dedup_span_excise": DEDUP_SPAN_EXCISE_SQL,
 }

@@ -7,15 +7,19 @@ path) and a DuckDB oracle per query.
 
 Tokenization canon (shared with dedup.py): split trimmed lowercase text
 on ``\\s+``.
+
+Also: corpus divergence, the Zipf fit, TF-IDF top-k, n-gram novelty
+and boilerplate prefixes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.checkpointing import materialize
-from bigarrays_jl_spark.functions import tokens as _toks
+from bigarrays_jl_spark.functions import shingle_array, tokens as _toks
+from bigarrays_jl_spark.operators.ordering import distributed_prefix_sum
 from bigarrays_jl_spark.sources.tables import load
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -412,6 +416,333 @@ GROUP BY doc_id
 """
 
 
+# text_corpus_divergence: distribution drift between two corpus
+# halves — exact integer count tables full-outer merged, per-term
+# IEEE contributions rounded-then-DECIMAL-summed (the unigram-logprob
+# canon) so cross-partition order can't move the result.
+
+# --------------------------------------------------------------------------
+# text_corpus_divergence — distribution drift between the two doc_id-
+# parity halves of the corpus: unigram count tables (exact integers)
+# full-outer merged over the union vocabulary, then two divergences:
+# Hellinger² = ½ Σ (√p − √q)²  (sqrt is IEEE-correctly-rounded, so
+# per-term doubles are bit-identical across engines) and Jensen-
+# Shannon in bits (log2 follows the unigram-logprob canon).  Each
+# per-term contribution is rounded to 9 decimals and accumulated in
+# DECIMAL(28,9) — exact, order-independent — so cross-partition sum
+# order cannot move the result (float-parity canon).
+#
+# Scale shape: groupBy(half, token) is a map-side-combined count over
+# the token stream; the merge shuffles ∝ vocabulary, never tokens;
+# totals broadcast.
+# --------------------------------------------------------------------------
+
+def text_corpus_divergence(spark: SparkSession, sf: str) -> DataFrame:
+    docs = load(spark, sf, "documents")
+    t = docs.select((F.col("doc_id") % 2).alias("half"),
+                    F.explode(_toks("text")).alias("token"))
+    cnt = (t.groupBy("token")
+           .agg(F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
+                 .alias("ca"),
+                F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
+                 .alias("cb")))
+    tots = cnt.agg(F.sum("ca").alias("ta"), F.sum("cb").alias("tb"))
+    c = cnt.crossJoin(F.broadcast(tots))
+    pa = F.col("ca").cast("double") / F.col("ta")
+    pb = F.col("cb").cast("double") / F.col("tb")
+    hell = 0.5 * (F.sqrt(pa) - F.sqrt(pb)) * (F.sqrt(pa) - F.sqrt(pb))
+    js = (F.when(F.col("ca") > 0,
+                 0.5 * pa * F.log2(2.0 * pa / (pa + pb))).otherwise(0.0)
+          + F.when(F.col("cb") > 0,
+                   0.5 * pb * F.log2(2.0 * pb / (pa + pb))).otherwise(0.0))
+    return (c.agg(
+        F.sum(F.when((F.col("ca") > 0) & (F.col("cb") > 0), 1)
+               .otherwise(0)).cast("bigint").alias("n_shared"),
+        F.sum(F.when((F.col("ca") > 0) & (F.col("cb") == 0), 1)
+               .otherwise(0)).cast("bigint").alias("n_only_a"),
+        F.sum(F.when((F.col("ca") == 0) & (F.col("cb") > 0), 1)
+               .otherwise(0)).cast("bigint").alias("n_only_b"),
+        F.sum(F.round(hell, 9).cast("decimal(28,9)"))
+         .cast("double").alias("hellinger_sq"),
+        F.sum(F.round(js, 9).cast("decimal(28,9)"))
+         .cast("double").alias("js_bits")))
+
+
+TEXT_CORPUS_DIVERGENCE_SQL = r"""
+WITH t AS (
+  SELECT doc_id % 2 AS half,
+         unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
+  FROM documents),
+cnt AS (
+  SELECT token,
+         CAST(sum(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+         CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
+  FROM t GROUP BY 1),
+tots AS (SELECT CAST(sum(ca) AS BIGINT) AS ta,
+                CAST(sum(cb) AS BIGINT) AS tb FROM cnt),
+c AS (SELECT cnt.*, tots.ta, tots.tb,
+             CAST(ca AS DOUBLE) / ta AS pa,
+             CAST(cb AS DOUBLE) / tb AS pb
+      FROM cnt CROSS JOIN tots)
+SELECT CAST(sum(CASE WHEN ca > 0 AND cb > 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_shared,
+       CAST(sum(CASE WHEN ca > 0 AND cb = 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_only_a,
+       CAST(sum(CASE WHEN ca = 0 AND cb > 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_only_b,
+       CAST(sum(CAST(round(
+           0.5 * (sqrt(pa) - sqrt(pb)) * (sqrt(pa) - sqrt(pb)), 9)
+           AS DECIMAL(28,9))) AS DOUBLE) AS hellinger_sq,
+       CAST(sum(CAST(round(
+           (CASE WHEN ca > 0
+                 THEN 0.5 * pa * log2(2.0 * pa / (pa + pb))
+                 ELSE 0.0 END)
+         + (CASE WHEN cb > 0
+                 THEN 0.5 * pb * log2(2.0 * pb / (pa + pb))
+                 ELSE 0.0 END), 9) AS DECIMAL(28,9))) AS DOUBLE) AS js_bits
+FROM c
+"""
+
+
+# ``text_zipf_fit`` — Zipf/power-law diagnostic of the corpus token
+# distribution: OLS slope of ln(freq) on ln(rank) over the full
+# rank-frequency table.  Ranks are exact integers from one count sort;
+# the ln terms go through the round-9-decimal canon
+# (text_bigram_logprob's rule) so the five OLS moments are exact
+# decimals and the slope closes in doubles once.
+#
+# Scale: Zipf's global frequency rank is a distributed_prefix_sum
+# (ordering.py), not a whole-vocabulary ORDER BY window — the
+# vocabulary grows ~Heaps-law with the corpus.
+
+def text_zipf_fit(spark: SparkSession, sf: str) -> DataFrame:
+    """OLS slope of ln(freq) ~ ln(rank) over the corpus rank-frequency
+    table (a Zipfian corpus sits near −1); one row out.
+
+    The global frequency rank is a distributed_prefix_sum (weight 1
+    over (−f, tok)), NOT a whole-table row_number window: vocabulary
+    grows ~Heaps-law with the corpus — hundreds of millions of types at
+    100 TB — and a bare ORDER BY window would funnel all of them
+    through one task (Exchange SinglePartition)."""
+    toks = (load(spark, sf, "documents")
+            .select(F.explode(F.split(F.trim(F.lower(F.col("text"))),
+                                      r"\s+")).alias("tok")))
+    freq = (toks.groupBy("tok").agg(F.count("*").alias("f"))
+            .withColumn("negf", -F.col("f")))
+    ranked_df, _total = distributed_prefix_sum(
+        spark, freq, F.lit(1), "negf", "tok", out="r")
+    d9 = "decimal(28,9)"
+    ranked = (ranked_df
+              .select(F.round(F.log(F.col("r").cast("double")), 9)
+                      .cast(d9).alias("x"),
+                      F.round(F.log(F.col("f").cast("double")), 9)
+                      .cast(d9).alias("y")))
+    m = ranked.agg(F.count("*").alias("n"),
+                   F.sum("x").alias("sx"), F.sum("y").alias("sy"),
+                   F.sum(F.col("x") * F.col("x")).alias("sxx"),
+                   F.sum(F.col("x") * F.col("y")).alias("sxy"))
+    n = F.col("n").cast("double")
+    slope = ((n * F.col("sxy").cast("double")
+              - F.col("sx").cast("double") * F.col("sy").cast("double"))
+             / (n * F.col("sxx").cast("double")
+                - F.col("sx").cast("double")
+                * F.col("sx").cast("double")))
+    return m.select(F.col("n").cast("bigint").alias("n_types"),
+                    F.round(slope, 6).alias("zipf_slope"))
+
+
+ZIPF_SQL = """
+WITH toks AS (
+  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+  FROM documents),
+freq AS (SELECT tok, count(*) AS f FROM toks GROUP BY 1),
+ranked AS (
+  SELECT CAST(round(ln(CAST(row_number() OVER (ORDER BY f DESC, tok)
+                            AS DOUBLE)), 9) AS DECIMAL(28,9)) AS x,
+         CAST(round(ln(CAST(f AS DOUBLE)), 9) AS DECIMAL(28,9)) AS y
+  FROM freq),
+m AS (
+  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+         sum(x * x) AS sxx, sum(x * y) AS sxy
+  FROM ranked)
+SELECT CAST(n AS BIGINT) AS n_types,
+       round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+              - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+             / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
+         AS zipf_slope
+FROM m
+"""
+
+
+TFIDF_TOPK = 3
+
+
+# ``text_tfidf_topk`` — per-document top-3 TF-IDF terms: one
+# tokenization fold to (doc, term) TFs, document frequencies from the
+# same table, idf = ln(N/df), doc-keyed rank window (bounded by a
+# document's own vocabulary — never global).
+
+def text_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
+    toks = (load(spark, sf, "documents")
+            .select("doc_id",
+                    F.explode(F.split(F.trim(F.lower(F.col("text"))),
+                                      r"\s+")).alias("term")))
+    # THREE consumers need the term-frequency table (df, n_docs, the
+    # scoring join) — without the checkpoint each one re-tokenized the
+    # corpus, and the vocab-sized df table shuffle-joined the postings
+    # (r13: the sf1 proof read 7.5× on exactly those two defects; the
+    # bm25 sibling with the checkpoint+broadcast shape reads 1.9×)
+    tf = materialize(toks.groupBy("doc_id", "term")
+                     .agg(F.count("*").alias("tf")), eager=False)
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    # same doc set as toks (groupBy preserves it) without re-tokenizing
+    n = tf.select("doc_id").distinct().agg(
+        F.count("*").cast("double").alias("n_docs"))
+    scored = (tf.join(F.broadcast(dfreq), "term")
+              .crossJoin(F.broadcast(n))
+              .withColumn("tfidf", F.round(
+                  F.col("tf").cast("double")
+                  * F.log(F.col("n_docs") / F.col("df").cast("double")),
+                  6)))
+    w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TFIDF_TOPK)
+            .select("doc_id", "term",
+                    F.col("tf").cast("bigint").alias("tf"),
+                    "tfidf", F.col("rank").cast("int").alias("rank")))
+
+
+TFIDF_SQL = f"""
+WITH toks AS (
+  SELECT doc_id,
+         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
+  FROM documents),
+tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+n AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM toks),
+scored AS (
+  SELECT doc_id, term, tf,
+         round(CAST(tf AS DOUBLE)
+               * ln(n_docs / CAST(df AS DOUBLE)), 6) AS tfidf
+  FROM tf JOIN dfreq USING (term) CROSS JOIN n)
+SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, tfidf,
+       CAST(rank AS INT) AS rank
+FROM (SELECT doc_id, term, tf, tfidf,
+             row_number() OVER (PARTITION BY doc_id
+                                ORDER BY tfidf DESC, term) AS rank
+      FROM scored)
+WHERE rank <= {TFIDF_TOPK}
+"""
+
+
+# ``ngram_novelty`` — per source: the share of (doc, distinct word
+# trigram) instances whose trigram FIRST occurs in that doc (global
+# first = min doc_id).  The training-data freshness readout: a source
+# whose docs are mostly re-shuffles of already-seen n-grams adds
+# little to a corpus; the same statistic drives dedup budget and
+# mixture decisions in C4/Pile-style pipelines.
+
+def ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
+    d = (load(spark, sf, "documents")
+         .select("doc_id", "source",
+                 F.split(F.col("text"), " ").alias("ws")))
+    # shingle_array carries the short-document guard (sequence DESCENDS
+    # below n tokens) and is the repo's one shingling definition; its
+    # empty array for short docs drops in the explode
+    tri = F.array_distinct(shingle_array("ws", 3))
+    e = d.select("doc_id", "source", F.explode(tri).alias("g"))
+    # first_doc via a gram-keyed window min instead of groupBy + join
+    # back: the gram table shuffles ONCE and needs no checkpoint (one
+    # consumer), where the join form paid the grouped fold plus an SMJ
+    # build over the same exchange
+    novel = (F.min("doc_id").over(W.partitionBy("g"))
+             == F.col("doc_id")).cast("int")
+    return (e.withColumn("novel", novel)
+            .groupBy("source")
+            .agg(F.count("*").cast("bigint").alias("n_grams"),
+                 F.sum("novel").cast("bigint").alias("n_novel"))
+            .select("source", "n_grams", "n_novel",
+                    (F.col("n_novel").cast("double")
+                     / F.col("n_grams").cast("double")).alias("novelty")))
+
+
+NGRAM_NOVELTY_SQL = """
+WITH w AS (
+  SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
+t AS (
+  SELECT doc_id, source,
+         list_distinct([ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]
+                        for i in range(1, len(ws) - 1)]) AS tris
+  FROM w WHERE len(ws) >= 3),
+e AS (SELECT doc_id, source, unnest(tris) AS g FROM t),
+f AS (SELECT g, min(doc_id) AS first_doc FROM e GROUP BY g)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_grams,
+       CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_novel,
+       CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
+            AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novelty
+FROM e JOIN f USING (g)
+GROUP BY source
+"""
+
+
+BOILER_K = 8        # prefix words — production scale (r13 verdict task 2)
+BOILER_TOPK = 20
+
+
+# ``boilerplate_prefixes`` — the C4-style boilerplate detector: the
+# top-20 repeated document PREFIXES (first ``BOILER_K`` words, hashed)
+# with how many docs and distinct sources carry each.  A real crawl
+# dedups headers/footers by exactly this grouping; ``BOILER_K`` is 8
+# — the production scale, same as cross_source_leakage's 8-grams.
+# (r13 shipped with a demo-collision K=2; the r14 fixture plants
+# shared 8-word header templates in the sf1 corpus, and the driver's
+# own documents tables collide naturally at 8 — 23 groups at sf0.01,
+# 233 at sf0.1 — so the production K is provable at every SF.)
+#
+# Scale: prefix grouping is one map-side-combined groupBy on a 16-byte
+# hash + a TakeOrdered(20) heap — no global sort, no window over
+# corpus-growing input.
+
+def boilerplate_prefixes(spark: SparkSession, sf: str) -> DataFrame:
+    d = (load(spark, sf, "documents")
+         .select("doc_id", "source",
+                 F.split(F.col("text"), " ").alias("ws")))
+    prefix = F.md5(F.concat_ws(
+        " ", *[F.element_at("ws", i + 1) for i in range(BOILER_K)]))
+    groups = (d.filter(F.size("ws") >= BOILER_K)
+              .select(prefix.alias("ph"), "source")
+              .groupBy("ph")
+              .agg(F.count("*").alias("n_docs"),
+                   F.countDistinct("source").alias("n_sources"))
+              .filter(F.col("n_docs") > 1))
+    return (groups
+            .orderBy(F.col("n_docs").desc(), F.col("ph"))
+            .limit(BOILER_TOPK)
+            .select("ph", F.col("n_docs").cast("bigint").alias("n_docs"),
+                    F.col("n_sources").cast("bigint").alias("n_sources")))
+
+
+# prefix expression derives from BOILER_K exactly like the Spark side,
+# so changing the constant can never desynchronize operator and oracle
+_PREFIX_SQL = " || ' ' || ".join(f"ws[{i + 1}]" for i in range(BOILER_K))
+
+BOILERPLATE_SQL = f"""
+WITH w AS (
+  SELECT source, string_split(text, ' ') AS ws FROM documents),
+g AS (
+  SELECT md5({_PREFIX_SQL}) AS ph,
+         count(*) AS n_docs, count(DISTINCT source) AS n_sources
+  FROM w WHERE len(ws) >= {BOILER_K}
+  GROUP BY 1 HAVING count(*) > 1)
+SELECT ph, CAST(n_docs AS BIGINT) AS n_docs,
+       CAST(n_sources AS BIGINT) AS n_sources
+FROM g ORDER BY n_docs DESC, ph LIMIT {BOILER_TOPK}
+"""
+
+
 QUERIES = {
     "text_stats": text_stats,
     "text_quality": text_quality,
@@ -423,6 +754,11 @@ QUERIES = {
     "text_repetition": text_repetition,
     "text_quality_buckets": text_quality_buckets,
     "text_unigram_logprob": text_unigram_logprob,
+    "text_corpus_divergence": text_corpus_divergence,
+    "text_zipf_fit": text_zipf_fit,
+    "text_tfidf_topk": text_tfidf_topk,
+    "ngram_novelty": ngram_novelty,
+    "boilerplate_prefixes": boilerplate_prefixes,
 }
 
 ORACLES = {
@@ -436,4 +772,9 @@ ORACLES = {
     "pipeline_clean_corpus": PIPELINE_CLEAN_CORPUS_SQL,
     "text_quality_buckets": TEXT_QUALITY_BUCKETS_SQL,
     "text_unigram_logprob": TEXT_UNIGRAM_LOGPROB_SQL,
+    "text_corpus_divergence": TEXT_CORPUS_DIVERGENCE_SQL,
+    "text_zipf_fit": ZIPF_SQL,
+    "text_tfidf_topk": TFIDF_SQL,
+    "ngram_novelty": NGRAM_NOVELTY_SQL,
+    "boilerplate_prefixes": BOILERPLATE_SQL,
 }

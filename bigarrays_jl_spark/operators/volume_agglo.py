@@ -31,13 +31,11 @@ embarrassingly parallel decode/encode.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.checkpointing import materialize
+from bigarrays_jl_spark.operators.advanced import scratch_volume
 from bigarrays_jl_spark.operators.volume_rag import region_adjacency
 from bigarrays_jl_spark.volume import Volume
 
@@ -130,25 +128,17 @@ def demo_agglo_volume(spark: SparkSession):
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0],
                     "size": [AGG_SIDE, AGG_SIDE, AGG_SIDE]}]})
-    root = os.path.join(tempfile.gettempdir(),
-                        f"bigarrays_volagg_{os.getpid()}", "vol")
-    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
-    if os.path.exists(sentinel):
-        return Volume.open(spark, root)
-    import shutil
-    shutil.rmtree(root, ignore_errors=True)
-    vol = Volume.create(spark, root, info)
-    x, y, z = np.meshgrid(np.arange(AGG_SIDE), np.arange(AGG_SIDE),
-                          np.arange(AGG_SIDE), indexing="ij")
-    b = (x // AGG_BLOCK) * 4 + (y // AGG_BLOCK) * 2 + (z // AGG_BLOCK)
-    labels = (b % 5 + 1).astype(np.uint32)
-    thr = np.where(x < AGG_BLOCK, AGG_SPECKLE_LO, AGG_SPECKLE_HI)
-    speckle = (3 * x + 5 * y + 7 * z) % AGG_SPECKLE_MOD < thr
-    labels[speckle] = 0
-    vol.write(labels, (0, 0, 0))
-    with open(sentinel, "w") as f:
-        f.write("ok")
-    return vol
+
+    def fill(vol):
+        x, y, z = np.meshgrid(np.arange(AGG_SIDE), np.arange(AGG_SIDE),
+                              np.arange(AGG_SIDE), indexing="ij")
+        b = (x // AGG_BLOCK) * 4 + (y // AGG_BLOCK) * 2 + (z // AGG_BLOCK)
+        labels = (b % 5 + 1).astype(np.uint32)
+        thr = np.where(x < AGG_BLOCK, AGG_SPECKLE_LO, AGG_SPECKLE_HI)
+        speckle = (3 * x + 5 * y + 7 * z) % AGG_SPECKLE_MOD < thr
+        labels[speckle] = 0
+        vol.write(labels, (0, 0, 0))
+    return scratch_volume(spark, "volagg", info, fill)
 
 
 def agglomerate_census(vol: Volume,

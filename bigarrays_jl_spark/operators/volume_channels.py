@@ -21,11 +21,10 @@ shuffle whose cardinality is channels × buckets, never voxel count.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigarrays_jl_spark.operators.advanced import scratch_volume
 
 N_CH = 3
 SIDE = 32
@@ -33,12 +32,10 @@ CH_HIST_BUCKET = 32      # 256/32 = 8 value buckets per channel
 
 
 def demo_volume4d(spark: SparkSession):
-    """PID-keyed 4D scratch volume (see ``advanced.demo_volume`` for
-    the sentinel discipline: reuse only after a completed ingest)."""
+    """PID-keyed 4D scratch volume (``advanced.scratch_volume``)."""
     import numpy as np
 
     from bigarrays_jl_spark.infos import Info
-    from bigarrays_jl_spark.volume import Volume
 
     info = Info.from_dict({
         "num_channels": N_CH, "type": "image", "data_type": "uint8",
@@ -46,23 +43,14 @@ def demo_volume4d(spark: SparkSession):
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0],
                     "size": [SIDE, SIDE, SIDE]}]})
-    root = os.path.join(tempfile.gettempdir(),
-                        f"bigarrays_vol4d_{os.getpid()}", "vol")
-    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
-    if os.path.exists(sentinel):
-        vol = Volume.open(spark, root)
-    else:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        vol = Volume.create(spark, root, info)
+
+    def fill(vol):
         x, y, z, ch = np.meshgrid(np.arange(SIDE), np.arange(SIDE),
                                   np.arange(SIDE), np.arange(N_CH),
                                   indexing="ij")
         arr = ((x * 31 + y * 7 + z * 5 + ch * 11) % 256).astype(np.uint8)
         vol.write(arr, (0, 0, 0))
-        with open(sentinel, "w") as f:
-            f.write("ok")
-    return vol
+    return scratch_volume(spark, "vol4d", info, fill)
 
 
 def volume_channel_histogram(spark: SparkSession, sf: str) -> DataFrame:

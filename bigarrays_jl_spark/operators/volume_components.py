@@ -50,13 +50,12 @@ the operator against a pure-Python BFS on an adversarial noise volume
 
 from __future__ import annotations
 
-import os
-import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark import indexes as ix
 from bigarrays_jl_spark.checkpointing import materialize
+from bigarrays_jl_spark.operators.advanced import scratch_volume
 from bigarrays_jl_spark.volume import Volume
 
 CC_MAX_ROUNDS = 20
@@ -245,22 +244,14 @@ def demo_cc_volume(spark: SparkSession):
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0],
                     "size": [CC_SIDE, CC_SIDE, CC_SIDE]}]})
-    root = os.path.join(tempfile.gettempdir(),
-                        f"bigarrays_volcc_{os.getpid()}", "vol")
-    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
-    if os.path.exists(sentinel):
-        return Volume.open(spark, root)
-    import shutil
-    shutil.rmtree(root, ignore_errors=True)
-    vol = Volume.create(spark, root, info)
-    x, y, z = np.meshgrid(np.arange(CC_SIDE), np.arange(CC_SIDE),
-                          np.arange(CC_SIDE), indexing="ij")
-    b = (x // CC_BLOCK) * 4 + (y // CC_BLOCK) * 2 + (z // CC_BLOCK)
-    labels = np.where(b == CC_BG_BLOCK, 0, b % 5 + 1).astype(np.uint32)
-    vol.write(labels, (0, 0, 0))
-    with open(sentinel, "w") as f:
-        f.write("ok")
-    return vol
+
+    def fill(vol):
+        x, y, z = np.meshgrid(np.arange(CC_SIDE), np.arange(CC_SIDE),
+                              np.arange(CC_SIDE), indexing="ij")
+        b = (x // CC_BLOCK) * 4 + (y // CC_BLOCK) * 2 + (z // CC_BLOCK)
+        labels = np.where(b == CC_BG_BLOCK, 0, b % 5 + 1).astype(np.uint32)
+        vol.write(labels, (0, 0, 0))
+    return scratch_volume(spark, "volcc", info, fill)
 
 
 def volume_components(spark: SparkSession, sf: str) -> DataFrame:

@@ -27,23 +27,22 @@ bucket-bounded output.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigarrays_jl_spark.operators.advanced import scratch_volume
 
 MIP_SIDE = 32
 MIP_BUCKET = 32
 
 
 def demo_pyramid_volume(spark: SparkSession):
-    """PID-keyed scratch volume with ONE built mip (sentinel written
-    only after both the ingest and the downsample completed)."""
+    """PID-keyed scratch volume with ONE built mip (the sentinel of
+    ``advanced.scratch_volume`` follows both the ingest and the
+    downsample)."""
     import numpy as np
 
     from bigarrays_jl_spark.infos import Info
-    from bigarrays_jl_spark.volume import Volume
 
     info = Info.from_dict({
         "num_channels": 1, "type": "image", "data_type": "uint8",
@@ -51,22 +50,13 @@ def demo_pyramid_volume(spark: SparkSession):
                     "key": "1_1_1", "resolution": [1, 1, 1],
                     "voxel_offset": [0, 0, 0],
                     "size": [MIP_SIDE, MIP_SIDE, MIP_SIDE]}]})
-    root = os.path.join(tempfile.gettempdir(),
-                        f"bigarrays_volmip_{os.getpid()}", "vol")
-    sentinel = os.path.join(os.path.dirname(root), "INGEST_COMPLETE")
-    if os.path.exists(sentinel):
-        vol = Volume.open(spark, root)
-    else:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-        vol = Volume.create(spark, root, info)
+
+    def fill(vol):
         x, y, z = np.meshgrid(np.arange(MIP_SIDE), np.arange(MIP_SIDE),
                               np.arange(MIP_SIDE), indexing="ij")
         vol.write(((x * 31 + y * 7 + z) % 256).astype(np.uint8), (0, 0, 0))
         vol.downsample()
-        with open(sentinel, "w") as f:
-            f.write("ok")
-    return vol
+    return scratch_volume(spark, "volmip", info, fill)
 
 
 def volume_mip1_histogram(spark: SparkSession, sf: str) -> DataFrame:

@@ -1,5 +1,5 @@
 """Streaming multi-touch attribution: the stateful twin of
-``operators.round10g.q76_attribution`` (builder extension, SURVEY §2C
+``operators.events.q76_attribution`` (builder extension, SURVEY §2C
 round 10).
 
 The batch operator splits every purchase's cents cent-exactly across
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from bigarrays_jl_spark.operators.round10g import ATTR_WINDOW_S
+from bigarrays_jl_spark.operators.events import ATTR_WINDOW_S
 
 OUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),

@@ -1,5 +1,5 @@
 """Streaming Bloom decontamination screen — the ingest-time twin of
-``bloom_decontaminate`` (operators/round15.py), and the fourth member
+``bloom_decontaminate`` (operators/pipeline.py), and the fourth member
 of the mergeable-sketch family (KMV, decimal-HDR, CM): the Bloom
 bitset is BOUNDED (≤ 2^17 distinct (j, bit) rows at any eval-set
 size) and EXACTLY MERGEABLE (bitsets merge by set union), so the
@@ -39,8 +39,8 @@ from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
-from bigarrays_jl_spark.operators.round15 import (BLOOM_K, bloom_bit_col,
-                                                  bloom_screen_counts)
+from bigarrays_jl_spark.operators.pipeline import (BLOOM_K, bloom_bit_col,
+                                                   bloom_screen_counts)
 from bigarrays_jl_spark.streaming.replay import (guarded_append,
                                                  guarded_rows_append,
                                                  read_index_or_none)

@@ -1,5 +1,5 @@
 """Streaming Count-Min sketch — the twin of ``cm_heavyhitters``'s
-sketch leg (operators/round15.py), and the third member of the
+sketch leg (operators/estimation.py), and the third member of the
 exactly-mergeable-sketch family (KMV in streaming/kmv.py, decimal-HDR
 in streaming/hdr.py): the CM bucket table is BOUNDED (D×W = 4096
 integer counters at any corpus size) and bucket counts are integers
@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round15 import (cm_sketch_of,
-                                                  gram_counts_of)
+from bigarrays_jl_spark.operators.estimation import (cm_sketch_of,
+                                                     gram_counts_of)
 from bigarrays_jl_spark.streaming.replay import (guarded_append,
                                                  guarded_rows_append,
                                                  merged_partials)

@@ -1,5 +1,5 @@
 """Ingest-time END-TO-END curation — the streaming twin of
-``pipeline_e2e_curate`` (operators/round16.py): one foreachBatch
+``pipeline_e2e_curate`` (operators/pipeline.py): one foreachBatch
 bridge that runs the full training-data curation pipeline as documents
 arrive, against three durable structures:
 
@@ -62,8 +62,8 @@ from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.functions.expressions import shingle_array, tokens
 from bigarrays_jl_spark.operators.extensions import _gopher_metrics
 from bigarrays_jl_spark.operators.pipeline import DECON_NGRAM
-from bigarrays_jl_spark.operators.round16 import (_bloom_positive_grams,
-                                                  n_tok_col, pack_census)
+from bigarrays_jl_spark.operators.pipeline import (_bloom_positive_grams,
+                                                   n_tok_col, pack_census)
 from bigarrays_jl_spark.streaming.bloom import _bits_of, _doc_grams
 from bigarrays_jl_spark.streaming.replay import (guarded_append,
                                                  guarded_rows_append,

@@ -5,7 +5,7 @@ paragraph dedup, contamination monitor) with the r14 exactly-once
 replay guard.
 
 - ``streaming_session_bounce`` — continuous per-entry-type bounce
-  rate, the twin of ``session_bounce_rate`` (operators/round13b.py).
+  rate, the twin of ``session_bounce_rate`` (operators/events.py).
   Sessions SPAN micro-batches, so the bridge keeps a durable
   open-session state table (one row per user: entry type, event count,
   last event epoch-second) and merges each batch's first session into
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.checkpointing import materialize
 from bigarrays_jl_spark.operators.events import SESSION_GAP_MIN, sessionized
-from bigarrays_jl_spark.operators.round13b import BOILER_K, BOILER_TOPK
+from bigarrays_jl_spark.operators.text import BOILER_K, BOILER_TOPK
 from bigarrays_jl_spark.streaming.replay import (
     batch_already_in as _batch_already_in,
     commit_marked,
@@ -341,7 +341,7 @@ def session_bounce_snapshot(spark: SparkSession, out_path: str,
 def streaming_boilerplate(docs: DataFrame, index_path: str, out_path: str,
                           checkpoint_path: str):
     """Continuous boilerplate-prefix monitor — the streaming twin of
-    ``boilerplate_prefixes`` (operators/round13b.py).  Each micro-batch
+    ``boilerplate_prefixes`` (operators/text.py).  Each micro-batch
     appends its per-(prefix-hash, source) counts to the durable index
     (compact partials, one row per distinct pair per batch), then
     appends the refreshed top-20 FROM THE INDEX under ``batch_id``.
@@ -398,7 +398,7 @@ def boilerplate_snapshot(spark: SparkSession, index_path: str) -> DataFrame:
 def streaming_quality_funnel(docs: DataFrame, out_path: str,
                              checkpoint_path: str):
     """Continuous Gopher-cascade retention monitor — the streaming twin
-    of ``quality_filter_funnel`` (operators/round14.py).  The funnel is
+    of ``quality_filter_funnel`` (operators/pipeline.py).  The funnel is
     pure counting, so the durable state IS the output: each micro-batch
     appends one row of exactly-mergeable counter partials
     ``(n, s1, s2, s3, s4, batch_id)`` and ``quality_funnel_snapshot``
@@ -437,7 +437,7 @@ def streaming_quality_funnel(docs: DataFrame, out_path: str,
 def quality_funnel_snapshot(spark: SparkSession, out_path: str) -> DataFrame:
     """Fold the counter partials into the exact quality_filter_funnel
     output (stage, rule, n_in, n_out, retained_frac)."""
-    from bigarrays_jl_spark.operators.round14 import FUNNEL_STAGES
+    from bigarrays_jl_spark.operators.pipeline import FUNNEL_STAGES
     tot = (spark.read.parquet(out_path).distinct()    # replay-safe fold
            .agg(*[F.sum(c).cast("bigint").alias(c)
                   for c in ("n", "s1", "s2", "s3", "s4")]))

@@ -1,4 +1,4 @@
-"""Streaming twin of ``operators.round12.day_funnel_conversion``.
+"""Streaming twin of ``operators.events.day_funnel_conversion``.
 
 A strict-order funnel is ORDERED state: "first click after the first
 view" cannot be folded incrementally under out-of-order arrival — a

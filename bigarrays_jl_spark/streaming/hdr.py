@@ -1,5 +1,5 @@
 """Streaming decimal-HDR quantiles — the twin of
-``events_hdr_quantiles`` (operators/round14c.py), and the reason that
+``events_hdr_quantiles`` (operators/estimation.py), and the reason that
 operator exists: the decimal-HDR histogram is BOUNDED (≤ ~900 buckets
 per key at any data size) and EXACTLY MERGEABLE (bucket counts are
 integers under addition), so the streaming state is a tiny partials
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.operators.ordering import bucketed_quantile_picks
-from bigarrays_jl_spark.operators.round14c import hdr_bucket_cents
+from bigarrays_jl_spark.operators.estimation import hdr_bucket_cents
 from bigarrays_jl_spark.streaming.replay import (guarded_append,
                                                  guarded_rows_append,
                                                  merged_partials)

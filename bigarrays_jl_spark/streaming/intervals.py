@@ -1,4 +1,4 @@
-"""Streaming twin of operators/round11.interval_overlap_join.
+"""Streaming twin of operators/temporal.interval_overlap_join.
 
 Sessions and burst windows are the archetypal streaming-state problem:
 both are gap-merged intervals that only FINALIZE when the watermark
@@ -36,9 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round11 import (BURST_PAD_S,
-                                                  SESSION_GAP_S,
-                                                  overlap_aggregate)
+from bigarrays_jl_spark.operators.temporal import (BURST_PAD_S, SESSION_GAP_S,
+                                                   overlap_aggregate)
 
 
 def _floored(events: DataFrame, watermark: str) -> DataFrame:

@@ -1,5 +1,5 @@
 """Streaming K-Minimum-Values distinct sketch: the stateful twin of
-``operators.round11d.kmv_distinct_users`` (builder extension, SURVEY
+``operators.estimation.kmv_distinct_users`` (builder extension, SURVEY
 §2C round 11).
 
 The KMV sketch is the textbook case for streaming state bounds: per
@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from bigarrays_jl_spark.operators.round11d import HASH_BITS, KMV_K
+from bigarrays_jl_spark.operators.estimation import (HASH_BITS, KMV_K,
+                                                     kmv_hash)
 
 OUT_SCHEMA = T.StructType([
     T.StructField("event_type", T.StringType()),
@@ -37,32 +38,38 @@ STATE_SCHEMA = T.StructType([
 ])
 
 
-def _update(key, pdfs, state):
-    import hashlib
+def _kmv_update(schema, last):
+    """The per-type sketch update behind both KMV streams: fold the
+    batch's distinct user hashes into the k smallest, and on a change
+    emit ``(event_type, n_mins, kth_min, last(mins, kth))`` in
+    ``schema``'s columns."""
+    def update(key, pdfs, state):
+        import pandas as pd
 
-    import pandas as pd
+        mins = list(state.get[0]) if state.exists else []
+        before = tuple(mins)
+        uids = set()
+        for pdf in pdfs:
+            uids.update(int(u) for u in pdf["user_id"].unique())
+        # hash each DISTINCT id once; the sketch ignores re-deliveries by
+        # construction (set semantics), so replays are free idempotence
+        mins = sorted(set(mins) | {kmv_hash(u) for u in uids})[:KMV_K]
+        if not mins:
+            return
+        state.update((mins,))
+        if tuple(mins) == before:
+            return
+        kth = mins[KMV_K - 1] if len(mins) >= KMV_K else None
+        yield pd.DataFrame(
+            [(key[0], len(mins), kth, last(mins, kth))],
+            columns=[f.name for f in schema])
+    return update
 
-    mins = list(state.get[0]) if state.exists else []
-    before = tuple(mins)
-    uids = set()
-    for pdf in pdfs:
-        uids.update(int(u) for u in pdf["user_id"].unique())
-    # hash each DISTINCT id once; the sketch ignores re-deliveries by
-    # construction (set semantics), so replays are free idempotence
-    mins = sorted(set(mins) | {
-        int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
-        for u in uids})[:KMV_K]
-    if not mins:
-        return
-    state.update((mins,))
-    if tuple(mins) == before:
-        return
-    kth = mins[KMV_K - 1] if len(mins) >= KMV_K else None
+
+def _estimate(mins, kth):
     est = ((KMV_K - 1) / (kth / float(2 ** HASH_BITS))
            if kth is not None else float(len(mins)))
-    yield pd.DataFrame(
-        [(key[0], len(mins), kth, round(est, 4))],
-        columns=[f.name for f in OUT_SCHEMA])
+    return round(est, 4)
 
 
 def streaming_kmv_distinct(events: DataFrame) -> DataFrame:
@@ -74,11 +81,12 @@ def streaming_kmv_distinct(events: DataFrame) -> DataFrame:
     return (events
             .select("event_type", "user_id")
             .groupBy("event_type")
-            .applyInPandasWithState(_update, OUT_SCHEMA, STATE_SCHEMA,
-                                    "append", GroupStateTimeout.NoTimeout))
+            .applyInPandasWithState(_kmv_update(OUT_SCHEMA, _estimate),
+                                    OUT_SCHEMA, STATE_SCHEMA, "append",
+                                    GroupStateTimeout.NoTimeout))
 
 
-# -- union mergeability (streaming twin of round12.sketch_union_distinct) --
+# -- union mergeability (streaming twin of estimation.sketch_union_distinct) --
 
 MINS_SCHEMA = T.StructType([
     T.StructField("event_type", T.StringType()),
@@ -86,30 +94,6 @@ MINS_SCHEMA = T.StructType([
     T.StructField("kth_min", T.LongType()),
     T.StructField("mins", T.ArrayType(T.LongType())),
 ])
-
-
-def _update_mins(key, pdfs, state):
-    import hashlib
-
-    import pandas as pd
-
-    mins = list(state.get[0]) if state.exists else []
-    before = tuple(mins)
-    uids = set()
-    for pdf in pdfs:
-        uids.update(int(u) for u in pdf["user_id"].unique())
-    mins = sorted(set(mins) | {
-        int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
-        for u in uids})[:KMV_K]
-    if not mins or tuple(mins) == before:
-        if mins:
-            state.update((mins,))
-        return
-    state.update((mins,))
-    kth = mins[KMV_K - 1] if len(mins) >= KMV_K else None
-    yield pd.DataFrame(
-        [(key[0], len(mins), kth, mins)],
-        columns=[f.name for f in MINS_SCHEMA])
 
 
 def streaming_kmv_minima(events: DataFrame) -> DataFrame:
@@ -123,14 +107,15 @@ def streaming_kmv_minima(events: DataFrame) -> DataFrame:
     return (events
             .select("event_type", "user_id")
             .groupBy("event_type")
-            .applyInPandasWithState(_update_mins, MINS_SCHEMA,
-                                    STATE_SCHEMA, "append",
-                                    GroupStateTimeout.NoTimeout))
+            .applyInPandasWithState(
+                _kmv_update(MINS_SCHEMA, lambda mins, kth: mins),
+                MINS_SCHEMA, STATE_SCHEMA, "append",
+                GroupStateTimeout.NoTimeout))
 
 
 def kmv_union_snapshot(spark, sink_path: str) -> DataFrame:
     """Pairwise union estimates from the PERSISTED sketch stream — the
-    streaming twin of round12.sketch_union_distinct's estimate column,
+    streaming twin of estimation.sketch_union_distinct's estimate column,
     computable without the raw stream (that is the point of
     mergeability; the exact n_exact column inherently needs the full
     stream and has no sketch-only twin).

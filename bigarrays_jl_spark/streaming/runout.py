@@ -1,5 +1,5 @@
 """Streaming clamped-inventory maintenance: the stateful twin of
-``operators.round10g.q75_stock_runout`` (builder extension, SURVEY §2C
+``operators.events.q75_stock_runout`` (builder extension, SURVEY §2C
 round 10).
 
 The batch operator is a NON-associative per-user scan — b_n =
@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from bigarrays_jl_spark.operators.round10g import VQ
+from bigarrays_jl_spark.operators.events import VQ
 
 OUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),

@@ -1,5 +1,5 @@
 """Streaming SCD type-2 maintenance — the continuous twin of
-``operators.round10c.scd2_history``'s interval build.
+``operators.mutation.scd2_history``'s interval build.
 
 Each micro-batch folds new change-stream events into a versioned
 SCD2 interval table ``(user_id, event_type, valid_from, from_eid,
@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round10c import scd2_intervals
+from bigarrays_jl_spark.operators.mutation import scd2_intervals
 from bigarrays_jl_spark.streaming.windows import read_merged_table
 
 _IV_SCHEMA = ("user_id long, event_type string, valid_from long, "

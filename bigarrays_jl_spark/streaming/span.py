@@ -1,5 +1,5 @@
 """Ingest-time span-level dedup excision — the streaming twin of
-``dedup_span_excise`` (operators/round17.py): one foreachBatch bridge
+``dedup_span_excise`` (operators/dedup.py): one foreachBatch bridge
 maintaining a durable WINDOW-HASH index (distinct md5 of every
 RUN_LEN-token window seen so far — compact 16-byte rows, never the
 corpus) and appending the per-doc excision census as documents arrive.

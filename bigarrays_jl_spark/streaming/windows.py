@@ -161,6 +161,21 @@ from bigarrays_jl_spark.streaming.replay import (  # noqa: E402
     read_index_or_none as _read_index_or_none)
 
 
+def _repair_index(spark: SparkSession, out_path: str, index_path: str,
+                  batch_id: int, key: str) -> None:
+    """Replay repair of a guarded two-output bridge: the batch's out
+    append committed on a previous attempt, so never recompute
+    admission (it would re-admit and duplicate) — re-derive the
+    admitted ``key`` values from the committed rows and append only the
+    ones the index is missing (the crash-between-appends case)."""
+    replay = (spark.read.parquet(out_path)
+              .filter(F.col("batch_id") == batch_id).select(key))
+    idx = _read_index_or_none(spark, index_path)
+    if idx is not None:
+        replay = replay.join(idx.select(key), key, "left_anti")
+    replay.write.mode("append").parquet(index_path)
+
+
 def streaming_incremental_dedup(docs: DataFrame, index_path: str,
                                 out_path: str, checkpoint_path: str):
     """Production ingest-dedup bridge: foreachBatch + the
@@ -199,18 +214,6 @@ def streaming_incremental_dedup(docs: DataFrame, index_path: str,
     def process_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
 
-        def repair() -> None:
-            # replayed batch whose out append committed: never recompute
-            # admission — re-derive the admitted fingerprints from the
-            # committed rows and append only the ones the index is
-            # missing (the crash-between-appends case)
-            replay = (spark.read.parquet(out_path)
-                      .filter(F.col("batch_id") == batch_id).select("fp"))
-            idx = _read_index_or_none(spark, index_path)
-            if idx is not None:
-                replay = replay.join(idx.select("fp"), "fp", "left_anti")
-            replay.write.mode("append").parquet(index_path)
-
         def write() -> None:
             best = (batch_df.withColumn("fp", fingerprint())
                     .groupBy("fp")
@@ -231,7 +234,9 @@ def streaming_incremental_dedup(docs: DataFrame, index_path: str,
                                  out_path, batch_id)
             fresh.select("fp").write.mode("append").parquet(index_path)
 
-        _guarded_append(spark, out_path, batch_id, write, repair)
+        _guarded_append(spark, out_path, batch_id, write,
+                        lambda: _repair_index(spark, out_path, index_path,
+                                              batch_id, "fp"))
 
     return (docs.writeStream
             .foreachBatch(process_batch)
@@ -331,7 +336,10 @@ def streaming_minhash_neardup(docs: DataFrame, index_path: str,
         new_bands = bands if idx is None else bands.join(
             idx.select("doc_id", "b", "band"), ["doc_id", "b", "band"],
             "left_anti")
-        new_bands.write.mode("append").parquet(index_path)
+        # the anti-join puts its keys first: select back to the
+        # signature order so every index part file has one schema
+        new_bands.select(*bands.columns).write.mode("append").parquet(
+            index_path)
 
     return (docs.writeStream
             .foreachBatch(process_batch)
@@ -343,7 +351,7 @@ def streaming_paragraph_dedup(docs: DataFrame, index_path: str,
                               out_path: str, checkpoint_path: str):
     """Paragraph-level ingest dedup: foreachBatch + a DURABLE
     paragraph-hash index — the streaming twin of
-    ``text_paragraph_dedup`` (operators/round12b.py), the C4-style
+    ``text_paragraph_dedup`` (operators/dedup.py), the C4-style
     pipeline step that strips boilerplate paragraphs repeated across
     documents, and the step most likely to run continuously on a crawl.
 
@@ -372,17 +380,6 @@ def streaming_paragraph_dedup(docs: DataFrame, index_path: str,
     def process_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
 
-        def repair() -> None:
-            # out append committed on a previous attempt: repair the
-            # index from the committed rows instead of recomputing
-            # admission (recomputing would re-admit and duplicate)
-            replay = (spark.read.parquet(out_path)
-                      .filter(F.col("batch_id") == batch_id).select("ph"))
-            idx = _read_index_or_none(spark, index_path)
-            if idx is not None:
-                replay = replay.join(idx.select("ph"), "ph", "left_anti")
-            replay.write.mode("append").parquet(index_path)
-
         def write() -> None:
             paras = (batch_df
                      .select("doc_id", "source",
@@ -407,7 +404,9 @@ def streaming_paragraph_dedup(docs: DataFrame, index_path: str,
                 out_path, batch_id)
             fresh.select("ph").write.mode("append").parquet(index_path)
 
-        _guarded_append(spark, out_path, batch_id, write, repair)
+        _guarded_append(spark, out_path, batch_id, write,
+                        lambda: _repair_index(spark, out_path, index_path,
+                                              batch_id, "ph"))
 
     return (docs.writeStream
             .foreachBatch(process_batch)
@@ -419,14 +418,14 @@ def streaming_source_leakage(docs: DataFrame, index_path: str,
                              out_path: str, checkpoint_path: str):
     """Incremental contamination monitor: foreachBatch + a DURABLE
     (source, 8-gram hash) index — the streaming twin of
-    ``cross_source_leakage`` (operators/round13.py).  A crawl pipeline
+    ``cross_source_leakage`` (operators/pipeline.py).  A crawl pipeline
     wants the train/test contamination matrix to update as documents
     arrive, not in a nightly O(corpus) recompute.
 
     Each micro-batch:
 
       1. explodes its docs to DISTINCT (source, gram-hash) pairs with
-         the batch operator's own front-end (``round13.doc_shingles`` —
+         the batch operator's own front-end (``pipeline.doc_shingles`` —
          one canon, so streaming and batch can never disagree on what
          counts as a gram),
       2. anti-joins the standing index on (source, ph) and appends only
@@ -447,8 +446,8 @@ def streaming_source_leakage(docs: DataFrame, index_path: str,
     and the matrix's ``distinct()`` read.
     Returns the started StreamingQuery (caller stops it).
     """
-    from bigarrays_jl_spark.operators.round13 import (doc_shingles,
-                                                      leakage_matrix)
+    from bigarrays_jl_spark.operators.pipeline import (doc_shingles,
+                                                       leakage_matrix)
 
     def process_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -134,11 +134,11 @@ def test_ivf_pq_production_recall_on_clustered_embeddings(spark, clustered_dir):
 
 
 def test_pq_recall_knee_endpoints_rise(spark, sf_dir):
-    # the committed codebook-size sweep (round17.ann_pq_recall_knee):
+    # the committed codebook-size sweep (similarity.ann_pq_recall_knee):
     # recall must RISE from the smallest codebook to the largest —
     # endpoints only (per-step monotonicity is not a theorem for
     # codebook size the way it is for nprobe)
-    from bigarrays_jl_spark.operators.round17 import ann_pq_recall_knee
+    from bigarrays_jl_spark.operators.similarity import ann_pq_recall_knee
     rows = {r.pq_k: r.mean_recall
             for r in ann_pq_recall_knee(spark, sf_dir).collect()}
     ks = sorted(rows)

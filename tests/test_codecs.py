@@ -219,3 +219,30 @@ def test_gzip_probe_samples_the_whole_payload():
     noise = rng.integers(0, 256, size=64 ** 3, dtype=np.uint8).tobytes()
     assert len(c.encode(smooth)) == len(gzip.compress(smooth, 6))
     assert len(c.encode(noise)) == len(gzip.compress(noise, 0))
+
+
+def test_adaptive_gzip_equivalence_through_volume_roundtrip(spark, tmp_path):
+    """The r18 stored-block branch must be invisible to the volume
+    layer: a write/cutout round-trip of high-entropy (stored branch)
+    and smooth (deflate branch) data over the SAME gzip-encoded volume
+    is exact."""
+    import numpy as np
+    from bigarrays_jl_spark.infos import Info
+    from bigarrays_jl_spark.volume import Volume
+
+    info = Info.from_dict({
+        "num_channels": 1, "type": "image", "data_type": "uint8",
+        "scales": [{"encoding": "gzip", "chunk_sizes": [[64, 64, 64]],
+                    "key": "1_1_1", "resolution": [1, 1, 1],
+                    "voxel_offset": [0, 0, 0], "size": [64, 64, 128]}]})
+    vol = Volume.create(spark, str(tmp_path / "vol"), info)
+    rng = np.random.default_rng(11)
+    noise = rng.integers(0, 256, size=(64, 64, 64), dtype=np.uint8)
+    smooth = np.indices((64, 64, 64), dtype=np.uint16).sum(0) \
+        .astype(np.uint8)
+    vol.write(noise, (0, 0, 0))
+    vol.write(smooth, (0, 0, 64))
+    out, origin = vol.cutout(((0, 64), (0, 64), (0, 128)))
+    assert origin == (0, 0, 0)
+    assert (out[:, :, :64] == noise).all()
+    assert (out[:, :, 64:] == smooth).all()

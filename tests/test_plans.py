@@ -539,8 +539,9 @@ def test_q96_q14_shape_single_fact_scan_broadcast_part(spark, sf_dir):
 
 
 def test_round11_plan_shapes(spark, sf_dir):
-    from bigarrays_jl_spark.operators.round11 import (
-        chi2_type_dow, interval_overlap_join, sample_weighted_exact)
+    from bigarrays_jl_spark.operators.estimation import sample_weighted_exact
+    from bigarrays_jl_spark.operators.statistics import chi2_type_dow
+    from bigarrays_jl_spark.operators.temporal import interval_overlap_join
     df = sample_weighted_exact(spark, sf_dir)
     plan = simple_plan(df)
     # A-RES top-k rides a heap, never a global sort of the corpus;

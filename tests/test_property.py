@@ -358,7 +358,8 @@ def test_bucketed_quantile_pick_equals_python_oracle(cells, numden):
 def test_ares_integer_keys_order_embed_float_priorities(pairs):
     """The sampler's exact integer keys U^(4/w)·2^(96−24·(4/w)) must
     rank identically to the textbook A-RES float priority u^(1/w)
-    (u = U/2²⁴) — the order-embedding claim round11.py rests on."""
+    (u = U/2²⁴) — the order-embedding claim
+    estimation.sample_weighted_exact rests on."""
     import math
     def int_key(u, w):
         e = 4 // w

@@ -8,9 +8,11 @@ storage instead of killing the job.
 
 The switch must change WHERE blocks live and nothing else: these tests
 run consumers in both modes and require bit-identical row sets.  Each
-consumer stands for one module that calls ``materialize``: the ordering
-primitives, the dedup LSH tables, and 38 more modules of ``operators/``
-and ``streaming/``.  Under reliable mode a spy on the DataFrame class
+consumer stands for a group of ``materialize`` calls: the ordering
+primitives, the dedup LSH tables, at least one consumer for every other
+``operators/`` module that calls it (several for a module that gathers
+code which shipped apart, such as ``statistics``), and five modules of
+``streaming/``.  Under reliable mode a spy on the DataFrame class
 counts the calls: no ``localCheckpoint`` at all, and at least one
 ``checkpoint`` made by a ``materialize`` call in the module the
 consumer stands for.  Registry queries cover ``operators/``; each
@@ -42,33 +44,34 @@ RELIABLE_CONF = "sparkgraft.checkpoint.reliable"
 CONSUMERS = {
     "q84_rfm_segments": "ordering",
     "text_quality_buckets": "ordering",
-    "q70_mad_outliers": "round10e",
-    "lorenz_curve": "round13",
+    "q70_mad_outliers": "statistics",
+    "lorenz_curve": "statistics",
     "dedup_minhash_pairs": "dedup",
     "dedup_components": "dedup",
     "events_rolling_dau": "extensions",
     "graph_triangle_stats": "graph",
-    "graph_triangles_lsh": "graph_lsh",
+    "graph_triangles_lsh": "graph",
     "mm_phash_neardup": "multimodal",
     "pipeline_decontaminate": "pipeline",
     "text_bm25": "retrieval",
-    "q62_hierarchy_depth": "round10",
-    "basket_pairs": "round10b",
-    "phrase_search": "round10c",
-    "q72_winsorized_mean": "round10f",
-    "graph_sssp_lsh": "round10g",
-    "q79_mutual_info": "round10h",
-    "q81_cuped": "round10i",
-    "entity_res_golden": "round10j",
-    "q87_autocorr": "round10l",
-    "ks_two_sample": "round11b",
-    "text_tfidf_topk": "round12",
-    "basket_triples": "round12c",
-    "sketch_jaccard": "round12d",
-    "cm_heavyhitters": "round15",
-    "pipeline_e2e_curate": "round16",
-    "ann_pq_recall_knee": "round17",
+    "q62_hierarchy_depth": "graph",
+    "basket_pairs": "statistics",
+    "phrase_search": "retrieval",
+    "q72_winsorized_mean": "statistics",
+    "graph_sssp_lsh": "graph",
+    "q79_mutual_info": "statistics",
+    "q81_cuped": "statistics",
+    "entity_res_golden": "retrieval",
+    "q87_autocorr": "statistics",
+    "ks_two_sample": "statistics",
+    "text_tfidf_topk": "text",
+    "basket_triples": "statistics",
+    "sketch_jaccard": "estimation",
+    "cm_heavyhitters": "estimation",
+    "pipeline_e2e_curate": "pipeline",
+    "ann_pq_recall_knee": "similarity",
     "sim_lsh_pairs": "similarity",
+    "customer_reorder_gaps": "temporal",
     "text_unigram_logprob": "text",
     "q51_top_supplier": "tpch_deep",
     "q53_important_parts": "tpch_more",

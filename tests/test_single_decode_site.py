@@ -32,7 +32,7 @@ CHUNK_DECODE_LOOPS = {
     # reports ChunkDecodeError in its error column instead of raising
     ("volume.py", "fsck"),
     # two joined volumes per row, read through Volume.live_chunks
-    ("operators/round10i.py", "roi_stats"),
+    ("operators/volume_seg.py", "roi_stats"),
 }
 # ... and outside any loop: the driver-local cutout decodes one chunk
 # per thread-pool call

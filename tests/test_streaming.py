@@ -334,6 +334,42 @@ def test_streaming_minhash_neardup_matches_batch_twin(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_streaming_minhash_index_parts_share_one_column_order(
+        spark, sf_dir, tmp_path):
+    # the first batch appends band_signatures' rows as they are; later
+    # batches append what survives the anti-join against the index.
+    # Every part file must carry the same column names in the same
+    # order, or a positional read of the index depends on which footer
+    # Spark samples
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bigarrays_jl_spark.operators.dedup import _augmented
+    from bigarrays_jl_spark.streaming.windows import streaming_minhash_neardup
+
+    aug = _augmented(spark, sf_dir).select("doc_id", "text")
+    src = str(tmp_path / "src")
+    idx, out, ckpt = (str(tmp_path / p) for p in ("idx", "out", "ckpt"))
+    parts = [aug.filter(F.col("doc_id") % 3 == k) for k in range(3)]
+    parts[0].coalesce(1).write.parquet(src)
+    q = streaming_minhash_neardup(
+        spark.readStream.schema(aug.schema).parquet(src), idx, out, ckpt)
+    try:
+        q.processAllAvailable()
+        for p in parts[1:]:          # one new file -> one micro-batch
+            p.coalesce(1).write.mode("append").parquet(src)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    files = sorted(glob.glob(f"{idx}/*.parquet"))
+    orders = {tuple(pq.read_schema(f).names) for f in files}
+    assert len(files) >= 3
+    assert orders == {("doc_id", "sig", "b", "band")}
+
+
 def test_streaming_incremental_dedup_survives_restart(spark, sf_dir, tmp_path):
     # the durable-index bridge must continue, not restart, after the
     # query is stopped: a NEW query on the same checkpoint must skip
@@ -1035,8 +1071,8 @@ def test_streaming_source_leakage_matches_batch_twin(spark, sf_dir, tmp_path):
     # corpus's distinct (source, gram) pairs
     from pyspark.sql import functions as F
 
-    from bigarrays_jl_spark.operators.round13 import (cross_source_leakage,
-                                                      doc_shingles)
+    from bigarrays_jl_spark.operators.pipeline import (cross_source_leakage,
+                                                       doc_shingles)
     from bigarrays_jl_spark.streaming.windows import streaming_source_leakage
 
     d = load(spark, sf_dir, "documents")
@@ -1057,7 +1093,7 @@ def test_streaming_source_leakage_matches_batch_twin(spark, sf_dir, tmp_path):
                 for r in spark.read.parquet(out)
                 .filter(F.col("batch_id") == batch_id).collect()}
 
-    from bigarrays_jl_spark.operators.round13 import leakage_matrix
+    from bigarrays_jl_spark.operators.pipeline import leakage_matrix
     want1 = {(r.source_a, r.source_b): (r.n_shared, r.jaccard)
              for r in leakage_matrix(
                  doc_shingles(d.filter(F.col("doc_id") <= half))).collect()}

@@ -10,7 +10,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round10g import q76_attribution
+from bigarrays_jl_spark.operators.events import q76_attribution
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.attribution import streaming_attribution
 
@@ -98,7 +98,7 @@ def test_streaming_attribution_idle_state_evicted(spark, tmp_path):
     (r10 verdict task 7) — observed via the state-store row count."""
     import os
 
-    from bigarrays_jl_spark.operators.round10g import ATTR_WINDOW_S
+    from bigarrays_jl_spark.operators.events import ATTR_WINDOW_S
 
     t = dt.datetime(2020, 1, 1)
 

@@ -6,7 +6,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round16 import pipeline_e2e_curate
+from bigarrays_jl_spark.operators.pipeline import pipeline_e2e_curate
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.curate import (curate_admission_log,
                                                  curate_census_snapshot,

@@ -7,8 +7,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round13b import (boilerplate_prefixes,
-                                                   session_bounce_rate)
+from bigarrays_jl_spark.operators.events import session_bounce_rate
+from bigarrays_jl_spark.operators.text import boilerplate_prefixes
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.curation import (boilerplate_snapshot,
                                                    session_bounce_snapshot,
@@ -142,7 +142,7 @@ def test_streaming_boilerplate_replay_exactly_once(spark, sf_dir, tmp_path):
 
 
 def test_streaming_quality_funnel_split_and_replay(spark, sf_dir, tmp_path):
-    from bigarrays_jl_spark.operators.round14 import quality_filter_funnel
+    from bigarrays_jl_spark.operators.pipeline import quality_filter_funnel
     from bigarrays_jl_spark.streaming.curation import (
         quality_funnel_snapshot, streaming_quality_funnel)
 

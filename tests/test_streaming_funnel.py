@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round12 import day_funnel_conversion
+from bigarrays_jl_spark.operators.events import day_funnel_conversion
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.funnel import (day_funnel_snapshot,
                                                  streaming_day_funnel)

@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round11 import interval_overlap_join
+from bigarrays_jl_spark.operators.temporal import interval_overlap_join
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.intervals import (
     interval_overlap_snapshot, start_interval_queries)
@@ -124,7 +124,7 @@ def test_burst_windows_match_batch_islands(spark, sf_dir, tmp_path):
     _, bp = _feed(spark, str(tmp_path), batches + _sentinels(spark))
     got = {(r.b_start, r.b_end)
            for r in spark.read.parquet(bp).collect()}
-    from bigarrays_jl_spark.operators.round11 import BURST_PAD_S
+    from bigarrays_jl_spark.operators.temporal import BURST_PAD_S
     e = _events(spark, sf_dir).withColumn("sec", F.col("ts").cast("long"))
     secs = sorted(r.sec for r in e.filter(F.col("event_type") == "error")
                   .select("sec").distinct().collect())

@@ -10,7 +10,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round11d import KMV_K, kmv_distinct_users
+from bigarrays_jl_spark.operators.estimation import KMV_K, kmv_distinct_users
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.kmv import streaming_kmv_distinct
 
@@ -127,7 +127,7 @@ def test_streaming_union_snapshot_matches_batch(spark, sf_dir, tmp_path):
     sketch never un-learns)."""
     import os
 
-    from bigarrays_jl_spark.operators.round12 import sketch_union_distinct
+    from bigarrays_jl_spark.operators.estimation import sketch_union_distinct
     from bigarrays_jl_spark.streaming.kmv import (kmv_union_snapshot,
                                                   streaming_kmv_minima)
 

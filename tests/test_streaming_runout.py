@@ -10,7 +10,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round10g import q75_stock_runout
+from bigarrays_jl_spark.operators.events import q75_stock_runout
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.runout import streaming_stock_runout
 
@@ -88,7 +88,7 @@ def test_streaming_runout_prefix_equals_batch_prefix(spark, sf_dir,
                         str(tmp_path / "ckpt"),
                         [half] + _sentinels(spark), "t_runout_p").collect())
 
-    from bigarrays_jl_spark.operators.round10g import VQ
+    from bigarrays_jl_spark.operators.events import VQ
     per_user = {}
     rows = sorted(half.collect(), key=lambda r: (r["ts"], r["event_id"]))
     for r in rows:
@@ -117,7 +117,7 @@ def test_streaming_runout_idle_ttl_evicts_and_restarts(spark, tmp_path):
     re-admission contract.  Without the TTL the recurrence continues."""
     import os
 
-    from bigarrays_jl_spark.operators.round10g import VQ
+    from bigarrays_jl_spark.operators.events import VQ
 
     t = dt.datetime(2020, 1, 1)
 

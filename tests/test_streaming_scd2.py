@@ -1,7 +1,7 @@
 """Streaming SCD2 bridge: batch-twin equivalence + restart safety."""
 import pyspark.sql.functions as F
 
-from bigarrays_jl_spark.operators.round10c import scd2_history
+from bigarrays_jl_spark.operators.mutation import scd2_history
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.scd2 import streaming_scd2
 from bigarrays_jl_spark.streaming.windows import read_merged_table

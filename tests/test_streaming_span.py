@@ -6,7 +6,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round17 import dedup_span_excise
+from bigarrays_jl_spark.operators.dedup import dedup_span_excise
 from bigarrays_jl_spark.sources.tables import load
 from bigarrays_jl_spark.streaming.replay import guarded_rows_append
 from bigarrays_jl_spark.streaming.span import (_batch_wins,
