@@ -324,18 +324,3 @@ def test_streaming_cm_snapshot_replay_and_merge(spark, sf_dir, tmp_path):
         outs.append(o)
     got = {tuple(r) for r in cm_merge_snapshot(spark, outs).collect()}
     assert got == want and len(want) > 0
-
-
-def test_heavy_hitters_estimation_quality(spark, sf_dir):
-    from bigarrays_jl_spark.operators.estimation import (HH_MIN_FRAC,
-                                                         text_heavy_hitters)
-    from bigarrays_jl_spark.sources.tables import load
-    rows = text_heavy_hitters(spark, sf_dir).collect()
-    assert rows, "the synthetic vocab must produce heavy hitters"
-    n_docs = load(spark, sf_dir, "documents").count()
-    for r in rows:
-        assert r["doc_freq"] >= HH_MIN_FRAC * n_docs
-        assert r["est_doc_freq"] % 4 == 0          # 25% sample scale-up
-    # the point of the operator: the estimate is good for heavy hitters
-    # (dense terms sample well) — every row's tolerance boolean holds
-    assert all(r["within_tol"] for r in rows)

@@ -1,86 +1,5 @@
 """Tests of operators/mutation.py."""
 
-import os
-
-from pyspark.sql import functions as F
-
-from bigarrays_jl_spark.operators.mutation import dq_audit, scd2_history
-from bigarrays_jl_spark.sources.tables import load
-
-
-def test_dq_audit_all_green_and_complete(spark, sf_dir):
-    rows = {r["check"]: (r["metric"], r["ok"])
-            for r in dq_audit(spark, sf_dir).collect()}
-    assert len(rows) == 8
-    # the synthetic tables are clean: every constraint holds
-    assert all(ok for _, ok in rows.values())
-    n_li = load(spark, sf_dir, "lineitem").count()
-    assert rows["lineitem_rowcount"][0] == float(n_li)
-    assert rows["lineitem_orphans"][0] == 0.0
-    assert rows["orderkey_unique"][0] == 1.0
-
-
-def test_scd2_history_matches_python(spark, sf_dir):
-    got = {r["event_type"]: (r["n_intervals"], r["closed_duration_s"],
-                             r["n_current"])
-           for r in scd2_history(spark, sf_dir).collect()}
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "event_id").collect()
-    per_user = {}
-    for r in ev:
-        per_user.setdefault(r["user_id"], []).append(
-            (int(r["ts"].timestamp()), r["event_id"], r["event_type"]))
-    want = {}
-    for rows in per_user.values():
-        rows.sort()
-        islands = []
-        for t, _, et in rows:
-            if not islands or islands[-1][1] != et:
-                islands.append((t, et))
-        for k, (t, et) in enumerate(islands):
-            n, dur, cur = want.get(et, (0, 0, 0))
-            if k + 1 < len(islands):
-                want[et] = (n + 1, dur + islands[k + 1][0] - t, cur)
-            else:
-                want[et] = (n + 1, dur, cur + 1)
-    assert got == want
-
-
-def test_scd2_current_rows_equal_users(spark, sf_dir):
-    rows = scd2_history(spark, sf_dir).collect()
-    n_users = load(spark, sf_dir, "events").select("user_id") \
-        .distinct().count()
-    assert sum(r["n_current"] for r in rows) == n_users
-
-
-def test_scd2_point_in_time_matches_python(spark, sf_dir):
-    from bigarrays_jl_spark.operators.mutation import scd2_point_in_time
-    got = {r["state_at_purchase"]: (r["n_purchases"], r["revenue"])
-           for r in scd2_point_in_time(spark, sf_dir).collect()}
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value").collect()
-    per_user = {}
-    for r in ev:
-        kind = 1 if r["event_type"] == "purchase" else 0
-        per_user.setdefault(r["user_id"], []).append(
-            (int(r["ts"].timestamp()), kind, r["event_id"],
-             r["event_type"], r["value"]))
-    agg = {}
-    for rows in per_user.values():
-        rows.sort(key=lambda x: x[:3])
-        cur = None
-        for _, kind, _, et, v in rows:
-            if kind == 0:
-                cur = et
-            else:
-                st = cur if cur is not None else "none"
-                n, s = agg.get(st, (0, 0.0))
-                agg[st] = (n + 1, s + (v or 0.0))
-    for st, (n, s) in agg.items():
-        assert got[st][0] == n
-        assert abs(got[st][1] - round(s, 2)) < 1e-6
-    assert set(got) == set(agg)
-
 
 def test_erasure_cohort_is_nonempty(spark, sf_dir):
     from bigarrays_jl_spark.operators.mutation import user_erasure_audit
@@ -88,82 +7,3 @@ def test_erasure_cohort_is_nonempty(spark, sf_dir):
     assert rows and sum(r.n_residual_rows for r in rows) > 0
     for r in rows:
         assert r.n_residual_rows <= r.n_rows
-
-
-def test_apply_changes_merge_semantics(spark, sf_dir):
-    from bigarrays_jl_spark.operators.mutation import (
-        INSERT_OFFSET, pipeline_apply_changes)
-    from bigarrays_jl_spark.sources.tables import load
-    base = {r["doc_id"]: r for r in
-            load(spark, sf_dir, "documents").collect()}
-    merged = {r["doc_id"]: r for r in
-              pipeline_apply_changes(spark, sf_dir).collect()}
-    for did, b in base.items():
-        if did % 17 == 0:
-            assert did not in merged                     # deleted
-        elif did % 10 == 0:
-            m = merged[did]                              # updated
-            assert m["last_op"] == "update"
-            assert m["source"] == "curated"
-            assert m["n_chars"] == b["n_chars"] + 1
-        else:
-            m = merged[did]                              # untouched
-            assert m["last_op"] == "keep"
-            assert m["source"] == b["source"]
-        if did % 25 == 0:                                # inserted twin
-            m = merged[did + INSERT_OFFSET]
-            assert m["last_op"] == "insert"
-            assert m["source"] == "synthetic"
-            assert m["n_chars"] == b["n_chars"]
-    n_del = sum(1 for d in base if d % 17 == 0)
-    n_ins = sum(1 for d in base if d % 25 == 0)
-    assert len(merged) == len(base) - n_del + n_ins
-
-
-def test_merge_changes_flagged_dialect_can_null_a_column(spark):
-    from bigarrays_jl_spark.operators.mutation import merge_changes
-    base = spark.createDataFrame(
-        [(1, "en", "web", 10), (2, "de", "web", 20), (3, "fr", "web", 30)],
-        "doc_id long, lang string, source string, n_chars long")
-    changes = spark.createDataFrame(
-        [(2, "update", None, False, None, True, None, False),
-         (3, "delete", None, False, None, False, None, False),
-         (9, "insert", "it", True, "feed", True, 9, True)],
-        "doc_id long, op string, c_lang string, c_lang_set boolean, "
-        "c_source string, c_source_set boolean, "
-        "c_n_chars long, c_n_chars_set boolean")
-    out = {r["doc_id"]: r for r in merge_changes(base, changes).collect()}
-    assert set(out) == {1, 2, 9}
-    # the NULL-ing update: source cleared, unflagged columns kept
-    assert out[2]["source"] is None
-    assert out[2]["lang"] == "de" and out[2]["n_chars"] == 20
-    assert out[1]["source"] == "web" and out[1]["last_op"] == "keep"
-    assert out[9]["lang"] == "it" and out[9]["last_op"] == "insert"
-
-
-def test_merge_changes_legacy_dialect_unchanged(spark):
-    # the 5-column feed keeps coalesce semantics: NULL change = keep
-    from bigarrays_jl_spark.operators.mutation import merge_changes
-    base = spark.createDataFrame(
-        [(1, "en", "web", 10)],
-        "doc_id long, lang string, source string, n_chars long")
-    changes = spark.createDataFrame(
-        [(1, "update", None, "curated", None)],
-        "doc_id long, op string, c_lang string, c_source string, "
-        "c_n_chars long")
-    row = merge_changes(base, changes).collect()[0]
-    assert row["lang"] == "en" and row["n_chars"] == 10
-    assert row["source"] == "curated"
-
-
-def test_insert_offset_precondition(spark, sf_dir):
-    # the synthetic feed's insert keys are doc_id + INSERT_OFFSET; a
-    # corpus whose doc_ids reach the offset would silently turn inserts
-    # into updates — pin the margin on the largest test corpus, the
-    # sf0.1 sibling of the default test data
-    from bigarrays_jl_spark.operators.mutation import INSERT_OFFSET
-    from bigarrays_jl_spark.sources.tables import load
-    largest = os.path.join(os.path.dirname(sf_dir), "sf0.1")
-    mx = (load(spark, largest, "documents")
-          .agg(F.max("doc_id")).collect()[0][0])
-    assert mx < INSERT_OFFSET

@@ -1,110 +1,6 @@
 """Tests of operators/retrieval.py."""
 
-import math
-
-from pyspark.sql import functions as F
-
-from bigarrays_jl_spark.functions.expressions import tokens
-from bigarrays_jl_spark.operators.graph import graph_knn_edges, graph_pagerank
-from bigarrays_jl_spark.operators.retrieval import (BM25_QUERY, FUZZY_MAX_DIST,
-                                                    RRF_K, RRF_QID, RRF_TOP,
-                                                    entity_res_golden,
-                                                    fuzzy_name_pairs,
-                                                    phrase_search,
-                                                    retrieval_rrf_hybrid,
-                                                    text_bm25)
-from bigarrays_jl_spark.plans.explain import formatted_plan, has_broadcast_join
 from bigarrays_jl_spark.sources.tables import load
-
-
-def test_phrase_search_matches_python(spark, sf_dir):
-    got = [(r["doc_id"], r["w1"], r["w2"], r["n_matches"])
-           for r in phrase_search(spark, sf_dir).collect()]
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text") \
-        .collect()
-    toks = {r["doc_id"]: r["text"].strip().lower().split() for r in docs}
-    bigrams = {}
-    for ts in toks.values():
-        for a, b in zip(ts, ts[1:]):
-            bigrams[(a, b)] = bigrams.get((a, b), 0) + 1
-    w1, w2 = min(bigrams, key=lambda k: (-bigrams[k], k[0], k[1]))
-    per_doc = {}
-    for d, ts in toks.items():
-        c = sum(1 for a, b in zip(ts, ts[1:]) if (a, b) == (w1, w2))
-        if c:
-            per_doc[d] = c
-    want = sorted(per_doc.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert got == [(d, w1, w2, c) for d, c in want]
-
-
-def _index_order_cosine(qe, de):
-    dot = 0.0
-    nq = 0.0
-    nd = 0.0
-    for a, b in zip(qe, de):
-        dot += float(a) * float(b)
-        nq += float(a) * float(a)
-        nd += float(b) * float(b)
-    return round(dot / (nq ** 0.5 * nd ** 0.5), 6)
-
-
-def test_rrf_matches_python_fusion(spark, sf_dir):
-    got = [(r["doc_id"], r["r_bm25"], r["r_ann"], r["rrf"])
-           for r in retrieval_rrf_hybrid(spark, sf_dir).collect()]
-    bm = [(r["doc_id"], r["bm25"])
-          for r in text_bm25(spark, sf_dir).collect()]
-    r_bm = {d: i + 1 for i, (d, _) in enumerate(
-        sorted(bm, key=lambda t: (-t[1], t[0])))}
-    emb = {r["vec_id"]: r["embedding"]
-           for r in load(spark, sf_dir, "embeddings").collect()}
-    qe = emb[RRF_QID]
-    cos = [(v, _index_order_cosine(qe, e))
-           for v, e in emb.items() if v != RRF_QID]
-    r_an = {d: i + 1 for i, (d, _) in enumerate(
-        sorted(cos, key=lambda t: (-t[1], t[0])))}
-    fused = {}
-    for d in set(r_bm) | set(r_an):
-        s = 0.0
-        if d in r_bm:
-            s += 1.0 / (RRF_K + r_bm[d])
-        if d in r_an:
-            s += 1.0 / (RRF_K + r_an[d])
-        fused[d] = s
-    want = sorted(fused.items(), key=lambda t: (-t[1], t[0]))[:RRF_TOP]
-    assert [(d, r_bm.get(d, -1), r_an.get(d, -1), s) for d, s in want] \
-        == got
-    # fused ranking is genuinely hybrid: top-10 includes docs from
-    # both legs (not a copy of either single-leg ranking)
-    assert any(r[1] > 0 for r in got) and any(r[2] > 0 for r in got)
-
-
-def test_entity_res_matches_union_find(spark, sf_dir):
-    got = {r["canonical_name"]: (r["n_members"], r["last_member"])
-           for r in entity_res_golden(spark, sf_dir).collect()}
-    pairs = [(r["name_a"], r["name_b"])
-             for r in fuzzy_name_pairs(spark, sf_dir).collect()]
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    clusters = {}
-    for n in parent:
-        clusters.setdefault(find(n), []).append(n)
-    want = {min(ms): (len(ms), max(ms)) for ms in clusters.values()}
-    assert got == want
-    # at least one real multi-member match cluster exists
-    assert any(v[0] > 1 for v in got.values())
-    # canonical is a member and the survivorship rule held
-    assert all(c <= v[1] for c, v in got.items())
 
 
 def test_mmr_matches_python_and_diversifies(spark, sf_dir):
@@ -160,124 +56,3 @@ def test_mmr_matches_python_and_diversifies(spark, sf_dir):
     assert [v for _, v, _ in got] != plain or all(
         MMR_MU * max((sim.get((c, p), 0.0) for p in sel), default=0.0) == 0
         for sel in [selected] for c in selected)
-
-
-def test_bm25_matches_exactly_the_matching_docs(spark, sf_dir):
-    out = text_bm25(spark, sf_dir).collect()
-    from bigarrays_jl_spark.sources.tables import load
-    d = load(spark, sf_dir, "documents")
-    expected = (d.select("doc_id", F.explode(tokens()).alias("t"))
-                 .filter(F.col("t").isin(*BM25_QUERY))
-                 .select("doc_id").distinct().count())
-    assert len(out) == expected
-    for r in out:
-        assert 1 <= r["n_terms_matched"] <= len(BM25_QUERY)
-        assert r["bm25"] > 0
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def test_fuzzy_pairs_exact_vs_bruteforce(spark, sf_dir):
-    """PassJoin candidates + verify must equal the brute-force
-    all-pairs Levenshtein join on the distinct names — EXACTLY."""
-    from bigarrays_jl_spark.sources.tables import load
-    got = {(r["name_a"], r["name_b"]): r["dist"]
-           for r in fuzzy_name_pairs(spark, sf_dir).collect()}
-    names = sorted(r["p_name"] for r in
-                   load(spark, sf_dir, "part").select("p_name")
-                   .distinct().collect())
-    want = {}
-    for i, a in enumerate(names):
-        for b in names[i + 1:]:
-            d = _lev(a, b)
-            if d <= FUZZY_MAX_DIST:
-                want[(a, b)] = d
-    assert got == want
-    assert want, "calibrated part-name vocab must yield near-matches"
-
-
-def test_fuzzy_candidates_scale_linearly(spark, sf_dir):
-    """The round-8 weak spot: a fixed-vocabulary block key made
-    candidate pairs grow quadratically with the corpus.  PassJoin keys
-    derive from the names themselves, so on a diverse corpus with
-    near-pairs planted proportionally, doubling the names must roughly
-    double (never square) the candidate count."""
-    import random
-
-    from bigarrays_jl_spark.operators.retrieval import passjoin_candidates
-    rng = random.Random(20260814)
-    alpha = "abcdefghijklmnopqrstuvwxyz"
-
-    def corpus(n):
-        base = ["".join(rng.choice(alpha) for _ in range(20))
-                for _ in range(n)]
-        near = [s[:7] + rng.choice(alpha) + s[8:] for s in base[: n // 10]]
-        return list(dict.fromkeys(base + near))
-
-    counts = {}
-    for n in (300, 600):
-        names = spark.createDataFrame([(s,) for s in corpus(n)], ["name"])
-        counts[n] = passjoin_candidates(names).count()
-    assert counts[600] > 0
-    # linear ⇒ ratio ≈ 2 (+ noise); quadratic blocking would give ≈ 4
-    assert counts[600] / max(counts[300], 1) < 3.0, counts
-
-
-def test_round8_plan_shapes(spark, sf_dir):
-    # k-NN construction broadcasts the (capped) query side — the demo
-    # stand-in for the LSH/IVF discovery path — and PageRank's
-    # iteration joins must never degenerate to a cartesian
-    for op in (graph_knn_edges, graph_pagerank, text_bm25):
-        plan = formatted_plan(op(spark, sf_dir))
-        assert "CartesianProduct" not in plan, (op.__name__, plan)
-    assert has_broadcast_join(text_bm25(spark, sf_dir))
-    # fuzzy join is an equi-join on the block key, not all-pairs
-    plan = formatted_plan(fuzzy_name_pairs(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_fuzzy_passjoin_exact_on_adversarial_corpus(spark):
-    """PassJoin must stay an exact superset on the nasty cases the part
-    corpus never exercises: the empty string, sub-segment-length (< D+1)
-    names routed through the short block, cross-length pairs at exactly
-    the threshold, and dist-4 pairs that must NOT appear."""
-    import random
-
-    from pyspark.sql import functions as F
-    from bigarrays_jl_spark.operators.retrieval import (FUZZY_MAX_DIST,
-                                                        passjoin_candidates)
-    rng = random.Random(99)
-    corpus = ["", "a", "ab", "abc", "abcd", "abcde", "abcdefg",
-              "xbcdefg", "abzzefg", "abcdzzz",          # dist exactly 3/4
-              "kitten", "sitting", "saturday", "sunday",
-              "flaw", "lawn"]
-    corpus += ["".join(rng.choice("abcdef")
-                       for _ in range(rng.randint(4, 20)))
-               for _ in range(30)]
-    corpus = sorted(set(corpus))
-    names = spark.createDataFrame([(s,) for s in corpus], ["name"])
-    got = {(r["name_a"], r["name_b"]): r["dist"]
-           for r in passjoin_candidates(names)
-           .withColumn("dist", F.levenshtein("name_a", "name_b"))
-           .filter(F.col("dist") <= FUZZY_MAX_DIST)
-           .select("name_a", "name_b", "dist").collect()}
-    want = {}
-    for i, a in enumerate(corpus):
-        for b in corpus[i + 1:]:
-            d = _lev(a, b)
-            if d <= FUZZY_MAX_DIST:
-                want[(a, b)] = d
-    assert got == want
-    # the edge classes actually fired
-    assert ("", "abc") in want          # short-block pair incl. empty
-    assert ("abcd", "abcdefg") in want  # cross-length at exactly dist 3
-    assert all(_lev(a, b) <= FUZZY_MAX_DIST for a, b in got)

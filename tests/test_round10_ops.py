@@ -4,9 +4,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.round10 import (q62_hierarchy_depth,
-                                                  q63_interval_concurrency,
-                                                  q64_weighted_median)
+from bigarrays_jl_spark.operators.graph import q62_hierarchy_depth
+from bigarrays_jl_spark.operators.statistics import q64_weighted_median
+from bigarrays_jl_spark.operators.temporal import q63_interval_concurrency
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -4,14 +4,14 @@ import math
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.graph_lsh import _lsh_edges
-from bigarrays_jl_spark.operators.round10b import (HOP_ROUNDS,
-                                                   MIN_ITEM_SUP,
-                                                   MIN_PAIR_SUP,
-                                                   basket_pairs, dq_audit,
-                                                   graph_hops_lsh,
-                                                   set_sim_join,
-                                                   text_corpus_divergence)
+from bigarrays_jl_spark.operators.graph import (HOP_ROUNDS, _lsh_edges,
+                                                graph_hops_lsh)
+from bigarrays_jl_spark.operators.mutation import dq_audit
+from bigarrays_jl_spark.operators.similarity import set_sim_join
+from bigarrays_jl_spark.operators.statistics import (MIN_ITEM_SUP,
+                                                     MIN_PAIR_SUP,
+                                                     basket_pairs)
+from bigarrays_jl_spark.operators.text import text_corpus_divergence
 from bigarrays_jl_spark.sources.tables import load
 
 

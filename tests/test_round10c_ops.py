@@ -2,9 +2,9 @@
 positional index, embedding covariance."""
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10c import (emb_covariance,
-                                                   phrase_search,
-                                                   scd2_history)
+from bigarrays_jl_spark.operators.mutation import scd2_history
+from bigarrays_jl_spark.operators.retrieval import phrase_search
+from bigarrays_jl_spark.operators.similarity import emb_covariance
 from bigarrays_jl_spark.sources.tables import load
 
 
@@ -84,7 +84,7 @@ def test_emb_covariance_plan_has_no_vector_self_join(spark, sf_dir):
 
 
 def test_scd2_point_in_time_matches_python(spark, sf_dir):
-    from bigarrays_jl_spark.operators.round10c import scd2_point_in_time
+    from bigarrays_jl_spark.operators.mutation import scd2_point_in_time
     got = {r["state_at_purchase"]: (r["n_purchases"], r["revenue"])
            for r in scd2_point_in_time(spark, sf_dir).collect()}
     ev = load(spark, sf_dir, "events").select(

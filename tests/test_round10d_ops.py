@@ -1,7 +1,8 @@
 """Round-10 fourth batch: Pareto frontier, largest-remainder
 allocation, CUSUM change-point."""
-from bigarrays_jl_spark.operators.round10d import (
-    CUSUM_THRESHOLD, q65_pareto_frontier, q66_allocation, q68_cusum)
+from bigarrays_jl_spark.operators.statistics import (CUSUM_THRESHOLD,
+                                                     q65_pareto_frontier,
+                                                     q66_allocation, q68_cusum)
 from bigarrays_jl_spark.sources.tables import load
 
 

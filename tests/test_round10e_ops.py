@@ -1,6 +1,7 @@
 """Round-10 fifth batch: interval-union coverage and exact MAD."""
-from bigarrays_jl_spark.operators.round10e import (
-    SESSION_S, q69_interval_coverage, q70_mad_outliers)
+from bigarrays_jl_spark.operators.statistics import q70_mad_outliers
+from bigarrays_jl_spark.operators.temporal import (SESSION_GAP_S,
+                                                   q69_interval_coverage)
 from bigarrays_jl_spark.sources.tables import load
 
 
@@ -16,7 +17,7 @@ def test_interval_coverage_matches_python(spark, sf_dir):
         rows.sort()
         islands = []
         for t, _ in rows:
-            e = t + SESSION_S
+            e = t + SESSION_GAP_S
             if islands and t <= islands[-1][1]:
                 islands[-1][1] = max(islands[-1][1], e)
             else:

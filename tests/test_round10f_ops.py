@@ -1,8 +1,9 @@
 """Round-10 sixth batch: ECDF quantile screen and winsorized mean."""
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10f import (
-    EMB_Q, q71_quantile_screen, q72_winsorized_mean)
+from bigarrays_jl_spark.operators.similarity import EMB_Q
+from bigarrays_jl_spark.operators.statistics import (q71_quantile_screen,
+                                                     q72_winsorized_mean)
 from bigarrays_jl_spark.sources.tables import load
 
 

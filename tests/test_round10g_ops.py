@@ -2,9 +2,13 @@
 scan, multi-touch attribution, grouped OLS regression."""
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10g import (
-    ATTR_WINDOW_S, EMA_TAPS, EPOCH_2024, SSSP_ROUNDS, VQ, graph_sssp_lsh,
-    q73_ema_decay, q75_stock_runout, q76_attribution, q77_regression_slope)
+from bigarrays_jl_spark.operators.events import (ATTR_WINDOW_S, VQ,
+                                                 q75_stock_runout,
+                                                 q76_attribution)
+from bigarrays_jl_spark.operators.graph import SSSP_ROUNDS, graph_sssp_lsh
+from bigarrays_jl_spark.operators.statistics import (EPOCH_2024,
+                                                     q77_regression_slope)
+from bigarrays_jl_spark.operators.temporal import EMA_TAPS, q73_ema_decay
 from bigarrays_jl_spark.operators.similarity import sim_lsh_pairs
 from bigarrays_jl_spark.sources.tables import load
 
@@ -130,7 +134,7 @@ def test_windowed_clamp_identity_equals_stateful_scan(spark, sf_dir):
     """The zero-floor closed form (prefix - min(0, running-min)) must
     reproduce the applyInPandas scan exactly — balances AND stockout
     counts (a stockout = a new strict running minimum below zero)."""
-    from bigarrays_jl_spark.operators.round10g import q75_windowed
+    from bigarrays_jl_spark.operators.events import q75_windowed
     a = {r["user_id"]: (r["n_moves"], r["n_stockouts"],
                         r["final_balance"])
          for r in q75_stock_runout(spark, sf_dir).collect()}

@@ -1,11 +1,11 @@
 """Plan pins for the round-10 batch 7/8 operators — the properties
 that matter at 100 TB, asserted so a regression can't hide."""
 
-from bigarrays_jl_spark.operators.round10g import (q73_ema_decay,
-                                                   q76_attribution,
-                                                   q77_regression_slope)
-from bigarrays_jl_spark.operators.round10h import (q78_kanonymity,
-                                                   q79_mutual_info)
+from bigarrays_jl_spark.operators.events import q76_attribution
+from bigarrays_jl_spark.operators.statistics import (q77_regression_slope,
+                                                     q78_kanonymity,
+                                                     q79_mutual_info)
+from bigarrays_jl_spark.operators.temporal import q73_ema_decay
 from bigarrays_jl_spark.plans.explain import formatted_plan, simple_plan
 
 

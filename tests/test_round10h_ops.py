@@ -5,10 +5,13 @@ from decimal import Decimal
 import numpy as np
 
 from bigarrays_jl_spark.operators.retrieval import text_bm25
-from bigarrays_jl_spark.operators.round10h import (
-    EMB_Q, K_ANON, MOM_BOX, RRF_K, RRF_QID, RRF_TOP, SEG_BLOCK,
-    q78_kanonymity, q79_mutual_info, retrieval_rrf_hybrid,
-    volume_label_moments)
+from bigarrays_jl_spark.operators.retrieval import (RRF_K, RRF_QID, RRF_TOP,
+                                                    retrieval_rrf_hybrid)
+from bigarrays_jl_spark.operators.similarity import EMB_Q
+from bigarrays_jl_spark.operators.statistics import (K_ANON, q78_kanonymity,
+                                                     q79_mutual_info)
+from bigarrays_jl_spark.operators.volume_seg import (MOM_BOX, SEG_BLOCK,
+                                                     volume_label_moments)
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -2,9 +2,11 @@
 two-volume ROI overlay."""
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10i import (
-    LPA_ROUNDS, ROI_BOX, SEG_BLOCK, VQ, graph_lpa_lsh, q80_welch_ttest,
-    q81_cuped, volume_roi_stats)
+from bigarrays_jl_spark.operators.events import VQ
+from bigarrays_jl_spark.operators.graph import LPA_ROUNDS, graph_lpa_lsh
+from bigarrays_jl_spark.operators.statistics import q80_welch_ttest, q81_cuped
+from bigarrays_jl_spark.operators.volume_seg import (ROI_BOX, SEG_BLOCK,
+                                                     volume_roi_stats)
 from bigarrays_jl_spark.operators.similarity import sim_lsh_pairs
 from bigarrays_jl_spark.sources.tables import load
 

@@ -1,10 +1,10 @@
 """Plan pins for round-10 batches 9-13 — the scale-critical properties."""
 
-from bigarrays_jl_spark.operators.round10i import q80_welch_ttest, q81_cuped
-from bigarrays_jl_spark.operators.round10j import q82_gini
-from bigarrays_jl_spark.operators.round10m import (q89_stratified_effect,
-                                                   q90_benford,
-                                                   q91_dow_seasonality)
+from bigarrays_jl_spark.operators.statistics import (q80_welch_ttest,
+                                                     q81_cuped, q82_gini,
+                                                     q89_stratified_effect,
+                                                     q90_benford,
+                                                     q91_dow_seasonality)
 from bigarrays_jl_spark.plans.explain import formatted_plan, simple_plan
 
 

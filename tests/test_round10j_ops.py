@@ -1,10 +1,10 @@
 """Round-10 tenth batch: entity resolution golden records, Gini
 concentration, seasonal-naive backtest."""
 from bigarrays_jl_spark.operators.retrieval import fuzzy_name_pairs
-from bigarrays_jl_spark.operators.round10j import (LAG_DAYS, VQ,
-                                                   entity_res_golden,
-                                                   q82_gini,
-                                                   q83_seasonal_backtest)
+from bigarrays_jl_spark.operators.events import VQ
+from bigarrays_jl_spark.operators.retrieval import entity_res_golden
+from bigarrays_jl_spark.operators.statistics import (LAG_DAYS, q82_gini,
+                                                     q83_seasonal_backtest)
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -2,9 +2,10 @@
 RFM segmentation, QQ quantile drift."""
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10k import (
-    equalize_volume, q84_rfm_segments, q85_qq_drift,
-    volume_equalized_histogram)
+from bigarrays_jl_spark.operators.statistics import (q84_rfm_segments,
+                                                     q85_qq_drift)
+from bigarrays_jl_spark.operators.volume_analytics import (
+    equalize_volume, volume_equalized_histogram)
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -4,9 +4,10 @@ from decimal import Decimal
 
 import numpy as np
 
-from bigarrays_jl_spark.operators.round10l import (VQ, q86_kaplan_meier,
-                                                   q87_autocorr,
-                                                   q88_cohort_ltv)
+from bigarrays_jl_spark.operators.events import VQ
+from bigarrays_jl_spark.operators.statistics import (q86_kaplan_meier,
+                                                     q87_autocorr,
+                                                     q88_cohort_ltv)
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -2,9 +2,12 @@
 day-of-week seasonality."""
 import math
 
-from bigarrays_jl_spark.operators.round10m import (
-    BENFORD_P, ERR_T, N_STRATA, VQ, q89_stratified_effect, q90_benford,
-    q91_dow_seasonality)
+from bigarrays_jl_spark.operators.events import VQ
+from bigarrays_jl_spark.operators.statistics import (BENFORD_P, ERR_T,
+                                                     N_STRATA,
+                                                     q89_stratified_effect,
+                                                     q90_benford,
+                                                     q91_dow_seasonality)
 from bigarrays_jl_spark.sources.tables import load
 
 

@@ -1,6 +1,8 @@
 """Round-9 operator tests: TPC-H Q2/Q15/Q18 shapes, LSH-composed graph,
 NULL-capable CDC, snapshot GC, 4D channel volume analytics."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,7 +53,7 @@ def test_pagerank_lsh_matches_reference_iteration(spark, sf_dir):
     power iteration over the same discovered edges (float tolerance —
     the operator's own cross-engine exactness is the oracle's job)."""
     from bigarrays_jl_spark.operators.graph import DAMPING, N_ITER
-    from bigarrays_jl_spark.operators.graph_lsh import graph_pagerank_lsh
+    from bigarrays_jl_spark.operators.graph import graph_pagerank_lsh
     from bigarrays_jl_spark.operators.similarity import sim_lsh_pairs
 
     pairs = [(r["vec_a"], r["vec_b"])
@@ -81,7 +83,7 @@ def test_pagerank_lsh_matches_reference_iteration(spark, sf_dir):
 
 
 def test_triangles_lsh_match_bruteforce(spark, sf_dir):
-    from bigarrays_jl_spark.operators.graph_lsh import graph_triangles_lsh
+    from bigarrays_jl_spark.operators.graph import graph_triangles_lsh
     from bigarrays_jl_spark.operators.similarity import sim_lsh_pairs
     und = {(r["vec_a"], r["vec_b"])
            for r in sim_lsh_pairs(spark, sf_dir).collect()}
@@ -99,8 +101,8 @@ def test_triangles_lsh_match_bruteforce(spark, sf_dir):
 
 
 def test_graph_lsh_plans_never_cartesian(spark, sf_dir):
-    from bigarrays_jl_spark.operators.graph_lsh import (graph_pagerank_lsh,
-                                                        graph_triangles_lsh)
+    from bigarrays_jl_spark.operators.graph import (graph_pagerank_lsh,
+                                                    graph_triangles_lsh)
     for op in (graph_pagerank_lsh, graph_triangles_lsh):
         assert "CartesianProduct" not in formatted_plan(op(spark, sf_dir))
 
@@ -141,13 +143,15 @@ def test_merge_changes_legacy_dialect_unchanged(spark):
     assert row["source"] == "curated"
 
 
-def test_insert_offset_precondition(spark):
+def test_insert_offset_precondition(spark, sf_dir):
     # the synthetic feed's insert keys are doc_id + INSERT_OFFSET; a
     # corpus whose doc_ids reach the offset would silently turn inserts
-    # into updates — pin the margin on the largest test corpus
+    # into updates — pin the margin on the largest test corpus, the
+    # sf0.1 sibling of the default test data
     from bigarrays_jl_spark.operators.mutation import INSERT_OFFSET
     from bigarrays_jl_spark.sources.tables import load
-    mx = (load(spark, "/root/testdata/sf0.1", "documents")
+    largest = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    mx = (load(spark, largest, "documents")
           .agg(F.max("doc_id")).collect()[0][0])
     assert mx < INSERT_OFFSET
 

@@ -1,115 +1,11 @@
 """Tests of operators/similarity.py."""
 
 import math
-
-import numpy as np
-
 from bigarrays_jl_spark.operators.similarity import (EMB_Q, IVFPQ_NPROBES,
                                                      OUTLIER_TOPK,
                                                      ann_ivfpq_recall_audit,
-                                                     emb_covariance,
-                                                     emb_outlier_zscore,
-                                                     set_sim_join)
+                                                     emb_outlier_zscore)
 from bigarrays_jl_spark.sources.tables import load
-
-
-def _setsim_truth(spark, sf_dir):
-    """Brute-force all-pairs exact Jaccard >= 0.8 among token-set
-    family representatives (min doc_id per distinct token set) — the
-    operator's stage-1 collapse applied in plain Python."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text") \
-        .collect()
-    toks = {r["doc_id"]: frozenset(r["text"].strip().lower().split())
-            for r in docs}
-    fam: dict = {}
-    for i in sorted(toks):
-        fam.setdefault(toks[i], []).append(i)
-    reps = {min(ids): s for s, ids in fam.items()}
-    sizes = {min(ids): len(ids) for ids in fam.values()}
-    ids = sorted(reps)
-    want = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            inter = len(reps[a] & reps[b])
-            union = len(reps[a] | reps[b])
-            if union and 5 * inter >= 4 * union:
-                want[(a, b)] = inter / union
-    return want, sizes
-
-
-def test_set_sim_join_is_exact(spark, sf_dir):
-    # window_cap=None (unbounded discovery): prefix filtering must lose
-    # NO pair vs brute-force all-pairs exact Jaccard among the
-    # token-set representatives, and no doc may be flagged truncated
-    rows = set_sim_join(spark, sf_dir, window_cap=None).collect()
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in rows}
-    want, sizes = _setsim_truth(spark, sf_dir)
-    assert got == want
-    for r in rows:
-        assert not r["a_trunc"] and not r["b_trunc"]
-        assert r["n_set_a"] == sizes[r["doc_a"]]
-        assert r["n_set_b"] == sizes[r["doc_b"]]
-
-
-def test_set_sim_join_capped_is_flagged_subset(spark, sf_dir):
-    # the production (capped-window) mode emits a SUBSET of the exact
-    # answer, every emitted jaccard is exact, and any pair the cap
-    # lost has at least one truncated endpoint — so a run with zero
-    # truncation flags is provably complete
-    rows = set_sim_join(spark, sf_dir).collect()
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in rows}
-    want, _ = _setsim_truth(spark, sf_dir)
-    assert set(got) <= set(want)
-    for k, v in got.items():
-        assert v == want[k]
-    trunc_docs = {r["doc_a"] for r in rows if r["a_trunc"]} \
-        | {r["doc_b"] for r in rows if r["b_trunc"]}
-    if set(got) == set(want):
-        return                    # nothing lost — nothing to prove
-    for a, b in set(want) - set(got):
-        # a lost pair must involve a doc the output FLAGS as truncated
-        # (or a doc absent from the output entirely, whose buckets
-        # overflowed — check via the flags of any emitted row)
-        assert (a in trunc_docs or b in trunc_docs
-                or a not in {x for p in got for x in p}
-                or b not in {x for p in got for x in p})
-
-
-def test_prefix_length_integer_formula():
-    # (4n+4) div 5 == ceil(0.8 n) exactly, for any set size — the
-    # integer arithmetic both engines share (no float ceil drift)
-    import math
-    for n in range(0, 10_000):
-        assert (4 * n + 4) // 5 == math.ceil(0.8 * n)
-
-
-def test_set_sim_join_plan_no_cartesian(spark, sf_dir):
-    plan = (set_sim_join(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_emb_covariance_matches_numpy(spark, sf_dir):
-    rows = emb_covariance(spark, sf_dir).collect()
-    X = np.array(load(spark, sf_dir, "embeddings")
-                 .select("embedding").toPandas()["embedding"].tolist(),
-                 dtype=np.float64)
-    want = np.cov(X, rowvar=False, bias=True)
-    assert len(rows) == 64 * 65 // 2          # upper triangle incl diag
-    for r in rows:
-        assert abs(r["cov"] - want[r["i"], r["j"]]) < 1e-6
-        if r["i"] == r["j"]:
-            assert r["cov"] > 0
-
-
-def test_emb_covariance_plan_has_no_vector_self_join(spark, sf_dir):
-    # the dim² cells come from a map-side nested transform — the plan
-    # must not join the embeddings scan against itself
-    plan = (emb_covariance(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan        # only broadcast closes
 
 
 def test_emb_outlier_matches_python(spark, sf_dir):

@@ -1,826 +1,17 @@
 """Tests of operators/statistics.py."""
 
-import math
 from collections import Counter, defaultdict
-from decimal import Decimal
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.operators.dedup import dedup_cluster_hist
-from bigarrays_jl_spark.operators.events import VQ
-from bigarrays_jl_spark.operators.similarity import EMB_Q
-from bigarrays_jl_spark.operators.statistics import (BENFORD_P,
-                                                     CUSUM_THRESHOLD,
-                                                     EPOCH_2024, ERR_T, K_ANON,
-                                                     LAG_DAYS, MIN_ITEM_SUP,
-                                                     MIN_PAIR_SUP, N_STRATA,
-                                                     TRI_TOPK, basket_pairs,
-                                                     basket_triples,
+from bigarrays_jl_spark.operators.statistics import (TRI_TOPK, basket_triples,
                                                      leadtime_quantiles,
                                                      lorenz_curve,
-                                                     q64_weighted_median,
-                                                     q65_pareto_frontier,
-                                                     q66_allocation, q68_cusum,
-                                                     q70_mad_outliers,
-                                                     q71_quantile_screen,
-                                                     q72_winsorized_mean,
-                                                     q77_regression_slope,
-                                                     q78_kanonymity,
-                                                     q79_mutual_info,
-                                                     q80_welch_ttest,
-                                                     q81_cuped, q82_gini,
-                                                     q83_seasonal_backtest,
-                                                     q84_rfm_segments,
-                                                     q85_qq_drift,
-                                                     q86_kaplan_meier,
-                                                     q87_autocorr,
-                                                     q88_cohort_ltv,
-                                                     q89_stratified_effect,
-                                                     q90_benford,
-                                                     q91_dow_seasonality,
                                                      q98_fano_burstiness)
 from bigarrays_jl_spark.operators.text import ngram_novelty
-from bigarrays_jl_spark.plans.explain import formatted_plan, simple_plan
 from bigarrays_jl_spark.sources.tables import load
-
-
-def test_q64_is_the_weighted_median(spark, sf_dir):
-    rows = {r["flag"]: (r["w_median"], r["total_qty"])
-            for r in q64_weighted_median(spark, sf_dir).collect()}
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_extendedprice", "l_quantity").collect()
-    groups = {}
-    for r in li:
-        groups.setdefault(r["l_returnflag"], []).append(
-            (round(r["l_extendedprice"] * 100), int(r["l_quantity"])))
-    for flag, vals in groups.items():
-        vals.sort()
-        tot = sum(w for _, w in vals)
-        cw = 0
-        for cents, w in vals:
-            cw += w
-            if 2 * cw >= tot:
-                assert rows[flag] == (cents / 100.0, tot)
-                break
-
-
-def test_q64_window_runs_over_histogram_not_rows(spark, sf_dir):
-    # the scale claim: the cumulative window's input is the aggregated
-    # (flag, cents) histogram — a partial_sum HashAggregate sits below
-    # the Window node, so window rows ∝ distinct prices, not lineitems
-    plan = (q64_weighted_median(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
-    win = plan.find("Window")
-    agg = plan.find("HashAggregate", win)
-    assert win != -1 and agg != -1, plan[:3000]
-    assert "partial_sum" in plan, plan[:3000]
-
-
-def test_basket_pairs_matches_python(spark, sf_dir):
-    got = {(r["part_a"], r["part_b"]): (r["pair_sup"], r["lift"])
-           for r in basket_pairs(spark, sf_dir).collect()}
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey").distinct().collect()
-    baskets, item_sup = {}, {}
-    for r in li:
-        baskets.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
-        item_sup[r["l_partkey"]] = item_sup.get(r["l_partkey"], 0) + 1
-    freq = {p for p, s in item_sup.items() if s >= MIN_ITEM_SUP}
-    n_orders = sum(1 for b in baskets.values() if b & freq)
-    pair_sup = {}
-    for b in baskets.values():
-        items = sorted(p for p in b if p in freq)
-        for i, pa in enumerate(items):
-            for pb in items[i + 1:]:
-                pair_sup[(pa, pb)] = pair_sup.get((pa, pb), 0) + 1
-    want = {k: (s, s * float(n_orders) / (item_sup[k[0]] * item_sup[k[1]]))
-            for k, s in pair_sup.items() if s >= MIN_PAIR_SUP}
-    assert got == want
-
-
-def test_basket_pairs_plan_broadcasts_apriori_prune(spark, sf_dir):
-    plan = (basket_pairs(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_pareto_frontier_matches_bruteforce(spark, sf_dir):
-    got = {(r["p_partkey"], r["price_cents"], r["p_size"])
-           for r in q65_pareto_frontier(spark, sf_dir).collect()}
-    pts = [(r["p_partkey"], int(round(r["p_retailprice"] * 100)),
-            r["p_size"])
-           for r in load(spark, sf_dir, "part").collect()]
-    exp = set()
-    for k, c, s in pts:
-        dominated = any(
-            (c2 <= c and s2 >= s and (c2 < c or s2 > s))
-            for _, c2, s2 in pts)
-        if not dominated:
-            exp.add((k, c, s))
-    assert got == exp
-    assert len(exp) > 0
-
-
-def test_pareto_frontier_plan_no_self_join(spark, sf_dir):
-    plan = (q65_pareto_frontier(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # join-back is broadcast only
-
-
-def test_allocation_sums_exactly_per_order(spark, sf_dir):
-    tot = {r["o_orderkey"]: int(round(r["o_totalprice"] * 100))
-           for r in load(spark, sf_dir, "orders").collect()}
-    per_order = {}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        per_order.setdefault(r["l_orderkey"], []).append(
-            (r["l_linenumber"], r["l_partkey"], r["l_suppkey"],
-             int(round(r["l_extendedprice"] * 100)), r["l_returnflag"]))
-    agg = {}
-    for ok, items in per_order.items():
-        if ok not in tot:
-            continue
-        t, s = tot[ok], sum(e for _, _, _, e, _ in items)
-        rows = [(ln, pk, sk, e, f, (t * e) // s, (t * e) % s)
-                for ln, pk, sk, e, f in items]
-        deficit = t - sum(r[5] for r in rows)
-        assert 0 <= deficit < len(rows)
-        # (rem desc, linenumber, partkey, suppkey, e, flag): the total
-        # order the operator ranks by
-        rows.sort(key=lambda r: (-r[6], r[0], r[1], r[2], r[3], r[4]))
-        total_alloc = 0
-        for i, (ln, pk, sk, e, f, b, _) in enumerate(rows):
-            a = b + (1 if i < deficit else 0)
-            total_alloc += a
-            n, c, nb = agg.get(f, (0, 0, 0))
-            agg[f] = (n + 1, c + a, nb + (1 if i < deficit else 0))
-        assert total_alloc == t  # the invariant the method exists for
-    got = {r["l_returnflag"]: (r["n_items"], r["allocated_cents"],
-                               r["n_bumped"])
-           for r in q66_allocation(spark, sf_dir).collect()}
-    assert got == agg
-
-
-def test_cusum_matches_python(spark, sf_dir):
-    from decimal import ROUND_HALF_UP, Decimal
-    got = {r["bucket"]: (r["n_breached"], r["sum_secs_to_breach"])
-           for r in q68_cusum(spark, sf_dir).collect()}
-    ev = [r for r in load(spark, sf_dir, "events").collect()
-          if r["value"] is not None]
-    mu = float(sum(Decimal(str(r["value"])) for r in ev)) / len(ev)
-    per_user = {}
-    for r in ev:
-        per_user.setdefault(r["user_id"], []).append(
-            (int(r["ts"].timestamp()), r["event_id"], r["value"]))
-    agg = {}
-    q = Decimal(1).scaleb(-12)
-    for uid, rows in per_user.items():
-        rows.sort()
-        s, bt = Decimal(0), None
-        for t, _, v in rows:
-            s += Decimal(repr(v - mu)).quantize(q, ROUND_HALF_UP)
-            if bt is None and abs(s) > CUSUM_THRESHOLD:
-                bt = t
-        if bt is not None:
-            n, tot = agg.get(uid % 10, (0, 0))
-            agg[uid % 10] = (n + 1, tot + (bt - rows[0][0]))
-    assert got == agg
-    assert sum(n for n, _ in agg.values()) > 0  # threshold is live
-
-
-def test_cusum_threshold_not_degenerate(spark, sf_dir):
-    """Some users breach and some don't — the detector discriminates."""
-    n_users = (load(spark, sf_dir, "events")
-               .filter("value IS NOT NULL")
-               .select("user_id").distinct().count())
-    n_breached = sum(r["n_breached"]
-                     for r in q68_cusum(spark, sf_dir).collect())
-    assert 0 < n_breached < n_users
-
-
-def test_mad_outliers_matches_python(spark, sf_dir):
-    got = {r["l_returnflag"]:
-           (r["n"], r["median_price"], r["mad_price"], r["n_outliers"])
-           for r in q70_mad_outliers(spark, sf_dir).collect()}
-    per_flag = {}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        per_flag.setdefault(r["l_returnflag"], []).append(
-            int(round(r["l_extendedprice"] * 100)))
-    for f, xs in per_flag.items():
-        xs.sort()
-
-        def lower_median(v):
-            v = sorted(v)
-            n = len(v)
-            # smallest value with 2*cum >= n over the value histogram
-            # == element at index ceil(n/2)-1 of the sorted list
-            return v[(n + 1) // 2 - 1]
-
-        med = lower_median(xs)
-        mad = lower_median([abs(x - med) for x in xs])
-        outl = sum(1 for x in xs if 2 * abs(x - med) > 3 * mad)
-        assert got[f] == (len(xs), med / 100.0, mad / 100.0, outl), f
-    assert set(got) == set(per_flag)
-    # the screen discriminates: some but not all rows are outliers
-    assert any(v[3] > 0 for v in got.values())
-    assert all(v[3] < v[0] for v in got.values())
-
-
-def test_mad_windows_run_over_value_domain(spark, sf_dir):
-    """The cumulative windows see the distinct-cents histogram, not
-    rows: the plan's window inputs descend from a (flag, cents)
-    aggregate."""
-    plan = (q70_mad_outliers(spark, sf_dir)
-            ._jdf.queryExecution().optimizedPlan().toString())
-    assert plan.count("Window") >= 2
-    # broadcast join-back of the per-group stats, no cartesian
-    xplan = (q70_mad_outliers(spark, sf_dir)
-             ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in xplan
-
-
-def test_quantile_screen_matches_numpy(spark, sf_dir):
-    got = {(r["label"], r["dim_bucket"]): (r["n_elems"], r["mean_pct"])
-           for r in q71_quantile_screen(spark, sf_dir).collect()}
-    rows = load(spark, sf_dir, "embeddings") \
-        .select("label", "embedding").collect()
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    XI = np.rint(X * EMB_Q).astype(np.int64)
-    labels = np.array([r["label"] for r in rows])
-    n, dim = XI.shape
-    want = {}
-    for i in range(dim):
-        col = XI[:, i]
-        order = np.sort(col)
-        # ECDF: cum count of values <= x
-        cum = np.searchsorted(order, col, side="right")
-        for lab in np.unique(labels):
-            m = labels == lab
-            key = (int(lab), i % 8)
-            s, c = want.get(key, (0, 0))
-            want[key] = (s + int(cum[m].sum()), c + int(m.sum()))
-    for key, (s, c) in want.items():
-        assert got[key][0] == c
-        assert abs(got[key][1] - s / (c * n)) < 1e-12, key
-    assert set(got) == set(want)
-    # percentiles are percentiles: every mean in (0, 1)
-    assert all(0.0 < v[1] < 1.0 for v in got.values())
-
-
-def test_winsorized_mean_matches_python(spark, sf_dir):
-    got = {r["l_returnflag"]:
-           (r["n"], r["fence_lo"], r["fence_hi"],
-            r["winsorized_mean"], r["n_clamped"])
-           for r in q72_winsorized_mean(spark, sf_dir).collect()}
-    per_flag = {}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        per_flag.setdefault(r["l_returnflag"], []).append(
-            int(round(r["l_extendedprice"] * 100)))
-    for f, xs in per_flag.items():
-        xs.sort()
-        tot = len(xs)
-
-        def lq(num, den):
-            cum = 0
-            for v in sorted(set(xs)):
-                cum += sum(1 for x in xs if x == v)
-                if den * cum >= num * tot:
-                    return v
-            raise AssertionError
-
-        lo, hi = lq(1, 20), lq(19, 20)
-        cl = [min(max(x, lo), hi) for x in xs]
-        wm = sum(cl) / tot / 100.0
-        ncl = sum(1 for x in xs if x < lo or x > hi)
-        n, flo, fhi, gwm, gncl = got[f]
-        assert (n, flo, fhi, gncl) == (tot, lo / 100.0, hi / 100.0, ncl)
-        assert abs(gwm - wm) < 1e-9
-        # winsorizing clamps a real tail but not the bulk
-        assert 0 < ncl < tot / 2
-    assert set(got) == set(per_flag)
-
-
-def _events(spark, sf_dir):
-    rows = load(spark, sf_dir, "events").collect()
-    return sorted(rows, key=lambda r: (r["ts"], r["event_id"]))
-
-
-def test_regression_matches_numpy(spark, sf_dir):
-    got = {r["event_type"]: (r["n"], r["slope_vi_per_s"],
-                             r["intercept_vi"])
-           for r in q77_regression_slope(spark, sf_dir).collect()}
-    per_type = {}
-    for r in _events(spark, sf_dir):
-        per_type.setdefault(r["event_type"], []).append(
-            (int(r["ts"].timestamp()) - EPOCH_2024,
-             int(round(r["value"] * VQ))))
-    for t, xy in per_type.items():
-        x = np.array([a for a, _ in xy], dtype=np.float64)
-        y = np.array([b for _, b in xy], dtype=np.float64)
-        slope, intercept = np.polyfit(x, y, 1)
-        n, gs, gi = got[t]
-        assert n == len(xy)
-        assert abs(gs - slope) / abs(slope) < 1e-6, t
-        assert abs(gi - intercept) / abs(intercept) < 1e-6, t
-    assert set(got) == set(per_type)
-
-
-def test_regression_is_pure_moment_fold(spark, sf_dir):
-    """q77 must be ONE partial-agg pair over ONE scan: no join, no
-    window, no second pass — the moments reduce map-side."""
-    plan = simple_plan(q77_regression_slope(spark, sf_dir))
-    assert "Join" not in plan
-    assert "Window" not in plan
-    assert plan.count("Scan parquet") == 1
-    assert "HashAggregate" in plan
-    # the moments fold map-side: partial sums appear below the exchange
-    assert "partial_sum" in formatted_plan(
-        q77_regression_slope(spark, sf_dir))
-
-
-def test_kanonymity_is_two_aggregations_no_join(spark, sf_dir):
-    plan = simple_plan(q78_kanonymity(spark, sf_dir))
-    assert "Join" not in plan
-    assert plan.count("Scan parquet") == 1
-
-
-def test_mutual_info_median_broadcasts(spark, sf_dir):
-    """The per-dim medians (64 rows) must broadcast into the element
-    stream — never the reverse."""
-    plan = simple_plan(q79_mutual_info(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_kanonymity_matches_python(spark, sf_dir):
-    got = {r["c_mktsegment"]: (r["n_classes"], r["n_rows"], r["k_min"],
-                               r["rows_below_k"], r["classes_below_l2"])
-           for r in q78_kanonymity(spark, sf_dir).collect()}
-    rows = load(spark, sf_dir, "customer").collect()
-    cls = {}
-    for r in rows:
-        key = (r["c_mktsegment"], r["c_nationkey"])
-        k, sens = cls.get(key, (0, set()))
-        cls[key] = (k + 1, sens | {r["c_acctbal"] >= 0})
-    per_seg = {}
-    for (seg, _), (k, sens) in cls.items():
-        nc, nr, km, rb, lb = per_seg.get(seg, (0, 0, None, 0, 0))
-        per_seg[seg] = (nc + 1, nr + k,
-                        k if km is None else min(km, k),
-                        rb + (k if k < K_ANON else 0),
-                        lb + (1 if len(sens) < 2 else 0))
-    assert got == per_seg
-    # the census conserves the table
-    assert sum(v[1] for v in got.values()) == len(rows)
-
-
-def test_mutual_info_matches_python(spark, sf_dir):
-    got = {r["i"]: (r["mi_bits"], r["n_cells"])
-           for r in q79_mutual_info(spark, sf_dir).collect()}
-    rows = load(spark, sf_dir, "embeddings") \
-        .select("label", "embedding").collect()
-    X = np.rint(np.array([r["embedding"] for r in rows],
-                         dtype=np.float64) * EMB_Q).astype(np.int64)
-    labels = np.array([r["label"] for r in rows])
-    n = len(rows)
-    for i in range(X.shape[1]):
-        col = X[:, i]
-        order = np.sort(col)
-        cum = np.arange(1, n + 1)
-        med = int(order[np.argmax(2 * cum >= n)])
-        b = (col <= med).astype(int)
-        acc = Decimal(0)
-        cells = 0
-        for lab in np.unique(labels):
-            for bb in (0, 1):
-                nlb = int(((labels == lab) & (b == bb)).sum())
-                if not nlb:
-                    continue
-                cells += 1
-                nl = int((labels == lab).sum())
-                nb = int((b == bb).sum())
-                term = (nlb / n) * np.log2(nlb * n / (nl * nb))
-                acc += Decimal(str(round(float(term), 9)))
-        assert got[i][1] == cells
-        assert abs(got[i][0] - float(acc)) < 1e-9, i
-        # MI is non-negative and bounded by H(b) <= 1 bit
-        assert -1e-9 <= got[i][0] <= 1.0
-    assert len(got) == X.shape[1]
-
-
-def test_welch_matches_python(spark, sf_dir):
-    got = {r["event_type"]: r for r in
-           q80_welch_ttest(spark, sf_dir).collect()}
-    per = {}
-    for r in load(spark, sf_dir, "events").collect():
-        per.setdefault(r["event_type"], ([], []))[
-            int(r["user_id"] % 2)].append(int(round(r["value"] * VQ)))
-    for t, (a0, a1) in per.items():
-        n0, n1 = len(a0), len(a1)
-        m0, m1 = sum(a0) / n0, sum(a1) / n1
-        v0 = (sum(x * x for x in a0) - sum(a0) ** 2 / n0) / (n0 - 1)
-        v1 = (sum(x * x for x in a1) - sum(a1) ** 2 / n1) / (n1 - 1)
-        se2 = v0 / n0 + v1 / n1
-        tstat = (m1 - m0) / se2 ** 0.5
-        df = se2 ** 2 / ((v0 / n0) ** 2 / (n0 - 1)
-                         + (v1 / n1) ** 2 / (n1 - 1))
-        g = got[t]
-        assert (g["n0"], g["n1"]) == (n0, n1)
-        assert abs(g["mean_diff"] - (m1 - m0) / VQ) < 1e-9
-        assert abs(g["t_stat"] - tstat) < 1e-6
-        assert abs(g["welch_df"] - df) / df < 1e-6
-        # Welch df lies between min(n)-1 and n0+n1-2
-        assert min(n0, n1) - 1 <= g["welch_df"] <= n0 + n1 - 2
-    assert set(got) == set(per)
-
-
-def test_cuped_matches_python_and_reduces_variance(spark, sf_dir):
-    got = {r["arm"]: r for r in q81_cuped(spark, sf_dir).collect()}
-    users = {}
-    for r in load(spark, sf_dir, "events").collect():
-        x, y = users.get(r["user_id"], (0, 0))
-        vi = int(round(r["value"] * VQ))
-        if r["event_type"] == "view":
-            x += vi
-        elif r["event_type"] == "purchase":
-            y += vi
-        users[r["user_id"]] = (x, y)
-    xs = np.array([v[0] for v in users.values()], dtype=np.float64)
-    ys = np.array([v[1] for v in users.values()], dtype=np.float64)
-    arms = np.array([u % 2 for u in users], dtype=np.int64)
-    theta = (np.cov(xs, ys, bias=True)[0, 1] / xs.var())
-    for a in (0, 1):
-        m = arms == a
-        g = got[a]
-        assert g["n_users"] == int(m.sum())
-        assert abs(g["mean_post"] - ys[m].mean() / VQ) < 1e-6
-        adj = ys[m].mean() - theta * (xs[m].mean() - xs.mean())
-        assert abs(g["mean_adjusted"] - adj / VQ) < 1e-6
-        assert abs(g["theta"] - theta) / abs(theta) < 1e-6
-    # the adjustment conserves the pooled mean: Σ n_a·(adj − post) ≈ 0
-    drift = sum(got[a]["n_users"]
-                * (got[a]["mean_adjusted"] - got[a]["mean_post"])
-                for a in (0, 1))
-    pooled = sum(got[a]["n_users"] * got[a]["mean_post"] for a in (0, 1))
-    assert abs(drift) < 1e-6 * max(1.0, abs(pooled))
-
-
-def test_welch_is_one_conditional_pass(spark, sf_dir):
-    """Both arms' moments come from ONE scan + ONE agg pair — never a
-    per-arm scan or a self-join."""
-    plan = simple_plan(q80_welch_ttest(spark, sf_dir))
-    assert "Join" not in plan
-    assert plan.count("Scan parquet") == 1
-
-
-def test_cuped_reads_rollup_not_facts_twice(spark, sf_dir):
-    """The θ moments and the arm means must consume the CACHED per-user
-    rollup; the single-row moment table broadcasts back."""
-    plan = simple_plan(q81_cuped(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    # the fact scan happens once; both consumers read the checkpoint
-    assert plan.count("Scan parquet") <= 1
-    assert "CartesianProduct" not in plan
-
-
-def test_gini_window_runs_over_histogram(spark, sf_dir):
-    """The cumulative window's input must be the (flag, cents)
-    aggregate — HashAggregate BELOW Window in the tree — never raw
-    rows."""
-    plan = formatted_plan(q82_gini(spark, sf_dir))
-    tree = plan.split("\n\n")[0].splitlines()
-    wi = next(i for i, ln in enumerate(tree) if "Window" in ln)
-    below = "\n".join(tree[wi + 1:])
-    assert "HashAggregate" in below       # window input is the histogram
-    assert "partial_count" in plan        # map-side combine on the fold
-
-
-def test_stratified_effect_two_folds_no_join(spark, sf_dir):
-    plan = simple_plan(q89_stratified_effect(spark, sf_dir))
-    assert "Join" not in plan
-    assert plan.count("Scan parquet") == 1
-
-
-def test_benford_broadcasts_total(spark, sf_dir):
-    plan = simple_plan(q90_benford(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_dow_totals_broadcast_into_cells(spark, sf_dir):
-    plan = simple_plan(q91_dow_seasonality(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_gini_matches_python(spark, sf_dir):
-    got = {r["l_returnflag"]: (r["n"], r["mean_price"], r["gini"])
-           for r in q82_gini(spark, sf_dir).collect()}
-    per = {}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        per.setdefault(r["l_returnflag"], []).append(
-            int(round(r["l_extendedprice"] * 100)))
-    for f, xs in per.items():
-        xs.sort()
-        n = len(xs)
-        six = sum((i + 1) * x for i, x in enumerate(xs))
-        sx = sum(xs)
-        gini = (2.0 * six) / (n * sx) - (n + 1.0) / n
-        gn, gm, gg = got[f]
-        assert gn == n
-        assert abs(gm - sx / n / 100.0) < 1e-9
-        assert abs(gg - gini) < 1e-9
-        # prices are spread but not degenerate
-        assert 0.0 < gg < 1.0
-    assert set(got) == set(per)
-
-
-def test_seasonal_backtest_matches_python(spark, sf_dir):
-    got = {r["event_type"]: (r["n_days"], r["mae"], r["bias"])
-           for r in q83_seasonal_backtest(spark, sf_dir).collect()}
-    daily = {}
-    for r in load(spark, sf_dir, "events").collect():
-        key = (r["event_type"], int(r["ts"].timestamp()) // 86400)
-        daily[key] = daily.get(key, 0) + int(round(r["value"] * VQ))
-    per = {}
-    for (t, d), rev in daily.items():
-        fc = daily.get((t, d - LAG_DAYS))
-        if fc is None:
-            continue
-        s_abs, s_raw, n = per.get(t, (0, 0, 0))
-        per[t] = (s_abs + abs(rev - fc), s_raw + (rev - fc), n + 1)
-    for t, (s_abs, s_raw, n) in per.items():
-        gn, gmae, gbias = got[t]
-        assert gn == n
-        assert abs(gmae - s_abs / n / VQ) < 1e-9
-        assert abs(gbias - s_raw / n / VQ) < 1e-9
-        # a 30-day window scores at least two seasonal weeks
-        assert n >= 2 * LAG_DAYS
-    assert set(got) == set(per)
-
-
-def _ntile3(items):
-    """DuckDB/Spark ntile floor distribution over a pre-sorted list."""
-    n = len(items)
-    base, extra = divmod(n, 3)
-    out = {}
-    i = 0
-    for b in range(3):
-        size = base + (1 if b < extra else 0)
-        for it in items[i:i + size]:
-            out[it] = b + 1
-        i += size
-    return out
-
-
-def test_rfm_matches_python(spark, sf_dir):
-    got = {(r["r"], r["f"], r["m"]): r["n_users"]
-           for r in q84_rfm_segments(spark, sf_dir).collect()}
-    per = {}
-    for r in load(spark, sf_dir, "events").collect():
-        if r["event_type"] != "purchase":
-            continue
-        day = int(r["ts"].timestamp()) // 86400
-        cents = int(round(r["value"] * 100))
-        d, f, m = per.get(r["user_id"], (None, 0, 0))
-        per[r["user_id"]] = (day if d is None else max(d, day),
-                             f + 1, m + cents)
-    ref = max(v[0] for v in per.values())
-    users = list(per)
-    rb = _ntile3(sorted(users, key=lambda u: (ref - per[u][0], u)))
-    fb = _ntile3(sorted(users, key=lambda u: (-per[u][1], u)))
-    mb = _ntile3(sorted(users, key=lambda u: (-per[u][2], u)))
-    want = {}
-    for u in users:
-        k = (rb[u], fb[u], mb[u])
-        want[k] = want.get(k, 0) + 1
-    assert got == want
-    assert sum(got.values()) == len(users)
-
-
-def test_qq_drift_matches_python(spark, sf_dir):
-    got = {r["qn"]: (r["price_a"], r["price_r"], r["gap_cents"])
-           for r in q85_qq_drift(spark, sf_dir).collect()}
-    per = {"A": [], "R": []}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        if r["l_returnflag"] in per:
-            per[r["l_returnflag"]].append(
-                int(round(r["l_extendedprice"] * 100)))
-    for xs in per.values():
-        xs.sort()
-
-    def q(xs, qn):
-        """Smallest v whose cumulative count (at v's LAST occurrence)
-        satisfies 20·cum ≥ qn·tot — the histogram rule verbatim."""
-        tot = len(xs)
-        i = 0
-        while i < len(xs):
-            j = i
-            while j < len(xs) and xs[j] == xs[i]:
-                j += 1
-            cum = j
-            if 20 * cum >= qn * tot:
-                return xs[i]
-            i = j
-        raise AssertionError
-
-    for qn in range(1, 20):
-        a, r = q(per["A"], qn), q(per["R"], qn)
-        assert got[qn] == (a, r, r - a), qn
-    assert len(got) == 19
-    # quantiles are monotone in qn for both populations
-    for qn in range(2, 20):
-        assert got[qn][0] >= got[qn - 1][0]
-        assert got[qn][1] >= got[qn - 1][1]
-
-
-def _purchases(spark, sf_dir):
-    rows = [r for r in load(spark, sf_dir, "events").collect()
-            if r["event_type"] == "purchase"]
-    return sorted(rows, key=lambda r: (r["ts"], r["event_id"]))
-
-
-def test_kaplan_meier_matches_python(spark, sf_dir):
-    got = {r["gap_days"]: (r["n_at_risk"], r["n_repurchases"],
-                           r["survival"])
-           for r in q86_kaplan_meier(spark, sf_dir).collect()}
-    per_user = {}
-    for r in _purchases(spark, sf_dir):
-        per_user.setdefault(r["user_id"], []).append(
-            int(r["ts"].timestamp()) // 86400)
-    horizon = max(d for ds in per_user.values() for d in ds)
-    obs = []          # (t, event?)
-    for ds in per_user.values():
-        for a, b in zip(ds, ds[1:]):
-            obs.append((b - a, 1))
-        obs.append((horizon - ds[-1], 0))
-    times = sorted({t for t, ev in obs if ev})
-    acc = Decimal(0)
-    dead = False
-    want = {}
-    for t in times:
-        n_risk = sum(1 for tt, _ in obs if tt >= t)
-        d = sum(1 for tt, ev in obs if tt == t and ev)
-        if d == n_risk:
-            dead = True
-        else:
-            acc += Decimal(str(round(float(np.log(1.0 - d / n_risk)),
-                                     9)))
-        want[t] = (n_risk, d,
-                   0.0 if dead else float(np.exp(float(acc))))
-    assert set(got) == set(want)
-    for t in want:
-        assert got[t][0] == want[t][0], t
-        assert got[t][1] == want[t][1], t
-        assert abs(got[t][2] - want[t][2]) < 1e-9, t
-    # survival is a monotone non-increasing curve from < 1
-    curve = [got[t][2] for t in sorted(got)]
-    assert all(a >= b for a, b in zip(curve, curve[1:]))
-    assert curve[0] < 1.0
-    # censoring is real: risk sets shrink by more than the deaths alone
-    ts = sorted(want)
-    assert any(want[a][0] - want[b][0] > want[a][1]
-               for a, b in zip(ts, ts[1:]))
-
-
-def test_autocorr_matches_numpy(spark, sf_dir):
-    got = {r["event_type"]: (r["n_pairs"], r["lag1_autocorr"])
-           for r in q87_autocorr(spark, sf_dir).collect()}
-    daily = {}
-    for r in load(spark, sf_dir, "events").collect():
-        k = (r["event_type"], int(r["ts"].timestamp()) // 86400)
-        daily[k] = daily.get(k, 0) + int(round(r["value"] * VQ))
-    for t in {k[0] for k in daily}:
-        days = sorted(d for (tt, d) in daily if tt == t)
-        pairs = [(daily[(t, d - 1)], daily[(t, d)])
-                 for d in days if (t, d - 1) in daily]
-        x = np.array([a for a, _ in pairs], dtype=np.float64)
-        y = np.array([b for _, b in pairs], dtype=np.float64)
-        r_np = np.corrcoef(x, y)[0, 1]
-        n, r = got[t]
-        assert n == len(pairs)
-        assert abs(r - r_np) < 1e-9
-        assert -1.0 <= r <= 1.0
-    assert len(got) == 5
-
-
-def test_cohort_ltv_matches_python(spark, sf_dir):
-    got = {(r["cohort"], r["week"]):
-           (r["cohort_users"], r["cum_cents"], r["ltv_per_user"])
-           for r in q88_cohort_ltv(spark, sf_dir).collect()}
-    per_user = {}
-    for r in _purchases(spark, sf_dir):
-        day = int(r["ts"].timestamp()) // 86400
-        cents = int(round(r["value"] * 100))
-        per_user.setdefault(r["user_id"], []).append((day, cents))
-    cells = {}
-    csize = {}
-    for ds in per_user.values():
-        cday = min(d for d, _ in ds)
-        csize[cday] = csize.get(cday, 0) + 1
-        for d, c in ds:
-            k = (cday, (d - cday) // 7)
-            cells[k] = cells.get(k, 0) + c
-    want = {}
-    for cohort in {k[0] for k in cells}:
-        cum = 0
-        for week in sorted(k[1] for k in cells if k[0] == cohort):
-            cum += cells[(cohort, week)]
-            want[(cohort, week)] = (csize[cohort], cum,
-                                    cum / csize[cohort] / 100.0)
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == want[k][0]
-        assert got[k][1] == want[k][1]
-        assert abs(got[k][2] - want[k][2]) < 1e-9
-    # LTV curves are cumulative: non-decreasing within each cohort
-    for cohort in {k[0] for k in got}:
-        ws = sorted(k[1] for k in got if k[0] == cohort)
-        vals = [got[(cohort, w)][1] for w in ws]
-        assert all(a <= b for a, b in zip(vals, vals[1:]))
-
-
-def test_stratified_effect_matches_python(spark, sf_dir):
-    got = {r["stratum"]: r for r in
-           q89_stratified_effect(spark, sf_dir).collect()}
-    users = {}
-    for r in load(spark, sf_dir, "events").collect():
-        ne, y = users.get(r["user_id"], (0, 0))
-        if r["event_type"] == "error":
-            ne += 1
-        elif r["event_type"] == "purchase":
-            y += int(round(r["value"] * 100))
-        users[r["user_id"]] = (ne, y)
-    per = {}
-    for u, (ne, y) in users.items():
-        s = u % N_STRATA
-        n, n1, sy1, sy0 = per.get(s, (0, 0, 0, 0))
-        t = 1 if ne >= ERR_T else 0
-        per[s] = (n + 1, n1 + t, sy1 + (y if t else 0),
-                  sy0 + (0 if t else y))
-    for s, (n, n1, sy1, sy0) in per.items():
-        g = got[s]
-        assert (g["n_users"], g["n_treated"]) == (n, n1)
-        # both arms populated: the ERR_T threshold actually splits
-        assert 0 < n1 < n
-        m1, m0 = sy1 / n1 / 100.0, sy0 / (n - n1) / 100.0
-        assert abs(g["mean_y_treated"] - m1) < 1e-9
-        assert abs(g["mean_y_control"] - m0) < 1e-9
-        assert abs(g["effect"] - (m1 - m0)) < 1e-9
-    assert set(got) == set(per) == set(range(N_STRATA))
-
-
-def test_benford_matches_python(spark, sf_dir):
-    got = {r["digit"]: (r["n_obs"], r["expected"], r["obs_ratio"])
-           for r in q90_benford(spark, sf_dir).collect()}
-    obs = {}
-    for r in load(spark, sf_dir, "lineitem").collect():
-        v = int(round(r["l_extendedprice"] * 100))
-        if v > 0:
-            d = int(str(v)[0])
-            obs[d] = obs.get(d, 0) + 1
-    tot = sum(obs.values())
-    assert set(got) == set(obs)
-    for d, n in obs.items():
-        exp = tot * BENFORD_P[d]
-        assert got[d][0] == n
-        assert abs(got[d][1] - exp) < 1e-9
-        assert abs(got[d][2] - n / exp) < 1e-9
-    # Benford's first-digit law: probabilities sum to 1 and the
-    # digit-1 class is the largest expected bucket
-    assert abs(sum(BENFORD_P.values()) - 1.0) < 1e-12
-    assert got[1][1] == max(v[1] for v in got.values())
-
-
-def test_dow_seasonality_matches_python(spark, sf_dir):
-    got = {(r["event_type"], r["dow"]): (r["n_events"],
-                                         r["seasonal_index"])
-           for r in q91_dow_seasonality(spark, sf_dir).collect()}
-    cells = {}
-    tot = {}
-    for r in load(spark, sf_dir, "events").collect():
-        dow = (int(r["ts"].timestamp()) // 86400) % 7
-        vi = int(round(r["value"] * VQ))
-        k = (r["event_type"], dow)
-        n, s = cells.get(k, (0, 0))
-        cells[k] = (n + 1, s + vi)
-        tn, ts_ = tot.get(r["event_type"], (0, 0))
-        tot[r["event_type"]] = (tn + 1, ts_ + vi)
-    assert set(got) == set(cells)
-    wsum = {}
-    for (t, dow), (n, s) in cells.items():
-        tn, ts_ = tot[t]
-        idx = (s / n) / (ts_ / tn)
-        assert got[(t, dow)][0] == n
-        assert abs(got[(t, dow)][1] - idx) < 1e-9
-        a, b = wsum.get(t, (0.0, 0))
-        wsum[t] = (a + idx * n, b + n)
-    # weighted by event counts, indices average to 1 per type
-    for t, (a, b) in wsum.items():
-        assert math.isclose(a / b, 1.0, rel_tol=1e-9)
 
 
 def test_fano_matches_python(spark, sf_dir):

@@ -1,93 +1,11 @@
 """Tests of operators/temporal.py."""
 
-import math
 from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from bigarrays_jl_spark.operators.events import VQ
-from bigarrays_jl_spark.operators.temporal import (EMA_TAPS, SESSION_GAP_S,
-                                                   customer_reorder_gaps,
-                                                   events_gapfill,
-                                                   q63_interval_concurrency,
-                                                   q69_interval_coverage,
-                                                   q73_ema_decay)
-from bigarrays_jl_spark.plans.explain import simple_plan
+from bigarrays_jl_spark.operators.temporal import customer_reorder_gaps
 from bigarrays_jl_spark.sources.tables import load
-
-
-def test_q63_matches_python_sweep(spark, sf_dir):
-    rows = {r["max_cc"]: r["n_users"]
-            for r in q63_interval_concurrency(spark, sf_dir).collect()}
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "value") \
-        .collect()
-    per_user = {}
-    for r in ev:
-        s = int(r["ts"].timestamp())
-        v = r["value"] if r["value"] is not None else 1.0
-        e = s + int(math.floor(min(max(v, 1.0), 3600.0)))
-        per_user.setdefault(r["user_id"], []).append((s, e))
-    want = {}
-    for ivs in per_user.values():
-        pts = sorted([(s, 1) for s, _ in ivs] + [(e, -1) for _, e in ivs])
-        cc = mx = 0
-        for _, d in pts:                 # ends (-1) sort before starts
-            cc += d
-            mx = max(mx, cc)
-        want[mx] = want.get(mx, 0) + 1
-    assert rows == want
-
-
-def test_interval_coverage_matches_python(spark, sf_dir):
-    got = {r["bucket"]: (r["covered_secs"], r["n_islands"])
-           for r in q69_interval_coverage(spark, sf_dir).collect()}
-    per_user = {}
-    for r in load(spark, sf_dir, "events").collect():
-        per_user.setdefault(r["user_id"], []).append(
-            (int(r["ts"].timestamp()), r["event_id"]))
-    agg = {}
-    for uid, rows in per_user.items():
-        rows.sort()
-        islands = []
-        for t, _ in rows:
-            e = t + SESSION_GAP_S
-            if islands and t <= islands[-1][1]:
-                islands[-1][1] = max(islands[-1][1], e)
-            else:
-                islands.append([t, e])
-        secs = sum(e - s for s, e in islands)
-        c, n = agg.get(uid % 10, (0, 0))
-        agg[uid % 10] = (c + secs, n + len(islands))
-    assert got == agg
-    # merging must actually merge: fewer islands than events
-    n_events = sum(len(v) for v in per_user.values())
-    assert sum(n for _, n in agg.values()) < n_events
-
-
-def _events(spark, sf_dir):
-    rows = load(spark, sf_dir, "events").collect()
-    return sorted(rows, key=lambda r: (r["ts"], r["event_id"]))
-
-
-def test_ema_matches_python(spark, sf_dir):
-    got = {r["user_id"]: r["ema"]
-           for r in q73_ema_decay(spark, sf_dir).collect()}
-    per_user = {}
-    for r in _events(spark, sf_dir):
-        per_user.setdefault(r["user_id"], []).append(
-            int(round(r["value"] * VQ)))
-    for u, vs in per_user.items():
-        taps = vs[-EMA_TAPS:][::-1]        # newest first
-        num = sum(v << (EMA_TAPS - 1 - j) for j, v in enumerate(taps))
-        den = sum(1 << (EMA_TAPS - 1 - j) for j in range(len(taps)))
-        assert abs(got[u] - num / den / VQ) < 1e-9, u
-    assert set(got) == set(per_user)
-
-
-def test_ema_is_one_keyed_window_no_join(spark, sf_dir):
-    plan = simple_plan(q73_ema_decay(spark, sf_dir))
-    assert "Join" not in plan
-    assert plan.count("Scan parquet") == 1
 
 
 def test_reorder_gaps_match_python(spark, sf_dir):
@@ -116,56 +34,3 @@ def test_reorder_gaps_match_python(spark, sf_dir):
         p50 = next(d for i, d in enumerate(ds) if 2 * (i + 1) >= n)
         p90 = next(d for i, d in enumerate(ds) if 10 * (i + 1) >= 9 * n)
         assert got[s] == (n, p50, p90)
-
-
-def test_gapfill_grid_is_dense_and_conserves_counts(spark, sf_dir):
-    from bigarrays_jl_spark.sources.tables import load
-    rows = events_gapfill(spark, sf_dir).collect()
-    e = load(spark, sf_dir, "events")   # ts normalization canon
-    span = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi")).first()
-    n_hours = int((span["hi"] - span["lo"]).total_seconds() // 3600) + 1
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r["event_type"], []).append(r)
-    per_type_counts = {r["event_type"]: r["n"] for r in
-                       e.groupBy("event_type").agg(F.count("*").alias("n"))
-                        .collect()}
-    for t, trs in by_type.items():
-        assert len(trs) == n_hours, (t, len(trs), n_hours)
-        assert sum(r["n_events"] for r in trs) == per_type_counts[t]
-        # forward fill: once a value is observed, it never goes NULL again
-        seen = False
-        for r in sorted(trs, key=lambda r: r["hour_start"]):
-            if r["avg_value_ffill"] is not None:
-                seen = True
-            assert not (seen and r["avg_value_ffill"] is None)
-            # zero-filled hours exist only as gap rows
-            if r["n_events"] == 0 and not seen:
-                assert r["avg_value_ffill"] is None
-
-
-def test_interpolate_between_observations(spark, sf_dir):
-    from bigarrays_jl_spark.operators.temporal import events_interpolate
-    rows = events_interpolate(spark, sf_dir).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r["event_type"], []).append(r)
-    for trs in by_type.values():
-        trs.sort(key=lambda r: r["hour_start"])
-        obs = [i for i, r in enumerate(trs) if r["n_events"] > 0]
-        first, last = obs[0], obs[-1]
-        for i, r in enumerate(trs):
-            v = r["avg_value_interp"]
-            if i < first or i > last:
-                assert v is None            # no extrapolation
-            else:
-                assert v is not None
-                if r["n_events"] == 0:      # strictly inside a gap:
-                    # bounded by the neighboring observations
-                    lo = max(j for j in obs if j < i)
-                    hi = min(j for j in obs if j > i)
-                    a = trs[lo]["avg_value_interp"]
-                    b = trs[hi]["avg_value_interp"]
-                    assert min(a, b) - 1e-9 <= v <= max(a, b) + 1e-9

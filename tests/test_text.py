@@ -1,58 +1,13 @@
 """Tests of operators/text.py."""
 
-import math
 from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
 from bigarrays_jl_spark.operators.text import (BOILER_K, boilerplate_prefixes,
-                                               ngram_novelty,
-                                               text_corpus_divergence,
-                                               text_tfidf_topk)
+                                               ngram_novelty, text_tfidf_topk)
 from bigarrays_jl_spark.sources.tables import load
-
-
-def test_corpus_divergence_bounds_and_term_counts(spark, sf_dir):
-    r = text_corpus_divergence(spark, sf_dir).first()
-    # Hellinger^2 in [0,1], JS in [0,1] bits; both > 0 (halves differ)
-    assert 0.0 < r["hellinger_sq"] < 1.0
-    assert 0.0 < r["js_bits"] < 1.0
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text") \
-        .collect()
-    va, vb = set(), set()
-    for row in docs:
-        (va if row["doc_id"] % 2 == 0 else vb).update(
-            row["text"].strip().lower().split())
-    assert r["n_shared"] == len(va & vb)
-    assert r["n_only_a"] == len(va - vb)
-    assert r["n_only_b"] == len(vb - va)
-
-
-def test_corpus_divergence_matches_python(spark, sf_dir):
-    r = text_corpus_divergence(spark, sf_dir).first()
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text") \
-        .collect()
-    ca, cb = {}, {}
-    for row in docs:
-        c = ca if row["doc_id"] % 2 == 0 else cb
-        for t in row["text"].strip().lower().split():
-            c[t] = c.get(t, 0) + 1
-    # python split drops empty tokens that F.split keeps for empty
-    # text; the testdata has no empty docs, so the sets agree
-    ta, tb = sum(ca.values()), sum(cb.values())
-    hell = js = 0.0
-    for t in set(ca) | set(cb):
-        pa, pb = ca.get(t, 0) / ta, cb.get(t, 0) / tb
-        hell += round(0.5 * (math.sqrt(pa) - math.sqrt(pb)) ** 2, 9)
-        term = 0.0
-        if pa > 0:
-            term += 0.5 * pa * math.log2(2.0 * pa / (pa + pb))
-        if pb > 0:
-            term += 0.5 * pb * math.log2(2.0 * pb / (pa + pb))
-        js += round(term, 9)
-    assert abs(r["hellinger_sq"] - hell) < 1e-7
-    assert abs(r["js_bits"] - js) < 1e-7
 
 
 def test_tfidf_topk_matches_python_for_one_doc(spark, sf_dir):

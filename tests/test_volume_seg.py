@@ -2,59 +2,6 @@
 
 import numpy as np
 
-from bigarrays_jl_spark.operators.volume_seg import (MOM_BOX, ROI_BOX,
-                                                     SEG_BLOCK,
-                                                     volume_label_moments,
-                                                     volume_roi_stats)
-
-
-def test_label_moments_match_numpy(spark, sf_dir):
-    got = {r["label"]: r for r in
-           volume_label_moments(spark, sf_dir).collect()}
-    (x0, x1), (y0, y1), (z0, z1) = MOM_BOX
-    xs, ys, zs = np.meshgrid(np.arange(x0, x1), np.arange(y0, y1),
-                             np.arange(z0, z1), indexing="ij")
-    lab = ((xs // SEG_BLOCK) * 16 + (ys // SEG_BLOCK) * 4
-           + (zs // SEG_BLOCK))
-    for lv in np.unique(lab):
-        m = lab == lv
-        pts = np.stack([xs[m], ys[m], zs[m]]).astype(np.float64)
-        r = got[int(lv)]
-        assert r["n_voxels"] == int(m.sum())
-        for axis, cname in zip(pts, ("cx", "cy", "cz")):
-            assert abs(r[cname] - axis.mean()) < 1e-9
-        cov = np.cov(pts, bias=True)
-        for (a, b), cname in [((0, 0), "cov_xx"), ((1, 1), "cov_yy"),
-                              ((2, 2), "cov_zz"), ((0, 1), "cov_xy"),
-                              ((0, 2), "cov_xz"), ((1, 2), "cov_yz")]:
-            assert abs(r[cname] - cov[a, b]) < 1e-6, (lv, cname)
-        # variances are non-negative; clipped boundary blocks are
-        # narrower along x than interior ones
-        assert r["cov_xx"] >= 0 and r["cov_yy"] >= 0 and r["cov_zz"] >= 0
-    assert set(got) == {int(v) for v in np.unique(lab)}
-
-
-def test_roi_stats_match_numpy(spark, sf_dir):
-    got = {r["label"]: r for r in
-           volume_roi_stats(spark, sf_dir).collect()}
-    (x0, x1), (y0, y1), (z0, z1) = ROI_BOX
-    xs, ys, zs = np.meshgrid(np.arange(x0, x1), np.arange(y0, y1),
-                             np.arange(z0, z1), indexing="ij")
-    lab = ((xs // SEG_BLOCK) * 16 + (ys // SEG_BLOCK) * 4
-           + (zs // SEG_BLOCK))
-    inten = (xs * 31 + ys * 7 + zs) % 256
-    for lv in np.unique(lab):
-        m = lab == lv
-        r = got[int(lv)]
-        assert r["n_voxels"] == int(m.sum())
-        assert abs(r["mean_intensity"]
-                   - inten[m].sum() / m.sum()) < 1e-9
-        assert r["min_i"] == int(inten[m].min())
-        assert r["max_i"] == int(inten[m].max())
-    assert set(got) == {int(v) for v in np.unique(lab)}
-    # intensities live in the uint8 domain
-    assert all(0 <= r["min_i"] <= r["max_i"] <= 255 for r in got.values())
-
 
 def _surface_python(a):
     """Brute-force per-label (in-volume differing faces, volume faces)."""
@@ -113,25 +60,3 @@ def test_label_surface_matches_numpy_when_blocks_misalign_chunks(
     want = _surface_python(a)
     assert got == want
     assert any(v[1] == 0 for v in want.values())   # interior labels exist
-
-
-def test_volume_label_sizes_matches_closed_form(spark, sf_dir):
-    import numpy as np
-    from bigarrays_jl_spark.operators.volume_seg import (
-        SEG_BLOCK, demo_seg_volume, volume_label_sizes)
-    # the distributed label stats equal a numpy groupby on the cutout
-    vol = demo_seg_volume(spark)
-    arr = vol[0:64, 0:64, 8:56]
-    got = {r["label"]: r for r in volume_label_sizes(spark, sf_dir).collect()}
-    labels, counts = np.unique(arr, return_counts=True)
-    assert set(got) == set(int(x) for x in labels)
-    for lab, cnt in zip(labels, counts):
-        r = got[int(lab)]
-        assert r["n_voxels"] == int(cnt)
-        xs, ys, zs = np.nonzero(arr == lab)
-        assert (r["x0"], r["x1"]) == (xs.min(), xs.max())
-        assert (r["y0"], r["y1"]) == (ys.min(), ys.max())
-        assert (r["z0"], r["z1"]) == (zs.min() + 8, zs.max() + 8)
-    # segmentation dtype flows as integers end-to-end
-    assert all(isinstance(r["label"], int) for r in got.values())
-    assert SEG_BLOCK == 16
