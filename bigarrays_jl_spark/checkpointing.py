@@ -1,18 +1,35 @@
 """Materialization switch: executor-local vs reliable checkpointing.
 
 Every lineage cut in the package is a call to ``materialize(df,
-eager=...)``:
+eager=...)``.  The cuts that remain are the ones a measurement showed
+to pay (the audit table is in CHANGES.md; each call in ``operators/``
+carries a one-line comment with what it saves, as
+``tools/profile_query.py`` counts it):
 
-- the global-ordering primitives (``operators/ordering.py``);
-- the tables that feed self-joins or several consumers: LSH signature
-  and bucket-key tables, k-NN and LSH edge tables, token, shingle and
-  histogram tables, the decoded ``map_cuts`` streams of the volume
-  operators;
-- one cut per round of the bounded-round loops: connected components
-  (``dedup.py``, ``volume_components.py``), agglomeration, label
-  propagation, shortest paths and hop counts, entity resolution;
+- the global-ordering primitives (``operators/ordering.py``), whose
+  driver-side probes read the materialized input;
+- the per-session k-NN edge table (``graph._knn_edges_cached``) that
+  four registry queries share;
+- tables that several legs consume where Catalyst does not reuse the
+  duplicate subplans (pruned to other columns, or under separate
+  subtrees): LSH signature, token and shingle tables, histograms that
+  feed several quantile picks, the brute-force ground truth of the ANN
+  audits, the decoded ``map_cuts`` streams of the volume operators;
+- the self-join inputs whose map work sits above the reused exchange,
+  so both join sides would run it: the LSH bucket keys
+  (``similarity.sim_lsh_pairs``) and the perceptual hashes
+  (``multimodal.mm_phash_neardup``);
+- cuts without which a consumer's optimized plan more than doubles;
+- the edge and label tables of the bounded-round loops, and one cut per
+  round: connected components (``dedup.py``,
+  ``volume_components.py``), agglomeration, label propagation, shortest
+  paths and hop counts, entity resolution;
 - the micro-batch tables of the ``foreachBatch`` bridges in
   ``streaming/``.
+
+A cut that saves no scan, job or measurable CPU and keeps no plan from
+doubling is deleted: when both sides of a self-join are one plan,
+Spark's exchange reuse already computes its input once.
 
 ``tests/test_single_decode_site.py`` fails on a ``.localCheckpoint(``
 or ``.checkpoint(`` call anywhere else in the package.
@@ -37,11 +54,14 @@ deletes each batch's files once its DataFrames are garbage-collected.
 
 Results are bit-identical in both modes (the switch changes WHERE the
 truncated-lineage blocks live, never their content), and
-``tests/test_reliable_checkpoint.py`` pins that for a consumer of each
-of 40 modules that call ``materialize``.  ``eager`` means the same in
+``tests/test_reliable_checkpoint.py`` pins that for a consumer of every
+module that calls ``materialize``.  ``eager`` means the same in
 both modes: ``eager=True`` materializes at construction (the ordering
 primitives run driver-side probes right after), ``eager=False`` defers
-to the first action (tables consumed by later self-joins).
+only the last stage to the first action: the call itself runs one job
+per shuffle stage of its input (Spark executes the adaptive plan up to
+its result stage to build the RDD it cuts), so a lazy cut still costs
+build-time jobs.
 
 The first call per Spark application and mode logs one INFO record on
 this module's logger, naming the mode and the checkpoint directory.

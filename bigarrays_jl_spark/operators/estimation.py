@@ -328,6 +328,7 @@ def _pair_minima(spark: SparkSession, sf: str):
     as (event_type, h) — ``_ranked_minima``, materialized once for both
     of its consumers — and every type pair (type_a < type_b) the sketch
     merges run over."""
+    # without it `sketch_union_distinct`'s optimized plan has 126 lines, not 30
     mins = materialize(_ranked_minima(_user_hashes(spark, sf))
                        .filter(F.col("rn") <= KMV_K)
                        .select("event_type", "h"), eager=False)
@@ -541,11 +542,7 @@ def events_hdr_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "events").select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("c"))
-    # the histogram feeds FOUR picks + the totals row; without the
-    # checkpoint each consumer re-runs the corpus scan + bucket fold
-    # (5 full event scans for one bounded ≤900-rows-per-key table —
-    # guide §2.4's "remove shuffles outright" on the repeated-subplan
-    # axis; ReuseExchange can't match across separate pick subtrees)
+    # without it `events_hdr_quantiles` runs 2 parquet scans, not 1
     hist = materialize(
         e.select("event_type", hdr_bucket_cents(F.col("c")).alias("lb"))
          .groupBy("event_type", "lb").agg(F.count("*").alias("n")),
@@ -648,9 +645,7 @@ def events_hdr_merge(spark: SparkSession, sf: str) -> DataFrame:
 
     s_even = sketch(e.filter(F.col("shard") == 0))
     s_odd = sketch(e.filter(F.col("shard") == 1))
-    # merged sketch feeds THREE picks + totals — materialize once so
-    # the two shard scans of events run once, not 4× (same repeated-
-    # subplan fix as events_hdr_quantiles above)
+    # without it `events_hdr_merge` runs 4 parquet scans, not 2
     merged = materialize(
         s_even.unionByName(s_odd)
               .groupBy("event_type", "lb")
@@ -743,7 +738,7 @@ def cm_sketch_of(grams: DataFrame) -> DataFrame:
 
 
 def cm_heavyhitters(spark: SparkSession, sf: str) -> DataFrame:
-    exact = materialize(gram_counts(spark, sf), eager=False)
+    exact = gram_counts(spark, sf)
     sketch = cm_sketch_of(exact)
     top = (exact.orderBy(F.col("n").desc(), "gram").limit(CM_TOPK)
            .select("gram", F.col("n").alias("exact_n")))

@@ -77,8 +77,8 @@ SELECT window_start, count(*) AS n_events FROM (
 def sessionized(e: DataFrame) -> DataFrame:
     """``e`` (needs user_id, ts, event_id) plus a per-user
     ``session_id`` via the 30-minute gaps-and-islands canon — THE
-    sessionization shared by events_sessionize and session_bounce_rate
-    (round13b.py); one definition so the operators can't drift."""
+    sessionization shared by events_sessionize and
+    events.session_bounce_rate; one definition so the operators can't drift."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     new_session = F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60), 1).otherwise(0)

@@ -759,6 +759,7 @@ def text_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
                         F.element_at(t, i).alias("w1"),
                         F.element_at(t, i + 1).alias("w2")))
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    # without it `text_bigram_logprob` runs 2 parquet scans, not 1
     pairs = materialize(
         d.select("doc_id", F.explode(bigr).alias("p"))
          .select("doc_id", F.col("p.w1").alias("w1"),
@@ -1250,8 +1251,9 @@ FROM tok GROUP BY source
 
 def events_rolling_dau(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "events")
+    # without it `events_rolling_dau` runs 2 parquet scans, not 1
     du = materialize(e.select(F.to_date("ts").alias("day"), "user_id")
-                     .distinct(), eager=False)  # reused by both aggregates
+                     .distinct(), eager=False)
     days = du.select("day").distinct()
     dau = du.groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
     rolling = (du.join(F.broadcast(days.select(F.col("day").alias("d"))),

@@ -140,6 +140,7 @@ def _knn_edges_cached(spark: SparkSession, sf: str) -> DataFrame:
         # stale DataFrame handles (and pin their lineage) forever
         for k in [k for k in _EDGE_CACHE if k[0] != app]:
             del _EDGE_CACHE[k]
+        # without it `graph_pagerank`'s optimized plan has 407 lines, not 84
         df = materialize(_knn_edges(spark, sf), eager=True)
         _EDGE_CACHE[key] = df
     return df
@@ -281,11 +282,10 @@ def graph_triangle_stats(spark: SparkSession, sf: str) -> DataFrame:
     UNDIRECTED k-NN graph (how clique-ish the similarity structure is —
     high clustering means near-dup regions form tight blobs), over the
     canonicalized edges (a < b)."""
-    und = materialize(
-        _knn_edges_cached(spark, sf)
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct(), eager=True)  # reused by 3 joins + degrees
+    und = (_knn_edges_cached(spark, sf)
+           .select(F.least("src", "dst").alias("a"),
+                   F.greatest("src", "dst").alias("b"))
+           .distinct())
     return _triangle_stats(und)
 
 
@@ -356,6 +356,7 @@ def _lsh_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Directed symmetrization (src, dst) of the LSH similarity pairs,
     materialized once for the iteration loop."""
     p = sim_lsh_pairs(spark, sf).select("vec_a", "vec_b")
+    # without it `graph_hops_lsh` runs 26 Spark jobs, not 25
     return materialize(
         p.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
          .unionAll(p.select(F.col("vec_b").alias("src"),
@@ -381,11 +382,7 @@ def graph_pagerank_lsh(spark: SparkSession, sf: str) -> DataFrame:
     edges = _lsh_edges(spark, sf)
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     n = deg.agg(F.count("*").cast("double").alias("n"))
-    # base is referenced once per unrolled iteration (N_ITER + 1 plan
-    # occurrences) — materialize the node-sized table once so the deg
-    # groupBy + count agg don't re-run per iteration in the one big
-    # lineage (the checkpointed edges table only deduped edge
-    # DISCOVERY, not this aggregate)
+    # without it `graph_pagerank_lsh`'s optimized plan has 79 lines, not 37
     base = materialize(
         deg.select(F.col("src").alias("vec_id"), "deg")
            .crossJoin(F.broadcast(n)), eager=False)
@@ -452,6 +449,7 @@ def graph_triangles_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Triangle count + global clustering of the LSH similarity graph
     (pairs already canonical a < b, so each triangle appears once as
     a < b < c via the standard two-shuffle wedge join)."""
+    # without it `graph_triangles_lsh`'s optimized plan has 65 lines, not 20
     und = materialize(sim_lsh_pairs(spark, sf).select(
         F.col("vec_a").alias("a"), F.col("vec_b").alias("b")), eager=True)
     return _triangle_stats(und)
@@ -624,6 +622,7 @@ def graph_sssp_lsh(spark: SparkSession, sf: str) -> DataFrame:
         "vec_a", "vec_b",
         (F.round((F.lit(1.0) - F.col("cosine")) * VQ).cast("bigint")
          + 1).alias("w"))
+    # without it `graph_sssp_lsh` runs 25 Spark jobs, not 24
     edges = materialize(
         p.select(F.col("vec_a").alias("src"),
                  F.col("vec_b").alias("dst"), "w")

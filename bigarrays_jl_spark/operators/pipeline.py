@@ -59,6 +59,7 @@ DECON_NGRAM = 8
 
 def pipeline_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents").select("doc_id", tokens().alias("t"))
+    # without it `pipeline_decontaminate` runs 2 parquet scans, not 1
     arr = materialize(d.select("doc_id", F.array_distinct(
         shingle_array("t", DECON_NGRAM)).alias("ss")), eager=False)
     ev = (arr.filter(F.col("doc_id") % 10 == 0)
@@ -398,7 +399,8 @@ def cross_source_leakage(spark: SparkSession, sf: str) -> DataFrame:
     # fan_out: the 8-gram md5 shingling is CPU-heavy map work on a
     # single-split scan (q01 treatment); the streaming twin shares
     # doc_shingles unchanged — its micro-batches are already parallel
-    sp = materialize(                    # sizes + pair join reuse
+    # without it `cross_source_leakage` runs 9 Spark jobs, not 8
+    sp = materialize(
         doc_shingles(fan_out(spark, load(spark, sf, "documents")
                              .select("source", "text"))), eager=False)
     return leakage_matrix(sp)
@@ -592,18 +594,19 @@ BLOOM_M = 131072           # 2^17 bits = 16 KB bitset
 def bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     from bigarrays_jl_spark.functions.expressions import tokens
     d = load(spark, sf, "documents").select("doc_id", tokens().alias("t"))
-    arr = materialize(                   # eval + train legs reuse
+    # without it `bloom_decontaminate` runs 2 parquet scans, not 1
+    arr = materialize(
         d.select("doc_id", F.array_distinct(
             shingle_array("t", DECON_NGRAM)).alias("ss")), eager=False)
-    ev = materialize(                    # bitset + exact-audit legs
+    # without it `bloom_decontaminate` runs 12 Spark jobs, not 11
+    ev = materialize(
         arr.filter(F.col("doc_id") % 10 == 0)
         .select(F.explode("ss").alias("s")).distinct(), eager=False)
     jarr = F.array(*[F.lit(j) for j in range(BLOOM_K)])
     bits = (ev.select(F.explode(jarr).alias("j"), "s")
             .select("j", bloom_bit_col().alias("bit")).distinct())
-    tr = materialize(                    # screen + audit legs
-        arr.filter(F.col("doc_id") % 10 != 0)
-        .select("doc_id", F.explode("ss").alias("s")), eager=False)
+    tr = (arr.filter(F.col("doc_id") % 10 != 0)
+          .select("doc_id", F.explode("ss").alias("s")))
     n_pos = bloom_screen_counts(tr, bits)
     exact = tr.join(ev, "s", "left_semi")
     n_ex = (exact.groupBy("doc_id")
@@ -661,7 +664,7 @@ def bloom_screen_counts(tr_grams: DataFrame, bits: DataFrame) -> DataFrame:
 def _bloom_survivors(tr_grams: DataFrame, bits: DataFrame) -> DataFrame:
     """The K chained broadcast semi-probes shared by the count screen
     above and _bloom_positive_grams' gram-emitting screen."""
-    # one evaluation of the (distinct) bitset feeds K broadcast builds
+    # without it `bloom_decontaminate` runs 13 Spark jobs, not 11
     bset = materialize(bits.select("j", "bit").distinct(), eager=False)
     surv = tr_grams.select("doc_id", "s")
     for j in range(BLOOM_K):
@@ -726,25 +729,20 @@ def _curated_survivors(spark: SparkSession, sf: str) -> DataFrame:
     the packer's eager prefix-sum checkpoint would otherwise hide."""
     docs = load(spark, sf, "documents").select("doc_id", "text")
     # stage 1: Gopher quality gate over the TRAINING split (the eval
-    # split is the external benchmark set, never curated).  Gated docs
-    # materialize once: both stage-2 branches (the digest agg and the
-    # semi-join's left side) consume q, and without the checkpoint each
-    # branch re-runs the scan + the regex-heavy gate (§1.2 "don't
-    # compute things you throw away" — the shuffle stays digest-only
-    # either way, the payload never moves).
+    # split is the external benchmark set, never curated).
     g = _gopher_metrics(F.col("text"))
+    # without it `pipeline_e2e_curate` runs 3 parquet scans, not 2
     q = materialize(
         docs.filter((F.col("doc_id") % 10 != 0) & g["gopher_pass"]),
         eager=False)
     # stage 2: exact dedup — min-doc_id representative per text digest
     keep = (q.groupBy(F.md5("text").alias("fp"))
             .agg(F.min("doc_id").alias("doc_id")))
-    kept = materialize(q.join(keep.select("doc_id"), "doc_id",
-                              "left_semi"),
-                       eager=False)        # gram screen + packer reuse
+    kept = q.join(keep.select("doc_id"), "doc_id", "left_semi")
     # stage 3: decontamination — eval 8-gram set -> Bloom bitset ->
     # map-side screen -> exact semi-join on bloom-positives only
-    ev = materialize(                    # bitset + verify
+    # without it `pipeline_e2e_curate` runs 3 parquet scans, not 2
+    ev = materialize(
         docs.filter(F.col("doc_id") % 10 == 0).select(tokens().alias("t"))
         .select(F.explode(F.array_distinct(
             shingle_array("t", DECON_NGRAM))).alias("s"))

@@ -60,11 +60,7 @@ BM25_B = 0.75
 
 
 def text_bm25(spark: SparkSession, sf: str) -> DataFrame:
-    # tokenization is the dominant map cost and BOTH consumers need it
-    # (corpus stats over dl; term frequencies over the explode) — one
-    # lazy materialization instead of re-tokenizing per consumer (the
-    # dedup._bands signature-table canon; plan audit showed 3 corpus
-    # scans without it)
+    # without it `text_bm25` runs 3 parquet scans, not 1
     d = materialize(
         load(spark, sf, "documents")
         .select("doc_id", _toks().alias("t"))
@@ -243,6 +239,7 @@ WHERE levenshtein(a.name, b.name) <= {FUZZY_MAX_DIST}
 
 def phrase_search(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents")
+    # without it `phrase_search` runs 4 parquet scans, not 1
     idx = materialize(
         docs.select("doc_id",
                     F.posexplode(_toks("text"))
@@ -409,11 +406,12 @@ ER_MAX_ROUNDS = 20
 
 def entity_res_golden(spark: SparkSession, sf: str) -> DataFrame:
     pairs = fuzzy_name_pairs(spark, sf).select("name_a", "name_b")
+    # without it `entity_res_golden` runs 12 parquet scans, not 2
     edges = materialize(pairs.union(pairs.select(
         F.col("name_b").alias("name_a"), F.col("name_a").alias("name_b")))
         .toDF("src", "dst"), eager=True)
-    labels = materialize(edges.select(F.col("src").alias("node")).distinct()
-                         .withColumn("label", F.col("node")), eager=True)
+    labels = (edges.select(F.col("src").alias("node")).distinct()
+              .withColumn("label", F.col("node")))
     changed = None
     for _ in range(ER_MAX_ROUNDS):
         # the convergence check rides the SAME shuffle as the label
@@ -477,7 +475,8 @@ def retrieval_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings").select("vec_id", "embedding")
     q = (e.filter(F.col("vec_id") == MMR_PROBE)
          .select(F.col("embedding").alias("qe")))
-    cand = materialize(                       # reused by sims + cogroup
+    # without it `retrieval_mmr_rerank` runs 4 parquet scans, not 2
+    cand = materialize(
         e.filter(F.col("vec_id") != MMR_PROBE)
         .crossJoin(F.broadcast(q))
         .select("vec_id", "embedding",

@@ -224,10 +224,7 @@ def sim_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # pairs that collide in several bands before the exact-cosine verify.
     e = (fan_out(spark, load(spark, sf, "embeddings"))
          .withColumn("bits", F.expr(_BITS_SPARK)))
-    # materialize the bucket-key table once (lazy): both self-join
-    # sides consume it, and the 48-plane sign projection is the
-    # dominant map cost — same signature-table pattern and
-    # fault-tolerance caveat as dedup._bands
+    # without it both join sides explode the band keys (1.4 → 2.0 s CPU)
     keys = materialize(
         e.select("vec_id", "embedding", F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"), _band_key(b).alias("bkey"))
@@ -306,7 +303,7 @@ def _ivf_routed(spark: SparkSession, sf: str, nprobe: int,
     cell), letting one max-nprobe scan serve every smaller-nprobe leg of
     a recall sweep: a vector belongs to exactly one cell, so filtering
     the scored candidates on ``r <= nprobe`` reproduces the smaller
-    leg's candidate set exactly (round16.ann_ivfpq_recall_audit)."""
+    leg's candidate set exactly (similarity.ann_ivfpq_recall_audit)."""
     e = load(spark, sf, "embeddings")
     # coarse quantizer: per-label elementwise-mean centroid (two-level
     # reduction — the same plan shape a k-means E-step emits at scale)
@@ -455,12 +452,10 @@ def _kmeans_fit(spark: SparkSession, sf: str,
     rounds — shared by the cell-stats query and the composed IVF
     search.  Defaults are the oracle-paired demo config; tests pass a
     production-shaped ``k_cells`` to grade recall on structured data."""
-    # reused every Lloyd's round (and by both callers' final assign) —
-    # one materialization, as _pq_fit already does for its subvectors
-    # fan_out before the checkpoint: each Lloyd's assign below is a
-    # broadcast join + k_cells 64-dim L2 evals per row — CPU-heavy
-    # map work that would otherwise run on the source's ONE split for
-    # every round (§2.5); the checkpoint pins the fanned layout
+    # fan_out: each Lloyd's assign below is a broadcast join + k_cells
+    # 64-dim L2 evals per row — CPU-heavy map work that would otherwise
+    # run on the source's ONE split for every round (§2.5)
+    # without it `ann_ivf_kmeans_topk` runs 4 parquet scans, not 1
     e = materialize(
         fan_out(spark, load(spark, sf, "embeddings"))
         .select("vec_id", "embedding"), eager=False)
@@ -497,8 +492,8 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf: str,
     query to its nearest fitted k-means centroid and scan only that
     cell's members — what ann_ivf_topk does with the ready-made label
     column, now over cells this engine itself fitted."""
-    # the fitted assignment feeds both the query side and the cell scan
     final, cent = _kmeans_fit(spark, sf, k_cells, iters)
+    # without it `ann_ivf_kmeans_topk`'s optimized plan has 127 lines, not 51
     final = materialize(final, eager=False)
     q = (final.filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")))
@@ -822,16 +817,13 @@ def _pq_fit(spark: SparkSession, sf: str,
     Lloyd chain across the codes/LUT branches, so the checkpoint only
     added a persist round trip.)"""
     if sub is None:
-        # fan_out before the subvector split + checkpoint: the
-        # normalize/slice expansion AND every Lloyd's assign (broadcast
-        # join + pq_k L2 evals per subvector row) are CPU-heavy map
-        # work on a single-split local source (§2.5); the checkpoint
-        # pins the fanned layout for all rounds
+        # fan_out before the subvector split: the normalize/slice
+        # expansion AND every Lloyd's assign (broadcast join + pq_k L2
+        # evals per subvector row) are CPU-heavy map work on a
+        # single-split local source (§2.5)
         e = (fan_out(spark, load(spark, sf, "embeddings"))
              .select("vec_id", "embedding"))
-        # reused every round — and shareable ACROSS fits: the subvector
-        # table depends only on pq_m, so a codebook-size sweep
-        # (ann_pq_recall_knee) passes one table to every leg
+        # without it `ann_pq_topk` runs 4 parquet scans, not 1
         sub = materialize(_pq_sub(e, pq_m), eager=False)
     cent = (sub.filter(F.col("vec_id") < pq_k)
             .select("s", F.col("vec_id").alias("cell"),
@@ -1187,6 +1179,7 @@ SIM_WINDOW_CAP = 8
 def set_sim_join(spark: SparkSession, sf: str,
                  window_cap: int | None = SIM_WINDOW_CAP) -> DataFrame:
     docs = load(spark, sf, "documents")
+    # without it `set_sim_join` runs 3 parquet scans, not 1
     tok_all = materialize(docs.select(
         "doc_id", F.explode(_tokens("text")).alias("token")).distinct(),
         eager=False)
@@ -1197,8 +1190,7 @@ def set_sim_join(spark: SparkSession, sf: str,
     fam = (setfp.groupBy("fp")
            .agg(F.min("doc_id").alias("doc_id"),
                 F.count("*").cast("bigint").alias("n_same_set")))
-    tok = materialize(                  # prefix + verify legs reuse
-        tok_all.join(fam.select("doc_id"), "doc_id", "left_semi"), eager=False)
+    tok = tok_all.join(fam.select("doc_id"), "doc_id", "left_semi")
     df = tok.groupBy("token").agg(F.count("*").alias("df"))
     w = W.partitionBy("doc_id").orderBy("df", "token")
     r = (tok.join(df, "token")
@@ -1373,6 +1365,7 @@ def emb_covariance(spark: SparkSession, sf: str) -> DataFrame:
                         [G[iu], XI.sum(axis=0), [XI.shape[0]]])}
             yield _pd.DataFrame(rows)
 
+    # without it `emb_covariance` runs 3 parquet scans, not 1
     stream = materialize(
         e.mapInPandas(gram, schema="i int, j int, v long"), eager=False)
     sxy = (stream.filter(F.col("j") >= 0)
@@ -1500,6 +1493,7 @@ ORDER BY score DESC, vec_id LIMIT {OUTLIER_TOPK}
 
 def ann_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window as W
+    # without it `ann_recall_audit` runs 7 parquet scans, not 5
     brute = materialize(
         ann_cosine_topk(spark, sf).select("qid", "vec_id"), eager=False)
     qids = brute.select("qid").distinct()
@@ -1524,6 +1518,7 @@ def ann_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
               .withColumn("c1", F.sum(F.when(F.col("r") <= 1, 1)
                                       .otherwise(0)).over(w))
               .withColumn("c2", F.sum(F.lit(1)).over(w)))
+    # without it `ann_recall_audit` runs 6 parquet scans, not 5
     ann = materialize(
         scored.join(brute.withColumn("bhit", F.lit(1)),
                     ["qid", "vec_id"], "left"), eager=False)
@@ -1582,6 +1577,7 @@ IVFPQ_NPROBES = (1, 2, 4)
 
 def ann_ivfpq_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window as W
+    # without it `ann_ivfpq_recall_audit` runs 8 parquet scans, not 6
     brute = materialize(
         ann_cosine_topk(spark, sf).select("qid", "vec_id"), eager=False)
     qids = brute.select("qid").distinct()
@@ -1608,6 +1604,7 @@ def ann_ivfpq_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
         scored = scored.withColumn(
             f"c{np_}",
             F.sum(F.when(F.col("r") <= np_, 1).otherwise(0)).over(w))
+    # without it `ann_ivfpq_recall_audit`'s optimized plan has 103 lines, not 11
     ann = materialize(
         scored.join(brute.withColumn("bhit", F.lit(1)),
                     ["qid", "vec_id"], "left"), eager=False)
@@ -1729,6 +1726,7 @@ def ann_pq_recall_knee(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window as W
     from bigarrays_jl_spark.functions import dot as _dot
     from bigarrays_jl_spark.sources.tables import fan_out, load
+    # without it `ann_pq_recall_knee` runs 5 parquet scans, not 3
     brute = materialize(
         ann_cosine_topk(spark, sf).select("qid", "vec_id"), eager=False)
     # the per-qid fold the first cut ran per leg (groupBy qid + left
@@ -1738,9 +1736,8 @@ def ann_pq_recall_knee(spark: SparkSession, sf: str) -> DataFrame:
     # row) and each leg collapses to a single count over its semi-join:
     # 2 shuffles/leg fewer, value-identical (sum of per-qid hit counts
     # == total hit count; count of coalesced rows == distinct qids).
-    nq = materialize(
-        brute.select("qid").distinct()
-        .agg(F.count("*").cast("bigint").alias("n_queries")), eager=False)
+    nq = (brute.select("qid").distinct()
+          .agg(F.count("*").cast("bigint").alias("n_queries")))
 
     # ONE subvector table for every leg (it depends only on pq_m, not
     # the swept codebook size) — and since the legs differ ONLY in the
@@ -1761,6 +1758,7 @@ def ann_pq_recall_knee(spark: SparkSession, sf: str) -> DataFrame:
     # subvector row) that must not run on one task
     e = fan_out(spark, load(spark, sf, "embeddings")).select(
         "vec_id", "embedding")
+    # without it `ann_pq_recall_knee` runs 8 parquet scans, not 3
     sub = materialize(_pq_sub(e), eager=False)
 
     # seeded init per leg: vectors 0..pk-1, tagged with their leg key

@@ -106,14 +106,13 @@ MIN_PAIR_SUP = 2
 def basket_pairs(spark: SparkSession, sf: str) -> DataFrame:
     li = (load(spark, sf, "lineitem")
           .select("l_orderkey", "l_partkey").distinct())
-    # freq is consumed three times (the semi-join prune + both lift
-    # joins); each broadcast build re-ran the corpus distinct+groupBy
-    # without this materialization (item-domain-sized, tiny)
+    # without it `basket_pairs` runs 3 parquet scans, not 2
     freq = materialize(
         li.groupBy("l_partkey")
           .agg(F.count("*").alias("item_sup"))
           .filter(F.col("item_sup") >= MIN_ITEM_SUP),
         eager=False)
+    # without it `basket_pairs` runs 3 parquet scans, not 2
     li2 = materialize(li.join(F.broadcast(freq.select("l_partkey")),
                               "l_partkey", "semi"), eager=False)
     n = li2.select("l_orderkey").distinct().agg(
@@ -428,9 +427,7 @@ def q70_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
          .alias("cents")))
-    # h1 feeds BOTH the median and the deviation histogram —
-    # ReuseExchange won't match column-pruned duplicate subplans, so
-    # checkpoint the aggregate once (the q50/text_bm25 idiom)
+    # without it `q70_mad_outliers` runs 3 parquet scans, not 1
     h1 = materialize(li.groupBy("l_returnflag", "cents")
                      .agg(F.count("*").alias("w")), eager=False)
     med = _lower_median(h1, "l_returnflag", "cents", "w", "med")
@@ -541,10 +538,8 @@ def q71_quantile_screen(spark: SparkSession, sf: str) -> DataFrame:
     # instead of raw elements — one n×64-row explode+shuffle instead
     # of two (el previously fed hist AND the join as separate
     # evaluations), and the join side is the (smaller) cell table
-    # (guide §2.3 "aggregate before you shuffle").  The checkpoint on
-    # elc matters: ReuseExchange does NOT match its two consumers
-    # (A/B: 2.5 s unmaterialized vs 1.2 s with it), and the cell table
-    # is value-domain × label bounded, never corpus-sized.
+    # (guide §2.3 "aggregate before you shuffle").
+    # without it `q71_quantile_screen` runs 3 parquet scans, not 2
     elc = materialize(
         el.groupBy("label", "i", "xi").agg(F.count("*").alias("v")),
         eager=False)
@@ -606,6 +601,7 @@ def q72_winsorized_mean(spark: SparkSession, sf: str) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
          .alias("cents")))
+    # without it `q72_winsorized_mean` runs 2 parquet scans, not 1
     hist = materialize(li.groupBy("l_returnflag", "cents")
                        .agg(F.count("*").alias("w")), eager=False)
     # both fences ride ONE shared pick chain (r18: the per-pick form
@@ -795,6 +791,7 @@ FROM cls GROUP BY 1
 
 
 def q79_mutual_info(spark: SparkSession, sf: str) -> DataFrame:
+    # without it `q79_mutual_info` runs 2 parquet scans, not 1
     el = materialize(
         load(spark, sf, "embeddings")
         .select("label", F.posexplode("embedding").alias("i", "x"))
@@ -967,13 +964,12 @@ def q81_cuped(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "events").select(
         "user_id", "event_type",
         _vi().alias("vi"))
-    u = materialize(
-        e.groupBy("user_id")
-        .agg(F.sum(F.when(F.col("event_type") == "view", F.col("vi"))
-                    .otherwise(0)).alias("x"),
-             F.sum(F.when(F.col("event_type") == "purchase",
-                          F.col("vi")).otherwise(0)).alias("y"))
-        .withColumn("arm", F.col("user_id") % 2), eager=False)
+    u = (e.groupBy("user_id")
+         .agg(F.sum(F.when(F.col("event_type") == "view", F.col("vi"))
+                     .otherwise(0)).alias("x"),
+              F.sum(F.when(F.col("event_type") == "purchase",
+                           F.col("vi")).otherwise(0)).alias("y"))
+         .withColumn("arm", F.col("user_id") % 2))
     g = u.agg(F.count("*").cast("double").alias("n"),
               F.sum(F.col("x").cast("decimal(38,0)"))
                .cast("double").alias("sx"),
@@ -1131,6 +1127,7 @@ def q83_seasonal_backtest(spark: SparkSession, sf: str) -> DataFrame:
         "event_type",
         _day().alias("day"),
         _vi().alias("vi"))
+    # without it `q83_seasonal_backtest` runs 2 parquet scans, not 1
     daily = materialize(e.groupBy("event_type", "day")
                         .agg(F.sum("vi").alias("rev")), eager=False)
     fc = daily.select("event_type",
@@ -1360,6 +1357,7 @@ def q86_kaplan_meier(spark: SparkSession, sf: str) -> DataFrame:
          .select("user_id", "event_id", _day().alias("day")))
     horizon = e.agg(F.max("day").alias("h"))
     w = W.partitionBy("user_id").orderBy("day", "event_id")
+    # without it `q86_kaplan_meier` runs 5 parquet scans, not 2
     lif = materialize(
         e.withColumn("nxt", F.lead("day").over(w))
         .crossJoin(F.broadcast(horizon))
@@ -1449,6 +1447,7 @@ def q87_autocorr(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "events").select(
         "event_type", _day().alias("day"),
         _vi().alias("vi"))
+    # without it `q87_autocorr` runs 2 parquet scans, not 1
     daily = materialize(e.groupBy("event_type", "day")
                         .agg(F.sum("vi").alias("rev")), eager=False)
     prev = daily.select("event_type",
@@ -1521,6 +1520,7 @@ def q88_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.col("value").cast("double") * 100)
          .cast("bigint").alias("cents"))
     p = e.filter(F.col("event_type") == "purchase")
+    # without it `q88_cohort_ltv` runs 3 parquet scans, not 2
     first = materialize(
         p.groupBy("user_id")
         .agg(F.min("day").alias("cday"))
@@ -1857,7 +1857,8 @@ def ks_two_sample(spark: SparkSession, sf: str) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
         .alias("cents"))
-    hist = materialize(                  # CDF merge + totals reuse
+    # without it `ks_two_sample` runs 3 parquet scans, not 1
+    hist = materialize(
         li.groupBy("cents")
         .agg(F.sum(F.when(F.col("l_returnflag") == "R", 1)
                    .otherwise(0)).alias("w1"),
@@ -2324,9 +2325,7 @@ def leadtime_quantiles(spark: SparkSession, sf: str) -> DataFrame:
         "o_orderkey", "o_orderdate", "o_orderpriority")
     days = F.datediff(F.col("l_shipdate").cast("date"),
                       F.col("o_orderdate").cast("date"))
-    # hist feeds two picks + the totals row — materialize once, or the
-    # lineitem⋈orders join + day fold runs 3× (the q70/q72 checkpoint
-    # idiom; the day domain is ~120 cells so the checkpoint is tiny)
+    # without it `leadtime_quantiles` runs 4 parquet scans, not 2
     hist = materialize(
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
           .select("o_orderpriority", days.alias("d"))
@@ -2380,6 +2379,7 @@ def basket_triples(spark: SparkSession, sf: str) -> DataFrame:
                   F.col("p_brand").alias("p")).distinct())
     freq = (li.groupBy("p").agg(F.count("*").alias("s"))
             .filter(F.col("s") >= MIN_ITEM_SUP).select("p"))
+    # without it `basket_triples`'s optimized plan has 126 lines, not 31
     li2 = materialize(li.join(F.broadcast(freq), "p", "semi"), eager=False)
     a = li2.select("o", F.col("p").alias("pa"))
     b = li2.select("o", F.col("p").alias("pb"))
@@ -2565,7 +2565,8 @@ def lorenz_curve(spark: SparkSession, sf: str) -> DataFrame:
            .groupBy("o_custkey")
            .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
                  .alias("rev_c")))
-    hist = materialize(                  # cum pass + totals reuse
+    # without it `lorenz_curve` runs 2 parquet scans, not 1
+    hist = materialize(
         rev.groupBy("rev_c").agg(F.count("*").alias("nc")), eager=False)
     h = bucketed_running(
         hist, "rev_c",

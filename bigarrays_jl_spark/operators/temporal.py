@@ -623,9 +623,7 @@ def customer_reorder_gaps(spark: SparkSession, sf: str) -> DataFrame:
                     .alias("gap_days")))
     seg = load(spark, sf, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
-    # hist feeds two picks + totals — materialize once or the lag
-    # window + segment join re-run 3× (the quantile-caller checkpoint
-    # idiom; the (segment, gap) domain is tiny)
+    # without it `customer_reorder_gaps` runs 4 parquet scans, not 2
     hist = materialize(
         gaps.join(seg, "o_custkey")
             .groupBy("c_mktsegment", "gap_days")

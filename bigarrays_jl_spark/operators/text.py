@@ -384,9 +384,7 @@ FROM q
 
 def text_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents")
-    # materialized once (lazy): the exploded token table feeds BOTH the
-    # frequency aggregation and the per-doc join — without this the
-    # corpus scan+explode runs twice (same discipline as dedup sh_all)
+    # without it `text_unigram_logprob` runs 2 parquet scans, not 1
     toks = materialize(
         d.select("doc_id", F.explode(_toks()).alias("term")), eager=False)
     tf = toks.groupBy("term").agg(F.count("*").alias("tf"))
@@ -588,11 +586,7 @@ def text_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
             .select("doc_id",
                     F.explode(F.split(F.trim(F.lower(F.col("text"))),
                                       r"\s+")).alias("term")))
-    # THREE consumers need the term-frequency table (df, n_docs, the
-    # scoring join) — without the checkpoint each one re-tokenized the
-    # corpus, and the vocab-sized df table shuffle-joined the postings
-    # (r13: the sf1 proof read 7.5× on exactly those two defects; the
-    # bm25 sibling with the checkpoint+broadcast shape reads 1.9×)
+    # without it `text_tfidf_topk` runs 3 parquet scans, not 1
     tf = materialize(toks.groupBy("doc_id", "term")
                      .agg(F.count("*").alias("tf")), eager=False)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))

@@ -67,12 +67,7 @@ def _elig_costs(spark: SparkSession, sf: str) -> DataFrame:
           .groupBy(F.col("l_partkey").alias("p"),
                    F.col("l_suppkey").alias("sk"))
           .agg(F.min("unit").alias("cost")))
-    # materialize ONCE (lazy): both the winner join and the per-part
-    # min derive from this relation, and the column-pruned subplans
-    # differ enough that Catalyst's ReuseExchange does NOT match them —
-    # without this the lineitem scan + (part, supplier) aggregate run
-    # TWICE (verified in the physical plan).  Same signature-table
-    # pattern and fault-tolerance caveat as dedup._bands.
+    # without it `q50_min_cost_supplier` runs 7 parquet scans, not 5
     return materialize(
         ps.join(F.broadcast(s), ps.sk == s.s_suppkey).drop("sk"), eager=False)
 
@@ -116,8 +111,7 @@ WHERE p.p_type = '{Q50_TYPE}' AND p.p_size <= {Q50_MAX_SIZE}
 def q51_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q15: supplier(s) with the maximum quarterly revenue —
     agg-of-agg view + scalar-max equality."""
-    # view consumed twice (global max + winner filter);
-    # materialize once — see _elig_costs
+    # without it `q51_top_supplier` runs 3 parquet scans, not 2
     rev = materialize(
         load(spark, sf, "lineitem")
         .filter((F.col("l_shipdate") >= Q51_DATE_LO)

@@ -49,8 +49,7 @@ def q53_important_parts(spark: SparkSession, sf: str) -> DataFrame:
     s = (load(spark, sf, "supplier")
          .filter(F.col("s_nationkey") % Q53_NATION_MOD == Q53_NATION_REM)
          .select("s_suppkey"))
-    # the scalar-subquery threshold re-aggregates this SAME
-    # relation; materialize once — see tpch_deep._elig_costs
+    # without it `q53_important_parts`'s optimized plan has 23 lines, not 8
     v = materialize(
         load(spark, sf, "lineitem")
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))

@@ -134,6 +134,7 @@ def volume_stencil_smooth(spark: SparkSession, sf: str) -> DataFrame:
     volume: n_vox, the lcm-scaled integer sum, and the mean smoothed
     value (one division at output)."""
     vol = demo_volume(spark)
+    # without it `volume_stencil_smooth` runs 2 parquet scans, not 1
     stream = materialize(_stencil_stream(vol, BOX), eager=False)
     inner = (stream.filter(F.col("kind") == 0)
              .groupBy("z")

@@ -324,3 +324,15 @@ def test_streaming_cm_snapshot_replay_and_merge(spark, sf_dir, tmp_path):
         outs.append(o)
     got = {tuple(r) for r in cm_merge_snapshot(spark, outs).collect()}
     assert got == want and len(want) > 0
+
+
+def test_cm_heavyhitters_counts_grams_once(spark, sf_dir):
+    # the top-k probes and the sketch both read one gram-count
+    # aggregate: one documents scan, and the other side reads that
+    # aggregate's exchange (a ReusedExchange) instead of scanning again
+    from bigarrays_jl_spark.plans.explain import formatted_plan
+    from tools.profile_query import plan_node_counts
+    df = cm_heavyhitters(spark, sf_dir)
+    df.collect()
+    c = plan_node_counts(formatted_plan(df))
+    assert c["parquet_scans"] == 1 and c["reused_exchanges"] >= 1, c

@@ -17,12 +17,17 @@ def test_welch_is_one_conditional_pass(spark, sf_dir):
 
 
 def test_cuped_reads_rollup_not_facts_twice(spark, sf_dir):
-    """The θ moments and the arm means must consume the CACHED per-user
-    rollup; the single-row moment table broadcasts back."""
-    plan = simple_plan(q81_cuped(spark, sf_dir))
+    """The θ moments and the arm means must consume ONE per-user rollup;
+    the single-row moment table broadcasts back."""
+    df = q81_cuped(spark, sf_dir)
+    df.collect()
+    plan = simple_plan(df).split("== Initial Plan ==")[0]
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    # the fact scan happens once; both consumers read the checkpoint
+    # the final adaptive plan scans the facts once; the second consumer
+    # reads the rollup's exchange (a ReusedExchange), which only the
+    # final plan shows
     assert plan.count("Scan parquet") <= 1
+    assert "ReusedExchange" in plan
     assert "CartesianProduct" not in plan
 
 

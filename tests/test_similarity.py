@@ -113,3 +113,18 @@ def test_ann_recall_audit_matches_naive_legs(spark, sf_dir):
                        round(r.mean_recall, 12), r.min_recall)
            for r in ann_recall_audit(spark, sf_dir).collect()}
     assert got == want
+
+
+def test_set_sim_join_reads_documents_only_through_the_token_cut(spark,
+                                                                 sf_dir):
+    # the representative-token table has no cut of its own: every leg
+    # (df, prefix, both verify sides) re-derives it from the token cut,
+    # so the executed plan scans no parquet, and the family semi-join's
+    # build side is one exchange that the other legs reuse
+    from bigarrays_jl_spark.operators.similarity import set_sim_join
+    from bigarrays_jl_spark.plans.explain import formatted_plan
+    from tools.profile_query import plan_node_counts
+    df = set_sim_join(spark, sf_dir)
+    df.collect()
+    c = plan_node_counts(formatted_plan(df))
+    assert c["parquet_scans"] == 0 and c["reused_exchanges"] >= 1, c
