@@ -87,7 +87,15 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage by materializing it — executor-local by
     default, reliable storage when ``sparkgraft.checkpoint.reliable`` is
     true (requires ``setCheckpointDir``; raises a clear error instead of
-    Spark's late NPE if the directory is missing)."""
+    Spark's late NPE if the directory is missing).
+
+    A lazy cut is not free: under adaptive execution,
+    ``eager=False`` still runs every shuffle stage of ``df`` when it is
+    called, one Spark job each, and defers only the result stage to the
+    first action, so building a query, or asking it for its schema or
+    plan, already runs those jobs.  ``tests/test_reliable_checkpoint.py``
+    pins 0, 1 and 2 jobs at the call for inputs with 0, 1 and 2
+    shuffles, in both modes."""
     spark = df.sparkSession
     sc = spark.sparkContext
     reliable = reliable_enabled(spark)

@@ -18,6 +18,11 @@ Semantics preserved from the reference:
 
 A ``Box`` is ``((x0, x1), (y0, y1), (z0, z1))`` with half-open
 ``[lo, hi)`` per axis.
+
+The chunk-boundary geometry of the per-chunk volume operators lives
+here too: :func:`axis_pairs` pairs every voxel of a block with its +1
+neighbour inside the block, and :func:`chunk_faces` keys a block's face
+cells so that both sides of a chunk boundary meet on one key.
 """
 
 from __future__ import annotations
@@ -25,6 +30,9 @@ from __future__ import annotations
 import operator
 import re
 from collections.abc import Iterator, Sequence
+from typing import NamedTuple
+
+import numpy as np
 
 Range = tuple[int, int]
 Box = tuple[Range, ...]
@@ -221,3 +229,52 @@ def normalize_index(idx, vol: Box) -> Box:
                     f"unsupported index type: {type(i)}") from None
             out.append((v, v + 1))
     return tuple(out)
+
+
+def axis_pairs(shape: Sequence[int], axes: Sequence[int] = (0, 1, 2)
+               ) -> Iterator[tuple[int, tuple[slice, ...], tuple[slice, ...]]]:
+    """``(axis, lo, hi)`` for each of ``axes`` along which a block of
+    ``shape`` has at least two voxels: ``block[lo]`` and ``block[hi]``
+    hold every voxel and its +1 neighbour along ``axis``, element by
+    element (a channel axis past the third rides along whole)."""
+    for ax in axes:
+        n = shape[ax]
+        if n < 2:
+            continue
+        lo, hi = [slice(None)] * 3, [slice(None)] * 3
+        lo[ax], hi[ax] = slice(0, n - 1), slice(1, n)
+        yield ax, tuple(lo), tuple(hi)
+
+
+class Face(NamedTuple):
+    """One face sheet of a block holding ``cut``.
+
+    ``plane`` is the global coordinate, along ``axis``, of the first
+    voxel on the high side of the chunk boundary the sheet lies on: the
+    sheet's own coordinate on the low face (``side`` 0) and one past it
+    on the high face (``side`` 1).  So the two blocks that meet at a
+    boundary key its cells alike, as ``(axis, plane, u, v)``.  ``u`` and
+    ``v`` are sheet-shaped arrays of the global coordinates of the
+    sheet's other two axes, in axis order; ``block[sheet]`` is the
+    sheet."""
+    axis: int
+    side: int
+    sheet: tuple
+    plane: int
+    u: np.ndarray
+    v: np.ndarray
+
+
+def chunk_faces(cut: Box, axes: Sequence[int] = (0, 1, 2)) -> Iterator[Face]:
+    """The low and the high :class:`Face` of a block holding the global
+    box ``cut``, along each of ``axes`` — the one face-keying convention
+    of the per-chunk volume operators."""
+    for ax in axes:
+        ua, va = (d for d in range(3) if d != ax)
+        u, v = np.meshgrid(np.arange(*cut[ua], dtype=np.int64),
+                           np.arange(*cut[va], dtype=np.int64),
+                           indexing="ij")
+        lo, hi = cut[ax]
+        for side, (k, plane) in enumerate(((0, lo), (hi - lo - 1, hi))):
+            sheet = tuple(k if d == ax else slice(None) for d in range(3))
+            yield Face(ax, side, sheet, plane, u, v)

@@ -15,12 +15,13 @@ parallel first phase:
 
 1. **Chunk-local pass** (one ``mapInPandas`` over the pruned chunk
    table): decode each chunk executor-side, union-find its voxels
-   (path-compressed, numpy-extracted adjacency pairs), and emit
-   (a) one row per LOCAL component — id = min global linear voxel
-   index, its label, its voxel count — and (b) one row per non-
+   (path-compressed, adjacency pairs from ``indexes.axis_pairs``),
+   and emit (a) one row per LOCAL component — id = min global linear
+   voxel index, its label, its voxel count — and (b) one row per non-
    background FACE voxel keyed by the shared boundary cell
-   (axis, plane, u, v).  Output ∝ components + chunk surface, never
-   chunk volume.
+   (axis, plane, u, v) of ``indexes.chunk_faces``, so both sides of a
+   chunk boundary land on one key.  Output ∝ components + chunk
+   surface, never chunk volume.
 2. **Face merge**: group face rows by boundary cell + label — a cell
    seen from both sides is an edge between two local components.  One
    key-partitioned shuffle over surface rows.
@@ -84,6 +85,7 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
     def local_pass(key, cbox, cut, block):
         import numpy as _np
         import pandas as _pd
+        from bigarrays_jl_spark import indexes as _ix
         block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
         sh = block.shape
         n = block.size
@@ -100,18 +102,11 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
                 parent[a], a = r, parent[a]
             return r
 
-        for ax in range(3):
-            if sh[ax] < 2:
-                continue
-            lo_sl = [slice(None)] * 3
-            hi_sl = [slice(None)] * 3
-            lo_sl[ax] = slice(0, sh[ax] - 1)
-            hi_sl[ax] = slice(1, sh[ax])
-            a_lab = block[tuple(lo_sl)]
-            b_lab = block[tuple(hi_sl)]
-            m = (a_lab == b_lab) & (a_lab != 0)
-            ia = idx[tuple(lo_sl)][m].tolist()
-            ib = idx[tuple(hi_sl)][m].tolist()
+        for _, lo, hi in _ix.axis_pairs(sh):
+            a_lab = block[lo]
+            m = (a_lab == block[hi]) & (a_lab != 0)
+            ia = idx[lo][m].tolist()
+            ib = idx[hi][m].tolist()
             for u, v in zip(ia, ib):
                 ru, rv = find(u), find(v)
                 if ru != rv:
@@ -143,33 +138,13 @@ def connected_components(vol: Volume, request: ix.Box | None = None,
         rows = [(0, comp_of[r], lab_of[r], size_of[r],
                  None, None, None, None)
                 for r in comp_of]
-        # face rows keyed by the shared boundary cell; the key
-        # plane is the HIGHER voxel's coordinate, so the low
-        # face uses its own coord and the high face uses
-        # coord + 1 — both sides of a boundary land on one key
-        for ax in range(3):
-            axes = [0, 1, 2]
-            axes.remove(ax)
-            off = (rx0, ry0, rz0)
-            for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
-                fsl = [slice(None)] * 3
-                fsl[ax] = plane_rel
-                face = block[tuple(fsl)]
-                fidx = idx[tuple(fsl)]
-                m = face != 0
-                if not m.any():
-                    continue
-                gplane = cut[ax][0] - off[ax] + plane_rel \
-                    + (1 if side else 0)
-                u0 = cut[axes[0]][0] - off[axes[0]]
-                v0 = cut[axes[1]][0] - off[axes[1]]
-                uu, vv = _np.nonzero(m)
-                for u, v, li in zip((uu + u0).tolist(),
-                                    (vv + v0).tolist(),
-                                    fidx[m].tolist()):
-                    r = find(li)
-                    rows.append((1, comp_of[r], int(flat[li]),
-                                 0, ax, gplane, u, v))
+        # nonzero face voxels keyed by their boundary cell
+        for f in _ix.chunk_faces(cut):
+            m = block[f.sheet] != 0
+            for u, v, li in zip(f.u[m].tolist(), f.v[m].tolist(),
+                                idx[f.sheet][m].tolist()):
+                rows.append((1, comp_of[find(li)], int(flat[li]),
+                             0, f.axis, f.plane, u, v))
         yield _pd.DataFrame(
             rows, columns=["kind", "comp", "label", "size",
                            "axis", "fb", "fu", "fv"])

@@ -18,9 +18,10 @@ cut them to the client):
   (z, z+1) from six exact integer moments: in-chunk voxel pairs reduce
   to per-pair moments INSIDE the chunk UDF (a chunk emits ≤ 16 moment
   rows, never voxels); pairs straddling a chunk boundary ship only the
-  two FACE PLANES keyed by the boundary cell (axis-2 variant of the
-  volume_components/volume_rag keying — shuffle ∝ chunk surface),
-  where both sides meet, multiply, and reduce to the same moment rows.
+  two FACE PLANES keyed by the boundary cell (``indexes.chunk_faces``
+  along z, the keying of every per-chunk volume operator — shuffle ∝
+  chunk surface), where both sides meet, multiply, and reduce to the
+  same moment rows.
   The closing Pearson expression runs once in doubles per z-pair.
 
 Float parity: intensities are uint8 → all moments are exact int64
@@ -119,19 +120,20 @@ _NCC_SCHEMA = ("kind int, z bigint, n long, sa long, sb long, "
 def slice_ncc(vol, request: ix.Box) -> DataFrame:
     """Pearson r between slices z and z+1 for every adjacent pair in
     ``request``: in-chunk pairs reduce to moments inside the UDF;
-    boundary pairs ship face planes keyed by (boundary z, x, y)."""
+    boundary pairs ship face planes keyed by their boundary cell
+    (``indexes.chunk_faces``: fz is the upper slice of the pair)."""
     req = tuple((int(lo), int(hi)) for lo, hi in request)
 
     def local(key, cbox, cut, blk):
         import numpy as _np
         import pandas as _pd
+        from bigarrays_jl_spark import indexes as _ix
         blk = blk[..., 0].astype(_np.int64)
         z0 = cut[2][0]
         rows = []
         # in-chunk adjacent pairs: vectorized along z
-        if blk.shape[2] >= 2:
-            a = blk[:, :, :-1]
-            b = blk[:, :, 1:]
+        for _, lo, hi in _ix.axis_pairs(blk.shape, axes=(2,)):
+            a, b = blk[lo], blk[hi]
             rows_n = a.shape[0] * a.shape[1]
             for k in range(a.shape[2]):
                 av, bv = a[:, :, k], b[:, :, k]
@@ -141,29 +143,18 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
                              int((av * av).sum()),
                              int((bv * bv).sum()),
                              None, None, None, None, None))
-        # face planes: low face pairs with the chunk below
-        # (boundary z = z0 - 1), high face with the one above
-        # (boundary z = top); emit only if the partner plane
-        # lies inside the request
-        x0, y0 = cut[0][0], cut[1][0]
-        for side, zz in ((0, z0), (1, cut[2][1] - 1)):
-            bz = zz - 1 if side == 0 else zz
-            if side == 0 and zz - 1 < req[2][0]:
+        # z-face planes keyed by their boundary cell, emitted only if
+        # the partner plane across the boundary lies inside the request
+        for f in _ix.chunk_faces(cut, axes=(2,)):
+            if not req[2][0] < f.plane < req[2][1]:
                 continue
-            if side == 1 and zz + 1 >= req[2][1]:
-                continue
-            plane = blk[:, :, zz - z0]
-            xs, ys = _np.meshgrid(
-                _np.arange(plane.shape[0]),
-                _np.arange(plane.shape[1]), indexing="ij")
-            fdf = _pd.DataFrame({
-                "kind": 1, "z": bz,
+            yield _pd.DataFrame({
+                "kind": 1, "z": f.plane - 1,
                 "n": 0, "sa": 0, "sb": 0,
                 "sab": 0, "saa": 0, "sbb": 0,
-                "fz": bz, "fu": (xs + x0).ravel(),
-                "fv": (ys + y0).ravel(), "side": side,
-                "val": plane.ravel()})
-            yield fdf
+                "fz": f.plane, "fu": f.u.ravel(),
+                "fv": f.v.ravel(), "side": f.side,
+                "val": blk[f.sheet].ravel()})
         if rows:
             yield _pd.DataFrame(
                 rows, columns=["kind", "z", "n", "sa", "sb",
@@ -182,7 +173,7 @@ def slice_ncc(vol, request: ix.Box) -> DataFrame:
                   F.min(F.when(F.col("side") == 0, F.col("val")))
                    .alias("b"))
              .filter(F.col("sides") == 2)
-             .groupBy(F.col("fz").alias("z"))
+             .groupBy((F.col("fz") - 1).alias("z"))
              .agg(F.count("*").alias("n"),
                   F.sum("a").alias("sa"), F.sum("b").alias("sb"),
                   F.sum(F.col("a") * F.col("b")).alias("sab"),

@@ -11,11 +11,13 @@ here it is a two-phase distributed pass that never shuffles voxels:
 
 1. **Chunk-local pass** (``mapInPandas`` over the pruned chunk
    table): decode executor-side, count label-pair contacts across the
-   three axis shifts with numpy, pre-aggregated to (label_a, label_b,
-   n) INSIDE the UDF — a chunk emits at most its distinct touching
-   pairs, never its voxels.  Face voxels are emitted keyed by the
-   shared boundary cell (axis, plane, u, v), the same keying as
-   ``volume_components``.
+   three axis shifts of ``indexes.axis_pairs`` with numpy,
+   pre-aggregated to (label_a, label_b, n) INSIDE the UDF — a chunk
+   emits at most its distinct touching pairs, never its voxels.
+   Nonzero face voxels are emitted keyed by the shared boundary cell
+   (axis, plane, u, v) of ``indexes.chunk_faces``, the one keying
+   every per-chunk volume operator uses, so both sides of a chunk
+   boundary share a key.
 2. **Cross-chunk faces**: group face rows by boundary cell; a cell
    seen from both sides with two different nonzero labels is one
    contact face.  Shuffle ∝ chunk surface.
@@ -79,17 +81,11 @@ def rag_stream(vol: Volume, request: ix.Box,
         block = _np.ascontiguousarray(block[..., 0]).astype(_np.int64)
         sh = block.shape
         rows = []
-        # in-chunk contacts: three axis shifts, pre-aggregated
-        # with numpy so a chunk emits pairs, not voxels
-        for ax in range(3):
-            if sh[ax] < 2:
-                continue
-            lo_sl = [slice(None)] * 3
-            hi_sl = [slice(None)] * 3
-            lo_sl[ax] = slice(0, sh[ax] - 1)
-            hi_sl[ax] = slice(1, sh[ax])
-            la = block[tuple(lo_sl)]
-            lb = block[tuple(hi_sl)]
+        # in-chunk contacts, pre-aggregated with numpy so a chunk
+        # emits pairs, not voxels
+        for _, lo, hi in _ix.axis_pairs(sh):
+            la = block[lo]
+            lb = block[hi]
             m = (la != lb) & (la != 0) & (lb != 0)
             if not m.any():
                 continue
@@ -101,37 +97,19 @@ def rag_stream(vol: Volume, request: ix.Box,
             for (a, bb), n in zip(uniq.tolist(), counts.tolist()):
                 rows.append((0, a, bb, n, None, None, None, None,
                              cid[0], cid[1], cid[2]))
-        # face rows: boundary-cell keying (the higher voxel's
-        # plane coordinate), exactly volume_components'
-        # convention so both sides of a boundary share a key;
-        # the part tag is the boundary's LOW chunk — own id for
-        # the high face, own id − 1 along the axis for the low
-        # face — so both sides agree on the owning part
-        for ax in range(3):
-            axes = [0, 1, 2]
-            axes.remove(ax)
-            off = (req[0][0], req[1][0], req[2][0])
-            for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
-                fsl = [slice(None)] * 3
-                fsl[ax] = plane_rel
-                face = block[tuple(fsl)]
-                m = face != 0
-                if not m.any():
-                    continue
-                gplane = cut[ax][0] - off[ax] + plane_rel \
-                    + (1 if side else 0)
-                low = list(cid)
-                if side == 0:
-                    low[ax] -= 1
-                u0 = cut[axes[0]][0] - off[axes[0]]
-                v0 = cut[axes[1]][0] - off[axes[1]]
-                uu, vv = _np.nonzero(m)
-                for u, v, li in zip((uu + u0).tolist(),
-                                    (vv + v0).tolist(),
-                                    face[m].tolist()):
-                    rows.append((1, li, None, None,
-                                 ax, gplane, u, v,
-                                 low[0], low[1], low[2]))
+        # nonzero face voxels keyed by their boundary cell; the part
+        # tag is the boundary's LOW chunk — own id for the high face,
+        # own id − 1 along the axis for the low face — so both sides
+        # agree on the owning part
+        for f in _ix.chunk_faces(cut):
+            face = block[f.sheet]
+            m = face != 0
+            low = list(cid)
+            low[f.axis] -= 1 - f.side
+            for u, v, li in zip(f.u[m].tolist(), f.v[m].tolist(),
+                                face[m].tolist()):
+                rows.append((1, li, None, None, f.axis, f.plane, u, v,
+                             *low))
         yield _pd.DataFrame(
             rows, columns=["kind", "a", "b", "n",
                            "axis", "fb", "fu", "fv",

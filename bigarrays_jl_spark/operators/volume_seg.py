@@ -296,22 +296,24 @@ FROM v GROUP BY 1
 # segmentation store — `ref src/Infos.jl:73-86`): for every label,
 # the count of voxel faces whose 6-neighbor holds a DIFFERENT label
 # (in-volume), and separately the faces on the volume boundary.
-# Interior faces reduce inside the decode UDF (numpy axis diffs —
-# output ∝ labels, never voxels); chunk-boundary faces use the
-# volume_components face discipline — one row per boundary voxel keyed
-# by the shared face cell, paired by a surface-sized shuffle, never a
-# voxel-sized one.  The DuckDB twin reproduces the closed-form block
-# lattice (adjacent 16³ blocks always differ, so a block's in-volume
-# surface is its total surface minus its volume-boundary faces).
+# Interior faces reduce inside the decode UDF (numpy diffs over
+# ``indexes.axis_pairs`` — output ∝ labels, never voxels);
+# chunk-boundary faces are keyed by ``indexes.chunk_faces`` — one row
+# per boundary voxel keyed by the shared face cell, paired by a
+# surface-sized shuffle, never a voxel-sized one.  The DuckDB twin
+# reproduces the closed-form block lattice (adjacent 16³ blocks always
+# differ, so a block's in-volume surface is its total surface minus
+# its volume-boundary faces).
 
 def volume_label_surface(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     vol = demo_seg_volume(spark)
-    side = SEG_SIDE
 
     def stream(key, cbox, cut, arr):
         import numpy as np
+
+        from bigarrays_jl_spark import indexes as _ix
         arr = arr[..., 0]
         shape = arr.shape
         counts: dict[tuple[int, int], list[int]] = {}
@@ -321,47 +323,30 @@ def volume_label_surface(spark: SparkSession, sf: str) -> DataFrame:
             c[which] += n
 
         # interior differing faces: both sides gain one face
-        for ax in range(3):
-            lo = arr.take(range(shape[ax] - 1), axis=ax)
-            hi = arr.take(range(1, shape[ax]), axis=ax)
-            m = lo != hi
+        for _, lo, hi in _ix.axis_pairs(shape):
+            m = arr[lo] != arr[hi]
             if m.any():
-                for lbl, n in zip(*np.unique(lo[m],
+                for lbl, n in zip(*np.unique(arr[lo][m],
                                              return_counts=True)):
                     bump(lbl, 0, int(n))
-                for lbl, n in zip(*np.unique(hi[m],
+                for lbl, n in zip(*np.unique(arr[hi][m],
                                              return_counts=True)):
                     bump(lbl, 0, int(n))
         # chunk faces: volume boundary vs shared chunk boundary
         faces = []
-        for ax in range(3):
-            for side_hi in (0, 1):
-                gpos = cbox[ax][1] - 1 if side_hi else cbox[ax][0]
-                sl = [slice(None)] * 3
-                sl[ax] = -1 if side_hi else 0
-                sheet = arr[tuple(sl)]
-                at_vol_edge = (gpos == side - 1 if side_hi
-                               else gpos == 0)
-                if at_vol_edge:
-                    for lbl, n in zip(*np.unique(
-                            sheet, return_counts=True)):
-                        bump(lbl, 1, int(n))
-                    continue
-                # face cell shared with the neighbor chunk:
-                # plane = boundary between gpos and gpos±1
-                plane = gpos if side_hi else gpos - 1
-                other = [d for d in range(3) if d != ax]
-                ub = np.arange(cbox[other[0]][0],
-                               cbox[other[0]][1])
-                vb = np.arange(cbox[other[1]][0],
-                               cbox[other[1]][1])
-                uu, vv = np.meshgrid(ub, vb, indexing="ij")
-                faces.append(pd.DataFrame({
-                    "kind": 1, "axis": ax, "plane": plane,
-                    "u": uu.reshape(-1), "v": vv.reshape(-1),
-                    "hi_side": side_hi,
-                    "label": sheet.reshape(-1).astype("int64"),
-                    "n_label": 0, "n_volume": 0}))
+        for f in _ix.chunk_faces(cut):
+            sheet = arr[f.sheet]
+            # the face voxel's own coordinate on the volume edge
+            if f.plane - f.side == (SEG_SIDE - 1 if f.side else 0):
+                for lbl, n in zip(*np.unique(sheet, return_counts=True)):
+                    bump(lbl, 1, int(n))
+                continue
+            faces.append(pd.DataFrame({
+                "kind": 1, "axis": f.axis, "plane": f.plane,
+                "u": f.u.reshape(-1), "v": f.v.reshape(-1),
+                "hi_side": f.side,
+                "label": sheet.reshape(-1).astype("int64"),
+                "n_label": 0, "n_volume": 0}))
         local = pd.DataFrame({
             "kind": 0, "axis": 0, "plane": 0, "u": 0, "v": 0,
             "hi_side": 0,

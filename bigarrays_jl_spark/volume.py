@@ -197,10 +197,11 @@ def _id_count(ranges) -> int:
 
 def _place_blocks(buf: np.ndarray, request: ix.Box, boxes: np.ndarray,
                   blocks: list) -> int:
-    """Copy the part of each whole-chunk block ``blocks[i]`` (global box
+    """Copy the part of each block ``blocks[i]`` (global box
     ``boxes[i]``, an ``(n, 3, 2)`` array) that meets ``request`` into
     ``buf``, which holds ``request``; returns how many met it.  Every
-    cut and both slice sets come from one numpy pass."""
+    cut and both slice sets come from one numpy pass.  The one
+    placement of cutouts, downsample and rechunk."""
     if not blocks:
         return 0
     box = np.asarray(boxes, dtype=np.int64)
@@ -217,11 +218,22 @@ def _place_blocks(buf: np.ndarray, request: ix.Box, boxes: np.ndarray,
     return int(meets.sum())
 
 
+def _returned_blocks(parts: pd.DataFrame, dtype, nc: int):
+    """The global boxes and ``(x, y, z, c)`` blocks of a frame of
+    returned cuts (``x0, y0, z0, sx, sy, sz`` and F-order ``data``
+    bytes), as :func:`_place_blocks` takes them."""
+    lo = parts[["x0", "y0", "z0"]].to_numpy(np.int64)
+    shape = parts[["sx", "sy", "sz"]].to_numpy(np.int64)
+    blocks = [np.frombuffer(d, dtype=dtype).reshape((*s, nc), order="F")
+              for d, s in zip(parts["data"], shape.tolist())]
+    return np.stack([lo, lo + shape], axis=2), blocks
+
+
 def _cuts(batch, nc: int, dtype, request: ix.Box | None = None):
     """``(key, cbox, cut, block)`` of every chunk row of ``batch`` (a
-    pandas frame with ``key, enc, payload``) that meets ``request`` —
-    the decode loop of ``Volume.map_cuts``, also run by ``rechunk``'s
-    merge groups."""
+    pandas frame or a dict of lists with ``key, enc, payload``) that
+    meets ``request`` — the decode loop of ``Volume.map_cuts``, also
+    run by ``voxels`` and by ``rechunk``'s merge groups."""
     for key, enc, payload in zip(batch["key"], batch["enc"],
                                  batch["payload"]):
         hit = decode_chunk(key, enc, payload, nc, dtype, request)
@@ -1339,9 +1351,6 @@ class Volume:
         if expected == 0:
             return _out()
 
-        def _place(cut, block) -> None:
-            buf[ix.box_slices(cut, request)] = block
-
         found = self._read_latest_local(ranges)
         if found is not None:
             # driver-local fast path (see local_io in __init__): the
@@ -1378,13 +1387,8 @@ class Volume:
                 cut_row, "x0 int, y0 int, z0 int, sx int, sy int, sz int, "
                          "data binary", request,
             ).toPandas()  # Arrow transfer — binary columns skip py4j row serde
-            for r in parts.itertuples(index=False):
-                shp = (r.sx, r.sy, r.sz)
-                _place(tuple((o, o + s) for o, s in
-                             zip((r.x0, r.y0, r.z0), shp)),
-                       np.frombuffer(r.data, dtype=info.dtype).reshape(
-                           (*shp, nc), order="F"))
-            placed = len(parts)
+            placed = _place_blocks(buf, request, *_returned_blocks(
+                parts, info.dtype, nc))
         if not self.fill_missing and placed < expected:
             raise MissingChunkError(
                 f"cutout {request}: {expected - placed} of {expected} "
@@ -1416,20 +1420,15 @@ class Volume:
         def cuts(it):
             import numpy as _np
             import pyarrow as _pa
-            from bigarrays_jl_spark.volume import decode_chunk
+            from bigarrays_jl_spark.volume import _cuts
             # the numpy side of VOXEL_SQL_TYPE's unsigned widening;
             # uint64 goes to decimal(20,0) through an Arrow cast
             wide = _np.dtype({"uint8": "int16", "uint16": "int32",
                               "uint32": "int64"}.get(dtype_str, dtype_str))
             for b in it:
-                for key, enc, payload in zip(
-                        b.column("key").to_pylist(),
-                        b.column("enc").to_pylist(),
-                        b.column("payload").to_pylist()):
-                    hit = decode_chunk(key, enc, payload, nc, dtype_str, req)
-                    if hit is None:
-                        continue
-                    _, cut, block = hit
+                cols = {c: b.column(c).to_pylist()
+                        for c in ("key", "enc", "payload")}
+                for _, _, cut, block in _cuts(cols, nc, dtype_str, req):
                     vals = _pa.array(_np.asarray(block, dtype=wide, order="F")
                                      .ravel(order="F"))
                     if dtype_str == "uint64":
@@ -1793,13 +1792,13 @@ class Volume:
             build = _chunk_assembler(dst_sc, nc, dtype_str, epoch)
 
             def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                from bigarrays_jl_spark import indexes as _ix
-                from bigarrays_jl_spark.volume import _cuts
+                from bigarrays_jl_spark.volume import _cuts, _place_blocks
 
                 def fill(buf, dbox):
-                    for _, sbox, _, arr in _cuts(pdf, nc, dtype_str):
-                        buf[_ix.box_slices(sbox, dbox)] = arr
-                    return True
+                    hits = list(_cuts(pdf, nc, dtype_str))
+                    return _place_blocks(buf, dbox,
+                                         [h[1] for h in hits],
+                                         [h[3] for h in hits]) > 0
 
                 return build((int(pdf.dcx.iloc[0]), int(pdf.dcy.iloc[0]),
                               int(pdf.dcz.iloc[0])), fill)
@@ -2085,30 +2084,18 @@ class Volume:
         build = _chunk_assembler(dst_sc, nc, dtype_str, self._next_epoch())
 
         def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as _np
+            from bigarrays_jl_spark.volume import (_place_blocks,
+                                                   _returned_blocks)
 
             def fill(buf, box):
-                shape = buf.shape
-                wrote_any = False
-                for _, r in pdf.iterrows():
-                    block = _np.frombuffer(r.data, dtype=buf.dtype).reshape(
-                        (r.sx, r.sy, r.sz, nc), order="F")
-                    ox, oy, oz = (r.x0 - box[0][0], r.y0 - box[1][0],
-                                  r.z0 - box[2][0])
-                    ex = min(r.sx, shape[0] - ox)
-                    ey = min(r.sy, shape[1] - oy)
-                    ez = min(r.sz, shape[2] - oz)
-                    if ex <= 0 or ey <= 0 or ez <= 0:
-                        continue
-                    buf[ox:ox + ex, oy:oy + ey, oz:oz + ez, :] = \
-                        block[:ex, :ey, :ez, :]
-                    wrote_any = True
-                # every contributing block fell outside the target box
-                # (size-1 edge chunks reduce to empty, or placement past
-                # the halved dst volume): emitting a chunk here would
-                # materialize spurious zeros where NO source data exists,
-                # breaking fill_missing=False semantics at mip+1
-                return wrote_any
+                # False when every contributing block fell outside the
+                # target box (size-1 edge chunks reduce to empty, or
+                # placement past the halved dst volume): emitting a
+                # chunk then would materialize spurious zeros where NO
+                # source data exists, breaking fill_missing=False
+                # semantics at mip+1
+                return _place_blocks(buf, box, *_returned_blocks(
+                    pdf, buf.dtype, nc)) > 0
 
             return build((int(pdf.tcx.iloc[0]), int(pdf.tcy.iloc[0]),
                           int(pdf.tcz.iloc[0])), fill)

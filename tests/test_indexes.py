@@ -113,3 +113,107 @@ def test_union_range_is_the_bounding_range(a, b, want):
     # whether the ranges meet or not
     assert ix.union_range(a, b) == want
     assert ix.union_range(b, a) == want
+
+
+def _random_cuts(rng):
+    """A random volume (negative voxel_offset, chunk sizes that leave
+    clamped edge chunks), a random request box inside it and the cuts
+    of the chunks that meet the request."""
+    chunk = [int(rng.integers(1, 5)) for _ in range(3)]
+    size = [int(rng.integers(2, 12)) for _ in range(3)]
+    offset = [int(rng.integers(-9, 3)) for _ in range(3)]
+    vol = ix.volume_box(offset, size)
+    req = []
+    for lo, hi in vol:
+        a, b = sorted(rng.choice(range(lo, hi + 1), 2, replace=False))
+        req.append((int(a), int(b)))
+    req = tuple(req)
+    cuts = [cs.cutout_box
+            for cs in ix.iter_chunk_slices(req, offset, size, chunk)]
+    labels = rng.integers(0, 4, size)
+    return vol, req, cuts, labels, ix.lattice_anchor(offset, chunk), chunk
+
+
+def _chunk_of(p, anchor, chunk):
+    return tuple(ix.chunk_id(g, a, c) for g, a, c in zip(p, anchor, chunk))
+
+
+def _neighbour_pairs(req):
+    """Every 6-neighbour voxel pair ``(p, p + e_axis)`` inside ``req``,
+    by brute force."""
+    import itertools
+    for p in itertools.product(*(range(lo, hi) for lo, hi in req)):
+        for ax in range(3):
+            q = list(p)
+            q[ax] += 1
+            if q[ax] < req[ax][1]:
+                yield ax, p, tuple(q)
+
+
+@pytest.mark.parametrize("seed", range(40))
+def test_chunk_faces_pair_exactly_the_straddling_neighbours(seed):
+    """Grouping every chunk's face cells by ``(axis, plane, u, v)``
+    pairs exactly the 6-neighbour voxel pairs inside the request that
+    straddle two chunks, each pair once, one cell from each side; and
+    ``axis_pairs`` yields exactly the pairs inside one chunk."""
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    vol, req, cuts, labels, anchor, chunk = _random_cuts(rng)
+    origin = [lo for lo, _ in vol]
+    cells, inside = {}, []
+    for cut in cuts:
+        block = labels[ix.box_slices(cut, vol)]
+        grid = np.meshgrid(*(np.arange(lo, hi) for lo, hi in cut),
+                           indexing="ij")
+        for f in ix.chunk_faces(cut):
+            own = [g[f.sheet] for g in grid]
+            assert (own[f.axis] == f.plane - f.side).all()
+            uv = [o for d, o in enumerate(own) if d != f.axis]
+            assert (uv[0] == f.u).all() and (uv[1] == f.v).all()
+            for p, val in zip(zip(*(o.ravel().tolist() for o in own)),
+                              block[f.sheet].ravel().tolist()):
+                uv = tuple(c for d, c in enumerate(p) if d != f.axis)
+                cells.setdefault((f.axis, f.plane, *uv), []).append(
+                    (f.side, p, val))
+        for ax, lo, hi in ix.axis_pairs(block.shape):
+            assert block.shape[ax] >= 2
+            for a, b in zip(zip(*(g[lo].ravel().tolist() for g in grid)),
+                            zip(*(g[hi].ravel().tolist() for g in grid))):
+                inside.append((ax, a, b))
+    paired = []
+    for (ax, plane, *_), sides in cells.items():
+        assert len(sides) <= 2
+        if len(sides) == 2:
+            (s0, p0, v0), (s1, p1, v1) = sorted(sides)
+            assert (s0, s1) == (0, 1)
+            assert p1[ax] == plane - 1 and p0[ax] == plane
+            # the two cells carry the labels of the pair they stand for
+            assert (v1, v0) == (labels[tuple(np.subtract(p1, origin))],
+                                labels[tuple(np.subtract(p0, origin))])
+            paired.append((ax, p1, p0))
+    want_cross, want_inside = [], []
+    for ax, p, q in _neighbour_pairs(req):
+        same = _chunk_of(p, anchor, chunk) == _chunk_of(q, anchor, chunk)
+        (want_inside if same else want_cross).append((ax, p, q))
+    assert sorted(paired) == sorted(want_cross)
+    assert len(set(paired)) == len(paired)
+    assert sorted(inside) == sorted(want_inside)
+    assert len(set(inside)) == len(inside)
+
+
+def test_axis_pairs_skip_single_voxel_axes():
+    assert [ax for ax, _, _ in ix.axis_pairs((1, 3, 2))] == [1, 2]
+    assert [ax for ax, _, _ in ix.axis_pairs((4, 3, 2), axes=(2,))] == [2]
+
+
+def test_chunk_faces_plane_convention():
+    """``plane`` is the first voxel on the high side of the boundary:
+    the face's own coordinate on the low face, one past it on the high
+    face; ``u``, ``v`` are global coordinates in axis order."""
+    faces = list(ix.chunk_faces(((-4, 0), (2, 5), (7, 8))))
+    assert [(f.axis, f.side, f.plane) for f in faces] == [
+        (0, 0, -4), (0, 1, 0), (1, 0, 2), (1, 1, 5), (2, 0, 7), (2, 1, 8)]
+    f = faces[3]
+    assert f.sheet == (slice(None), 2, slice(None))
+    assert f.u[:, 0].tolist() == [-4, -3, -2, -1]
+    assert f.v[0].tolist() == [7]

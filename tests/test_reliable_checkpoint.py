@@ -262,3 +262,34 @@ def test_materialize_default_is_local(spark):
     assert "ExistingRDD" in df._jdf.queryExecution().optimizedPlan().toString() \
         or "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString() \
         or "Scan" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("reliable", [False, True],
+                         ids=["local", "reliable"])
+def test_lazy_cut_runs_its_shuffle_stages_at_the_call(spark, ckpt_dir,
+                                                      reliable):
+    """``materialize(df, eager=False)`` runs one job per shuffle stage
+    of ``df`` at the call (adaptive execution builds the RDD it cuts by
+    running every stage below the result stage) and defers only the
+    result stage, in both modes: 0, 1 and 2 jobs for inputs with 0, 1
+    and 2 shuffles."""
+    sc = spark.sparkContext
+    base = spark.range(0, 1000, numPartitions=4)
+    one = base.groupBy((F.col("id") % 7).alias("k")).count()
+    two = one.groupBy("count").agg(F.sum("k").alias("s"))
+    spark.conf.set(RELIABLE_CONF, str(reliable).lower())
+    try:
+        jobs = []
+        for i, df in enumerate([base.filter("id > 3"), one, two]):
+            gid = f"lazy-cut-{reliable}-{i}"
+            sc.setJobGroup(gid, gid)
+            try:
+                out = checkpointing.materialize(df, eager=False)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(gid)))
+            assert sorted(map(tuple, out.collect())) \
+                == sorted(map(tuple, df.collect()))
+    finally:
+        spark.conf.set(RELIABLE_CONF, "false")
+    assert jobs == [0, 1, 2]

@@ -8,7 +8,10 @@ the chunk) cannot miss a read or write path again, and no module outside
 the epoch dedupe has one caller, ``live_chunks``, and a mip is replaced
 by one rewrite, ``_fold_mip``, behind both ``compact`` and ``delete``.
 Every lineage cut goes through ``checkpointing.materialize``, so the
-reliable-checkpoint switch reaches all of them."""
+reliable-checkpoint switch reaches all of them.  The per-chunk volume
+passes that pair voxels across chunk boundaries take that geometry from
+``indexes.chunk_faces`` and ``indexes.axis_pairs``, so the face-keying
+convention is written once."""
 import ast
 import os
 
@@ -25,10 +28,9 @@ DECODE_SITES = {
 # (file, outermost enclosing function) allowed to call decode_chunk in
 # a loop over chunk rows
 CHUNK_DECODE_LOOPS = {
-    # the loop of Volume.map_cuts, also run by rechunk's merge groups
+    # the loop of Volume.map_cuts, also run by voxels() and by
+    # rechunk's merge groups
     ("volume.py", "_cuts"),
-    # one Arrow ListArray row per cut through mapInArrow
-    ("volume.py", "voxels"),
     # reports ChunkDecodeError in its error column instead of raising
     ("volume.py", "fsck"),
     # two joined volumes per row, read through Volume.live_chunks
@@ -43,6 +45,19 @@ ENCODE_SITES = {("volume.py", "encode_chunk")}
 
 # chunk-table selection that only volume.py may know about
 PRIVATE_SCANS = {"_latest", "_pruned", "_sources_subset"}
+
+# (file, outermost function, the per-chunk pass nested in it): the
+# passes that pair voxels within and across chunk boundaries
+BOUNDARY_PASSES = {
+    ("operators/volume_components.py", "connected_components",
+     "local_pass"),
+    ("operators/volume_rag.py", "rag_stream", "local_pass"),
+    ("operators/volume_qc.py", "slice_ncc", "local"),
+    ("operators/volume_seg.py", "volume_label_surface", "stream"),
+    ("operators/volume_stencil.py", "_stencil_stream", "local"),
+}
+# the indexes functions that hold that geometry
+GEOMETRY = {"chunk_faces", "axis_pairs"}
 
 # DataFrame methods that cut lineage: only checkpointing.materialize
 # may call them
@@ -295,3 +310,66 @@ class Volume:
     assert _volume_violations(scan) == [
         ("_latest", ["stats"], 7), ("_write_chunks", ["delete"], 14),
         ("_swap_mip_dir", ["delete"], 15)]
+
+
+def _boundary_geometry(fn):
+    """The ``GEOMETRY`` functions a per-chunk pass calls, and the lines
+    where it builds boundary geometry of its own: a ``slice()`` call, an
+    ``ndarray.take``, or a ``for`` loop over ``range(3)`` (the axes) or
+    over a literal tuple or list (the two sides of a block)."""
+    calls, own = set(), []
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", None)
+            if name in GEOMETRY:
+                calls.add(name)
+            if name == "slice" and isinstance(f, ast.Name) or (
+                    name == "take" and isinstance(f, ast.Attribute)):
+                own.append(node.lineno)
+        if isinstance(node, ast.For) and (
+                isinstance(node.iter, (ast.Tuple, ast.List))
+                or ast.unparse(node.iter) == "range(3)"):
+            own.append(node.lineno)
+    return calls, sorted(own)
+
+
+def _boundary_passes(pkg=PKG):
+    out = {}
+    for rel, outer, inner in BOUNDARY_PASSES:
+        with open(os.path.join(pkg, rel)) as f:
+            tree = ast.parse(f.read())
+        fn = next(n for n in tree.body
+                  if isinstance(n, ast.FunctionDef) and n.name == outer)
+        fn = next(n for n in ast.walk(fn)
+                  if isinstance(n, ast.FunctionDef) and n.name == inner)
+        out[rel] = _boundary_geometry(fn)
+    return out
+
+
+def test_one_chunk_boundary_geometry():
+    """None of the per-chunk passes keeps a boundary-plane or axis-shift
+    loop of its own: each takes its faces and neighbour pairs from
+    ``indexes``."""
+    for rel, (calls, own) in _boundary_passes().items():
+        assert calls, rel
+        assert own == [], (rel, own)
+
+
+def test_geometry_scan_catches_hand_rolled_faces():
+    src = '''
+def local_pass(key, cbox, cut, block):
+    sh = block.shape
+    for _, lo, hi in _ix.axis_pairs(sh):
+        pass
+    for ax in range(3):
+        for side, plane_rel in ((0, 0), (1, sh[ax] - 1)):
+            fsl = [slice(None)] * 3
+    lo = block.take(range(sh[0] - 1), axis=0)
+    for k in range(sh[2]):
+        pass
+'''
+    calls, own = _boundary_geometry(ast.parse(src).body[0])
+    assert calls == {"axis_pairs"}
+    assert own == [6, 7, 8, 9]
