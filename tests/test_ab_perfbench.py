@@ -57,13 +57,34 @@ def test_regression_against_the_bound():
     assert c["regression"] == "ok"
 
 
+def _run(side, failed=0, correct=True):
+    return {"side": side, "result": {"failed": failed, "attempted": 10,
+                                     "correct": correct}}
+
+
 def test_failed_share_and_runs_without_a_result():
-    runs = [{"side": "parent", "result": {"failed": 0, "attempted": 10}},
-            {"side": "change", "result": {"failed": 0, "attempted": 10}}]
+    runs = [_run("parent"), _run("change")]
     assert not failures(runs)["regressed"]
     worse = runs + [{"side": "change", "result": None}]
     f = failures(worse)
-    assert f["change"] == {"failed": 1, "attempted": 11} and f["regressed"]
+    assert f["change"] == {"failed": 1, "attempted": 11, "incorrect": 1,
+                           "runs": 2} and f["regressed"]
+
+
+def test_a_run_that_drifted_regresses_with_no_failed_operation():
+    # correct is false with 0 failed operations when a run's results
+    # drift between repeated seeds
+    drift = [_run("parent"), _run("parent"),
+             _run("change"), _run("change", correct=False)]
+    f = failures(drift)
+    assert f["change"]["failed"] == f["parent"]["failed"] == 0
+    assert (f["parent"]["incorrect"], f["change"]["incorrect"]) == (0, 1)
+    assert f["regressed"]
+    assert "runs not correct: parent 0/2, change 1/2; REGRESSED" in render(
+        {"w": {"metrics": {}, "failures": f}}, {"end_to_end": []})
+    # as many incorrect runs on the parent's side is no regression
+    even = drift[1:] + [_run("parent", correct=False)]
+    assert not failures(even)["regressed"]
 
 
 def test_summarize_pairs_sides_by_pair_and_renders_every_metric():
@@ -72,7 +93,7 @@ def test_summarize_pairs_sides_by_pair_and_renders_every_metric():
     names = [m["name"] for m in spec["end_to_end"]]
 
     def result(v):
-        return {"failed": 0, "attempted": 4,
+        return {"correct": True, "failed": 0, "attempted": 4,
                 "metrics": {n: {"value": v} for n in names}}
 
     runs = []

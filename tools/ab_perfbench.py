@@ -2,13 +2,15 @@
 simplicity-review rules.
 
     python tools/ab_perfbench.py --parent REV --pairs N --seeds 21 22 23 \\
-        [--workloads array_rw spark_jobs] [--seconds 30] [--out RUNS.jsonl]
+        [--out RUNS.jsonl]
     python tools/ab_perfbench.py --summarize RUNS.jsonl
 
 Runs the command of ``BENCHMARK.json`` (``perfbench/run.py``) with
 ``--trace 0`` on two copies made under ``--work``: a ``git archive`` of
 ``--parent`` and the working tree (tracked and untracked files that git
-does not ignore).  Pair ``i`` of each workload uses seed
+does not ignore), for every workload and the run length
+(``run_seconds``) that ``BENCHMARK.json`` sets.  Pair ``i`` of each
+workload uses seed
 ``seeds[i % len(seeds)]`` on both sides and runs the parent first when
 ``i`` is even, the change first when it is odd.  Each run appends one
 JSON line to ``--out``; ``--summarize`` reads such a file again.
@@ -27,8 +29,11 @@ verdicts:
   over median) is wider than the bound, unless every change run reads
   better than every parent run.
 
-Last it prints the failed and attempted operations of each side; a
-change that fails a larger share of them regresses.  Nothing under
+Last it prints the failed and attempted operations of each side and
+the runs of each side that were not ``correct`` (the run failed an
+operation or its results drifted between repeated seeds, or it printed
+no result); a change that fails a larger share of operations, or has
+more runs that were not correct, regresses.  Nothing under
 ``perfbench/`` is edited.
 """
 
@@ -92,17 +97,23 @@ def compare(pairs: list[tuple[float, float]], better: str,
 
 
 def failures(runs: list[dict]) -> dict:
-    """Failed and attempted operations per side, and whether the change
-    fails a larger share than the parent (a run that printed no result
-    counts as one failed operation)."""
+    """Failed and attempted operations and runs not ``correct`` per
+    side, and whether the change fails a larger share of operations or
+    has more incorrect runs than the parent (a run that printed no
+    result counts as one failed operation and as an incorrect run)."""
     out = {}
     for side in SIDES:
         mine = [r.get("result") for r in runs if r["side"] == side]
-        failed = sum(1 if r is None else r["failed"] for r in mine)
-        attempted = sum(1 if r is None else r["attempted"] for r in mine)
-        out[side] = {"failed": failed, "attempted": attempted}
+        out[side] = {
+            "failed": sum(1 if r is None else r["failed"] for r in mine),
+            "attempted": sum(1 if r is None else r["attempted"]
+                             for r in mine),
+            "incorrect": sum(r is None or not r["correct"] for r in mine),
+            "runs": len(mine)}
     share = {s: out[s]["failed"] / max(1, out[s]["attempted"]) for s in SIDES}
-    out["regressed"] = share["change"] > share["parent"]
+    out["regressed"] = (share["change"] > share["parent"]
+                        or out["change"]["incorrect"]
+                        > out["parent"]["incorrect"])
     return out
 
 
@@ -149,7 +160,9 @@ def render(summary: dict, spec: dict) -> str:
         lines.append(
             f"{w} failed operations: parent {f['parent']['failed']}/"
             f"{f['parent']['attempted']}, change {f['change']['failed']}/"
-            f"{f['change']['attempted']}"
+            f"{f['change']['attempted']}; runs not correct: parent "
+            f"{f['parent']['incorrect']}/{f['parent']['runs']}, change "
+            f"{f['change']['incorrect']}/{f['change']['runs']}"
             + ("; REGRESSED" if f["regressed"] else ""))
     return "\n".join(lines)
 
@@ -196,8 +209,6 @@ def main(argv=None) -> None:
                     help="revision the working tree is compared with")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", type=int, nargs="+", default=[21])
-    ap.add_argument("--workloads", nargs="+")
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--work", help="where the two copies go "
                                    "(a new temporary directory by default)")
     ap.add_argument("--out", help="JSON lines of every run")
@@ -217,8 +228,7 @@ def main(argv=None) -> None:
         shutil.rmtree(tree, ignore_errors=True)
     _parent_tree(ns.parent, trees["parent"])
     _working_tree(trees["change"])
-    workloads = ns.workloads or [w["name"] for w in spec["workloads"]]
-    seconds = ns.seconds or spec["run_seconds"]
+    workloads = [w["name"] for w in spec["workloads"]]
     runs = []
     for i in range(ns.pairs):
         seed = ns.seeds[i % len(ns.seeds)]
@@ -228,7 +238,7 @@ def main(argv=None) -> None:
                 rec = {"workload": w, "pair": i, "side": side, "seed": seed,
                        "first": order[0],
                        "result": run_once(spec["command"], trees[side], w,
-                                          seed, seconds)}
+                                          seed, spec["run_seconds"])}
                 runs.append(rec)
                 if ns.out:
                     with open(ns.out, "a") as f:
